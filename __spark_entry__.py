@@ -3407,28 +3407,20 @@ def q_crossformat_pixel_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pixel-content dedup across container formats — the case byte
     dedup can't see: every fixture image is re-encoded under ppm, png,
     lossless webp, tiff-lzw, true-color strip gif, and baseline jpeg
-    (all real codecs — webp is the round-5 from-scratch VP8L
-    implementation, tiff the round-5 from-scratch LZW+predictor one,
-    gif the round-5 from-scratch LSB-first-LZW per-strip-palette one),
-    then clustered by sha256(decoded pixels). Lossless variants of byte-identical
-    originals collapse into ONE cluster regardless of format; the
-    deterministic lossy tier forms its own pixel-exact cluster per
-    byte-group (same input bytes → same jpeg → same decoded pixels).
+    (all real from-scratch codecs), then clustered by sha256(decoded
+    pixels). Lossless variants of byte-identical originals collapse
+    into ONE cluster regardless of format; the deterministic lossy tier
+    forms its own pixel-exact cluster per byte-group (same input bytes → same jpeg → same decoded pixels).
     The oracle reproduces exactly that in SQL from the stored bytes —
-    a full value-checked cluster assignment, not a pinned boolean.
-    Scale shape: groupBy(pixel_sha) min-agg (map-side combined) + an
-    equi-join back on pixel_sha; duplicate floods hit AQE's skew-join
-    handling like every other content-keyed group in the exact tier."""
-    from dedup_spark.multimodal.decode import pixel_sha, reencode_variants
+    a full value-checked cluster assignment, not a pinned boolean."""
+    from dedup_spark.multimodal.decode import (
+        pixel_sha,
+        reencode_variants,
+        signature_clusters,
+    )
 
     variants = reencode_variants(_fixture_images(spark))
-    ph = pixel_sha(variants).localCheckpoint(eager=False)
-    roots = ph.groupBy("pixel_sha").agg(
-        F.min("image_id").alias("cluster_id")
-    )
-    return ph.join(roots, on="pixel_sha", how="left").select(
-        "image_id", "ok", F.coalesce("cluster_id", "image_id").alias("cluster_id")
-    )
+    return signature_clusters(pixel_sha(variants), "pixel_sha")
 
 
 def q_exif_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3472,13 +3464,9 @@ def q_jpeg_quality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_orientation_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orientation-normalized pixel dedup (multimodal/exif.py): the
-    same photo stored under all 8 TIFF orientations has different
-    bytes, different DIMS (the non-square fixture transposes), a
-    different phash, and a different pixel buffer — no upstream tier
-    clusters it. Normalizing to display orientation before hashing
-    collapses all 8 into one cluster. Orientation arrives as a column
-    (the exif_metadata → decode chaining pattern); the fixture stores
-    the EXACT lossless inverse transform per orientation, so the
+    same photo under all 8 TIFF orientations. Orientation arrives as a
+    column (the exif_metadata → decode chaining pattern); the fixture
+    stores the EXACT lossless inverse transform per orientation, so the
     oracle pins the full value-checked assignment by source while the
     engine derives it from pixels + orientation alone."""
     from dedup_spark.fixtures.materialize import fixture_orientation_parquet
@@ -3522,18 +3510,12 @@ def q_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_rescale_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-invariant image dedup (multimodal/decode.py
-    thumbprint_clusters): the same image stored at 64², 32² and 16²
-    collapses into one cluster via the 8×8 nearest-grid thumbprint —
-    the case byte dedup, the (phash,length) stage-1 pre-group, AND
-    pixel-sha dedup all miss (every variant has different bytes, a
-    different length, and a different pixel buffer). The fixture's
-    dims compose exactly under the sampler (8 | d | 64), so thumb
-    equality within a source — and distinctness across the 40
+    thumbprint_clusters): the same image stored at 64², 32² and 16².
+    The fixture's dims compose exactly under the sampler (8 | d | 64),
+    so thumb equality within a source — and distinctness across the 40
     digest-seeded sources — holds by construction; the oracle pins the
-    full value-checked cluster assignment as min(image_id) per SOURCE,
-    which the engine must reproduce from pixels alone (it never sees
-    src_id). A drifted decoder, sampler index rule, or hash breaks the
-    match."""
+    full assignment as min(image_id) per SOURCE, which the engine must
+    reproduce from pixels alone (it never sees src_id)."""
     from dedup_spark.fixtures.materialize import fixture_rescale_parquet
     from dedup_spark.multimodal.decode import thumbprint_clusters
 
@@ -3544,17 +3526,10 @@ def q_rescale_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_border_crop_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Border/pad-invariant image dedup (multimodal/crop.py
     border_trim_clusters): the same image re-published inside a
-    uniform frame — thumbnail borders, letterbox bars, watermark mats
-    — collapses into one cluster via the content-box sha. Byte dedup,
-    the (phash,length) pre-group, pixel-sha AND the rescale thumbprint
-    all miss it (padding changes bytes, length, buffer, and every
-    point-sample grid). Trimming a uniform pad recovers the original
-    buffer EXACTLY, so the signature is an exactness contract, not a
-    similarity heuristic; the fixture generator independently re-trims
-    every variant and asserts base recovery + cross-source
-    distinctness, making the oracle's min(image_id)-per-source the
-    full value-checked cluster assignment (the engine never sees
-    src_id)."""
+    uniform frame. The fixture generator independently re-trims every
+    variant and asserts base recovery + cross-source distinctness,
+    making the oracle's min(image_id)-per-source the full value-checked
+    cluster assignment (the engine never sees src_id)."""
     from dedup_spark.fixtures.materialize import fixture_border_parquet
     from dedup_spark.multimodal.crop import border_trim_clusters
 
@@ -3765,15 +3740,9 @@ def q_image_geometry_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_rotation_invariant_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rotation/flip-invariant dedup (multimodal/rotinv.py): rotated
-    re-posts WITHOUT EXIF — the normal web case, since most CDNs strip
-    metadata — defeat every position-dependent tier (byte, pixel-sha,
-    thumbprint, dHash, content-box, and orientation_dedup which needs
-    the tag). The pixel-MULTISET signature is bitwise-invariant under
-    all 8 dihedral transforms by construction (they permute values,
-    never change them). Candidate-tier semantics documented; on the
-    pinned corpus the generator asserts cross-source multiset
-    distinctness, so the oracle's min(image_id)-per-source is the
-    exact full assignment."""
+    re-posts WITHOUT EXIF. On the pinned corpus the generator asserts
+    cross-source multiset distinctness, so the oracle's
+    min(image_id)-per-source is the exact full assignment."""
     from dedup_spark.fixtures.materialize import fixture_rotation_parquet
     from dedup_spark.multimodal.rotinv import rotation_invariant_clusters
 
@@ -3863,21 +3832,11 @@ def q_gps_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brightness/rescale-invariant image dedup (multimodal/dhash.py
     dhash_clusters): the same image stored brightness-shifted (+15 /
-    −12, SAME byte length) and 2×-replication-rescaled collapses into
-    one cluster via the 9×8 difference hash — the duplicate class that
-    byte dedup, the (phash, length) stage-1 pre-group (shifted
-    variants keep the length), pixel-sha dedup AND the thumbprint tier
-    (every point-sampled VALUE moves under a shift) all miss. dHash
-    compares adjacent block means as exact integer cross-products, so
-    a uniform shift cancels and a composing 2× replication scales both
-    sides equally — bit-exact invariance, making the 64-bit-equality
-    cluster gate deterministic (the fixture generator ASSERTS no
-    saturation, per-source hash agreement, and cross-source hash
-    distinctness, so cluster == source is construction, not luck).
-    The oracle pins the full value-checked assignment as min(image_id)
-    per SOURCE, which the engine must reproduce from pixels alone (it
-    never sees src_id). A drifted decoder, block-boundary rule, or
-    comparison direction breaks the match."""
+    −12, SAME byte length) and 2×-replication-rescaled. The fixture
+    generator ASSERTS no saturation, per-source hash agreement and
+    cross-source hash distinctness, so the oracle's min(image_id) per
+    SOURCE is the full assignment, which the engine must reproduce
+    from pixels alone (it never sees src_id)."""
     from dedup_spark.fixtures.materialize import fixture_dhash_parquet
     from dedup_spark.multimodal.dhash import dhash_clusters
 

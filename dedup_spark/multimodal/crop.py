@@ -18,23 +18,20 @@ heuristic. A fully uniform image has an empty content box and keeps
 its FULL buffer as content (flat placeholders cluster only when
 byte-content-equal).
 
-Scale shape: one Arrow-batched mapInPandas projection (the payload is
-consumed there, never enters an Exchange) + one groupBy on a 64-char
-key + a join-back — the exact-tier shape shared by thumbprint/dhash
-clusters.
-
 Reference analog: the full-hash grouping stage (src/grouping.rs)
 answers byte identity; this is the same group-by-content-key plan
 over a normalized content identity."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
+from pyspark.sql import DataFrame
 
-from pyspark.sql import DataFrame, functions as F
+from dedup_spark.multimodal.decode import (
+    image_signatures,
+    shape_sha,
+    signature_clusters,
+)
 
 
 def _trim_once(px: np.ndarray) -> np.ndarray:
@@ -80,40 +77,8 @@ def border_trim_clusters(
     """(id, ok, cluster_id): cluster by sha256 of the trimmed content
     box (shape + raw pixels); cluster_id = min id per signature.
     Undecodable rows survive as ok=false singleton clusters."""
-    import hashlib
-
-    from dedup_spark.multimodal.decode import _decode_any
-
-    def _sig(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rid, data, fmt in zip(
-                pdf[id_col], pdf[bytes_col], pdf[fmt_col]
-            ):
-                px = _decode_any(data, fmt)
-                if px is None:
-                    rows.append((rid, False, None))
-                    continue
-                t = trim_uniform_border(px)
-                h = hashlib.sha256()
-                h.update(np.int64(t.shape[0]).tobytes())
-                h.update(np.int64(t.shape[1]).tobytes())
-                h.update(np.ascontiguousarray(t).tobytes())
-                rows.append((rid, True, h.hexdigest()))
-            yield pd.DataFrame(
-                rows, columns=[id_col, "ok", "content_sha"]
-            )
-
-    sig = df.select(id_col, bytes_col, fmt_col).mapInPandas(
-        _sig, schema=f"{id_col} string, ok boolean, content_sha string"
-    ).localCheckpoint(eager=False)
-    roots = (
-        sig.filter(F.col("ok"))
-        .groupBy("content_sha")
-        .agg(F.min(id_col).alias("cluster_id"))
+    sig = image_signatures(
+        df, lambda px: shape_sha(trim_uniform_border(px)), "string",
+        "content_sha", id_col, bytes_col, fmt_col,
     )
-    return sig.join(roots, on="content_sha", how="left").select(
-        id_col,
-        "ok",
-        F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"),
-    )
+    return signature_clusters(sig, "content_sha")

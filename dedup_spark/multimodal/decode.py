@@ -11,14 +11,10 @@ WebP (multimodal/webp.py — from-scratch VP8L prefix-code / LZ77 /
 color-cache bitstream, documented subset), TIFF (multimodal/tiff.py —
 general IFD walk both endians, from-scratch LZW with the early-change
 width schedule, horizontal predictor), and GIF (multimodal/gif.py —
-LSB-first LZW, true-color via per-strip local palettes). Remaining
-codec-heavy decodes (lossy webp/video) sit behind a PIL import-try
-since those libs are not in this container.
-
-Round 3 closes the lossy gap too: baseline JPEG encodes AND decodes
-for real via multimodal/jpeg.py (pure numpy DCT + hand-rolled Huffman,
-from the public T.81 spec) — the north rule's "PSNR >= 40 dB for
-lossy" contract is exercised end-to-end by lossy_roundtrip_fidelity.
+LSB-first LZW, true-color via per-strip local palettes). Any other
+fmt decodes through PIL when it is installed and is otherwise an
+unreadable row. The "PSNR >= 40 dB for lossy" contract is exercised
+end-to-end by lossy_roundtrip_fidelity.
 
 Batch-shape contract: mapInPandas receives an iterator of pandas
 DataFrames whose size is bounded by spark.sql.execution.arrow.
@@ -29,60 +25,55 @@ Python memory.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import hashlib
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from dedup_spark.fixtures.images import decode_ppm, phash64
+from dedup_spark.multimodal.gif import decode_gif
+from dedup_spark.multimodal.jpeg import decode_jpeg
+from dedup_spark.multimodal.png import decode_png
+from dedup_spark.multimodal.tiff import decode_tiff
+from dedup_spark.multimodal.webp import decode_webp_lossless
 
-try:  # codec libs are optional; PPM path never needs them
+try:  # codec libs are optional; the six built-in codecs never need them
     from PIL import Image  # noqa: F401
 
     _HAS_PIL = True
 except ImportError:
     _HAS_PIL = False
 
+_DECODERS = {
+    "ppm": decode_ppm,
+    "png": decode_png,
+    "jpeg": decode_jpeg,
+    "jpg": decode_jpeg,
+    "webp": decode_webp_lossless,
+    "tiff": decode_tiff,
+    "tif": decode_tiff,
+    "gif": decode_gif,
+}
+
 
 def _decode_any(data: bytes, fmt: str) -> np.ndarray | None:
-    """Decode one payload; None on failure (unreadable-row skip semantics,
-    reference src/hasher.rs:57-60)."""
+    """Decode one payload; None on failure or on an unknown fmt with no
+    imaging lib (unreadable-row skip semantics, reference
+    src/hasher.rs:57-60). Every codec raises ValueError on malformed
+    input."""
     if data is None:
         return None
     try:
-        if fmt == "ppm":
-            return decode_ppm(bytes(data))
-        if fmt == "png":
-            from dedup_spark.multimodal.png import decode_png
-
-            return decode_png(bytes(data))
-        if fmt in ("jpeg", "jpg"):
-            from dedup_spark.multimodal.jpeg import decode_jpeg
-
-            return decode_jpeg(bytes(data))
-        if fmt == "webp":
-            from dedup_spark.multimodal.webp import decode_webp_lossless
-
-            return decode_webp_lossless(bytes(data))
-        if fmt in ("tiff", "tif"):
-            from dedup_spark.multimodal.tiff import decode_tiff
-
-            return decode_tiff(bytes(data))
-        if fmt == "gif":
-            from dedup_spark.multimodal.gif import decode_gif
-
-            return decode_gif(bytes(data))
+        decode = _DECODERS.get(fmt)
+        if decode is not None:
+            return decode(bytes(data))
         if _HAS_PIL:
             import io
 
-            from PIL import Image
-
             return np.asarray(Image.open(io.BytesIO(bytes(data))).convert("RGB"))
-        raise NotImplementedError(
-            f"decode for fmt={fmt!r} requires an imaging lib not present in "
-            "this container — plumbing is real, codec is stubbed"
-        )
+        return None
     except (ValueError, OSError):
         return None
 
@@ -354,34 +345,89 @@ def reencode_variants(
     )
 
 
+def shape_sha(px: np.ndarray) -> str:
+    """sha256 over (h, w) as int64 + the raw decoded pixel buffer — the
+    content identity that survives lossless re-encoding."""
+    h = hashlib.sha256()
+    h.update(np.int64(px.shape[0]).tobytes())
+    h.update(np.int64(px.shape[1]).tobytes())
+    h.update(np.ascontiguousarray(px).tobytes())
+    return h.hexdigest()
+
+
+def image_signatures(
+    df: DataFrame,
+    sig_fn: Callable[..., object],
+    sig_type: str,
+    key: str,
+    id_col: str = "image_id",
+    bytes_col: str = "bytes",
+    fmt_col: str = "fmt",
+    extra_cols: tuple = (),
+) -> DataFrame:
+    """(id, ok, key): the one per-row decode loop of the image
+    signature tiers. Each payload is decoded and ``sig_fn(px, *extra)``
+    maps the pixels (plus the row's ``extra_cols`` values) to a key of
+    Spark type ``sig_type``. ok=false when the decode fails or
+    ``sig_fn`` returns None; the key is then null (unreadable-row skip
+    semantics, reference src/hasher.rs:57-60).
+
+    Only (id, bytes, fmt, *extra_cols) ship to the Arrow-batched
+    mapInPandas stage, so the payload is consumed there and never
+    enters an Exchange. The key column is built with object dtype:
+    a None in the batch can never widen an int64 key to float64 and
+    round it."""
+    cols = [id_col, bytes_col, fmt_col, *extra_cols]
+
+    def _sign(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            sigs = []
+            for data, fmt, *extra in zip(*(pdf[c] for c in cols[1:])):
+                px = _decode_any(data, fmt)
+                sigs.append(None if px is None else sig_fn(px, *extra))
+            sig = pd.Series(sigs, dtype=object)
+            yield pd.DataFrame(
+                {id_col: pdf[id_col].to_numpy(), "ok": sig.notna(), key: sig}
+            )
+
+    return df.select(*cols).mapInPandas(
+        _sign, schema=f"{id_col} string, ok boolean, {key} {sig_type}"
+    )
+
+
+def signature_clusters(sig_df: DataFrame, key: str) -> DataFrame:
+    """(id, ok, cluster_id) from an (id, ok, key) ``image_signatures``
+    frame: cluster_id = min id over the ok rows sharing ``key``; failed
+    rows self-cluster.
+
+    Scale shape — the exact tier's group-by-content-key plan
+    (reference src/grouping.rs): a lineage cut after the Python stage
+    (it has two consumers, so the decode must not run twice), one
+    map-side-combined groupBy on the key, and a left join back. Only
+    (id, ok, key) reach an Exchange; duplicate floods hit AQE's
+    skew-join handling like every other content-keyed group."""
+    id_col = sig_df.columns[0]
+    sig = sig_df.localCheckpoint(eager=False)
+    roots = (
+        sig.filter(F.col("ok"))
+        .groupBy(key)
+        .agg(F.min(id_col).alias("cluster_id"))
+    )
+    return sig.join(roots, on=key, how="left").select(
+        id_col, "ok", F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id")
+    )
+
+
 def pixel_sha(
     df: DataFrame,
     id_col: str = "image_id",
     bytes_col: str = "bytes",
     fmt_col: str = "fmt",
 ) -> DataFrame:
-    """(id, ok, pixel_sha): sha256 over shape + raw decoded pixel
-    buffer — the content identity that survives lossless re-encoding.
+    """(id, ok, pixel_sha): ``shape_sha`` of the decoded pixels.
     Undecodable rows get ok=false with a null sha."""
-    import hashlib
-
-    def _sha(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rid, data, fmt in zip(pdf[id_col], pdf[bytes_col], pdf[fmt_col]):
-                px = _decode_any(data, fmt)
-                if px is None:
-                    rows.append((rid, False, None))
-                    continue
-                h = hashlib.sha256()
-                h.update(np.int64(px.shape[0]).tobytes())
-                h.update(np.int64(px.shape[1]).tobytes())
-                h.update(np.ascontiguousarray(px).tobytes())
-                rows.append((rid, True, h.hexdigest()))
-            yield pd.DataFrame(rows, columns=[id_col, "ok", "pixel_sha"])
-
-    return df.select(id_col, bytes_col, fmt_col).mapInPandas(
-        _sha, schema=f"{id_col} string, ok boolean, pixel_sha string"
+    return image_signatures(
+        df, shape_sha, "string", "pixel_sha", id_col, bytes_col, fmt_col
     )
 
 
@@ -402,40 +448,17 @@ def thumbprint_clusters(
     Exactness contract: the thumbprint is bitwise-equal across
     resolutions whenever the sampling grids compose (grid | d | D for a
     D→d downscale, see fixtures/images.generate_rescale_corpus); for
-    arbitrary rescales it is a near-dup signature like phash. At scale
-    this is one Arrow-batched projection + one groupBy on a 64-char
-    key + a join-back — the exact-tier shape, image bytes never enter
-    the Exchange (only id/ok/sha do).
+    arbitrary rescales it is a near-dup signature like phash.
     """
-    import hashlib
 
-    def _thumb(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rid, data, fmt in zip(pdf[id_col], pdf[bytes_col], pdf[fmt_col]):
-                px = _decode_any(data, fmt)
-                if px is None:
-                    rows.append((rid, False, None))
-                    continue
-                t = _mean_pool(px, grid, grid)
-                rows.append(
-                    (rid, True, hashlib.sha256(
-                        np.ascontiguousarray(t).tobytes()
-                    ).hexdigest())
-                )
-            yield pd.DataFrame(rows, columns=[id_col, "ok", "thumb_sha"])
+    def _thumb(px: np.ndarray) -> str:
+        t = _mean_pool(px, grid, grid)
+        return hashlib.sha256(np.ascontiguousarray(t).tobytes()).hexdigest()
 
-    th = df.select(id_col, bytes_col, fmt_col).mapInPandas(
-        _thumb, schema=f"{id_col} string, ok boolean, thumb_sha string"
-    ).localCheckpoint(eager=False)
-    roots = (
-        th.filter(F.col("ok"))
-        .groupBy("thumb_sha")
-        .agg(F.min(id_col).alias("cluster_id"))
+    sig = image_signatures(
+        df, _thumb, "string", "thumb_sha", id_col, bytes_col, fmt_col
     )
-    return th.join(roots, on="thumb_sha", how="left").select(
-        id_col, "ok", F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id")
-    )
+    return signature_clusters(sig, "thumb_sha")
 
 
 def jpeg_quality_estimates(

@@ -28,22 +28,16 @@ operators/simhash.hamming_band_pairs if needed); this module's
 cluster gate uses exact 64-bit equality, which the composing fixture
 makes deterministic.
 
-Scale shape (reference parity: the groupBy-hash cluster shape of
-src/output.rs group tables): one Arrow-batched mapInPandas projection
-computes the 8-byte hash — image bytes never enter an Exchange — then
-a groupBy on the long key + min-id join-back, identical to the
-exact/thumbprint tiers. Overflow bound: the cross-product is
-``3*255*h*w * h*w`` ≤ int64 for images up to ~4096², asserted.
+Overflow bound: the cross-product is ``3*255*h*w * h*w`` ≤ int64 for
+images up to ~4096², asserted.
 """
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+
+from dedup_spark.multimodal.decode import image_signatures, signature_clusters
 
 DHASH_COLS = 9
 DHASH_ROWS = 8
@@ -88,32 +82,9 @@ def dhash_clusters(
     cluster by exact 64-bit equality (min id). Output
     (image_id, ok, cluster_id); undecodable or sub-grid rows get
     ok=False and self-cluster (unreadable-row skip semantics,
-    reference src/hasher.rs:57-60).
-
-    Plan: one mapInPandas projection (the only place pixels exist),
-    then a groupBy on an 8-byte long + broadcast-friendly join-back —
-    the exact-tier shape; payload never shuffles."""
-    from dedup_spark.multimodal.decode import _decode_any
-
-    def _dh(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rid, data, fmt in zip(pdf[id_col], pdf[bytes_col], pdf[fmt_col]):
-                px = _decode_any(data, fmt)
-                hv = None if px is None else dhash_bits(px)
-                rows.append((rid, hv is not None, hv))
-            yield pd.DataFrame(rows, columns=[id_col, "ok", "dhash"])
-
-    dh = df.select(id_col, bytes_col, fmt_col).mapInPandas(
-        _dh, schema=f"{id_col} string, ok boolean, dhash long"
-    ).localCheckpoint(eager=False)
-    roots = (
-        dh.filter(F.col("ok"))
-        .groupBy("dhash")
-        .agg(F.min(id_col).alias("cluster_id"))
+    reference src/hasher.rs:57-60). The 8-byte hash is the only
+    image-derived column that reaches an Exchange."""
+    sig = image_signatures(
+        df, dhash_bits, "long", "dhash", id_col, bytes_col, fmt_col
     )
-    return dh.join(roots, on="dhash", how="left").select(
-        id_col,
-        "ok",
-        F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"),
-    )
+    return signature_clusters(sig, "dhash")

@@ -28,6 +28,12 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from dedup_spark.multimodal.decode import (
+    image_signatures,
+    shape_sha,
+    signature_clusters,
+)
+
 # IFD0 tags (TIFF 6.0 / EXIF): fixed writer layout, sorted by tag id
 TAG_WIDTH = 0x0100  # LONG
 TAG_HEIGHT = 0x0101  # LONG
@@ -284,53 +290,21 @@ def orientation_normalized_clusters(
     The orientation arrives as a COLUMN (in a real pipeline, the
     output of ``exif_metadata`` joined back — metadata pass first,
     expensive decode pass second). Returns (id, ok, cluster_id);
-    undecodable rows self-cluster with ok=false. Same scale shape as
-    pixel_sha: one Arrow projection, sha-keyed groupBy, payload never
-    enters an Exchange.
+    undecodable rows self-cluster with ok=false.
     """
-    import hashlib
+    def _norm_sha(px, o) -> str:
+        # NULL orientation arrives as NaN once pandas widens an int
+        # column with nulls to float64 — exactly what exif_metadata
+        # emits for exif-less rows; treat as 1
+        return shape_sha(
+            normalize_orientation(px, 1 if o is None or pd.isna(o) else int(o))
+        )
 
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from dedup_spark.multimodal.decode import _decode_any
-
-    def _sha(it):
-        for pdf in it:
-            rows = []
-            for rid, data, fmt, o in zip(
-                pdf[id_col], pdf[bytes_col], pdf[fmt_col],
-                pdf[orientation_col],
-            ):
-                px = _decode_any(data, fmt)
-                if px is None:
-                    rows.append((rid, False, None))
-                    continue
-                # NULL orientation arrives as NaN once pandas widens an
-                # int column with nulls to float64 — exactly what
-                # exif_metadata emits for exif-less rows; treat as 1
-                disp = normalize_orientation(
-                    px, 1 if o is None or pd.isna(o) else int(o)
-                )
-                h = hashlib.sha256()
-                h.update(np.int64(disp.shape[0]).tobytes())
-                h.update(np.int64(disp.shape[1]).tobytes())
-                h.update(np.ascontiguousarray(disp).tobytes())
-                rows.append((rid, True, h.hexdigest()))
-            yield pd.DataFrame(rows, columns=[id_col, "ok", "norm_sha"])
-
-    th = df.select(id_col, bytes_col, fmt_col, orientation_col).mapInPandas(
-        _sha, schema=f"{id_col} string, ok boolean, norm_sha string"
-    ).localCheckpoint(eager=False)
-    roots = (
-        th.filter(F.col("ok"))
-        .groupBy("norm_sha")
-        .agg(F.min(id_col).alias("cluster_id"))
+    sig = image_signatures(
+        df, _norm_sha, "string", "norm_sha", id_col, bytes_col, fmt_col,
+        (orientation_col,),
     )
-    return th.join(roots, on="norm_sha", how="left").select(
-        id_col, "ok",
-        F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"),
-    )
+    return signature_clusters(sig, "norm_sha")
 
 
 # --- GPS IFD: writer variant + privacy scrub -------------------------

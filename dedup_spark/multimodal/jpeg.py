@@ -353,7 +353,15 @@ def _huff_decode(br: _BitReader, table: _HuffTable) -> int:
 
 def decode_jpeg(data: bytes) -> np.ndarray:
     """Baseline JPEG bytes → (h, w, 3) uint8 RGB. Raises ValueError on
-    anything outside baseline / 8-bit / 1:1-sampling scope."""
+    anything outside baseline / 8-bit / 1:1-sampling scope, and on
+    truncated segments or entropy data."""
+    try:
+        return _decode_jpeg(data)
+    except (struct.error, IndexError) as exc:
+        raise ValueError(f"malformed JPEG: {exc}") from exc
+
+
+def _decode_jpeg(data: bytes) -> np.ndarray:
     if len(data) < 4 or data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (no SOI)")
     qts: dict[int, np.ndarray] = {}
@@ -422,8 +430,16 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             scan = []
             for c in range(ns):
                 cs, tt = seg[1 + 2 * c : 3 + 2 * c]
-                comp = next(x for x in frame["comps"] if x["id"] == cs)
-                scan.append((comp, tt >> 4, tt & 0x0F))
+                comp = next((x for x in frame["comps"] if x["id"] == cs), None)
+                td, ta = tt >> 4, tt & 0x0F
+                if (
+                    comp is None
+                    or comp["tq"] not in qts
+                    or (0, td) not in huff
+                    or (1, ta) not in huff
+                ):
+                    raise ValueError("scan names an undefined component or table")
+                scan.append((comp, td, ta))
             return _decode_scan(
                 data[i:], frame, scan, qts, huff, restart_interval
             )

@@ -114,7 +114,15 @@ def decode_png(data: bytes) -> np.ndarray:
     """PNG bytes → (h, w, 3) uint8 RGB (grey replicated, alpha dropped).
 
     Raises ValueError for non-PNG bytes, palette images, interlacing,
-    or bit depths != 8 — callers map that to unreadable-row skip."""
+    or bit depths != 8, and for a corrupt zlib stream or short IHDR —
+    callers map that to unreadable-row skip."""
+    try:
+        return _decode_png(data)
+    except (zlib.error, struct.error) as exc:
+        raise ValueError(f"malformed PNG: {exc}") from exc
+
+
+def _decode_png(data: bytes) -> np.ndarray:
     if len(data) < 8 or data[:8] != _SIG:
         raise ValueError("not a PNG")
     pos, ihdr, idat = 8, None, []

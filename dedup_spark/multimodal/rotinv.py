@@ -14,31 +14,39 @@ this is a CANDIDATE tier, not a verdict: two different images can in
 principle share a color multiset, so production pipelines verify
 candidates (decode both, try the 8 transforms); the fixture generator
 asserts cross-source multiset distinctness so the gate's
-group-by-source oracle is exact.
-
-Scale shape: one Arrow projection consuming the payload → groupBy on
-a 64-char key → join-back (the thumbprint/dhash/content-box plan)."""
+group-by-source oracle is exact."""
 
 from __future__ import annotations
 
+import hashlib
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
+
+from dedup_spark.multimodal.decode import (
+    _decode_any,
+    image_signatures,
+    signature_clusters,
+)
 
 
 def multiset_signature(px: np.ndarray) -> str:
     """sha256 over the canonical (r,g,b,count) table — invariant under
-    any pixel permutation, in particular the 8 dihedral transforms."""
-    import hashlib
-
-    flat = px.reshape(-1, 3)
-    vals, counts = np.unique(flat, axis=0, return_counts=True)
+    any pixel permutation, in particular the 8 dihedral transforms.
+    Each RGB triple is packed into one uint32 (r<<16 | g<<8 | b), whose
+    1-D sort order equals the lexicographic row order, so the table is
+    byte-identical to ``np.unique(flat, axis=0)``'s at a fraction of
+    the cost."""
+    flat = px.reshape(-1, 3).astype(np.uint32)
+    keys, counts = np.unique(
+        flat[:, 0] << 16 | flat[:, 1] << 8 | flat[:, 2], return_counts=True
+    )
+    vals = np.stack([keys >> 16, keys >> 8, keys], axis=1).astype(np.uint8)
     h = hashlib.sha256()
     h.update(np.int64(flat.shape[0]).tobytes())
-    h.update(np.ascontiguousarray(vals).tobytes())
+    h.update(vals.tobytes())
     h.update(counts.astype(np.int64).tobytes())
     return h.hexdigest()
 
@@ -52,34 +60,10 @@ def rotation_invariant_clusters(
     """(id, ok, cluster_id): cluster by pixel-multiset signature;
     cluster_id = min id per signature; undecodable rows survive as
     ok=false singletons."""
-    from dedup_spark.multimodal.decode import _decode_any
-
-    def _sig(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rid, data, fmt in zip(
-                pdf[id_col], pdf[bytes_col], pdf[fmt_col]
-            ):
-                px = _decode_any(data, fmt)
-                if px is None:
-                    rows.append((rid, False, None))
-                    continue
-                rows.append((rid, True, multiset_signature(px)))
-            yield pd.DataFrame(rows, columns=[id_col, "ok", "ms_sha"])
-
-    sig = df.select(id_col, bytes_col, fmt_col).mapInPandas(
-        _sig, schema=f"{id_col} string, ok boolean, ms_sha string"
-    ).localCheckpoint(eager=False)
-    roots = (
-        sig.filter(F.col("ok"))
-        .groupBy("ms_sha")
-        .agg(F.min(id_col).alias("cluster_id"))
+    sig = image_signatures(
+        df, multiset_signature, "string", "ms_sha", id_col, bytes_col, fmt_col
     )
-    return sig.join(roots, on="ms_sha", how="left").select(
-        id_col,
-        "ok",
-        F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id"),
-    )
+    return signature_clusters(sig, "ms_sha")
 
 
 # the dihedral group D4, in a pinned canonical try-order
@@ -126,22 +110,14 @@ def verified_rotation_pairs(
     are dropped with a logged count, the posting-cap discipline), and
     each pair ships exactly two payloads to one task. Everything
     before it is the usual sha-keyed aggregate."""
-    from dedup_spark.multimodal.decode import _decode_any
-
-    def _sig(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rid, data, fmt in zip(
-                pdf[id_col], pdf[bytes_col], pdf[fmt_col]
-            ):
-                px = _decode_any(data, fmt)
-                if px is not None:
-                    rows.append((rid, multiset_signature(px)))
-            yield pd.DataFrame(rows, columns=[id_col, "ms_sha"])
-
-    sig = df.select(id_col, bytes_col, fmt_col).mapInPandas(
-        _sig, schema=f"{id_col} string, ms_sha string"
-    ).localCheckpoint(eager=False)
+    sig = (
+        image_signatures(
+            df, multiset_signature, "string", "ms_sha", id_col, bytes_col, fmt_col
+        )
+        .filter(F.col("ok"))
+        .select(id_col, "ms_sha")
+        .localCheckpoint(eager=False)
+    )
     counts = sig.groupBy("ms_sha").agg(F.count(F.lit(1)).alias("_n"))
     if log_drops:
         n_drop = counts.filter(F.col("_n") > max_bucket).count()

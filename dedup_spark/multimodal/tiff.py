@@ -267,12 +267,13 @@ def encode_tiff(px: np.ndarray, endian: str = "II") -> bytes:
 
 def _read_ifd(buf: bytes, e: str, at: int) -> dict[int, list[int]]:
     """General IFD walk: {tag: [values...]} for BYTE/SHORT/LONG entries
-    (other types are skipped — this family doesn't use them)."""
+    (other types and empty entries are skipped — this family doesn't
+    use them)."""
     (n,) = struct.unpack_from(f"{e}H", buf, at)
     tags: dict[int, list[int]] = {}
     for i in range(n):
         tag, typ, count = struct.unpack_from(f"{e}HHI", buf, at + 2 + 12 * i)
-        if typ not in _TYPE_SIZE:
+        if typ not in _TYPE_SIZE or count == 0:
             continue
         size = _TYPE_SIZE[typ] * count
         vat = at + 2 + 12 * i + 8
@@ -285,7 +286,15 @@ def _read_ifd(buf: bytes, e: str, at: int) -> dict[int, list[int]]:
 
 def decode_tiff(data: bytes) -> np.ndarray:
     """Decode baseline-RGB TIFF (either endian, strips, LZW or
-    uncompressed, predictor 1 or 2) to a uint8 HxWx3 array."""
+    uncompressed, predictor 1 or 2) to a uint8 HxWx3 array; ValueError
+    on malformed input, a truncated IFD included."""
+    try:
+        return _decode_tiff(data)
+    except struct.error as exc:
+        raise ValueError(f"tiff: malformed IFD: {exc}") from exc
+
+
+def _decode_tiff(data: bytes) -> np.ndarray:
     if len(data) < 8:
         raise ValueError("tiff: short header")
     if data[:2] == b"II":

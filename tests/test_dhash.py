@@ -122,3 +122,27 @@ def test_python_reference_parity():
             v = (v << 1) | int(bit)
     expect = v - (1 << 64) if v >= (1 << 63) else v
     assert dhash_bits(px) == expect
+
+
+def test_cross_batch_hash_survives_subgrid_neighbour(spark):
+    # two byte-identical images in different Arrow batches; the second
+    # batch also holds a sub-grid image whose hash is None. The None
+    # must not widen that batch's int64 key column to float64, which
+    # would round the 64-bit hash and split the pair.
+    px = _img(8)
+    hv = dhash_bits(px)
+    assert int(float(hv)) != hv  # the hash is not float64-exact
+    payload = encode_ppm(px)
+    tiny = encode_ppm(_img(9, w=4, h=4))
+    schema = "image_id string, bytes binary, fmt string"
+    sc = spark.sparkContext
+    left = spark.createDataFrame(sc.parallelize([("a", payload, "ppm")], 1), schema)
+    right = spark.createDataFrame(
+        sc.parallelize([("b", payload, "ppm"), ("s", tiny, "ppm")], 1), schema
+    )
+    both = left.unionByName(right)
+    assert both.rdd.getNumPartitions() == 2
+    out = dhash_clusters(both).toPandas().set_index("image_id")
+    assert bool(out.loc["a", "ok"]) and bool(out.loc["b", "ok"])
+    assert out.loc["b", "cluster_id"] == out.loc["a", "cluster_id"] == "a"
+    assert not bool(out.loc["s", "ok"]) and out.loc["s", "cluster_id"] == "s"

@@ -104,3 +104,30 @@ def test_flood_bucket_guard(spark):
     full = verified_rotation_pairs(df, max_bucket=64, log_drops=False).collect()
     assert len(full) == 10 and all(r["verified"] for r in full)
     assert all(r["transform"] == "r000" for r in full)  # byte-identical
+
+
+def _multiset_signature_axis0(px: np.ndarray) -> str:
+    """The original ``np.unique(axis=0)`` form, kept as the reference
+    the packed-uint32 implementation must match byte for byte."""
+    import hashlib
+
+    flat = px.reshape(-1, 3)
+    vals, counts = np.unique(flat, axis=0, return_counts=True)
+    h = hashlib.sha256()
+    h.update(np.int64(flat.shape[0]).tobytes())
+    h.update(np.ascontiguousarray(vals).tobytes())
+    h.update(counts.astype(np.int64).tobytes())
+    return h.hexdigest()
+
+
+def test_packed_signature_matches_axis0_reference():
+    rng = np.random.default_rng(0)
+    imgs = [
+        rng.integers(0, 256, size=(h, w, 3), dtype=np.uint8)
+        for h, w in rng.integers(1, 80, size=(200, 2))
+    ]
+    imgs.append(np.zeros((7, 5, 3), np.uint8))
+    # few distinct values: long runs of equal triples and equal channels
+    imgs.append((rng.integers(0, 4, size=(33, 21, 3)) * 85).astype(np.uint8))
+    for px in imgs:
+        assert multiset_signature(px) == _multiset_signature_axis0(px), px.shape
