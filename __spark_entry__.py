@@ -35,7 +35,9 @@ Float-parity rules used throughout (so value hashes match bit-for-bit):
 
 from __future__ import annotations
 
+import json
 import os
+import re
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -4645,164 +4647,29 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # ORDER MATTERS: the driver's correctness harness checks (at most)
-    # the FIRST 50 entries. Rounds 3+4 each snapshotted a different
-    # 50-window; this round's window: the 10 queries the r4 verdict
-    # flagged as never-driver-snapshotted (positions 1-10), the
-    # round-5 session 1-5 additions (11-34), and the session-6 CORE
-    # tiers (35-50). The round grew the contract past what one window
-    # can carry (60 new names vs 50 slots): the ten session-6
-    # dashboard/report queries sit at 51-60 with pytest + the repo's
-    # own full-contract oracle snapshot (BENCH/oracle_check_r5.json)
-    # as their evidence, and every name past them is green in the r3
-    # or r4 driver artifact.
-    return {
-        # --- never driver-snapshotted (verdict r4 item 1) ---
-        "rescale_dedup": q_rescale_dedup,
-        "exif_metadata": q_exif_metadata,
-        "jpeg_quality_estimate": q_jpeg_quality_estimate,
-        "orientation_dedup": q_orientation_dedup,
-        "cdc_chunk_dedup": q_cdc_chunk_dedup,
-        "avi_video_dedup": q_avi_video_dedup,
-        "stratified_sample": q_stratified_sample,
-        "sequence_packing": q_sequence_packing,
-        "source_mixing": q_source_mixing,
-        "training_mixture": q_training_mixture,
-        # --- new in round 5 (must sit inside the 50-window) ---
-        "suffix_array_spans": q_suffix_array_spans,
-        "bloom_gram_dedup": q_bloom_gram_dedup,
-        "unicode_nfc_dedup": q_unicode_nfc_dedup,
-        "incremental_bloom_dedup": q_incremental_bloom_dedup,
-        "key_skew_profile": q_key_skew_profile,
-        "line_dedup": q_line_dedup,
-        "edit1_name_pairs": q_edit1_name_pairs,
-        "lm_perplexity": q_lm_perplexity,
-        "token_entropy": q_token_entropy,
-        "snm_name_pairs": q_snm_name_pairs,
-        "video_scene_segments": q_video_scene_segments,
-        "url_dedup": q_url_dedup,
-        "bpe_merges": q_bpe_merges,
-        "zipf_fit": q_zipf_fit,
-        "audio_quality": q_audio_quality,
-        "hll_distinct": q_hll_distinct,
-        "cms_heavy_hitters": q_cms_heavy_hitters,
-        "weighted_sample": q_weighted_sample,
-        "lang_segmentation": q_lang_segmentation,
-        "dhash_dedup": q_dhash_dedup,
-        "incremental_cc": q_incremental_cc,
-        "pipeline_recall_report": q_pipeline_recall_report,
-        "crawl_churn_report": q_crawl_churn_report,
-        "image_quality_stats": q_image_quality_stats,
-        # --- session-6 core tiers (positions 35-50, inside the
-        # window: the new dedup/privacy/streaming capabilities get the
-        # driver's hard signal first) ---
-        "group_weighted_sample": q_group_weighted_sample,
-        "format_sniff": q_format_sniff,
-        "phash_threshold_sweep": q_phash_threshold_sweep,
-        "caption_consistency": q_caption_consistency,
-        "border_crop_dedup": q_border_crop_dedup,
-        "shared_patch_pairs": q_shared_patch_pairs,
-        "bpe_encode_stats": q_bpe_encode_stats,
-        "gps_scrub": q_gps_scrub,
-        "rotation_invariant_dedup": q_rotation_invariant_dedup,
-        "verified_rotation_pairs": q_verified_rotation_pairs,
-        "html_extract": q_html_extract,
-        "snapshot_diff": q_snapshot_diff,
-        "streaming_enrich_join": q_streaming_enrich_join,
-        "dedup_funnel": q_dedup_funnel,
-        "recompression_dedup": q_recompression_dedup,
-        "entity_resolution": q_entity_resolution,
-        # --- session-6 dashboard/report class (past the 50-window:
-        # only 50 of the 60 never-driver-snapshotted queries can fit;
-        # these ten are pure report/arithmetic compositions whose
-        # oracle gates are cheapest to re-run (tools/check_oracle.py,
-        # seconds each) and every one is green in the repo's own
-        # BENCH/oracle_check_r5.json snapshot + its pytest suite) ---
-        "best_copy_canonical": q_best_copy_canonical,
-        "dup_rate_by_source": q_dup_rate_by_source,
-        "hard_negative_pairs": q_hard_negative_pairs,
-        "output_shard_plan": q_output_shard_plan,
-        "length_quantiles_by_source": q_length_quantiles_by_source,
-        "image_geometry_profile": q_image_geometry_profile,
-        "bow_dedup": q_bow_dedup,
-        "epoch_plan": q_epoch_plan,
-        "conversion_funnel": q_conversion_funnel,
-        "cohort_retention": q_cohort_retention,
-        # --- last driver-checked in round 3 ---
-        "ann_gaussian_recall": q_ann_gaussian_recall,
-        "simhash_text_pairs": q_simhash_text_pairs,
-        "substring_containment": q_substring_containment,
-        "caption_substring_pairs": q_caption_substring_pairs,
-        "doc_fingerprints": q_doc_fingerprints,
-        "image_exact_dedup": q_image_exact_dedup,
-        "image_features": q_image_features,
-        "phash_hamming_pairs": q_phash_hamming_pairs,
-        "image_decode_fidelity": q_image_decode_fidelity,
-        "jpeg_roundtrip_fidelity": q_jpeg_roundtrip_fidelity,
-        "crossformat_pixel_dedup": q_crossformat_pixel_dedup,
-        "multimodal_dedup_pipeline": q_multimodal_dedup_pipeline,
-        "video_frame_dedup": q_video_frame_dedup,
-        "audio_fingerprint_dups": q_audio_fingerprint_dups,
-        "sketch_stats": q_sketch_stats,
-        "boilerplate_stats": q_boilerplate_stats,
-        "repetition_stats": q_repetition_stats,
-        "pii_scan": q_pii_scan,
-        "deterministic_shuffle": q_deterministic_shuffle,
-        # --- round-4-covered fill to the 50-window ---
-        "exact_dup_clusters": q_exact_dup_clusters,
-        "exact_dup_clusters_3pass": q_exact_dup_clusters_3pass,
-        "dup_stats": q_dup_stats,
-        "dup_groups": q_dup_groups,
-        "canonical_assignments": q_canonical_assignments,
-        "action_summary": q_action_summary,
-        "scan_filters": q_scan_filters,
-        "report_formatted": q_report_formatted,
-        "text_stats": q_text_stats,
-        "token_counts": q_token_counts,
-        "lang_id": q_lang_id,
-        "fingerprint_dups": q_fingerprint_dups,
-        "ngram_jaccard_pairs": q_ngram_jaccard_pairs,
-        "minhash_lsh_pairs": q_minhash_lsh_pairs,
-        "minhash_lsh_pairs_prod": q_minhash_lsh_pairs_prod,
-        "lsh_recall_report": q_lsh_recall_report,
-        "containment_pairs": q_containment_pairs,
-        "cc_clusters": q_cc_clusters,
-        "cluster_safe_split": q_cluster_safe_split,
-        "quality_dedup_keep": q_quality_dedup_keep,
-        "flood_cc_clusters": q_flood_cc_clusters,
-        # --- beyond the driver's 50-window (all green in
-        # CORRECTNESS_r04.json; re-verified each round by
-        # tools/check_oracle.py --json snapshots) ---
-        "incremental_dedup": q_incremental_dedup,
-        "streaming_watermark_dedup": q_streaming_watermark_dedup,
-        "streaming_sessionization": q_streaming_sessionization,
-        "streaming_fuzzy_dedup": q_streaming_fuzzy_dedup,
-        "streaming_interval_join": q_streaming_interval_join,
-        "cosine_pairs": q_cosine_pairs,
-        "cosine_topk": q_cosine_topk,
-        "semantic_dedup": q_semantic_dedup,
-        "embed_text": q_embed_text,
-        "semantic_dedup_text": q_semantic_dedup_text,
-        "decontaminate": q_decontaminate,
-        "exact_span_dedup": q_exact_span_dedup,
-        "model_quality_filter": q_model_quality_filter,
-        "events_rollup": q_events_rollup,
-        "events_asof_join": q_events_asof_join,
-        "events_range_join": q_events_range_join,
-        "value_histogram": q_value_histogram,
-        "table_profile": q_table_profile,
-        "cross_source_dup_matrix": q_cross_source_dup_matrix,
-        "cluster_size_histogram": q_cluster_size_histogram,
-        "ngram_novelty": q_ngram_novelty,
-        "bm25_topk": q_bm25_topk,
-        "tpch_pricing_summary": q_tpch_pricing_summary,
-        "tpch_shipping_priority": q_tpch_shipping_priority,
-        "events_props_extract": q_events_props_extract,
-        "ann_cosine_pairs": q_ann_cosine_pairs,
-        "ivf_recall_report": q_ivf_recall_report,
-        "ivf_topk": q_ivf_topk,
-        "pq_topk": q_pq_topk,
+    """Every module-level ``q_<name>`` builder, keyed by ``<name>``.
+
+    The driver checks only the first 50 entries, so the oldest-verified
+    come first: names with no all-match row (rows, schema and hash) in
+    any ``CORRECTNESS_r<N>.json`` next to this file, then by the last
+    round N that has one. The sort is stable, so ties keep source order
+    (and without the files every name ties)."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    match = ("rows_match", "schema_match", "hash_match")
+    last: dict[str, int] = {}
+    for fname in sorted(os.listdir(here)):
+        m = re.fullmatch(r"CORRECTNESS_r(\d+)\.json", fname)
+        if m is None:
+            continue
+        with open(os.path.join(here, fname)) as f:
+            for name, row in json.load(f).items():
+                if all(row.get(k) for k in match):
+                    last[name] = max(last.get(name, 0), int(m.group(1)))
+    builders = {
+        n[2:]: fn for n, fn in globals().items()
+        if n.startswith("q_") and callable(fn)
     }
+    return dict(sorted(builders.items(), key=lambda kv: last.get(kv[0], 0)))
 
 
 def oracle_sql() -> dict[str, str]:
@@ -7393,7 +7260,9 @@ FROM cl JOIN sil USING (audio_id)
         # image quality: rebuild every pixel from hex(bytes) — the PPM
         # header is "P6\\n{{w}} {{h}}\\n255\\n" so its byte length is
         # 9 + digits(w) + digits(h), derivable from the stored w/h
-        # columns — then the identical exact-integer luma statistics.
+        # columns; each row's pixel index is unnest(range(w*h)), so no
+        # image size is capped — then the identical exact-integer luma
+        # statistics.
         # n*ssq - s*s is converted to double from the SAME exact
         # integer on both sides (HUGEINT here, Python int there).
         "image_quality_stats": f"""
@@ -7403,14 +7272,14 @@ fx AS (
          9 + length(CAST(w AS VARCHAR)) + length(CAST(h AS VARCHAR)) AS hdr
   FROM {imgq_fixture}
 ),
+t AS (SELECT image_id, n, hx, hdr, unnest(range(n)) AS k FROM fx),
 px AS (
-  SELECT fx.image_id, fx.n,
+  SELECT t.image_id, t.n,
          299 * r.v + 587 * g.v + 114 * b.v AS luma
-  FROM fx CROSS JOIN generate_series(0, 1023) t(k)
-  JOIN hb r ON r.hh = substring(fx.hx, 2 * (fx.hdr + 3 * t.k) + 1, 2)
-  JOIN hb g ON g.hh = substring(fx.hx, 2 * (fx.hdr + 3 * t.k + 1) + 1, 2)
-  JOIN hb b ON b.hh = substring(fx.hx, 2 * (fx.hdr + 3 * t.k + 2) + 1, 2)
-  WHERE t.k < fx.n
+  FROM t
+  JOIN hb r ON r.hh = substring(t.hx, 2 * (t.hdr + 3 * t.k) + 1, 2)
+  JOIN hb g ON g.hh = substring(t.hx, 2 * (t.hdr + 3 * t.k + 1) + 1, 2)
+  JOIN hb b ON b.hh = substring(t.hx, 2 * (t.hdr + 3 * t.k + 2) + 1, 2)
 ),
 a AS (
   SELECT image_id, any_value(n) AS n,
@@ -7453,7 +7322,7 @@ d AS (
       WHEN hx LIKE '52494646%' AND substr(hx, 17, 8) = '57454250'
         THEN 'webp'
       WHEN hx LIKE '50360A%' OR hx LIKE '503620%' OR hx LIKE '503609%'
-        THEN 'ppm'
+        OR hx LIKE '50360D%' THEN 'ppm'
       WHEN hx LIKE '424D%' THEN 'bmp'
       ELSE 'unknown'
     END AS sniffed_fmt

@@ -574,7 +574,7 @@ def _py_sniff(data: bytes | None) -> str:
         return "tiff"
     if data.startswith(b"RIFF") and data[8:12] == b"WEBP":
         return "webp"
-    if data.startswith((b"P6\n", b"P6 ", b"P6\t")):
+    if data.startswith((b"P6\n", b"P6 ", b"P6\t", b"P6\r")):
         return "ppm"
     if data.startswith(b"BM"):
         return "bmp"

@@ -564,7 +564,15 @@ def parse_gps(jpeg: bytes) -> dict | None:
     """Walk the GPS sub-IFD (pointer tag 0x8825) with the same general
     entry reader as IFD0. Returns {gps_tag: value} or None when no
     Exif / no GPS pointer. Test + audit surface — the scale path never
-    needs decoded coordinates, only their removal."""
+    needs decoded coordinates, only their removal. Malformed structures
+    raise ValueError, as in parse_exif."""
+    try:
+        return _parse_gps_inner(jpeg)
+    except (struct.error, IndexError) as exc:
+        raise ValueError(f"malformed GPS IFD: {exc}") from exc
+
+
+def _parse_gps_inner(jpeg: bytes) -> dict | None:
     loc = _find_exif_app1(jpeg)
     if loc is None:
         return None

@@ -46,7 +46,10 @@ def sniffed_format(bytes_col: str = "bytes") -> Column:
             p("52494646") & (F.substring(hx, 17, 8) == F.lit("57454250")),
             F.lit("webp"),
         )
-        .when(p("50360A") | p("503620") | p("503609"), F.lit("ppm"))
+        .when(
+            p("50360A") | p("503620") | p("503609") | p("50360D"),
+            F.lit("ppm"),
+        )
         .when(p("424D"), F.lit("bmp"))
         .otherwise(F.lit("unknown"))
     )

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import random
 import struct
 
 from dedup_spark.fixtures.images import _smooth_image, generate_gps_corpus
@@ -113,3 +114,33 @@ def test_duplicate_gps_pointer_entries_survive(spark):
     tags = parse_exif(cleaned)
     assert tags[0x010F] == "maker-0001"
     assert 0x8825 not in tags
+
+
+def _mutate_exif(data: bytes, rng: random.Random) -> bytes:
+    """1-4 bit flips, byte inserts or a truncation inside the Exif
+    TIFF block (past SOI, the APP1 header and "Exif\\0\\0")."""
+    end = 4 + struct.unpack(">H", data[4:6])[0]
+    b = bytearray(data)
+    for _ in range(rng.randint(1, 4)):
+        at = rng.randrange(12, end)
+        op = rng.choice(("flip", "truncate", "insert"))
+        if op == "flip":
+            b[at] ^= 1 << rng.randrange(8)
+        elif op == "truncate":
+            del b[at:]
+            break
+        else:
+            b[at:at] = bytes([rng.randrange(256)])
+    return bytes(b)
+
+
+def test_parse_gps_on_mutants_raises_only_value_error():
+    rng = random.Random(1)
+    originals = [_jpeg_with_gps(False), _jpeg_with_gps(True)]
+    for i in range(400):
+        mutant = _mutate_exif(originals[i % 2], rng)
+        try:
+            got = parse_gps(mutant)
+        except ValueError:
+            continue
+        assert got is None or isinstance(got, dict), i

@@ -10,7 +10,9 @@ zero-std, normal rows neither), and unreadable-row survival.
 from __future__ import annotations
 
 import math
+import sys
 
+import duckdb
 import numpy as np
 import pandas as pd
 
@@ -21,7 +23,12 @@ from dedup_spark.fixtures.images import (
     generate_image_quality_corpus,
     luma1000,
 )
+from dedup_spark.fixtures.materialize import fixture_imgq_parquet
 from dedup_spark.multimodal.decode import image_quality_report
+
+sys.path.insert(0, ".")
+
+import __spark_entry__ as entrymod
 
 
 def _report(spark, pdf):
@@ -122,3 +129,24 @@ def test_luma_helper_matches_definition():
     lum = luma1000(px)
     assert lum[0, 0] == 299 * 1 + 587 * 2 + 114 * 3
     assert lum[0, 1] == 299 * 250 + 587 * 100 + 114 * 7
+
+
+def test_oracle_matches_engine_past_1024_pixels(spark):
+    """A 40x30 image (1,200 px): the DuckDB oracle rebuilds every
+    pixel, not a capped prefix, and agrees with the engine."""
+    px = np.random.default_rng(7).integers(0, 256, (30, 40, 3), dtype=np.uint8)
+    pdf = pd.DataFrame(
+        {"image_id": ["big"], "bytes": [encode_ppm(px)], "fmt": ["ppm"],
+         "w": [40], "h": [30]}
+    )
+    sql = entrymod.oracle_sql()["image_quality_stats"].replace(
+        f"read_parquet('{fixture_imgq_parquet()}')", "big"
+    )
+    con = duckdb.connect()
+    con.register("big", pdf)
+    rel = con.sql(sql)
+    (row,) = rel.fetchall()
+    got = dict(zip(rel.columns, row))
+    want = _report(spark, pdf[["image_id", "bytes", "fmt"]])["big"]
+    assert got["n_px"] == 1200
+    assert got == {k: want[k] for k in got}

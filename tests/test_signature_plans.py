@@ -46,15 +46,6 @@ def _has_binary(plan) -> bool:
     )
 
 
-@pytest.fixture
-def no_aqe(spark):
-    # AQE hides the Exchanges inside an un-finalized adaptive plan
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    yield spark
-    spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-
 @pytest.mark.parametrize("name,tier,feed", TIERS, ids=[t[0] for t in TIERS])
 def test_signature_tier_plan_shape(no_aqe, monkeypatch, name, tier, feed):
     spark = no_aqe
