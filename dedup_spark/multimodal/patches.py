@@ -33,6 +33,8 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F
 
+from dedup_spark.plans.lineage import count_and_log_drops
+
 
 def patch_signatures(
     df: DataFrame,
@@ -61,7 +63,7 @@ def patch_signatures(
                 for y in range(0, h - patch + 1, patch):
                     for x in range(0, w - patch + 1, patch):
                         blk = px[y : y + patch, x : x + patch]
-                        if blk.max() == blk.min():
+                        if (blk == blk[0, 0]).all():
                             continue  # flat: the stopword of images
                         rows.append(
                             (
@@ -104,12 +106,7 @@ def shared_patch_pairs(
         F.count(F.lit(1)).alias("_n")
     )
     if log_drops:
-        n_drop = counts.filter(F.col("_n") > max_posting).count()
-        if n_drop:
-            print(
-                f"shared_patch_pairs: dropped {n_drop} template "
-                f"patches carried by > {max_posting} images"
-            )
+        count_and_log_drops(counts, max_posting, "shared_patch_pairs")
     keep = counts.filter(
         (F.col("_n") >= 2) & (F.col("_n") <= max_posting)
     ).select("patch_sha")

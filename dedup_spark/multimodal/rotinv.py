@@ -30,6 +30,7 @@ from dedup_spark.multimodal.decode import (
     image_signatures,
     signature_clusters,
 )
+from dedup_spark.plans.lineage import count_and_log_drops
 
 
 def multiset_signature(px: np.ndarray) -> str:
@@ -120,12 +121,7 @@ def verified_rotation_pairs(
     )
     counts = sig.groupBy("ms_sha").agg(F.count(F.lit(1)).alias("_n"))
     if log_drops:
-        n_drop = counts.filter(F.col("_n") > max_bucket).count()
-        if n_drop:
-            print(
-                f"verified_rotation_pairs: dropped {n_drop} flooded "
-                f"multiset buckets (> {max_bucket} members)"
-            )
+        count_and_log_drops(counts, max_bucket, "verified_rotation_pairs")
     keep = counts.filter(
         (F.col("_n") >= 2) & (F.col("_n") <= max_bucket)
     ).select("ms_sha")

@@ -175,11 +175,13 @@ def clusters_from_pairs(
     all_ids: DataFrame | None = None,
     id_col: str = "image_id",
     cfg: DedupConfig = DEFAULT_CONFIG,
+    metrics: StageMetrics | None = None,
 ) -> DataFrame:
     """Pairs → full assignment table. If all_ids is given, singleton rows
     (no near-dup) get their own cluster_id = id, matching the generator's
-    ground-truth shape."""
-    cc = connected_components(pairs, cfg)
+    ground-truth shape. ``metrics`` receives the per-iteration walls and
+    edge counts of :func:`connected_components`."""
+    cc = connected_components(pairs, cfg, metrics)
     if all_ids is None:
         return cc.withColumnRenamed("id", id_col)
     base = all_ids.select(F.col(id_col))

@@ -103,6 +103,7 @@ def dedup_pipeline(
             all_ids=df if include_singletons else None,
             id_col=id_col,
             cfg=cfg,
+            metrics=metrics,
         )
 
     with metrics.stage("canonical"):

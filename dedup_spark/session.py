@@ -9,8 +9,53 @@ partitions sized to parallelism).
 from __future__ import annotations
 
 import os
+import sys
+import zipimport
 
 from pyspark.sql import SparkSession
+
+
+def _skip_unchanged_zip_rereads() -> None:
+    """Make ``zipimporter.invalidate_caches`` re-read an archive's
+    directory only when the archive file changed.
+
+    PySpark's worker calls ``importlib.invalidate_caches()`` at the start
+    of every task. Before CPython 3.13 each zipimporter then re-parses
+    its archive's whole central directory, and a reused worker holds one
+    importer per package directory of ``pyspark.zip`` (16 with py4j), so
+    every task re-read the 1,328-entry archive 16 times: about 0.12 CPU-s
+    per task on a 4-CPU Xeon, against about 0.001 s for a trivial
+    ``mapInPandas`` body.
+
+    The wrapper compares ``os.stat`` (mtime, size, inode) with the one
+    taken at the last read; a rewritten or replaced zip (``--py-files``,
+    ``addPyFile``) differs and is re-read, and an importer's first call
+    and any ``OSError`` fall through to the original. CPython 3.13
+    already invalidates lazily, so nothing is installed there. Runs on
+    import of this module, which ``dedup_spark/__init__.py`` imports, so
+    every Python worker that unpickles an engine function installs it.
+    """
+    cls = zipimport.zipimporter
+    if sys.version_info >= (3, 13) or cls.invalidate_caches.__module__ == __name__:
+        return
+    reread = cls.invalidate_caches
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_mtime_ns, st.st_size, st.st_ino)
+        except OSError:
+            key = None
+        # stat before the read: a write racing the read then leaves an
+        # older key, so the next call re-reads instead of missing it
+        if key is None or key != getattr(self, "_read_at_stat", None):
+            reread(self)
+            self._read_at_stat = key
+
+    cls.invalidate_caches = invalidate_caches
+
+
+_skip_unchanged_zip_rereads()
 
 
 def get_spark(

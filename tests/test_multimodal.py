@@ -397,9 +397,11 @@ def test_multimodal_pipeline_fuses_three_edge_signals(spark):
     """The fused north-star cascade (q_multimodal_dedup_pipeline
     composition): a byte-exact edge, a phash Hamming edge, and a
     caption MinHash edge must CHAIN into one transitive cluster, with
-    the shortest-id canonical and singletons self-clustered."""
+    the shortest-id canonical and singletons self-clustered. The
+    pipeline's metrics keep the CC per-iteration walls and edge counts."""
     from dedup_spark.config import DedupConfig
     from dedup_spark.pipeline import dedup_pipeline
+    from dedup_spark.plans.lineage import StageMetrics
 
     far1 = int(np.int64(-1))  # 0xFFFF... as signed
     far2 = 0x0F0F0F0F0F0F0F0F
@@ -417,9 +419,11 @@ def test_multimodal_pipeline_fuses_three_edge_signals(spark):
     df = spark.createDataFrame(
         rows, "image_id string, bytes binary, w int, h int, fmt string, caption string, phash long"
     )
+    m = StageMetrics("dedup_pipeline")
     out = dedup_pipeline(
         df,
         cfg=DedupConfig(jaccard_threshold=0.9),
+        metrics=m,
         caption_band_bucket=1 << 20,
         phash_band_bucket=4096,
     ).select("image_id", "cluster_id", "is_canonical")
@@ -432,3 +436,6 @@ def test_multimodal_pipeline_fuses_three_edge_signals(spark):
         "d": ("a", False),
         "e": ("e", True),
     }
+    edges = [e["value"] for e in m.entries
+             if e["stage"].startswith("iter_") and e["stage"].endswith("_edges")]
+    assert edges and edges[-1] == 3  # converged star: a-b, a-c, a-d

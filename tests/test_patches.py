@@ -36,20 +36,25 @@ def test_planted_logo_pairs_and_misaligned_miss(spark):
 
 
 def test_flat_patches_are_dropped(spark):
-    # two images sharing ONLY an all-white block must not pair
-    base1 = _smooth_image(b"f1", 16, 16).copy()
-    base2 = _smooth_image(b"f2", 16, 16).copy()
-    base1[0:8, 0:8] = 255
-    base2[8:16, 8:16] = 255
-    rows = [("w1", None, encode_ppm(base1), 16, 16, "ppm", "x"),
-            ("w2", None, encode_ppm(base2), 16, 16, "ppm", "x")]
+    # two images sharing ONLY a solid block must not pair: all-white, and
+    # saturated pure red (its channels differ, so max != min, yet flat)
     import pandas as pd
-    pdf = pd.DataFrame(rows, columns=["image_id", "logo", "bytes", "w", "h", "fmt", "klass"])
-    got = shared_patch_pairs(_df(spark, pdf).drop("logo", "klass")).collect()
-    assert got == []
-    sigs = patch_signatures(_df(spark, pdf).drop("logo", "klass")).collect()
-    # the flat blocks emitted no signature rows at their positions
-    assert not any(r["py"] == 0 and r["px"] == 0 and r["image_id"] == "w1" for r in sigs)
+
+    for fill in (255, (255, 0, 0)):
+        base1 = _smooth_image(b"f1", 16, 16).copy()
+        base2 = _smooth_image(b"f2", 16, 16).copy()
+        base1[0:8, 0:8] = fill
+        base2[8:16, 8:16] = fill
+        rows = [("w1", None, encode_ppm(base1), 16, 16, "ppm", "x"),
+                ("w2", None, encode_ppm(base2), 16, 16, "ppm", "x")]
+        pdf = pd.DataFrame(rows, columns=["image_id", "logo", "bytes", "w", "h", "fmt", "klass"])
+        df = _df(spark, pdf).drop("logo", "klass")
+        assert shared_patch_pairs(df).collect() == [], fill
+        sigs = patch_signatures(df).collect()
+        # the flat blocks emitted no signature rows at their positions
+        assert not any(
+            r["py"] == 0 and r["px"] == 0 and r["image_id"] == "w1" for r in sigs
+        ), fill
 
 
 def test_template_posting_cap(spark):
