@@ -710,8 +710,9 @@ def q_doc_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components (large-star/small-star) over the exact
-    Jaccard edge set → (doc_id, cluster_id = component min)."""
+    """Connected components (one-task local finish within the edge
+    budget, large-star/small-star above it) over the exact Jaccard edge
+    set → (doc_id, cluster_id = component min)."""
     edges = exact_jaccard_pairs(
         _docs(spark, sf_dir),
         id_col="doc_id",
@@ -734,7 +735,7 @@ def q_incremental_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     cc_clusters path, singletons self-clustered). Phase 2 folds in
     every edge touching a new doc via the contracted-graph update: new
     endpoints root to themselves, old endpoints to their phase-1
-    cluster root; the star loop runs on that batch-sized graph only,
+    cluster root; CC runs on that batch-sized graph only,
     and the corpus table is remapped by one broadcast join on the old
     root. The edge set is computed ONCE on the full corpus (same
     exact-Jaccard tier and posting cap as cc_clusters) so old ∪ new
@@ -3949,7 +3950,7 @@ def q_multimodal_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: each tier prunes to its own columns (bytes never
     reaches the signature tiers), edges are O(duplicate pairs), and CC
-    is the O(log n) star loop shared with every other tier.
+    is the connected-components pass shared with every other tier.
 
     This IS the shipped composition (dedup_spark/pipeline.py — the same
     function bench.py and jobs/dedup_job.py run), with pair-set-exact

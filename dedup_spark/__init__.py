@@ -14,8 +14,9 @@ image+caption rows:
   stage 3 — full verification mirroring the full-content hash
             (src/hasher.rs:30-47) — exact ``sha2(bytes)`` equality, or
             Jaccard / Hamming recompute on candidate pairs
-  stage 4 — transitive clustering via distributed connected components
-            (large-star / small-star), checkpoint-resumable
+  stage 4 — transitive clustering via connected components: one task
+            within an edge budget, distributed large-star / small-star
+            above it, checkpoint-resumable
 
 Everything is DataFrame-first: built-in ``pyspark.sql.functions`` in the
 hot path, Arrow-vectorized pandas UDFs where Spark lacks a primitive,

@@ -54,7 +54,7 @@ def size_candidates(
 
 
 def _materialize_keys(keys: DataFrame) -> DataFrame:
-    """Eagerly materialize a (small) key set and truncate its lineage.
+    """Checkpoint a (small) key set to truncate its lineage.
 
     Without this, each cascade stage's plan embeds the previous stage
     TWICE (once in the main branch, once inside the key aggregate) —
@@ -65,8 +65,12 @@ def _materialize_keys(keys: DataFrame) -> DataFrame:
     partitions on executors; on a real cluster with lost-executor
     tolerance requirements, point spark.sparkContext.setCheckpointDir
     at durable storage and swap to .checkpoint().
+
+    Lazy: building the query runs no job of its own; the first job that
+    reads the key set materializes it once and every later consumer
+    reads that copy.
     """
-    return keys.localCheckpoint(eager=True)
+    return keys.localCheckpoint(eager=False)
 
 
 def semi_join_candidates(df: DataFrame, keys: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -188,7 +192,7 @@ def exact_duplicate_clusters(
         # the full hash, so no stage-2 semi-join — 2 fewer job barriers
         hashed = s1.select(
             id_col, "_len", full.alias("_fsha")
-        ).localCheckpoint(eager=True)  # slim table; payload never read again
+        ).localCheckpoint(eager=False)  # slim table; payload never read again
         members = hashed.select(id_col, "_len", "_fsha")
     else:
         s2 = s1.withColumn("_psha", prefix)

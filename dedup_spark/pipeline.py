@@ -6,8 +6,9 @@
                                  exact-Jaccard verify (operators.minhash)
   tier 3  phash SimHash bands  — Hamming-radius candidates → bit_count
                                  verify (operators.simhash)
-  union of verified edges → large-star/small-star connected components
-  (checkpoint-resumable) → full assignment table → canonical marking.
+  union of verified edges → connected components (one task within the
+  edge budget, checkpoint-resumable large-star/small-star above it) →
+  full assignment table → canonical marking.
 
 One function, used by bench.py, jobs/dedup_job.py, the streaming
 incremental path, and the parity tests — so the measured pipeline IS

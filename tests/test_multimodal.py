@@ -398,7 +398,7 @@ def test_multimodal_pipeline_fuses_three_edge_signals(spark):
     composition): a byte-exact edge, a phash Hamming edge, and a
     caption MinHash edge must CHAIN into one transitive cluster, with
     the shortest-id canonical and singletons self-clustered. The
-    pipeline's metrics keep the CC per-iteration walls and edge counts."""
+    pipeline's metrics say which CC path ran and over how many edges."""
     from dedup_spark.config import DedupConfig
     from dedup_spark.pipeline import dedup_pipeline
     from dedup_spark.plans.lineage import StageMetrics
@@ -436,6 +436,36 @@ def test_multimodal_pipeline_fuses_three_edge_signals(spark):
         "d": ("a", False),
         "e": ("e", True),
     }
-    edges = [e["value"] for e in m.entries
-             if e["stage"].startswith("iter_") and e["stage"].endswith("_edges")]
-    assert edges and edges[-1] == 3  # converged star: a-b, a-c, a-d
+    # CC finished in one task over the 4 distinct edges a-b (bytes and
+    # phash), a-c and b-c (phash), c-d (caption); no star round ran
+    vals = {e["stage"]: e["value"] for e in m.entries if e["metric"] == "value"}
+    assert vals == {"local_finish_edges": 4}
+
+
+def test_fused_pipeline_job_count_is_pinned(spark):
+    """Job barriers, not data, bound the fused pass. Building and
+    collecting ``dedup_pipeline`` on a 60-image corpus runs 31 Spark
+    jobs (54 with the star loop and the eager build-time checkpoints);
+    the pin leaves 5 jobs of headroom for AQE's runtime plan choices.
+    A new eager checkpoint or a star round on this graph breaks it."""
+    import uuid
+
+    from dedup_spark.pipeline import dedup_pipeline
+    from dedup_spark.plans.lineage import StageMetrics
+
+    imgs, _ = to_spark(
+        spark, generate_corpus(60, dup_ratio=0.3, near_dup_ratio=0.2, seed=11)
+    )
+    sc = spark.sparkContext
+    group = f"fused-job-count-{uuid.uuid4().hex}"
+    m = StageMetrics("dedup_pipeline")
+    sc.setJobGroup(group, "fused pipeline job count", False)
+    try:
+        rows = dedup_pipeline(imgs, metrics=m).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(rows) == 60
+    assert not any(e["stage"].startswith("iter_") for e in m.entries), m.entries
+    assert jobs <= 36, jobs

@@ -94,6 +94,12 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     stages = {e["stage"] for e in manifest}
     assert any("exact" in s or "stage" in s or "cc" in s for s in stages), stages
     assert all("run_id" in e for e in manifest)
+    # ...including which connected-components path ran: this graph fits
+    # the local-finish edge budget, so one task finished it
+    cc_path = [e for e in manifest if e["stage"] == "local_finish_edges"]
+    assert len(cc_path) == 1 and cc_path[0]["value"] > 0, stages
+    assert "local_finish" in stages
+    assert not any(s.startswith("iter_") for s in stages), stages
 
 
 def test_spark_submit_mixture_job_end_to_end(tmp_path):
