@@ -1137,6 +1137,45 @@ def _bloom_probe_report(
     )
 
 
+def _replay_dir(sf_dir: str, prefix: str) -> str:
+    """A fresh scratch dir for one eager streaming replay. Unique per
+    invocation, so concurrent runs (parallel pytest, a driver building
+    queries twice) never race a shared rmtree; dirs left by past
+    invocations are swept after an hour."""
+    import shutil
+    import tempfile
+    import time
+
+    root = "/tmp/dedup_spark_stream_q"
+    os.makedirs(root, exist_ok=True)
+    for d in os.listdir(root):
+        p = os.path.join(root, d)
+        if os.path.isdir(p) and time.time() - os.path.getmtime(p) > 3600:
+            shutil.rmtree(p, ignore_errors=True)
+    return tempfile.mkdtemp(
+        prefix=f"{prefix}{os.path.basename(sf_dir.rstrip('/'))}_", dir=root
+    )
+
+
+def _write_replay_files(in_dir: str, batches: list[DataFrame]) -> None:
+    """Stage each batch as ONE parquet file ``in_dir/b<k>.parquet`` with
+    mtime 1700000000 + 100*k, so a one-file-per-trigger file-source
+    stream replays the batches in list order."""
+    import shutil
+
+    os.makedirs(in_dir)
+    for k, batch in enumerate(batches):
+        tmp = f"{in_dir}_raw{k}"
+        batch.coalesce(1).write.parquet(tmp)
+        part = next(
+            f for f in os.listdir(tmp)
+            if f.endswith(".parquet") and not f.startswith(".")
+        )
+        dst = f"{in_dir}/b{k}.parquet"
+        shutil.move(os.path.join(tmp, part), dst)
+        os.utime(dst, (1700000000 + 100 * k,) * 2)
+
+
 def q_incremental_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming-state form of the Bloom gate (streaming/bloomstate.py):
     the reference half's grams arrive as THREE doc_id-ordered
@@ -1154,38 +1193,13 @@ def q_incremental_bloom_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     independent of corpus size.
 
     Like q_incremental_dedup the replay is inherently eager (merges
-    run real jobs at call time); DEDUP_SPARK_EXPLAIN_ONLY=1 returns a
-    lazy schema-identical stand-in."""
-    if os.environ.get("DEDUP_SPARK_EXPLAIN_ONLY"):
-        return (
-            _docs(spark, sf_dir)
-            .select(
-                F.col("doc_id").cast("long").alias("doc_id"),
-                F.lit(0).cast("long").alias("n_grams"),
-                F.lit(0).cast("long").alias("n_candidates"),
-                F.lit(0).cast("long").alias("n_present"),
-                F.lit(True).alias("no_false_negatives"),
-            )
-            .limit(0)
-        )
-    import shutil
-    import tempfile
-    import time
-
+    run real jobs at call time)."""
     from dedup_spark.streaming.bloomstate import (
         merge_bloom_batch,
         read_bloom_state,
     )
 
-    root = "/tmp/dedup_spark_stream_q"
-    os.makedirs(root, exist_ok=True)
-    for d in os.listdir(root):
-        p = os.path.join(root, d)
-        if os.path.isdir(p) and time.time() - os.path.getmtime(p) > 3600:
-            shutil.rmtree(p, ignore_errors=True)
-    base = tempfile.mkdtemp(
-        prefix=f"bloom_{os.path.basename(sf_dir.rstrip('/'))}_", dir=root
-    )
+    base = _replay_dir(sf_dir, "bloom_")
     state = f"{base}/bloom_state"
 
     from dedup_spark.operators.decontaminate import _doc_ngrams
@@ -1698,10 +1712,6 @@ def q_bpe_encode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = _docs(spark, sf_dir)
-    if os.environ.get("DEDUP_SPARK_EXPLAIN_ONLY"):
-        # plan-shape stand-in: skip the eager k-round merge training
-        # (the streaming queries' convention for plan-only consumers)
-        return doc_token_counts(docs, [("a", "b")] * BPE_K).limit(0)
     m = bpe_merges(word_frequencies(docs), k=BPE_K).orderBy("rank").collect()
     merges = [(r["sym_left"], r["sym_right"]) for r in m]
     return doc_token_counts(docs, merges)
@@ -2369,26 +2379,11 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-exact per-pair sum, and the (rounded score, id) ranking.
     The planted mutated neighbors rank at the top — retrieval is the
     review tier between decontamination flags and deletion."""
-    from dedup_spark.fixtures.materialize import (
-        ZIPF_PARAMS,
-        fixture_zipf_docs_parquet,
-    )
+    from dedup_spark.fixtures.materialize import fixture_zipf_docs_parquet
     from dedup_spark.operators.retrieval import bm25_topk
 
-    # scaling-study hook (tools/bench_sf1.py): SPARK_GRAFT_ZIPF_DOCS
-    # scales the CORPUS while the query set stays the pinned 20 (drawn
-    # from the first 2000 doc_ids) — so the study measures per-query
-    # cost vs corpus size, not query-count growth. Unset (the driver's
-    # correctness runs), both filters are no-ops vs the pinned config.
-    n_override = int(os.environ.get("SPARK_GRAFT_ZIPF_DOCS", "0"))
-    params = (
-        dict(ZIPF_PARAMS, n_docs=n_override) if n_override else None
-    )
-    docs = spark.read.parquet(fixture_zipf_docs_parquet(params))
-    queries = docs.filter(
-        (F.col("doc_id") % 100 == 18)
-        & (F.col("doc_id") < ZIPF_PARAMS["n_docs"])
-    )
+    docs = spark.read.parquet(fixture_zipf_docs_parquet())
+    queries = docs.filter(F.col("doc_id") % 100 == 18)
     return bm25_topk(docs, queries, k=TOPK)
 
 
@@ -2799,38 +2794,10 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NOTE (ADVICE r2): the replay is inherently eager — foreachBatch
     bodies run real jobs and parquet writes, so this function executes
-    Spark work at CALL time, unlike every other builder. EXPLAIN-only /
-    plan-audit flows set DEDUP_SPARK_EXPLAIN_ONLY=1 to get a lazy
-    schema-identical stand-in (clearly not the replay result) instead
-    of triggering execution and /tmp side effects."""
-    if os.environ.get("DEDUP_SPARK_EXPLAIN_ONLY"):
-        return (
-            _prefix_payload(_docs(spark, sf_dir))
-            .select(
-                F.col("doc_id").cast("long").alias("doc_id"),
-                F.col("doc_id").cast("long").alias("cluster_id"),
-            )
-            .limit(0)
-        )
-    import tempfile
-
+    Spark work at CALL time, unlike every other builder."""
     from dedup_spark.streaming.incremental import process_batch
 
-    # unique dir per invocation: concurrent runs (parallel pytest, a
-    # driver building queries twice) can never race a shared rmtree;
-    # stale dirs from past invocations are swept opportunistically
-    import shutil
-    import time
-
-    root = "/tmp/dedup_spark_stream_q"
-    os.makedirs(root, exist_ok=True)
-    for d in os.listdir(root):
-        p = os.path.join(root, d)
-        if os.path.isdir(p) and time.time() - os.path.getmtime(p) > 3600:
-            shutil.rmtree(p, ignore_errors=True)
-    base = tempfile.mkdtemp(
-        prefix=f"{os.path.basename(sf_dir.rstrip('/'))}_", dir=root
-    )
+    base = _replay_dir(sf_dir, "")
     state, out = f"{base}/state", f"{base}/out"
     docs = _prefix_payload(_docs(spark, sf_dir)).select("doc_id", "payload")
     hi = docs.agg(F.max("doc_id")).first()[0]
@@ -2866,8 +2833,7 @@ def q_streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pytest-proven in tests/test_streaming.py.
 
     Like q_incremental_dedup the replay is inherently eager (a real
-    streaming query runs at call time); DEDUP_SPARK_EXPLAIN_ONLY=1
-    returns a lazy schema-identical stand-in."""
+    streaming query runs at call time)."""
     def out_cols():
         return [
             F.col("event_id").cast("long").alias("event_id"),
@@ -2884,28 +2850,13 @@ def q_streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
-    if os.environ.get("DEDUP_SPARK_EXPLAIN_ONLY"):
-        return events.select(*out_cols()).limit(0)
-    import shutil
-    import tempfile
-    import time
-
     from dedup_spark.streaming.incremental import (
         dedup_within_watermark,
         replay_ordered_files,
     )
 
-    root = "/tmp/dedup_spark_stream_q"
-    os.makedirs(root, exist_ok=True)
-    for d in os.listdir(root):
-        p = os.path.join(root, d)
-        if os.path.isdir(p) and time.time() - os.path.getmtime(p) > 3600:
-            shutil.rmtree(p, ignore_errors=True)
-    base = tempfile.mkdtemp(
-        prefix=f"wm_{os.path.basename(sf_dir.rstrip('/'))}_", dir=root
-    )
+    base = _replay_dir(sf_dir, "wm_")
     in_dir, out_dir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    os.makedirs(in_dir)
 
     old_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -2923,6 +2874,7 @@ def q_streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         import datetime
 
         day = datetime.timedelta(days=1)
+        batches = []
         for k, sl in enumerate(slices):
             batch = sl.unionAll(sl.filter(F.col("event_id") % 5 == 0))
             if k > 0:  # producer retry: previous slice's tail, ≤1 day late
@@ -2932,15 +2884,8 @@ def q_streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                         & (F.col("ts") >= F.lit(cuts[k - 1] - day))
                     )
                 )
-            tmp = f"{base}/raw{k}"
-            batch.coalesce(1).write.parquet(tmp)
-            part = next(
-                f for f in os.listdir(tmp)
-                if f.endswith(".parquet") and not f.startswith(".")
-            )
-            dst = f"{in_dir}/b{k}.parquet"
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (1700000000 + 100 * k, 1700000000 + 100 * k))
+            batches.append(batch)
+        _write_replay_files(in_dir, batches)
 
         replay_ordered_files(
             spark, in_dir, events.schema,
@@ -2965,8 +2910,7 @@ def q_streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNMATCHED with null attributes — dropping them in an enrichment
     stage is data loss, and an accidental inner join fails the row
     count. No state store exists; the streamed result must equal the
-    batch left join, which is the oracle. Eager replay;
-    DEDUP_SPARK_EXPLAIN_ONLY=1 returns the lazy stand-in."""
+    batch left join, which is the oracle. Eager replay."""
     events = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
@@ -2985,30 +2929,13 @@ def q_streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c_mktsegment",
         )
 
-    from dedup_spark.streaming.incremental import stream_static_enrich
-
-    if os.environ.get("DEDUP_SPARK_EXPLAIN_ONLY"):
-        return out_cols(
-            stream_static_enrich(events, dim, "user_id", "c_custkey")
-        ).limit(0)
-
-    import shutil
-    import tempfile
-    import time
-
-    from dedup_spark.streaming.incremental import replay_ordered_files
-
-    root = "/tmp/dedup_spark_stream_q"
-    os.makedirs(root, exist_ok=True)
-    for d in os.listdir(root):
-        p = os.path.join(root, d)
-        if os.path.isdir(p) and time.time() - os.path.getmtime(p) > 3600:
-            shutil.rmtree(p, ignore_errors=True)
-    base = tempfile.mkdtemp(
-        prefix=f"enr_{os.path.basename(sf_dir.rstrip('/'))}_", dir=root
+    from dedup_spark.streaming.incremental import (
+        replay_ordered_files,
+        stream_static_enrich,
     )
+
+    base = _replay_dir(sf_dir, "enr_")
     in_dir, out_dir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    os.makedirs(in_dir)
 
     old_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -3023,16 +2950,7 @@ def q_streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             events.filter(F.col("ts") >= F.lit(cuts[1])),
         ]
-        for k, sl in enumerate(slices):
-            tmp = f"{base}/raw{k}"
-            sl.coalesce(1).write.parquet(tmp)
-            part = next(
-                f for f in os.listdir(tmp)
-                if f.endswith(".parquet") and not f.startswith(".")
-            )
-            dst = f"{in_dir}/b{k}.parquet"
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (1700000000 + 100 * k,) * 2)
+        _write_replay_files(in_dir, slices)
 
         replay_ordered_files(
             spark, in_dir, events.schema,
@@ -3061,8 +2979,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf0.01, several crossing a batch boundary and therefore carried by
     buffered state).
 
-    Eager replay like the other streaming gates;
-    DEDUP_SPARK_EXPLAIN_ONLY=1 returns a lazy stand-in."""
+    Eager replay like the other streaming gates."""
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").withColumn(
         "ts", F.col("ts").cast("timestamp")
     )
@@ -3085,31 +3002,12 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.unix_micros("p_ts") - F.unix_micros("c_ts")).alias("delta_us"),
         )
 
-    if os.environ.get("DEDUP_SPARK_EXPLAIN_ONLY"):
-        return out_cols(
-            clicks.crossJoin(purchases).filter(
-                F.col("c_user") == F.col("p_user")
-            )
-        ).limit(0)
-
-    import shutil
-    import tempfile
-    import time
-
     from dedup_spark.streaming.incremental import (
         replay_two_ordered_streams,
         stream_interval_join,
     )
 
-    root = "/tmp/dedup_spark_stream_q"
-    os.makedirs(root, exist_ok=True)
-    for d in os.listdir(root):
-        p = os.path.join(root, d)
-        if os.path.isdir(p) and time.time() - os.path.getmtime(p) > 3600:
-            shutil.rmtree(p, ignore_errors=True)
-    base = tempfile.mkdtemp(
-        prefix=f"ssj_{os.path.basename(sf_dir.rstrip('/'))}_", dir=root
-    )
+    base = _replay_dir(sf_dir, "ssj_")
     out_dir, ckpt = f"{base}/out", f"{base}/ckpt"
 
     old_tz = spark.conf.get("spark.sql.session.timeZone")
@@ -3121,8 +3019,6 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         for name, side, ts in (
             ("clicks", clicks, "c_ts"), ("purchases", purchases, "p_ts"),
         ):
-            in_dir = f"{base}/{name}"
-            os.makedirs(in_dir)
             slices = [
                 side.filter(F.col(ts) < F.lit(cuts[0])),
                 side.filter(
@@ -3130,16 +3026,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
                 side.filter(F.col(ts) >= F.lit(cuts[1])),
             ]
-            for k, sl in enumerate(slices):
-                tmp = f"{base}/raw_{name}{k}"
-                sl.coalesce(1).write.parquet(tmp)
-                part = next(
-                    f for f in os.listdir(tmp)
-                    if f.endswith(".parquet") and not f.startswith(".")
-                )
-                dst = f"{in_dir}/b{k}.parquet"
-                shutil.move(os.path.join(tmp, part), dst)
-                os.utime(dst, (1700000000 + 100 * k,) * 2)
+            _write_replay_files(f"{base}/{name}", slices)
 
         replay_two_ordered_streams(
             spark,
@@ -3175,36 +3062,19 @@ def q_streaming_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     forest is COMPACTED mid-replay (after batch 2) so the compactor's
     fold-then-truncate rewrite is itself under the gate.
 
-    Eager replay like the other streaming queries;
-    DEDUP_SPARK_EXPLAIN_ONLY=1 returns a lazy stand-in."""
+    Eager replay like the other streaming queries."""
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     ).filter(
         F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")) >= K
     )
-    if os.environ.get("DEDUP_SPARK_EXPLAIN_ONLY"):
-        return docs.select(
-            "doc_id", F.col("doc_id").alias("cluster_id")
-        ).limit(0)
-    import shutil
-    import tempfile
-    import time
-
     from dedup_spark.streaming.fuzzy import (
         compact_aliases,
         fuzzy_process_batch,
         resolve_assignments,
     )
 
-    root = "/tmp/dedup_spark_stream_q"
-    os.makedirs(root, exist_ok=True)
-    for d in os.listdir(root):
-        p = os.path.join(root, d)
-        if os.path.isdir(p) and time.time() - os.path.getmtime(p) > 3600:
-            shutil.rmtree(p, ignore_errors=True)
-    base = tempfile.mkdtemp(
-        prefix=f"fz_{os.path.basename(sf_dir.rstrip('/'))}_", dir=root
-    )
+    base = _replay_dir(sf_dir, "fz_")
     state, out = f"{base}/state", f"{base}/out"
 
     cfg = DedupConfig(jaccard_threshold=MINHASH_T)
@@ -3242,40 +3112,18 @@ def q_streaming_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     carry, and timeout flush; the sentinel user (-1) stays open in
     state and must never emit.
 
-    Eager like the other replays; DEDUP_SPARK_EXPLAIN_ONLY=1 returns a
-    lazy schema-identical stand-in."""
+    Eager like the other replays."""
     events = spark.read.parquet(f"{sf_dir}/events.parquet").select(
         F.col("user_id").cast("long").alias("user_id"),
         F.col("ts").cast("timestamp").alias("ts"),
     )
-    if os.environ.get("DEDUP_SPARK_EXPLAIN_ONLY"):
-        return (
-            events.select(
-                "user_id",
-                F.unix_micros("ts").alias("session_start_us"),
-                F.unix_micros("ts").alias("session_end_us"),
-                F.lit(0).cast("long").alias("n_events"),
-            ).limit(0)
-        )
     import datetime
-    import shutil
-    import tempfile
-    import time
 
     from dedup_spark.streaming.incremental import replay_ordered_files
     from dedup_spark.streaming.sessionize import sessionize
 
-    root = "/tmp/dedup_spark_stream_q"
-    os.makedirs(root, exist_ok=True)
-    for d in os.listdir(root):
-        p = os.path.join(root, d)
-        if os.path.isdir(p) and time.time() - os.path.getmtime(p) > 3600:
-            shutil.rmtree(p, ignore_errors=True)
-    base = tempfile.mkdtemp(
-        prefix=f"sess_{os.path.basename(sf_dir.rstrip('/'))}_", dir=root
-    )
+    base = _replay_dir(sf_dir, "sess_")
     in_dir, out_dir, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    os.makedirs(in_dir)
 
     old_tz = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
@@ -3300,16 +3148,7 @@ def q_streaming_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
                 [(-1, hi + 15 * hour)], "user_id long, ts timestamp"
             ),
         ]
-        for k, batch in enumerate(batches):
-            tmp = f"{base}/raw{k}"
-            batch.coalesce(1).write.parquet(tmp)
-            part = next(
-                f for f in os.listdir(tmp)
-                if f.endswith(".parquet") and not f.startswith(".")
-            )
-            dst = f"{in_dir}/b{k}.parquet"
-            shutil.move(os.path.join(tmp, part), dst)
-            os.utime(dst, (1700000000 + 100 * k, 1700000000 + 100 * k))
+        _write_replay_files(in_dir, batches)
 
         replay_ordered_files(
             spark, in_dir, "user_id long, ts timestamp",

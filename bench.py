@@ -11,15 +11,10 @@ no driver collect. The image pipeline runs over a deterministic
 synthesized image+caption corpus (input_hint schema), cached as parquet
 in /tmp keyed by (n_rows, seed) so generation cost never pollutes the
 measurement.
-
-Flags (used by tools/bench_scaling.py, not the driver):
-  --only NAME[,NAME...]   run a subset
-  --image-rows N          override image-corpus size
 """
 
 from __future__ import annotations
 
-import argparse
 import json
 import os
 import sys
@@ -204,8 +199,8 @@ HEADLINE = [
 
 def _own_cpuacct_usage_file() -> str | None:
     """Path of this process tree's cpuacct.usage, if the process was
-    placed in a NON-ROOT cpuacct cgroup (tools/bench_cgroup.py does
-    this). cgroup accounting is exact — it counts every task that ever
+    started in a NON-ROOT cpuacct cgroup (e.g. under a CPU quota).
+    cgroup accounting is exact — it counts every task that ever
     lived in the group, including short-lived forked workers that a
     /proc walk misses between samples — so prefer it when available."""
     try:
@@ -229,9 +224,9 @@ def _proc_cpu_seconds() -> float:
     (Linux) — the JVM and, crucially, the pyspark.daemon python workers
     it forks (grandchildren; a PPID==self filter missed them, which
     under-counted every pandas-UDF stage — round-3 fix). When the
-    process runs inside a dedicated cpuacct cgroup (the round-5 quota
-    harness), the kernel's whole-tree counter is used instead — same
-    semantics, exact for reaped children.
+    process runs inside a dedicated cpuacct cgroup, the kernel's
+    whole-tree counter is used instead — same semantics, exact for
+    reaped children.
 
     Wall-clock on this sandbox is governed by a fluctuating,
     oversubscribed host CPU; cpu-seconds per row is the
@@ -356,75 +351,24 @@ def run_multimodal_pipeline(spark, path: str):
     return dedup_pipeline(df)
 
 
-def run_exact_pipeline(spark, path: str):
-    """Like-for-like cell vs the reference's own benchmark: exact-only
-    byte dedup + the report aggregate — the EXACT work the reference's
-    28,224 files/s peak measures (scan → size/hash cascade → duplicate
-    groups → stats; reference src/scanner.rs + grouping.rs + output.rs)
-    — with our production stage-1 (metadata keys, fused full hash)."""
-    from dedup_spark.operators.exact import (
-        duplicate_stats, exact_duplicate_clusters,
-    )
-
-    df = spark.read.parquet(path)
-    return duplicate_stats(exact_duplicate_clusters(df))
-
-
-def run_exact_pipeline_3pass(spark, path: str):
-    """Reference-FAITHFUL exact-only cell: length-only stage-1 key
-    (no metadata pruning — the reference groups on file size alone)
-    and the observable 3-pass shape (size → 8 KiB prefix hash → full
-    hash), then the report aggregate. The most conservative
-    apples-to-apples comparison against the reference's exact-only
-    throughput matrix (reference benchmark/runner.py)."""
-    from dedup_spark.operators.exact import (
-        duplicate_stats, exact_duplicate_clusters,
-    )
-
-    df = spark.read.parquet(path)
-    return duplicate_stats(exact_duplicate_clusters(
-        df, extra_keys=(), fuse_full_hash=False,
-    ))
-
-
 def main() -> None:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--only", default=None)
-    ap.add_argument("--image-rows", type=int, default=None)
-    args = ap.parse_args()
-
     from dedup_spark.session import get_spark
 
     import __spark_entry__ as entrymod
 
     spark = get_spark("dedup_bench", cores=CPUS)
     sf = _sf_value(SF_DIR)
-    n_images = args.image_rows or max(400, int(400_000 * max(sf, 0.001)))
+    n_images = max(400, int(400_000 * max(sf, 0.001)))
 
     names = HEADLINE + ["image_pipeline", "multimodal_pipeline"]
-    if args.only:
-        names = args.only.split(",")
-
     qs = entrymod.queries()
-    _needs_corpus = {
-        "image_pipeline", "multimodal_pipeline",
-        "exact_pipeline", "exact_pipeline_3pass",
-    }
-    img_path = (
-        image_corpus_path(spark, n_images)
-        if _needs_corpus & set(names)
-        else None
-    )
+    img_path = image_corpus_path(spark, n_images)
 
     def build(name):
         if name == "image_pipeline":
             return run_image_pipeline(spark, img_path)
         if name == "multimodal_pipeline":
             return run_multimodal_pipeline(spark, img_path)
-        if name == "exact_pipeline":
-            return run_exact_pipeline(spark, img_path)
-        if name == "exact_pipeline_3pass":
-            return run_exact_pipeline_3pass(spark, img_path)
         return qs[name](spark, SF_DIR)
 
     # warmup pass (JIT/code-cache/page-cache), then a timed pass —
@@ -461,32 +405,20 @@ def main() -> None:
         "queries": times,
         "sf": sf,
         "cpus": CPUS,
-        "image_rows": n_images if img_path else 0,
+        "image_rows": n_images,
     }
     result["cpu_sec"] = cpu
-    # per-image rate metrics for whichever image-corpus job ran (the
-    # scaling harness medians these; image_pipeline wins when both ran)
-    rate_q = next(
-        (q for q in (
-            "image_pipeline", "multimodal_pipeline",
-            "exact_pipeline", "exact_pipeline_3pass",
-        ) if q in times),
-        None,
-    )
-    if rate_q and times[rate_q]:
+    # per-image rate metrics of the image-payload pipeline
+    rate_q = "image_pipeline"
+    if times[rate_q]:
         result["rate_query"] = rate_q
         result["images_per_sec"] = round(n_images / times[rate_q], 1)
         if cpu.get(rate_q):
             result["cpu_sec_per_kimg"] = round(
                 1000 * cpu[rate_q] / n_images, 3
             )
-    if args.only:
-        # tool mode (bench_scaling/bench_sf1/bench_events_scaling parse
-        # the full per-query dicts from this line) — print everything
-        print(json.dumps(result))
-        return
-    # driver mode: the full suite is ~50 queries x 2 dicts and the one
-    # JSON line outgrew the driver's tail-capture window in round 4
+    # the full suite is ~50 queries x 2 dicts and the one JSON line
+    # outgrew the driver's tail-capture window in round 4
     # (BENCH_r04.json parsed:null). Full detail goes to
     # BENCH/bench_detail.json; stdout gets a compact LAST line with the
     # top-10 walls only.

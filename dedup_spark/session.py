@@ -108,12 +108,11 @@ def get_spark(
         .config("spark.locality.wait", "0s")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        # Hook for the scaling harness (tools/bench_cgroup.py): under a
-        # CFS cpu quota the JVM still sizes GC/JIT thread pools to the
-        # HOST's cpu count (32), so GC threads thrash the quota
-        # (GCLocker retry storms -> spurious heap OOM). The harness
-        # passes -XX:ActiveProcessorCount=<quota cores>, which is also
-        # the faithful emulation of a real N-core executor JVM.
+        # Driver JVM flags from the caller's environment: perfbench/run.py
+        # sets them (heap pre-touch, C1-only JIT, a private tmpdir). Under
+        # a CFS cpu quota the same hook passes
+        # -XX:ActiveProcessorCount=<quota cores>, since the JVM otherwise
+        # sizes its GC/JIT thread pools to the HOST's cpu count.
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_DRIVER_JAVA_OPTS", ""),

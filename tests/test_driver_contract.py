@@ -5,6 +5,7 @@ verified longest ago."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import json
 import os
@@ -79,3 +80,27 @@ def test_bench_and_plan_checks_name_real_queries():
     used |= {c for _, checks in OPERATOR_CHECKS.values() for c in checks}
     used |= set(BUCKETED_JOIN_CHECKS)
     assert used <= set(CHECKS), sorted(used - set(CHECKS))
+
+
+def test_builders_read_no_environment():
+    # a builder is a function of (spark, sf_dir) alone: an env-var knob
+    # would let a run differ from what the driver's oracle checks
+    with open(entrymod.__file__) as f:
+        tree = ast.parse(f.read())
+    env = {"environ", "environb", "getenv", "getenvb"}
+    reads = [
+        node.lineno
+        for node in ast.walk(tree)
+        if (
+            isinstance(node, ast.Attribute)
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "os"
+            and node.attr in env
+        )
+        or (
+            isinstance(node, ast.ImportFrom)
+            and node.module == "os"
+            and any(a.name in env for a in node.names)
+        )
+    ]
+    assert not reads, f"os.environ/os.getenv read at lines {reads}"

@@ -11,6 +11,7 @@ import pytest
 from dedup_spark.config import DedupConfig
 from dedup_spark.fixtures.images import (
     IMAGES_SCHEMA,
+    PROFILES,
     encode_ppm,
     generate_corpus,
     phash64,
@@ -194,10 +195,17 @@ def test_json_report_contract(spark):
     assert "total rows" in format_human(report)
 
 
-def test_generated_corpus_full_recall(spark):
-    # benchmark-level accuracy oracle (benchmark/runner.py:181-209):
-    # exact tier must find exactly the generator's duplicate pairs
-    corpus = generate_corpus(300, dup_ratio=0.4, seed=42)
+@pytest.mark.parametrize(
+    "profile,dup_ratio",
+    [(p, d) for p in PROFILES for d in (0.1, 0.3, 0.6)],
+)
+def test_generated_corpus_full_recall(spark, profile, dup_ratio):
+    # benchmark-level accuracy oracle over the reference's matrix
+    # (benchmark/runner.py:181-209, 221-271; 3 size profiles x 3 dup
+    # ratios): exact tier must find exactly the generator's duplicate
+    # pairs in every cell
+    corpus = generate_corpus(300, dup_ratio=dup_ratio, profile=profile, seed=42)
+    assert corpus.true_pairs()
     imgs, _ = to_spark(spark, corpus)
     asg = exact_duplicate_clusters(imgs)
     found = {}
