@@ -24,10 +24,12 @@ Scope, documented:
   * decoder is GENERAL over the static-image family: 87a/89a, global
     and/or local color tables, any number of image descriptors at any
     (left, top) placement, all extension blocks skipped by sub-block
-    walk, deferred-clear full-table streams; animation semantics
-    (frame disposal, transparency) and interlace are out of scope and
-    raise ValueError (unreadable-row skip semantics, reference
-    denizariyan/dedup src/hasher.rs:57-60, via decode._decode_any);
+    walk, deferred-clear full-table streams; animation and interlace
+    are out of scope and raise ValueError (unreadable-row skip
+    semantics, reference denizariyan/dedup src/hasher.rs:57-60, via
+    decode._decode_any): a Graphic Control Extension with the
+    transparency flag, or one followed by an image descriptor after the
+    first image (the next frame of an animation);
   * self-referential caveat (same as webp.py/tiff.py): the container
     ships no independent GIF reader, so the roundtrip alone can't prove
     spec conformance. Two compensations: a byte-level hand-built
@@ -55,6 +57,7 @@ import numpy as np
 _MAX_CODE = 4096  # 12-bit code space, spec appendix F
 _TRAILER = 0x3B
 _EXTENSION = 0x21
+_GRAPHIC_CONTROL = 0xF9  # extension label: frame delay, disposal, transparency
 _IMAGE_SEP = 0x2C
 
 
@@ -297,8 +300,12 @@ def _read_sub_blocks(buf: bytes, at: int) -> tuple[bytes, int]:
 
 def decode_gif(data: bytes) -> np.ndarray:
     """Decode a static GIF87a/89a into 8-bit RGB (h, w, 3). General
-    over the static family (see module docstring); interlaced images
-    raise ValueError."""
+    over the static family (see module docstring). Interlaced images,
+    a Graphic Control Extension with its transparency flag set, and an
+    image descriptor that follows a Graphic Control Extension after the
+    first image (an animation frame) raise ValueError. Descriptors with
+    no Graphic Control Extension between them, as this module's
+    true-color strips, composite into one image."""
     if len(data) < 13 or data[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("gif: bad signature")
     w, h = struct.unpack_from("<HH", data, 6)
@@ -313,6 +320,7 @@ def decode_gif(data: bytes) -> np.ndarray:
         at += 3 * n
     canvas = np.zeros((h, w, 3), dtype=np.uint8)
     saw_image = False
+    animated = False  # a Graphic Control Extension came after an image
     while True:
         if at >= len(data):
             raise ValueError("gif: missing trailer")
@@ -323,8 +331,13 @@ def decode_gif(data: bytes) -> np.ndarray:
         if block == _EXTENSION:
             if at >= len(data):
                 raise ValueError("gif: truncated extension")
-            at += 1  # label — every extension type is sub-block framed
-            _, at = _read_sub_blocks(data, at)
+            label = data[at]
+            at += 1  # every extension type is sub-block framed
+            body, at = _read_sub_blocks(data, at)
+            if label == _GRAPHIC_CONTROL:
+                if body[:1] and body[0] & 0x01:
+                    raise ValueError("gif: transparency not supported")
+                animated = saw_image
             continue
         if block != _IMAGE_SEP:
             raise ValueError(f"gif: unknown block introducer 0x{block:02x}")
@@ -335,6 +348,8 @@ def decode_gif(data: bytes) -> np.ndarray:
         at += 9
         if ipacked & 0x40:
             raise ValueError("gif: interlaced images not supported")
+        if animated:
+            raise ValueError("gif: animated (multi-frame) GIF not supported")
         pal = gct
         if ipacked & 0x80:
             n = 2 << (ipacked & 0x07)

@@ -20,9 +20,13 @@ ISO 10918-1) from the spec:
     interleaved single-scan MCUs — restricted to 8-bit precision and
     1:1 sampling factors (what the encoder emits); anything else raises
     ValueError, which the decode UDFs map to the unreadable-row skip
-    (reference src/hasher.rs:57-60 semantics). Entropy decode walks a
-    pre-unpacked bit array (numpy unpackbits) so the per-symbol Python
-    loop touches ints, not bytes.
+    (reference src/hasher.rs:57-60 semantics). Entropy decode unstuffs
+    the scan with bytes/re operations and reads bits from a list of
+    40-bit big-endian windows, one per byte offset (built with numpy),
+    so a 16-bit peek is two shifts and a mask. Each DHT table becomes a
+    65,536-entry lookahead table on those 16 bits (built vectorized,
+    cached by its BITS/HUFFVAL bytes); where a code and its value bits
+    fit in 16, one index yields the whole coefficient.
 
 Grayscale (h, w) arrays encode as single-component JPEGs; decode always
 returns (h, w, 3) RGB like the other codecs here.
@@ -30,7 +34,12 @@ returns (h, w, 3) RGB like the other codecs here.
 
 from __future__ import annotations
 
+import bisect
+import functools
+import itertools
+import re
 import struct
+from array import array
 
 import numpy as np
 
@@ -250,105 +259,64 @@ def encode_jpeg(px: np.ndarray, quality: int = 99) -> bytes:
 # ---------------------------------------------------------------------------
 
 
-class _BitReader:
-    """Bit cursor over unstuffed entropy data. Reads are plain-int
-    arithmetic on a 4-byte window (no per-bit numpy), which is what
-    keeps the pure-Python decode loop fast; RSTn markers are stripped
-    during unstuffing and their bit offsets recorded so the MCU loop
-    can re-sync."""
+@functools.lru_cache(maxsize=16)
+def _lookahead(ac: bool, spec: bytes) -> tuple[tuple[int, int, int], ...]:
+    """One DHT table (its BITS + HUFFVAL bytes) → a 65,536-entry table
+    indexed by the next 16 bits of the stream.
 
-    def __init__(self, data: bytes) -> None:
-        raw = bytearray()
-        self.restarts: set[int] = set()
-        i = 0
-        n = len(data)
-        while i < n:
-            b = data[i]
-            if b == 0xFF:
-                nxt = data[i + 1] if i + 1 < n else 0xD9
-                if nxt == 0x00:
-                    raw.append(0xFF)
-                    i += 2
-                    continue
-                if 0xD0 <= nxt <= 0xD7:  # RSTn
-                    self.restarts.add(len(raw) * 8)
-                    i += 2
-                    continue
-                break  # EOI or next marker
-            raw.append(b)
-            i += 1
-        self.nbits = len(raw) * 8
-        raw += b"\xff\xff\xff\xff"  # read-past pad (JPEG pads with 1s)
-        self.data = bytes(raw)
-        self.pos = 0
+    Canonical reconstruction per T.81 Annex C. Where a code and the
+    value bits after it fit in 16 bits, its entries are ``(bits
+    consumed, run advance, sign-extended value)`` with bits > 0, so one
+    index decodes a whole coefficient (DC: run 0 and size = symbol; AC
+    EOB and ZRL are never folded). Any other code gives ``(0, symbol,
+    code length)``, and bits that start no code give ``(0, 0, 0)``.
+    Built vectorized, code by code: each entry is one tuple, repeated
+    over the lookahead values that share it. A table whose codes of 8
+    bits or fewer overflow their code space raises ValueError; longer
+    codes past it can never match and are left out."""
+    if len(spec) < 16:
+        raise ValueError("truncated DHT")
+    bits = np.frombuffer(spec[:16], dtype=np.uint8).astype(np.int64)
+    nv = int(bits.sum())
+    if len(spec) < 16 + nv:
+        raise ValueError("truncated DHT")
+    syms = np.frombuffer(spec[16 : 16 + nv], dtype=np.uint8).astype(np.int64)
+    lens = np.repeat(np.arange(1, 17), bits)
+    first = np.zeros(17, dtype=np.int64)  # first canonical code per length
+    for ln in range(1, 16):
+        first[ln + 1] = (first[ln] + bits[ln - 1]) << 1
+    codes = first[lens] + np.arange(nv) - np.repeat(np.cumsum(bits) - bits, bits)
+    reach = codes < (1 << lens)
+    if not reach[lens <= 8].all():
+        raise ValueError("over-full Huffman table")
+    lens, codes, syms = lens[reach], codes[reach], syms[reach]
 
-    def peek8(self) -> int:
-        i, off = divmod(self.pos, 8)
-        d = self.data
-        w = (d[i] << 16) | (d[i + 1] << 8) | d[i + 2]
-        return (w >> (16 - off)) & 0xFF
-
-    def receive(self, n: int) -> int:
-        if n == 0:
-            return 0
-        i, off = divmod(self.pos, 8)
-        w = int.from_bytes(self.data[i : i + 4], "big")
-        self.pos += n
-        return (w >> (32 - off - n)) & ((1 << n) - 1)
-
-    def sync_restart(self) -> None:
-        """Advance to the next recorded restart boundary (byte-aligned
-        in the original stream)."""
-        nxt = min((r for r in self.restarts if r >= self.pos), default=None)
-        if nxt is None:
-            raise ValueError("missing restart marker")
-        self.pos = nxt
-
-
-def _extend(v: int, s: int) -> int:
-    return v if v >= (1 << (s - 1)) else v - (1 << s) + 1
-
-
-class _HuffTable:
-    """Canonical reconstruction (spec Annex C) with an 8-bit fast path:
-    codes of length <= 8 resolve with ONE table lookup on the next
-    byte's worth of bits (covers every code this module's encoder
-    emits); longer codes fall back to a bit walk over the full map."""
-
-    __slots__ = ("fast", "map")
-
-    def __init__(self, bits: list[int], vals: list[int]) -> None:
-        self.map: dict[tuple[int, int], int] = {}
-        self.fast: list[tuple[int, int] | None] = [None] * 256
-        code = 0
-        k = 0
-        for ln in range(1, 17):
-            for _ in range(bits[ln - 1]):
-                sym = vals[k]
-                self.map[(ln, code)] = sym
-                if ln <= 8:
-                    base = code << (8 - ln)
-                    for suffix in range(1 << (8 - ln)):
-                        self.fast[base | suffix] = (sym, ln)
-                code += 1
-                k += 1
-            code <<= 1
-
-
-def _huff_decode(br: _BitReader, table: _HuffTable) -> int:
-    hit = table.fast[br.peek8()]
-    if hit is not None:
-        sym, ln = hit
-        br.pos += ln
-        return sym
-    code = 0
-    for ln in range(1, 17):
-        code = (code << 1) | br.receive(1)
-        if ln > 8:
-            sym = table.map.get((ln, code))
-            if sym is not None:
-                return sym
-    raise ValueError("bad Huffman code")
+    size, run = (syms & 15, syms >> 4) if ac else (syms, 0 * syms)
+    fold = (lens + size <= 16) & ((size > 0) if ac else True)
+    size = np.where(fold, size, 0)
+    count = 1 << size  # entries per code: one per pattern of its value bits
+    owner = np.repeat(np.arange(len(codes)), count)
+    v = np.arange(len(owner)) - (np.cumsum(count) - count)[owner]
+    sz, folded = size[owner], fold[owner]
+    val = np.where(v >= (1 << sz) >> 1, v, v - (1 << sz) + 1)
+    # table order, as slots of (repeat, entry): each code's gap (bits
+    # that start no code, entry (0, 0, 0)), then its entries; a last
+    # gap runs to the end
+    gap_at = np.cumsum(count + 1) - (count + 1)
+    ends = np.concatenate(([0], (codes + 1) << (16 - lens)))
+    cols = np.zeros((4, len(owner) + len(codes) + 1), dtype=np.int64)
+    cols[0, gap_at] = (codes << (16 - lens)) - ends[:-1]
+    cols[0, -1] = (1 << 16) - ends[-1]
+    cols[:, (gap_at + 1)[owner] + v] = (
+        (1 << (16 - lens - size))[owner],
+        np.where(folded, (lens + size)[owner], 0),
+        np.where(folded, run[owner], syms[owner]),
+        np.where(folded, val, lens[owner]),
+    )
+    rep, *entry = cols.tolist()
+    return tuple(itertools.chain.from_iterable(
+        map(itertools.repeat, zip(*entry), rep)
+    ))
 
 
 def decode_jpeg(data: bytes) -> np.ndarray:
@@ -365,7 +333,7 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
     if len(data) < 4 or data[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG (no SOI)")
     qts: dict[int, np.ndarray] = {}
-    huff: dict[tuple[int, int], _HuffTable] = {}  # (class, id) -> table
+    huff: dict[tuple[int, int], tuple] = {}  # (class, id) -> _lookahead table
     frame = None
     restart_interval = 0
     i = 2
@@ -402,10 +370,8 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
             j = 0
             while j < len(seg):
                 tc, th = seg[j] >> 4, seg[j] & 0x0F
-                bits = list(seg[j + 1 : j + 17])
-                nv = sum(bits)
-                vals = list(seg[j + 17 : j + 17 + nv])
-                huff[(tc, th)] = _HuffTable(bits, vals)
+                nv = sum(seg[j + 1 : j + 17])
+                huff[(tc, th)] = _lookahead(tc == 1, bytes(seg[j + 1 : j + 17 + nv]))
                 j += 17 + nv
         elif marker == 0xC0:  # SOF0 baseline
             prec, fh, fw, nc = struct.unpack(">BHHB", seg[:6])
@@ -446,48 +412,137 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
     raise ValueError("no SOS marker")
 
 
+# 0xFF is stuffed as FF 00; any other marker but RSTn (EOI, ...) ends the data
+_MARKER_END = re.compile(rb"\xff(?![\x00\xd0-\xd7])")
+_RST = re.compile(rb"\xff[\xd0-\xd7]")
+
+
+def _windows(entropy: bytes) -> tuple[list[int], list[int]]:
+    """Entropy-coded segment → (40-bit big-endian bit windows, one per
+    byte offset of the unstuffed data; bit offsets of the RSTn markers).
+
+    The data ends at the first marker other than RSTn. Reads past its
+    end see 1 bits (JPEG pads with 1s); the windows stop two bytes past
+    it, so a symbol that starts later raises IndexError."""
+    end = _MARKER_END.search(entropy)
+    parts = [
+        p.replace(b"\xff\x00", b"\xff")
+        for p in _RST.split(entropy[: end.start() if end else len(entropy)])
+    ]
+    raw = b"".join(parts)
+    restarts = list(itertools.accumulate(8 * len(p) for p in parts[:-1]))
+    a = np.frombuffer(raw + b"\xff" * 6, dtype=np.uint8).astype(np.int64)
+    n = len(raw) + 2
+    win = (
+        (a[:n] << 32) | (a[1 : n + 1] << 24) | (a[2 : n + 2] << 16)
+        | (a[3 : n + 3] << 8) | a[4 : n + 4]
+    )
+    return win.tolist(), restarts
+
+
+def _receive_extend(win: list[int], pos: int, s: int) -> int:
+    """The ``s`` (1..16) bits at bit ``pos`` as a signed coefficient
+    value (T.81 F.2.2.1 RECEIVE and EXTEND)."""
+    v = (win[pos >> 3] >> (40 - (pos & 7) - s)) & ((1 << s) - 1)
+    return v if v >> (s - 1) else v - (1 << s) + 1
+
+
+@functools.lru_cache(maxsize=64)
+def _idct_path(nby: int, nbx: int) -> tuple:
+    """The contraction order ``optimize=True`` picks for the IDCT einsum
+    over (nby, nbx) blocks, so each decode skips the search (same path,
+    same arithmetic, same bytes)."""
+    m = _dct_matrix()
+    blocks = np.zeros((nby, nbx, 8, 8))
+    path, _ = np.einsum_path("ji,abjk,kl->abil", m, blocks, m, optimize=True)
+    return tuple(path)
+
+
 def _decode_scan(entropy, frame, scan, qts, huff, restart_interval):
+    """One interleaved baseline scan → (h, w, 3) uint8 RGB.
+
+    The MCU loop peeks 16 bits at bit ``pos`` as ``(win[pos >> 3] >>
+    (24 - (pos & 7))) & 0xFFFF`` and resolves a whole coefficient with
+    one `_lookahead` index; only EOB, ZRL and codes whose value bits
+    run past the 16 take the branch that reads the value separately."""
     h, w = frame["h"], frame["w"]
     nby, nbx = (h + 7) // 8, (w + 7) // 8
-    m = _dct_matrix()
-    br = _BitReader(entropy)
-    coefs = [np.zeros((nby, nbx, 64)) for _ in scan]
-    preds = [0] * len(scan)
-    mcu_idx = 0
-    for by in range(nby):
-        for bx in range(nbx):
-            if restart_interval and mcu_idx and mcu_idx % restart_interval == 0:
-                br.sync_restart()
-                preds = [0] * len(scan)
-            for ci, (comp, td, ta) in enumerate(scan):
-                zz = coefs[ci][by, bx]
-                s = _huff_decode(br, huff[(0, td)])
-                diff = _extend(br.receive(s), s) if s else 0
-                preds[ci] += diff
-                zz[0] = preds[ci]
-                k = 1
-                while k < 64:
-                    sym = _huff_decode(br, huff[(1, ta)])
-                    if sym == 0x00:  # EOB
-                        break
-                    if sym == 0xF0:  # ZRL
-                        k += 16
-                        continue
-                    k += sym >> 4
-                    s = sym & 0x0F
-                    if k > 63:
+    win, restarts = _windows(entropy)
+    tables = [(huff[(0, td)], huff[(1, ta)]) for _, td, ta in scan]
+    ncomp = len(scan)
+    # (by, bx, component, zigzag k), grown one MCU row at a time so a
+    # header that declares a huge frame costs only the rows its data fill
+    coef = array("d")
+    row = array("d", [0.0]) * (nbx * ncomp * 64)
+    preds = [0] * ncomp
+    pos = 0
+    base = 0  # coef index of the current block's DC term
+    for mcu in range(nby * nbx):
+        if mcu % nbx == 0:
+            coef += row
+        if restart_interval and mcu and mcu % restart_interval == 0:
+            at = bisect.bisect_left(restarts, pos)
+            if at == len(restarts):
+                raise ValueError("missing restart marker")
+            pos = restarts[at]
+            preds = [0] * ncomp
+        for ci in range(ncomp):
+            dct, act = tables[ci]
+            # a folded entry is (bits, run, value); any other is
+            # (0, symbol, code length), and (0, 0, 0) is no code
+            nb, sym, diff = dct[(win[pos >> 3] >> (24 - (pos & 7))) & 0xFFFF]
+            if nb:
+                pos += nb
+            elif not diff:
+                raise ValueError("bad Huffman code")
+            else:
+                pos += diff
+                if sym > 16:
+                    raise ValueError("DC category out of range")
+                diff = _receive_extend(win, pos, sym)
+                pos += sym
+            preds[ci] += diff
+            coef[base] = preds[ci]
+            k = base + 1  # index into coef; the block ends at base + 64
+            end = base + 64
+            while k < end:
+                nb, run, val = act[(win[pos >> 3] >> (24 - (pos & 7))) & 0xFFFF]
+                if nb:
+                    pos += nb
+                    k += run
+                    if k >= end:
                         raise ValueError("coefficient index out of range")
-                    zz[k] = _extend(br.receive(s), s)
+                    coef[k] = val
                     k += 1
-            mcu_idx += 1
+                    continue
+                sym, ln = run, val
+                if not ln:
+                    raise ValueError("bad Huffman code")
+                pos += ln
+                if sym == 0x00:  # EOB
+                    break
+                if sym == 0xF0:  # ZRL
+                    k += 16
+                    continue
+                k += sym >> 4
+                s = sym & 0x0F
+                if k >= end or not s:
+                    raise ValueError("coefficient index out of range")
+                coef[k] = _receive_extend(win, pos, s)
+                pos += s
+                k += 1
+            base = end
     # dequantize + IDCT batched per component (one einsum, not a
     # python matmul per block)
+    m = _dct_matrix()
+    path = _idct_path(nby, nbx)
+    zz = np.frombuffer(coef, dtype=np.float64).reshape(nby, nbx, ncomp, 64)
     full = []
     for ci, (comp, _, _) in enumerate(scan):
-        blocks = coefs[ci][:, :, _UNZIGZAG].reshape(nby, nbx, 8, 8) * qts[
+        blocks = zz[:, :, ci, _UNZIGZAG].reshape(nby, nbx, 8, 8) * qts[
             comp["tq"]
         ]
-        px = np.einsum("ji,abjk,kl->abil", m, blocks, m, optimize=True)
+        px = np.einsum("ji,abjk,kl->abil", m, blocks, m, optimize=path)
         full.append(
             px.swapaxes(1, 2).reshape(nby * 8, nbx * 8)[:h, :w] + 128.0
         )

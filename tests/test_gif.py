@@ -288,3 +288,31 @@ def test_gif_cross_format_pixel_identity():
 def test_gif_roundtrip_property(h, w, seed):
     px = _rand((h, w, 3), seed=seed)
     assert np.array_equal(decode_gif(encode_gif(px)), px)
+
+
+def _gce(packed: int = 0) -> bytes:
+    """Graphic Control Extension: packed flags, delay 0, index 0."""
+    return bytes([0x21, 0xF9, 4, packed, 0, 0, 0, 0])
+
+
+def test_gif_animated_frames_raise_value_error():
+    """A second frame (an image descriptor after a Graphic Control
+    Extension that follows the first image) must not composite
+    silently, last frame winning."""
+    a, b = encode_gif(_rand((6, 6, 3), seed=7)), encode_gif(_rand((6, 6, 3), seed=8))
+    # both streams: 13-byte header (no GCT), descriptors, 0x3B trailer
+    animated = a[:13] + _gce() + a[13:-1] + _gce() + b[13:]
+    with pytest.raises(ValueError):
+        decode_gif(animated)
+    # the same frames with no GCE between them are static strips
+    assert np.array_equal(decode_gif(a[:-1] + b[13:]), _rand((6, 6, 3), seed=8))
+
+
+def test_gif_transparency_raises_value_error():
+    px = _rand((6, 6, 3), seed=9)
+    data = encode_gif(px)
+    with pytest.raises(ValueError):
+        decode_gif(data[:13] + _gce(packed=0x01) + data[13:])
+    # a GCE without transparency before the only frame is still static
+    assert np.array_equal(decode_gif(data[:13] + _gce() + data[13:]), px)
+
