@@ -111,13 +111,16 @@ def encode_ppm(pixels: np.ndarray) -> bytes:
 
 def decode_ppm(data: bytes) -> np.ndarray:
     """Inverse of encode_ppm. Raises ValueError on truncated payloads
-    (the 'unreadable row' fixture relies on this)."""
+    (the 'unreadable row' fixture relies on this) and on a width or
+    height below 1."""
     if not data.startswith(b"P6"):
         raise ValueError("not a P6 PPM")
     parts = data.split(b"\n", 3)
     if len(parts) < 4:
         raise ValueError("truncated header")
     w, h = (int(x) for x in parts[1].split())
+    if w < 1 or h < 1:
+        raise ValueError("empty or negative PPM dimensions")
     raw = parts[3]
     need = w * h * 3
     if len(raw) < need:

@@ -377,6 +377,8 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
             prec, fh, fw, nc = struct.unpack(">BHHB", seg[:6])
             if prec != 8:
                 raise ValueError("only 8-bit precision supported")
+            if not fh or not fw:  # height 0 = "defined by DNL" (T.81 B.2.5)
+                raise ValueError("empty frame (DNL height unsupported)")
             comps = []
             for c in range(nc):
                 cid, samp, tq = seg[6 + 3 * c : 9 + 3 * c]
@@ -445,17 +447,6 @@ def _receive_extend(win: list[int], pos: int, s: int) -> int:
     value (T.81 F.2.2.1 RECEIVE and EXTEND)."""
     v = (win[pos >> 3] >> (40 - (pos & 7) - s)) & ((1 << s) - 1)
     return v if v >> (s - 1) else v - (1 << s) + 1
-
-
-@functools.lru_cache(maxsize=64)
-def _idct_path(nby: int, nbx: int) -> tuple:
-    """The contraction order ``optimize=True`` picks for the IDCT einsum
-    over (nby, nbx) blocks, so each decode skips the search (same path,
-    same arithmetic, same bytes)."""
-    m = _dct_matrix()
-    blocks = np.zeros((nby, nbx, 8, 8))
-    path, _ = np.einsum_path("ji,abjk,kl->abil", m, blocks, m, optimize=True)
-    return tuple(path)
 
 
 def _decode_scan(entropy, frame, scan, qts, huff, restart_interval):
@@ -532,17 +523,16 @@ def _decode_scan(entropy, frame, scan, qts, huff, restart_interval):
                 pos += s
                 k += 1
             base = end
-    # dequantize + IDCT batched per component (one einsum, not a
-    # python matmul per block)
+    # dequantize + IDCT batched per component (two broadcast matmuls over
+    # every block, not a python matmul per block)
     m = _dct_matrix()
-    path = _idct_path(nby, nbx)
     zz = np.frombuffer(coef, dtype=np.float64).reshape(nby, nbx, ncomp, 64)
     full = []
     for ci, (comp, _, _) in enumerate(scan):
         blocks = zz[:, :, ci, _UNZIGZAG].reshape(nby, nbx, 8, 8) * qts[
             comp["tq"]
         ]
-        px = np.einsum("ji,abjk,kl->abil", m, blocks, m, optimize=path)
+        px = m.T @ blocks @ m
         full.append(
             px.swapaxes(1, 2).reshape(nby * 8, nbx * 8)[:h, :w] + 128.0
         )

@@ -58,6 +58,18 @@ def _skip_unchanged_zip_rereads() -> None:
 _skip_unchanged_zip_rereads()
 
 
+# Entries in the JVM's generated-class cache (Spark's default: 100). One
+# fused ``dedup_pipeline`` pass needs 161-165 distinct generated classes
+# (perfbench seeds 1 and 3) and the 60-image test corpus 182; it reuses
+# them in a cycle, so a 100-entry LRU evicted every class before its next
+# use and each warm pass recompiled ~150 of them (1.3-1.8 s of Janino
+# compile time in a ~5 s pass). ``image_signatures`` needs 22 and the
+# micro-batch ingest 38. 1,000 is about 6x the largest working set
+# measured. A static conf: only a session built here picks it up, not
+# one that already runs in the JVM or a vanilla driver session.
+CODEGEN_CACHE_ENTRIES = 1_000
+
+
 def get_spark(
     app_name: str = "dedup_spark",
     cores: int | None = None,
@@ -88,6 +100,9 @@ def get_spark(
         # Arrow transfer for every pandas UDF / mapInPandas stage.
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # Keep the pipeline's generated classes compiled across runs
+        # (see CODEGEN_CACHE_ENTRIES).
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # Deterministic timestamps vs the DuckDB oracle.
         .config("spark.sql.session.timeZone", "UTC")
         # Big binary payloads: keep scan partitions bounded so a partition

@@ -55,6 +55,15 @@ def parse_args(argv=None):
     return p.parse_args(argv)
 
 
+def _codegen_totals(spark) -> tuple[int, float]:
+    """(classes compiled, compile seconds) so far in the driver JVM; in
+    local mode the executors share that JVM and its codegen cache."""
+    jvm = spark._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics
+    timer = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    return count.METRIC_COMPILATION_TIME().getCount(), timer.compileTime() / 1e9
+
+
 def main(argv=None) -> int:
     args = parse_args(argv)
 
@@ -73,6 +82,7 @@ def main(argv=None) -> int:
         spark = get_spark("dedup_job", cores=args.jobs)
     else:
         spark = SparkSession.builder.appName("dedup_job").getOrCreate()
+    compiles0, compile_s0 = _codegen_totals(spark)
 
     include = list(args.include)
     exclude = list(args.exclude)
@@ -140,6 +150,11 @@ def main(argv=None) -> int:
             write_table(merged, args.output)
 
     if args.metrics_out:
+        # the run's Janino compiles: a plan-reuse or codegen-cache
+        # regression shows here as a jump in count and seconds
+        compiles, compile_s = _codegen_totals(spark)
+        metrics.record("codegen_compiles", compiles - compiles0)
+        metrics.record("codegen_compile_s", round(compile_s - compile_s0, 4))
         metrics.write(args.metrics_out)
 
     if args.format == "json":

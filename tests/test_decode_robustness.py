@@ -137,3 +137,48 @@ def test_corrupt_png_in_batch_yields_one_failed_row(spark):
     assert [rid for rid, r in sorted(got.items()) if not r["ok"]] == ["c"]
     assert got["c"]["cluster_id"] == "c"
     assert {got[rid]["cluster_id"] for rid in "abd"} == {"a"}
+
+
+def _sof0_dims(jpeg: bytes, h: int, w: int) -> bytes:
+    """``jpeg`` with its SOF0 height and width replaced."""
+    at = jpeg.index(b"\xff\xc0") + 5  # marker, length, precision
+    return jpeg[:at] + struct.pack(">HH", h, w) + jpeg[at + 4:]
+
+
+def test_jpeg_empty_frame_raises_value_error():
+    # height 0 means "defined by a later DNL marker" (unsupported); an
+    # empty array would pass as a readable image and break every tier
+    data = encode_jpeg(_px(5, 8, 8))
+    for h, w in ((0, 8), (8, 0), (0, 0)):
+        bad = _sof0_dims(data, h, w)
+        with pytest.raises(ValueError):
+            decode_jpeg(bad)
+        assert _decode_any(bad, "jpeg") is None
+
+
+def test_ppm_empty_or_negative_dimensions_raise_value_error():
+    from dedup_spark.fixtures.images import decode_ppm
+
+    for header in (b"0 5", b"5 0", b"0 0", b"-1 5", b"5 -1"):
+        bad = b"P6\n" + header + b"\n255\n" + bytes(75)
+        with pytest.raises(ValueError):
+            decode_ppm(bad)
+        assert _decode_any(bad, "ppm") is None
+
+
+def test_empty_frame_in_batch_yields_one_failed_row(spark):
+    px = _px(6, 8, 8)
+    good = encode_jpeg(px)
+    rows = [
+        ("a", good, "jpeg"),
+        ("b", good, "jpeg"),
+        ("c", _sof0_dims(good, 0, 8), "jpeg"),
+        ("d", b"P6\n0 5\n255\n", "ppm"),
+    ]
+    df = spark.createDataFrame(
+        rows, "image_id string, bytes binary, fmt string"
+    ).coalesce(1)
+    got = {r["image_id"]: r for r in border_trim_clusters(df).collect()}
+    assert sorted(rid for rid, r in got.items() if not r["ok"]) == ["c", "d"]
+    assert got["c"]["cluster_id"] == "c" and got["d"]["cluster_id"] == "d"
+    assert got["a"]["cluster_id"] == got["b"]["cluster_id"] == "a"

@@ -447,7 +447,11 @@ def test_fused_pipeline_job_count_is_pinned(spark):
     collecting ``dedup_pipeline`` on a 60-image corpus runs 31 Spark
     jobs (54 with the star loop and the eager build-time checkpoints);
     the pin leaves 5 jobs of headroom for AQE's runtime plan choices.
-    A new eager checkpoint or a star round on this graph breaks it."""
+    A new eager checkpoint or a star round on this graph breaks it.
+
+    A second pass on the same corpus must reuse the generated classes
+    of the first (182 on a cold session): it compiles 2-12, where
+    Spark's default 100-entry codegen cache recompiled 177-180."""
     import uuid
 
     from dedup_spark.pipeline import dedup_pipeline
@@ -469,3 +473,9 @@ def test_fused_pipeline_job_count_is_pinned(spark):
     assert len(rows) == 60
     assert not any(e["stage"].startswith("iter_") for e in m.entries), m.entries
     assert jobs <= 36, jobs
+
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    before = compiles.METRIC_COMPILATION_TIME().getCount()
+    assert len(dedup_pipeline(imgs).collect()) == 60
+    recompiled = compiles.METRIC_COMPILATION_TIME().getCount() - before
+    assert recompiled <= 30, recompiled

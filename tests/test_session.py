@@ -1,4 +1,5 @@
-"""dedup_spark.session: the stat-checked ``zipimporter.invalidate_caches``.
+"""dedup_spark.session: the stat-checked ``zipimporter.invalidate_caches``
+and the session's codegen cache size.
 
 PySpark's worker calls ``importlib.invalidate_caches()`` before every
 task; before CPython 3.13 that re-read every zip archive on ``sys.path``
@@ -16,7 +17,7 @@ import zipimport
 import pandas as pd
 import pytest
 
-import dedup_spark.session  # noqa: F401 — installs the wrapper
+import dedup_spark.session  # installs the wrapper
 
 
 def _write_zip(path, modules):
@@ -113,3 +114,10 @@ def test_python_workers_install_the_wrapper(spark):
     )
     assert len(rows) == 4
     assert {r["module"] for r in rows} == {"dedup_spark.session"}
+
+
+def test_session_sizes_the_codegen_cache(spark):
+    """``get_spark`` (the test session's factory) sets the static
+    generated-class cache size above the fused pass's working set."""
+    got = spark.conf.get("spark.sql.codegen.cache.maxEntries")
+    assert int(got) == dedup_spark.session.CODEGEN_CACHE_ENTRIES

@@ -100,6 +100,10 @@ def test_spark_submit_py_files_end_to_end(tmp_path):
     assert len(cc_path) == 1 and cc_path[0]["value"] > 0, stages
     assert "local_finish" in stages
     assert not any(s.startswith("iter_") for s in stages), stages
+    # ...and what the run spent compiling generated code in the driver
+    codegen = {e["stage"]: e["value"] for e in manifest if e["stage"].startswith("codegen_")}
+    assert set(codegen) == {"codegen_compiles", "codegen_compile_s"}, stages
+    assert codegen["codegen_compiles"] > 0 and codegen["codegen_compile_s"] > 0
 
 
 def test_spark_submit_mixture_job_end_to_end(tmp_path):
