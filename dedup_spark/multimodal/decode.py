@@ -86,12 +86,6 @@ def _mean_pool(px: np.ndarray, out_w: int, out_h: int) -> np.ndarray:
     return px[np.ix_(ys, xs)]
 
 
-FEATURE_SCHEMA = (
-    "image_id string, ok boolean, mean_r double, mean_g double, "
-    "mean_b double, std_gray double, recomputed_phash long"
-)
-
-
 def extract_image_features(
     df: DataFrame,
     id_col: str = "image_id",
@@ -105,74 +99,35 @@ def extract_image_features(
     columns BEFORE the Python stage so Arrow ships no extra bytes.
     """
 
-    def _extract(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rid, data, fmt in zip(pdf[id_col], pdf[bytes_col], pdf[fmt_col]):
-                px = _decode_any(data, fmt)
-                if px is None:
-                    rows.append((rid, False, None, None, None, None, None))
-                    continue
-                means = px.reshape(-1, 3).mean(axis=0)
-                gray = px.astype(np.float64).mean(axis=2)
-                rows.append(
-                    (
-                        rid,
-                        True,
-                        float(means[0]),
-                        float(means[1]),
-                        float(means[2]),
-                        float(gray.std()),
-                        int(phash64(px)),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col,
-                    "ok",
-                    "mean_r",
-                    "mean_g",
-                    "mean_b",
-                    "std_gray",
-                    "recomputed_phash",
-                ],
-            )
+    def _features(px: np.ndarray) -> dict:
+        means = px.reshape(-1, 3).mean(axis=0)
+        gray = px.astype(np.float64).mean(axis=2)
+        return {
+            "mean_r": float(means[0]),
+            "mean_g": float(means[1]),
+            "mean_b": float(means[2]),
+            "std_gray": float(gray.std()),
+            "recomputed_phash": int(phash64(px)),
+        }
 
-    return df.select(id_col, bytes_col, fmt_col).mapInPandas(
-        _extract, schema=FEATURE_SCHEMA
+    sig = image_signatures(
+        df,
+        _features,
+        "struct<mean_r double, mean_g double, mean_b double, "
+        "std_gray double, recomputed_phash long>",
+        "_f",
+        id_col,
+        bytes_col,
+        fmt_col,
     )
+    return sig.select(id_col, "ok", "_f.*")
 
 
-def resize_images(
-    df: DataFrame,
-    out_w: int,
-    out_h: int,
-    id_col: str = "image_id",
-    bytes_col: str = "bytes",
-    fmt_col: str = "fmt",
-) -> DataFrame:
-    """Re-encode every decodable image at (out_w, out_h); schema
-    (image_id, bytes, w, h, fmt). Undecodable rows are dropped."""
-    from dedup_spark.fixtures.images import encode_ppm
-
-    def _resize(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rid, data, fmt in zip(pdf[id_col], pdf[bytes_col], pdf[fmt_col]):
-                px = _decode_any(data, fmt)
-                if px is None:
-                    continue
-                rows.append(
-                    (rid, encode_ppm(_mean_pool(px, out_w, out_h)), out_w, out_h, "ppm")
-                )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "bytes", "w", "h", "fmt"]
-            )
-
-    return df.select(id_col, bytes_col, fmt_col).mapInPandas(
-        _resize, schema="image_id string, bytes binary, w int, h int, fmt string"
-    )
+def _psnr(a: np.ndarray, b: np.ndarray) -> float:
+    """PSNR of two same-shape 8-bit arrays; 999 dB sentinel for zero MSE
+    (byte-identical pixels)."""
+    mse = float(((a.astype(np.float64) - b.astype(np.float64)) ** 2).mean())
+    return 999.0 if mse == 0 else float(10.0 * np.log10(255.0**2 / mse))
 
 
 PSNR_SCHEMA = (
@@ -202,12 +157,9 @@ def score_psnr_pairs(pairs: DataFrame, threshold_db: float = 40.0) -> DataFrame:
                     out.append((r.id1, r.id2, bool(r.exact),
                                 bool(r.captions_equal), None, False))
                     continue
-                mse = float(
-                    ((a.astype(np.float64) - b.astype(np.float64)) ** 2).mean()
-                )
-                psnr = 999.0 if mse == 0 else 10.0 * np.log10(255.0**2 / mse)
+                psnr = _psnr(a, b)
                 out.append((r.id1, r.id2, bool(r.exact),
-                            bool(r.captions_equal), float(psnr),
+                            bool(r.captions_equal), psnr,
                             bool(psnr >= threshold_db)))
             yield pd.DataFrame(
                 out,
@@ -272,30 +224,20 @@ def lossy_roundtrip_fidelity(
     below threshold — either degrades the row instead of killing the
     job (unreadable-row skip semantics, reference src/hasher.rs:57-60).
     Only (id, bytes, fmt) ship to the Python stage."""
-    from dedup_spark.multimodal.jpeg import decode_jpeg, encode_jpeg
+    from dedup_spark.multimodal.jpeg import encode_jpeg
 
-    def _rt(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rid, data, fmt in zip(pdf[id_col], pdf[bytes_col], pdf[fmt_col]):
-                px = _decode_any(data, fmt)
-                if px is None:
-                    rows.append((rid, False, False))
-                    continue
-                try:
-                    back = decode_jpeg(encode_jpeg(px, quality=quality))
-                    mse = float(
-                        ((px.astype(np.float64) - back.astype(np.float64)) ** 2
-                         ).mean()
-                    )
-                    psnr = 999.0 if mse == 0 else 10.0 * np.log10(255.0**2 / mse)
-                    rows.append((rid, True, bool(psnr >= threshold_db)))
-                except ValueError:
-                    rows.append((rid, True, False))
-            yield pd.DataFrame(rows, columns=[id_col, "ok", "psnr_ok"])
+    def _rt(px: np.ndarray) -> bool:
+        try:
+            back = decode_jpeg(encode_jpeg(px, quality=quality))
+            return bool(_psnr(px, back) >= threshold_db)
+        except ValueError:
+            return False
 
-    return df.select(id_col, bytes_col, fmt_col).mapInPandas(
-        _rt, schema=f"{id_col} string, ok boolean, psnr_ok boolean"
+    sig = image_signatures(
+        df, _rt, "boolean", "psnr_ok", id_col, bytes_col, fmt_col
+    )
+    return sig.select(
+        id_col, "ok", F.coalesce("psnr_ok", F.lit(False)).alias("psnr_ok")
     )
 
 
@@ -329,19 +271,21 @@ def reencode_variants(
         "gif": encode_gif,
     }
 
-    def _re(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rid, data, fmt in zip(pdf[id_col], pdf[bytes_col], pdf[fmt_col]):
-                px = _decode_any(data, fmt)
-                if px is None:
-                    continue
-                for f in formats:
-                    rows.append((f"{rid}#{f}", enc[f](px), f))
-            yield pd.DataFrame(rows, columns=[id_col, "bytes", "fmt"])
+    def _re(px: np.ndarray) -> list:
+        return [{"bytes": enc[f](px), "fmt": f} for f in formats]
 
-    return df.select(id_col, bytes_col, fmt_col).mapInPandas(
-        _re, schema=f"{id_col} string, bytes binary, fmt string"
+    sig = image_signatures(
+        df,
+        _re,
+        "array<struct<bytes binary, fmt string>>",
+        "_v",
+        id_col,
+        bytes_col,
+        fmt_col,
+    )
+    v = sig.select(id_col, F.inline("_v"))
+    return v.select(
+        F.concat(id_col, F.lit("#"), "fmt").alias(id_col), "bytes", "fmt"
     )
 
 
@@ -365,8 +309,14 @@ def image_signatures(
     fmt_col: str = "fmt",
     extra_cols: tuple = (),
 ) -> DataFrame:
-    """(id, ok, key): the one per-row decode loop of the image
-    signature tiers. Each payload is decoded and ``sig_fn(px, *extra)``
+    """(id, ok, key): the one decode loop for every single-image stage
+    (the signature tiers, and the feature, quality, fidelity, re-encode
+    and patch stages, which return a struct or an array of structs as
+    their key). Only the pair verifiers, which decode two payloads per
+    row, call ``_decode_any`` themselves; the contract is pinned in
+    tests/test_single_image_stages.py.
+
+    Each payload is decoded and ``sig_fn(px, *extra)``
     maps the pixels (plus the row's ``extra_cols`` values) to a key of
     Spark type ``sig_type``. ok=false when the decode fails or
     ``sig_fn`` returns None; the key is then null (unreadable-row skip
@@ -487,7 +437,7 @@ def jpeg_quality_estimates(
                     qt = None if data is None else find_luma_qt(bytes(data))
                     has = qt is not None
                     est = estimate_quality_from_table(qt) if has else None
-                except Exception:  # malformed: survive  # noqa: BLE001
+                except ValueError:  # malformed: survive
                     has, est = False, None
                 rows.append((rid, has, est))
             yield pd.DataFrame(
@@ -496,25 +446,6 @@ def jpeg_quality_estimates(
 
     return df.select(id_col, bytes_col).mapInPandas(
         _est, schema=f"{id_col} string, has_dqt boolean, est_quality int"
-    )
-
-
-def frame_sample_stub(df: DataFrame, every_n: int = 30) -> DataFrame:
-    """Frame sampling for CODEC-COMPRESSED video (h264/vp9/...) — STUB:
-    those decoders are absent from this container. The REAL frame
-    sampler exists for raw containers: multimodal/video.py
-    `sample_frames` (Arrow-batched mapInPandas emitting
-    (video_id, frame_idx, frame_bytes, w, h)) and its JVM-only sibling
-    `frame_signatures` — a codec build would swap the rawv slice for a
-    decode call inside the exact same UDF shape. Raises on use."""
-    raise NotImplementedError(
-        "inter-frame codec (h264/vp9) sampling requires a codec lib not "
-        "present in this container; REAL containers ARE covered: "
-        "multimodal.avi parses MJPEG-in-AVI with a general RIFF walker + "
-        "the from-scratch baseline JPEG decoder (oracle-gated, "
-        "avi_video_dedup), and multimodal.video.sample_frames handles raw "
-        "containers — an inter-frame build would swap the per-chunk "
-        "decode inside the same UDF shape"
     )
 
 
@@ -550,48 +481,31 @@ def image_quality_report(
         # banker's and diverges from DuckDB on exact 6-dp ties
         return math.floor(x * 1e6 + 0.5) / 1e6
 
-    def _iq(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rid, data, fmt in zip(pdf[id_col], pdf[bytes_col], pdf[fmt_col]):
-                px = _decode_any(data, fmt)
-                if px is None:
-                    rows.append((rid, False) + (None,) * 7)
-                    continue
-                p = px.astype(np.int64)
-                lum = 299 * p[:, :, 0] + 587 * p[:, :, 1] + 114 * p[:, :, 2]
-                n = int(lum.size)
-                s = int(lum.sum())
-                ssq = int(np.dot(lum.ravel(), lum.ravel()))
-                n_dark = int((lum < 30_000).sum())
-                n_bright = int((lum > 225_000).sum())
-                rows.append(
-                    (
-                        rid,
-                        True,
-                        n,
-                        _round6(s / (n * 1000)),
-                        _round6(math.sqrt(float(n * ssq - s * s)) / (n * 1000.0)),
-                        _round6(n_dark / n),
-                        _round6(n_bright / n),
-                        int(lum.min()),
-                        int(lum.max()),
-                    )
-                )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    id_col, "ok", "n_px", "mean_luma", "std_luma",
-                    "dark_ratio", "bright_ratio", "min_luma1000",
-                    "max_luma1000",
-                ],
-            )
+    def _iq(px: np.ndarray) -> dict:
+        p = px.astype(np.int64)
+        lum = 299 * p[:, :, 0] + 587 * p[:, :, 1] + 114 * p[:, :, 2]
+        n = int(lum.size)
+        s = int(lum.sum())
+        ssq = int(np.dot(lum.ravel(), lum.ravel()))
+        return {
+            "n_px": n,
+            "mean_luma": _round6(s / (n * 1000)),
+            "std_luma": _round6(math.sqrt(float(n * ssq - s * s)) / (n * 1000.0)),
+            "dark_ratio": _round6(int((lum < 30_000).sum()) / n),
+            "bright_ratio": _round6(int((lum > 225_000).sum()) / n),
+            "min_luma1000": int(lum.min()),
+            "max_luma1000": int(lum.max()),
+        }
 
-    return df.select(id_col, bytes_col, fmt_col).mapInPandas(
+    sig = image_signatures(
+        df,
         _iq,
-        schema=(
-            f"{id_col} string, ok boolean, n_px long, mean_luma double, "
-            "std_luma double, dark_ratio double, bright_ratio double, "
-            "min_luma1000 long, max_luma1000 long"
-        ),
+        "struct<n_px long, mean_luma double, std_luma double, "
+        "dark_ratio double, bright_ratio double, min_luma1000 long, "
+        "max_luma1000 long>",
+        "_q",
+        id_col,
+        bytes_col,
+        fmt_col,
     )
+    return sig.select(id_col, "ok", "_q.*")

@@ -56,7 +56,6 @@ TIFF_LEN = _VAL0 + MAKE_LEN + MODEL_LEN + DT_LEN
 # APP1 = FF E1 <len:2> "Exif\0\0" <tiff>; inserted right after SOI, so
 # the TIFF block starts at absolute file offset 12
 APP1_HDR = 10  # 2 marker + 2 length + 6 signature
-TIFF_ABS = 2 + APP1_HDR
 
 
 def build_exif_app1(

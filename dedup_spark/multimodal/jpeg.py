@@ -556,7 +556,8 @@ def find_luma_qt(data: bytes) -> np.ndarray | None:
     """General segment walk to the first DQT with table id 0; returns
     the 64 zigzag-order step sizes, or None if absent / not a JPEG.
     8-bit tables only (pq=0) — what baseline JFIF uses. Spec-legal
-    0xFF fill bytes before a marker are skipped."""
+    0xFF fill bytes before a marker are skipped. ValueError when the
+    stream ends inside a marker's header."""
     if data[:2] != b"\xff\xd8":
         return None
     i, n = 2, len(data)
@@ -565,6 +566,8 @@ def find_luma_qt(data: bytes) -> np.ndarray | None:
             return None
         while i + 1 < n and data[i + 1] == 0xFF:  # fill bytes (T.81 B.1.1.2)
             i += 1
+        if i + 4 > n:
+            raise ValueError("JPEG: truncated marker segment header")
         marker = data[i + 1]
         if marker in (0xDA, 0xD9):
             return None

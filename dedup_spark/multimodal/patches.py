@@ -26,13 +26,12 @@ there), a (sha, id) shuffle, count-capped self-join, count aggregate
 
 from __future__ import annotations
 
-from typing import Iterator
+import hashlib
 
 import numpy as np
-import pandas as pd
-
 from pyspark.sql import DataFrame, functions as F
 
+from dedup_spark.multimodal.decode import image_signatures
 from dedup_spark.plans.lineage import count_and_log_drops
 
 
@@ -45,43 +44,31 @@ def patch_signatures(
 ) -> DataFrame:
     """(id, py, px, patch_sha) for every aligned non-overlapping
     patch×patch block with non-zero variance. Undecodable rows and
-    images smaller than one patch yield no rows."""
-    import hashlib
+    images smaller than one patch yield no rows (inline drops a null
+    or empty array)."""
 
-    from dedup_spark.multimodal.decode import _decode_any
+    def _cut(px: np.ndarray) -> list:
+        h, w, _ = px.shape
+        out = []
+        for y in range(0, h - patch + 1, patch):
+            for x in range(0, w - patch + 1, patch):
+                blk = px[y : y + patch, x : x + patch]
+                if (blk == blk[0, 0]).all():
+                    continue  # flat: the stopword of images
+                sha = hashlib.sha256(np.ascontiguousarray(blk).tobytes())
+                out.append({"py": y, "px": x, "patch_sha": sha.hexdigest()})
+        return out
 
-    def _cut(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for rid, data, fmt in zip(
-                pdf[id_col], pdf[bytes_col], pdf[fmt_col]
-            ):
-                px = _decode_any(data, fmt)
-                if px is None:
-                    continue
-                h, w, _ = px.shape
-                for y in range(0, h - patch + 1, patch):
-                    for x in range(0, w - patch + 1, patch):
-                        blk = px[y : y + patch, x : x + patch]
-                        if (blk == blk[0, 0]).all():
-                            continue  # flat: the stopword of images
-                        rows.append(
-                            (
-                                rid,
-                                y,
-                                x,
-                                hashlib.sha256(
-                                    np.ascontiguousarray(blk).tobytes()
-                                ).hexdigest(),
-                            )
-                        )
-            yield pd.DataFrame(
-                rows, columns=[id_col, "py", "px", "patch_sha"]
-            )
-
-    return df.select(id_col, bytes_col, fmt_col).mapInPandas(
-        _cut, schema=f"{id_col} string, py int, px int, patch_sha string"
+    sig = image_signatures(
+        df,
+        _cut,
+        "array<struct<py int, px int, patch_sha string>>",
+        "_p",
+        id_col,
+        bytes_col,
+        fmt_col,
     )
+    return sig.select(id_col, F.inline("_p"))
 
 
 def shared_patch_pairs(

@@ -42,7 +42,6 @@ from pyspark.sql import DataFrame, functions as F, types as T
 from dedup_spark.config import DEFAULT_CONFIG, DedupConfig
 
 _MERSENNE = np.uint64((1 << 61) - 1)
-_MAX_HASH = np.uint64((1 << 61) - 1)
 
 
 def _perm_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:

@@ -9,7 +9,6 @@ R4 quiet / exit code (src/main.rs:216,221-225) → `has_duplicates`
 
 from __future__ import annotations
 
-import json
 from typing import Any
 
 from pyspark.sql import DataFrame, functions as F
@@ -79,8 +78,3 @@ def has_duplicates(assignments: DataFrame) -> bool:
     """Exit-code sink: True iff any duplicate group exists
     (reference exits 1 — src/main.rs:221-225)."""
     return assignments.limit(1).count() > 0
-
-
-def write_json(report: dict[str, Any], path: str) -> None:
-    with open(path, "w") as f:
-        json.dump(report, f, indent=2, sort_keys=True)

@@ -24,11 +24,6 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
 
 def iceberg_available(spark: SparkSession) -> bool:
     try:
@@ -45,13 +40,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if "://" in sf_dir or sf_dir.startswith("catalog."):
         return spark.read.format("iceberg").load(f"{sf_dir}.{name}")
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: list[str] | None = None) -> None:
-    for name in names or TABLES:
-        p = os.path.join(sf_dir, f"{name}.parquet")
-        if os.path.exists(p):
-            spark.read.parquet(p).createOrReplaceTempView(name)
 
 
 def write_bucketed(

@@ -22,10 +22,10 @@ band state is O(corpus)):
   * ``alias`` state: (child_cluster, parent_cluster) — when a new doc
     connects two previously-separate clusters they MERGE; instead of
     rewriting history (an O(corpus) update per merge), the append-only
-    alias forest records it and ``resolve_assignments`` pointer-jumps
-    it to fixpoint at read time (the forest is O(#merges), tiny; a
-    production compactor would periodically fold it into the
-    assignment table).
+    alias forest records it and ``resolve_assignments`` labels its
+    trees by connected components at read time (the forest is
+    O(#merges), tiny; a production compactor would periodically fold
+    it into the assignment table).
 
 Correctness contract (oracle-gated in __spark_entry__.py): with
 batches arriving in doc_id order and pair-set-exact banding (band-safe
@@ -225,16 +225,17 @@ def compact_aliases(
 ) -> int:
     """Fold the alias forest into the assignment table: rewrite every
     assignment to its resolved root, then truncate the forest. The
-    forest is O(#merges) and read-time resolution costs its pointer
-    depth; a production job runs this periodically (per N batches) so
-    reads go back to being one cheap join. Returns #aliases folded.
+    forest is O(#merges) and read-time resolution costs a
+    connected-components pass over it; a production job runs this
+    periodically (per N batches) so reads go back to being one cheap
+    join. Returns #aliases folded.
 
     Crash-safety on bare parquet (Iceberg would make the two writes one
     transaction): the resolved table is materialized eagerly BEFORE
     either store is touched. A crash after the assignment overwrite but
     before the forest truncate is benign — resolved cluster ids are
     forest ROOTS, and a root is never a child in the same forest
-    (pointer-jumping stopped there), so re-applying the stale forest is
+    (it is its tree's minimum), so re-applying the stale forest is
     the identity and re-running the compactor converges."""
     alias = _read_or_none(spark, alias_dir)
     n = int(alias.count()) if alias is not None else 0
@@ -255,31 +256,19 @@ def compact_aliases(
 def resolve_assignments(
     spark: SparkSession, out_dir: str, alias_dir: str
 ) -> DataFrame:
-    """Assignments with the alias forest resolved to roots: pointer-
-    jumping on the (tiny) alias table — O(log depth) self-joins — then
-    ONE join against the assignment table. Returns (doc_id, cluster_id)."""
+    """Assignments with the alias forest resolved to roots, then ONE
+    join against the assignment table. Every alias points to a smaller
+    id (child > parent), so each tree's root is its minimum: the
+    connected-components label of the (tiny) alias edge set. Returns
+    (doc_id, cluster_id)."""
     assign = spark.read.parquet(out_dir)
     alias = _read_or_none(spark, alias_dir)
     if alias is None:
         return assign.select("doc_id", "cluster_id")
-    a = alias.select("child", "parent").dropDuplicates(["child"]) \
-        .localCheckpoint(eager=True)
-    while True:
-        nxt = a.alias("x").join(
-            a.alias("y"), F.col("x.parent") == F.col("y.child"), "left"
-        ).select(
-            F.col("x.child").alias("child"),
-            F.coalesce(F.col("y.parent"), F.col("x.parent")).alias("parent"),
-            (F.col("y.parent").isNotNull()).alias("_jumped"),
-        ).localCheckpoint(eager=True)
-        jumped = nxt.filter(F.col("_jumped")).limit(1).count()
-        a = nxt.select("child", "parent")
-        if jumped == 0:
-            break
+    roots = connected_components(
+        alias.select(F.col("child").alias("id1"), F.col("parent").alias("id2"))
+    ).select(F.col("id").alias("child"), F.col("cluster_id").alias("root"))
     return (
-        assign.join(a, assign["cluster_id"] == a["child"], "left")
-        .select(
-            "doc_id",
-            F.coalesce(F.col("parent"), F.col("cluster_id")).alias("cluster_id"),
-        )
+        assign.join(roots, assign["cluster_id"] == roots["child"], "left")
+        .select("doc_id", F.coalesce("root", "cluster_id").alias("cluster_id"))
     )

@@ -12,7 +12,7 @@ import pytest
 from dedup_spark.fixtures.images import encode_ppm
 from dedup_spark.multimodal.crop import border_trim_clusters
 from dedup_spark.multimodal.decode import _decode_any
-from dedup_spark.multimodal.jpeg import decode_jpeg, encode_jpeg
+from dedup_spark.multimodal.jpeg import decode_jpeg, encode_jpeg, find_luma_qt
 from dedup_spark.multimodal.png import decode_png, encode_png
 from dedup_spark.multimodal.tiff import decode_tiff, encode_tiff
 
@@ -102,7 +102,9 @@ def _mutants(data: bytes, rng: np.random.Generator, n: int):
         yield bytes(m)
 
 
-@pytest.mark.parametrize("fmt", ["ppm", "png", "jpeg", "webp", "tiff", "gif"])
+@pytest.mark.parametrize(
+    "fmt", ["ppm", "png", "jpeg", "webp", "tiff", "gif", "find_luma_qt"]
+)
 def test_mutated_payloads_never_raise(fmt):
     from dedup_spark.multimodal.gif import encode_gif
     from dedup_spark.multimodal.webp import encode_webp_lossless
@@ -110,11 +112,28 @@ def test_mutated_payloads_never_raise(fmt):
     enc = {
         "ppm": encode_ppm, "png": encode_png, "jpeg": encode_jpeg,
         "webp": encode_webp_lossless, "tiff": encode_tiff, "gif": encode_gif,
+        "find_luma_qt": encode_jpeg,
     }[fmt]
     rng = np.random.default_rng(7)
     for m in _mutants(enc(_px(4, 14, 11)), rng, 300):
+        if fmt == "find_luma_qt":  # the DQT walk: ValueError is its typed failure
+            try:
+                qt = find_luma_qt(m)
+            except ValueError:
+                continue
+            assert qt is None or qt.shape == (64,)
+            continue
         px = _decode_any(m, fmt)
         assert px is None or (px.dtype == np.uint8 and px.ndim == 3)
+
+
+@pytest.mark.parametrize(
+    "data", [b"\xff\xd8\xff\xff\xff\xff", b"\xff\xd8\xff\xff\xff\xdb\x00"]
+)
+def test_find_luma_qt_truncated_header_raises_value_error(data):
+    # fill bytes running to the end; a marker with a one-byte length
+    with pytest.raises(ValueError):
+        find_luma_qt(data)
 
 
 def test_unknown_format_is_unreadable_row():

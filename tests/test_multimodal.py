@@ -20,8 +20,6 @@ from dedup_spark.fixtures.images import (
 from dedup_spark.multimodal.decode import (
     decode_fidelity_pairs,
     extract_image_features,
-    frame_sample_stub,
-    resize_images,
     score_psnr_pairs,
 )
 
@@ -87,21 +85,6 @@ def test_extract_features_and_unreadable_skip(spark):
     assert abs(got["ok"]["mean_r"] - px[:, :, 0].mean()) < 1e-6
     assert got["broken"]["ok"] is False  # skip, don't crash (10^12 rule)
     assert got["broken"]["mean_r"] is None
-
-
-def test_resize_images_shapes(spark):
-    corpus = generate_corpus(20, dup_ratio=0.0, seed=9)
-    imgs, _ = to_spark(spark, corpus)
-    out = resize_images(imgs, 8, 8).collect()
-    assert len(out) == 20
-    for r in out:
-        assert (r["w"], r["h"]) == (8, 8)
-        assert decode_ppm(bytes(r["bytes"])).shape == (8, 8, 3)
-
-
-def test_frame_sample_is_explicit_stub(spark):
-    with pytest.raises(NotImplementedError):
-        frame_sample_stub(None)
 
 
 def test_png_roundtrip_and_filters():

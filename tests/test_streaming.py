@@ -362,6 +362,28 @@ def test_fuzzy_incremental_dedup_with_cluster_merge(spark, tmp_path):
     assert spark.read.parquet(f"{state}/docs").count() == 6
 
 
+def test_resolve_assignments_deep_alias_forest(spark, tmp_path):
+    """A multi-level alias forest (9 -> 7 -> 4 -> 2 -> 0, 8 -> 3, plus a
+    replayed duplicate alias) resolves every assignment to its tree's
+    root; ids outside the forest keep their cluster."""
+    from dedup_spark.streaming.fuzzy import resolve_assignments
+
+    out, alias = str(tmp_path / "assign"), str(tmp_path / "alias")
+    spark.createDataFrame(
+        [(10, 9), (11, 7), (12, 4), (13, 8), (14, 3), (15, 15), (16, 0)],
+        "doc_id long, cluster_id long",
+    ).write.parquet(out)
+    spark.createDataFrame(
+        [(9, 7), (7, 4), (4, 2), (2, 0), (8, 3), (2, 0)],
+        "child long, parent long",
+    ).write.parquet(alias)
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in resolve_assignments(spark, out, alias).collect()
+    }
+    assert got == {10: 0, 11: 0, 12: 0, 13: 3, 14: 3, 15: 15, 16: 0}
+
+
 def test_fuzzy_bucketed_band_state_and_compaction(spark, tmp_path):
     """(1) The bucketed band-state path (bands_table=...) reproduces the
     parquet-dir result on the cluster-merge scenario; (2) the plan of
