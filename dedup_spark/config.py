@@ -1,9 +1,11 @@
 """Engine configuration.
 
-Mirrors the reference's CLI config surface (reference src/main.rs:15-70:
-min/max size, include/exclude globs, action, dry-run, jobs) plus the
-near-duplicate knobs mandated by the north rule (shingle size, LSH
-bands/rows, Hamming radius, salt buckets, checkpoint dir).
+Mirrors the size filters of the reference's CLI config surface
+(reference src/main.rs:15-70) plus the near-duplicate knobs mandated by
+the north rule (shingle size, LSH bands/rows, Hamming radius,
+checkpoint dir). The reference's include/exclude globs, action,
+dry-run and jobs are ``jobs/dedup_job.py`` arguments: the globs go to
+``sources.filters.apply_scan_filters``, not into this config.
 
 The signature config (k, num_perm = bands*rows) is FIXED here and shared
 between the pipeline and the parity tests — recall is only meaningful at
@@ -12,7 +14,7 @@ a pinned config.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -23,9 +25,6 @@ class DedupConfig:
     # reference: min/max size filters + empty-file skip (src/scanner.rs:86-109)
     min_size: int = 1
     max_size: int | None = None
-    # reference: include/exclude glob patterns (src/scanner.rs:13-41)
-    include: tuple[str, ...] = ()
-    exclude: tuple[str, ...] = ()
 
     # --- near-dup tier: MinHash over caption shingles [EXT] ------------
     shingle_k: int = 3          # word n-gram size
@@ -42,10 +41,6 @@ class DedupConfig:
     ann_hyperplanes: int = 16   # random-hyperplane LSH signature bits
     ann_tables: int = 4         # independent LSH tables (multi-probe recall)
     cosine_threshold: float = 0.9
-
-    # --- scale / shuffle ------------------------------------------------
-    salt_buckets: int = 16      # salting fan-out for skewed group keys
-    shuffle_partitions: int = 32
 
     # --- checkpoint / lineage (north rule) ------------------------------
     checkpoint_dir: str | None = None

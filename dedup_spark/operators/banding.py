@@ -44,11 +44,11 @@ def star_guarded_pairs(
     # the bucketed input fans out to FIVE consumers below (stats, the
     # keyed join, both self-join sides, the star center); without a
     # checkpoint the plan upstream of it — typically an expensive
-    # signature UDF — re-executes for each one. Lazy, so query
-    # construction stays free of Spark jobs; the first action
-    # materializes (id, bucket) rows once and every consumer reads
-    # that. (Round-3 fix: the minhash tier's wall time was dominated
-    # by 3-5x signature recomputes.)
+    # signature UDF — re-executes for each one. Under AQE the call runs
+    # every shuffle below it; the fused pipeline's tiers feed it a
+    # signature projection of the input with none, so there the call
+    # starts no job and the first action materializes the (id, bucket)
+    # rows once for every consumer.
     bucketed = bucketed.localCheckpoint(eager=False)
     stats = (
         bucketed.groupBy(*bucket_cols)

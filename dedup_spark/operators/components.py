@@ -29,9 +29,10 @@ Beyond", SoCC'14 — public algorithm):
 Each iteration is two shuffles (groupBy min + explode join). The edge
 DataFrame is localCheckpointed every iteration to truncate the lineage
 (otherwise the plan doubles per round and the driver OOMs planning, not
-executing); the checkpoint is lazy, so the round's convergence check is
-the job that materializes it. A round that leaves the edge set within
-the budget hands it to the local finish. With a durable checkpoint_dir
+executing). Under AQE the ``eager=False`` call runs the round's two
+shuffles at once; the round's convergence check is the job that
+materializes the checkpointed edges. A round that leaves the edge set
+within the budget hands it to the local finish. With a durable checkpoint_dir
 the intermediate edge set is also persisted per iteration with a
 manifest, so a killed job resumes from the last completed iteration
 instead of restarting — the north rule's checkpoint-resume requirement
@@ -231,7 +232,10 @@ def connected_components(
             if not m.get("converged"):
                 start_iter = m["last_iteration"] + 1
                 e = spark.read.parquet(_ckpt_path(cfg, m["last_iteration"]))
-    # lazy: the fingerprint below is the job that materializes it
+    # The one deliberate build-time barrier of the fused pipeline: the
+    # path choice below needs the edge count. Under AQE this call runs
+    # every shuffle below it — every tier's candidate and verify jobs —
+    # and the fingerprint is the job that materializes the edge set.
     e = e.localCheckpoint(eager=False)
 
     prev = _sig(e)

@@ -53,26 +53,6 @@ def size_candidates(
     )
 
 
-def _materialize_keys(keys: DataFrame) -> DataFrame:
-    """Checkpoint a (small) key set to truncate its lineage.
-
-    Without this, each cascade stage's plan embeds the previous stage
-    TWICE (once in the main branch, once inside the key aggregate) —
-    exponential plan growth that Catalyst spends minutes optimizing and
-    the executor recomputes repeatedly. The surviving-key sets are the
-    small side by construction (duplicate keys only, no payload), so
-    materializing them is cheap at any scale. localCheckpoint keeps the
-    partitions on executors; on a real cluster with lost-executor
-    tolerance requirements, point spark.sparkContext.setCheckpointDir
-    at durable storage and swap to .checkpoint().
-
-    Lazy: building the query runs no job of its own; the first job that
-    reads the key set materializes it once and every later consumer
-    reads that copy.
-    """
-    return keys.localCheckpoint(eager=False)
-
-
 def semi_join_candidates(df: DataFrame, keys: DataFrame, key_cols: list[str]) -> DataFrame:
     """Keep rows whose key appears in the (broadcast) surviving-key set.
 
@@ -90,9 +70,7 @@ def semi_join_candidates(df: DataFrame, keys: DataFrame, key_cols: list[str]) ->
     """
     from functools import reduce
 
-    right = _materialize_keys(keys).select(
-        *[F.col(c).alias(f"_k_{c}") for c in key_cols]
-    )
+    right = keys.select(*[F.col(c).alias(f"_k_{c}") for c in key_cols])
     cond = reduce(
         lambda a, b: a & b,
         [F.col(c).eqNullSafe(F.col(f"_k_{c}")) for c in key_cols],
@@ -124,8 +102,11 @@ def exact_duplicate_clusters(
               stage-1 surviving-key set (broadcast back).
       pass 2  stage-1 survivors only — the full-content sha in one
               projection; the result is a slim (id, len, hash) table,
-              localCheckpointed so every later stage re-reads
-              ~100 B/row instead of the payload. The prefix-hash
+              localCheckpointed so the group and the join both read
+              ~100 B/row instead of the payload. That cut runs the
+              stage-1 key aggregate and builds its broadcast at the
+              call (AQE executes every shuffle below a
+              ``localCheckpoint``, eager or not). The prefix-hash
               grouping (H4) is *subsumed*: any full-hash group with
               n>=2 trivially has a prefix-hash group with n>=2, so a
               separate stage only saves full-hash CPU — and once the
@@ -189,17 +170,20 @@ def exact_duplicate_clusters(
     if fuse_full_hash:
         # single payload pass computing the full hash directly; the
         # prefix-hash grouping (H4) is subsumed by the final HAVING on
-        # the full hash, so no stage-2 semi-join — 2 fewer job barriers
-        hashed = s1.select(
+        # the full hash, so no stage-2 semi-join. The payload cut: the
+        # group and the join below both read this slim table, so the
+        # payload is read once. Under AQE the call runs the stage-1 key
+        # aggregate and the semi-join's broadcast; the first action
+        # that reads the table runs the hash pass.
+        members = s1.select(
             id_col, "_len", full.alias("_fsha")
-        ).localCheckpoint(eager=False)  # slim table; payload never read again
-        members = hashed.select(id_col, "_len", "_fsha")
+        ).localCheckpoint(eager=False)
     else:
         s2 = s1.withColumn("_psha", prefix)
         s2 = semi_join_candidates(s2, size_candidates(s2, keys2), keys2)
         s3 = s2.withColumn("_fsha", full)
         members = s3.select(id_col, "_len", "_fsha")
-    groups = _materialize_keys(
+    groups = (
         members.groupBy(*keys3)
         .agg(
             F.count(F.lit(1)).alias("n_members"),

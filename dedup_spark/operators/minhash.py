@@ -27,8 +27,10 @@ Scale notes:
     min id (O(n) edges) instead of emitting all pairs — connected
     components restores the full cluster. This is the skew story for
     10^12-scale duplicate floods.
-  * Jaccard verify joins the exploded shingle table to candidate pairs —
-    candidate-restricted (left_semi prune first), never all-pairs.
+  * Jaccard verify joins the shingle table to candidate pairs —
+    candidate-restricted, never all-pairs. Each input row is shingled
+    once; a caller verifying a few candidates against a large history
+    prunes its input to the candidate endpoints first.
 """
 
 from __future__ import annotations
@@ -298,18 +300,17 @@ def jaccard_verify(
     cfg: DedupConfig = DEFAULT_CONFIG,
 ) -> DataFrame:
     """Exact Jaccard on candidate pairs → (id1, id2, jaccard), filtered to
-    cfg.jaccard_threshold. Shingle sets are recomputed only for rows that
-    appear in some pair (left_semi prune), then set-intersected via
-    built-in array functions — no Python in the join itself."""
+    cfg.jaccard_threshold. Every row of ``df`` is shingled once, then
+    shingle sets are set-intersected via built-in array functions — no
+    Python in the join itself. A caller whose ``df`` is much larger
+    than the candidate endpoints prunes it first (the streaming tier
+    left-semi-joins its history to them)."""
     sh = shingle_explode_udf(cfg)
-    ids = pairs.select(F.col("id1").alias("_id")).unionByName(
-        pairs.select(F.col("id2").alias("_id"))
-    ).distinct()
     shingled = (
-        df.join(ids, df[id_col] == ids["_id"], "left_semi")
-        .select(F.col(id_col).alias("_id"), sh(F.col(text_col)).alias("_sh"))
-        # both pair sides consume this — checkpoint so the shingle UDF
-        # runs once (lazy: no job at build time)
+        df.select(F.col(id_col).alias("_id"), sh(F.col(text_col)).alias("_sh"))
+        # both pair sides read this, so the shingle UDF runs once. At
+        # the fused call site no shuffle sits below it, so the call
+        # starts no job; the first action that reads it shingles df.
         .localCheckpoint(eager=False)
     )
     s1 = shingled.select(F.col("_id").alias("id1"), F.col("_sh").alias("_sh1"))

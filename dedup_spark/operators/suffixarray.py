@@ -42,9 +42,11 @@ Scale shape per doubling round: one self-equi-join on (doc, pos+h)
 n_partitions numbers -> broadcast offsets + per-partition window —
 never a global-order single-partition window), one join back.  All
 fixed-width columns; no UDFs anywhere in the loop.  Each round's
-result is lazily localCheckpointed: the next round consumes it
-twice (probe + successor side) and RangePartitioner sampling must
-not re-draw between those two consumptions.
+result is localCheckpointed: the next round consumes it twice (probe
++ successor side) and RangePartitioner sampling must not re-draw
+between those two consumptions.  The cut is not lazy: under AQE the
+``eager=False`` call runs the round's shuffles while the query is
+built.
 
 Reference parity: [EXT] generalized tier (SURVEY.md §2.3 "substring
 containment"); the reference itself (src/grouping.rs) stops at

@@ -13,6 +13,23 @@
 One function, used by bench.py, jobs/dedup_job.py, the streaming
 incremental path, and the parity tests — so the measured pipeline IS
 the shipped pipeline.
+
+Building the DataFrame is not free. Under AQE a ``localCheckpoint``
+runs every shuffle below it at the call, ``eager=False`` or not, so
+the build runs the jobs of two lineage cuts:
+
+  * the exact tier's payload cut runs the stage-1 key aggregate and
+    its broadcast semi-join;
+  * connected components' edge checkpoint plus its ``_sig`` count —
+    the one deliberate barrier, since the local-or-star choice needs
+    the edge count — runs every tier's candidate and verify jobs.
+
+The banding checkpoints of the two LSH tiers have no shuffle below
+them and start no job. So each ``metrics.stage`` wall times plan
+construction plus the jobs of the cuts inside it: ``exact_cascade``
+holds the payload cut's jobs, ``connected_components`` holds every
+tier's work, and ``caption_minhash_lsh`` / ``phash_hamming`` hold
+plan construction only.
 """
 
 from __future__ import annotations

@@ -1,5 +1,4 @@
-"""Per-stage lineage + metrics (north rule: "per-partition lineage +
-metrics" on the materialized cluster table).
+"""Per-stage metrics of a pipeline run.
 
 The reference's progress accounting is an AtomicUsize + progress bars
 (src/main.rs:129-141,173-186); at cluster scale that becomes a structured
@@ -90,15 +89,3 @@ def count_and_log_drops(counts, cap: int, what: str) -> None:
             "raise the cap or star-link if these carry signal)",
             what, dropped, cap,
         )
-
-
-def partition_lineage(df, stage: str):
-    """Attach per-partition lineage columns to a DataFrame: the Spark
-    partition id and the stage tag — written with the cluster table so
-    every output row records which partition of which stage produced it.
-    Built-in spark_partition_id(): zero-cost, codegen'd."""
-    from pyspark.sql import functions as F
-
-    return df.withColumn("_lineage_partition", F.spark_partition_id()).withColumn(
-        "_lineage_stage", F.lit(stage)
-    )

@@ -21,7 +21,9 @@ import shutil
 import time
 import uuid
 from pathlib import Path
+from typing import Callable
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -42,30 +44,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: list[str],
-    n_buckets: int,
-    sort_cols: list[str] | None = None,
-) -> str:
-    """Bucketed (hash-clustered) table write — the co-located-join path.
+# the error conditions Spark raises when a path or a table does not
+# exist — a first batch or a first run, not a fault
+_ABSENT = frozenset({"PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND"})
 
-    Two tables bucketed on the same key with the same bucket count join
-    WITHOUT a shuffle: each task reads matching buckets from both sides
-    (plan shows SortMergeJoin with NO Exchange — asserted in
-    tests/test_filters_catalog.py). At 100 TB this is the difference
-    between re-shuffling the assignment table on every downstream join
-    and never shuffling it again; the Iceberg analog is a `bucket(N,
-    col)` partition transform with storage-partitioned joins. Spark's
-    bucketing requires the table catalog (`saveAsTable`), so this path
-    is metastore-backed parquet rather than a bare directory.
-    """
-    writer = df.write.mode("overwrite").bucketBy(n_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.format("parquet").saveAsTable(table_name)
-    return table_name
+
+def read_or_none(read: Callable[[], DataFrame]) -> DataFrame | None:
+    """``read()``, or None when what it reads does not exist yet.
+
+    Only a missing path or table means "no state": anything else — a
+    corrupt footer, a permission error, a bad schema — raises, so
+    state that exists but cannot be read never passes for an empty
+    history (which would re-cluster every later batch from scratch)."""
+    try:
+        return read()
+    except AnalysisException as e:
+        if e.getCondition() in _ABSENT:
+            return None
+        raise
 
 
 _POINTER = "_CURRENT"

@@ -14,9 +14,9 @@ band state is O(corpus)):
     key at Iceberg scale, the same storage-partitioned-join story as
     the exact tier's state).
   * ``docs`` state: (doc_id, text) for exact-Jaccard verification of
-    candidates (only candidate olds are ever re-shingled — left_semi
-    pruned, so per-batch verify cost is O(candidate pairs), not
-    O(history)).
+    candidates (only candidate endpoints are ever re-shingled — the
+    batch left-semi-joins its corpus to them before the verify, so
+    per-batch verify cost is O(candidate pairs), not O(history)).
   * assignments (out_dir): append-only (doc_id, cluster_id); the
     cluster id of a new doc is resolved at ingest time.
   * ``alias`` state: (child_cluster, parent_cluster) — when a new doc
@@ -46,20 +46,7 @@ from dedup_spark.config import DEFAULT_CONFIG, DedupConfig
 from dedup_spark.operators.banding import star_guarded_pairs
 from dedup_spark.operators.components import connected_components
 from dedup_spark.operators.minhash import jaccard_verify, minhash_signature_udf
-
-
-def _read_or_none(spark: SparkSession, path: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(path)
-    except Exception:  # first batch: state not yet created  # noqa: BLE001
-        return None
-
-
-def _read_table_or_none(spark: SparkSession, table: str) -> DataFrame | None:
-    try:
-        return spark.table(table)
-    except Exception:  # first batch: table not yet created  # noqa: BLE001
-        return None
+from dedup_spark.sources.catalog import read_or_none
 
 
 def fuzzy_process_batch(
@@ -119,10 +106,10 @@ def fuzzy_process_batch(
         ["band_idx", "band_hash"],
         max_band_bucket,
     )
-    old_bands = (
-        _read_table_or_none(spark, bands_table)
+    old_bands = read_or_none(
+        (lambda: spark.table(bands_table))
         if bands_table is not None
-        else _read_or_none(spark, bands_dir)
+        else (lambda: spark.read.parquet(bands_dir))
     )
     if old_bands is not None:
         no = (
@@ -145,19 +132,25 @@ def fuzzy_process_batch(
     else:
         cand = nn.select("id1", "id2")
 
-    # verify needs texts for both sides; olds come from the docs state
-    old_docs = _read_or_none(spark, docs_dir)
+    # verify needs texts for both sides; olds come from the docs state.
+    # Only candidate endpoints are shingled: the corpus is all history,
+    # so the prune keeps the verify O(candidates), not O(corpus)
+    old_docs = read_or_none(lambda: spark.read.parquet(docs_dir))
     corpus = (
         new_docs if old_docs is None
         else new_docs.unionByName(old_docs.select("doc_id", "text"))
     )
+    ends = cand.select(F.col("id1").alias("doc_id")).unionByName(
+        cand.select(F.col("id2").alias("doc_id"))
+    )
+    corpus = corpus.join(ends, on="doc_id", how="left_semi")
     edges = jaccard_verify(
         corpus, cand, id_col="doc_id", text_col="text", cfg=cfg
     ).select("id1", "id2")
 
     # delta graph: old endpoints collapse to their CURRENT resolved
     # cluster, then one small distributed CC labels the delta
-    prev_assign = _read_or_none(spark, out_dir)
+    prev_assign = read_or_none(lambda: spark.read.parquet(out_dir))
     if prev_assign is not None:
         resolved = resolve_assignments(spark, out_dir, alias_dir).select(
             F.col("doc_id").alias("_old"), F.col("cluster_id").alias("_oc")
@@ -237,7 +230,7 @@ def compact_aliases(
     forest ROOTS, and a root is never a child in the same forest
     (it is its tree's minimum), so re-applying the stale forest is
     the identity and re-running the compactor converges."""
-    alias = _read_or_none(spark, alias_dir)
+    alias = read_or_none(lambda: spark.read.parquet(alias_dir))
     n = int(alias.count()) if alias is not None else 0
     if n == 0:
         return 0
@@ -262,7 +255,7 @@ def resolve_assignments(
     connected-components label of the (tiny) alias edge set. Returns
     (doc_id, cluster_id)."""
     assign = spark.read.parquet(out_dir)
-    alias = _read_or_none(spark, alias_dir)
+    alias = read_or_none(lambda: spark.read.parquet(alias_dir))
     if alias is None:
         return assign.select("doc_id", "cluster_id")
     roots = connected_components(

@@ -36,6 +36,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dedup_spark.config import DEFAULT_CONFIG, DedupConfig
+from dedup_spark.sources.catalog import read_or_none
 
 
 def _batch_hashes(batch: DataFrame, id_col: str, payload_col: str) -> DataFrame:
@@ -76,16 +77,12 @@ def process_batch(
     joins."""
     hashes = _batch_hashes(batch, id_col, payload_col).localCheckpoint(eager=True)
 
-    if state_table is not None:
-        try:
-            state = spark.table(state_table)
-        except Exception:  # first batch: table not yet created  # noqa: BLE001
-            state = None
-    else:
-        try:
-            state = spark.read.parquet(state_dir)
-        except Exception:  # first batch: empty state  # noqa: BLE001
-            state = None
+    # None on the first batch; unreadable state raises
+    state = read_or_none(
+        (lambda: spark.table(state_table))
+        if state_table is not None
+        else (lambda: spark.read.parquet(state_dir))
+    )
 
     # within-batch first-seen (min id per content) — handles dups that
     # arrive together in one batch
@@ -124,11 +121,11 @@ def process_batch(
         new_state.write.mode("append").parquet(state_dir)
 
     # idempotent assignment append: drop ids already assigned
-    try:
-        existing = spark.read.parquet(out_dir).select(id_col)
-        fresh = out.join(existing, on=id_col, how="left_anti")
-    except Exception:  # noqa: BLE001
-        fresh = out
+    existing = read_or_none(lambda: spark.read.parquet(out_dir))
+    fresh = (
+        out if existing is None
+        else out.join(existing.select(id_col), on=id_col, how="left_anti")
+    )
     fresh.select(id_col, "cluster_id").write.mode("append").parquet(out_dir)
 
 

@@ -73,7 +73,12 @@ def main(argv=None) -> int:
     from dedup_spark.operators.canonical import merge_assignments
     from dedup_spark.pipeline import dedup_pipeline
     from dedup_spark.plans.lineage import StageMetrics
-    from dedup_spark.sources.catalog import load_table, write_table
+    from dedup_spark.sources.catalog import (
+        load_table,
+        read_or_none,
+        read_table,
+        write_table,
+    )
     from dedup_spark.sources.filters import apply_scan_filters, parse_pattern_file
 
     if args.jobs:
@@ -139,13 +144,7 @@ def main(argv=None) -> int:
         if args.dry_run:
             print(f"[dry-run] would write {assigned.count()} assignments to {args.output}")
         else:
-            existing = None
-            try:
-                from dedup_spark.sources.catalog import read_table
-
-                existing = read_table(spark, args.output)
-            except Exception:
-                existing = None
+            existing = read_or_none(lambda: read_table(spark, args.output))
             merged = merge_assignments(assigned, existing, id_col=args.id_col)
             write_table(merged, args.output)
 

@@ -11,7 +11,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from dedup_spark.plans.lineage import StageMetrics, partition_lineage
+from dedup_spark.plans.lineage import StageMetrics
 from dedup_spark.sources.catalog import write_table
 from dedup_spark.sources.filters import (
     apply_scan_filters,
@@ -86,7 +86,7 @@ def test_pattern_file_parse(tmp_path):
     assert parse_pattern_file(f) == ["*.jpg", "*.png", "*.tmp"]
 
 
-def test_stage_metrics_and_partition_lineage(spark):
+def test_stage_metrics(spark):
     m = StageMetrics("t")
     with m.stage("s1"):
         pass
@@ -95,12 +95,6 @@ def test_stage_metrics_and_partition_lineage(spark):
     assert ("s1", "wall_seconds") in entries and ("rows", "value") in entries
     mdf = m.to_dataframe(spark)
     assert mdf.count() == 2
-
-    df = spark.range(10)
-    lin = partition_lineage(df, "stageX")
-    rows = lin.collect()
-    assert all(r["_lineage_stage"] == "stageX" for r in rows)
-    assert all(r["_lineage_partition"] >= 0 for r in rows)
 
 
 def test_write_table_atomic_and_mode_guard(spark, tmp_path):
@@ -259,33 +253,3 @@ def test_partition_pruning_is_real(spark, tmp_path):
     # read the files and filter rows instead of skipping whole dirs)
     pushed = plan.split("PushedFilters")[1][:120] if "PushedFilters" in plan else ""
     assert "src" not in pushed
-
-
-def test_bucketed_join_is_shuffle_free(spark):
-    """Bucketing proof: two tables bucketed on the same key join with
-    NO Exchange on either side — the co-located-join contract that
-    kills the per-join shuffle at scale."""
-    import pandas as pd
-
-    from dedup_spark.sources.catalog import write_bucketed
-
-    a = spark.createDataFrame(
-        pd.DataFrame({"k": list(range(500)), "va": list(range(500))})
-    )
-    b = spark.createDataFrame(
-        pd.DataFrame({"k": list(range(0, 500, 2)), "vb": list(range(250))})
-    )
-    write_bucketed(a, "bkt_a", ["k"], 8, sort_cols=["k"])
-    write_bucketed(b, "bkt_b", ["k"], 8, sort_cols=["k"])
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("bkt_a").join(spark.table("bkt_b"), "k")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan  # co-located: no shuffle at all
-        assert joined.count() == 250
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS bkt_a")
-        spark.sql("DROP TABLE IF EXISTS bkt_b")

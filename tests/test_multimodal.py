@@ -427,10 +427,12 @@ def test_multimodal_pipeline_fuses_three_edge_signals(spark):
 
 def test_fused_pipeline_job_count_is_pinned(spark):
     """Job barriers, not data, bound the fused pass. Building and
-    collecting ``dedup_pipeline`` on a 60-image corpus runs 31 Spark
-    jobs (54 with the star loop and the eager build-time checkpoints);
-    the pin leaves 5 jobs of headroom for AQE's runtime plan choices.
-    A new eager checkpoint or a star round on this graph breaks it.
+    collecting ``dedup_pipeline`` on a 60-image corpus runs 24 Spark
+    jobs (31 with the exact tier's key-set checkpoints and the prune
+    under the shingle checkpoint, 54 with the star loop and the eager
+    build-time checkpoints); the pin leaves 5 jobs of headroom for
+    AQE's runtime plan choices. A new checkpoint over a shuffle or a
+    star round on this graph breaks it.
 
     A second pass on the same corpus must reuse the generated classes
     of the first (182 on a cold session): it compiles 2-12, where
@@ -455,10 +457,48 @@ def test_fused_pipeline_job_count_is_pinned(spark):
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert len(rows) == 60
     assert not any(e["stage"].startswith("iter_") for e in m.entries), m.entries
-    assert jobs <= 36, jobs
+    assert jobs <= 29, jobs
 
     compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     before = compiles.METRIC_COMPILATION_TIME().getCount()
     assert len(dedup_pipeline(imgs).collect()) == 60
     recompiled = compiles.METRIC_COMPILATION_TIME().getCount() - before
     assert recompiled <= 30, recompiled
+
+
+def test_fused_pipeline_build_barrier_is_pinned(spark):
+    """Building ``dedup_pipeline`` on the 60-image corpus starts 6 SQL
+    executions and 18 jobs, all before any action: under AQE a
+    ``localCheckpoint`` runs every shuffle below it at the call. The
+    jobs belong to two cuts only — the exact tier's payload cut (the
+    stage-1 key aggregate and its broadcast) and connected components'
+    edge checkpoint plus ``_sig`` count, the one deliberate barrier.
+    The two banding checkpoints and the shingle checkpoint are
+    executions with no job. With the exact tier's key-set checkpoints
+    and the left-semi prune under the shingle checkpoint, the build
+    started 8 executions and 25 jobs. The job pin leaves 2 of headroom
+    for AQE's runtime plan choices."""
+    import uuid
+
+    from dedup_spark.pipeline import dedup_pipeline
+
+    imgs, _ = to_spark(
+        spark, generate_corpus(60, dup_ratio=0.3, near_dup_ratio=0.2, seed=11)
+    )
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = sc._jsc.sc().listenerBus()
+    group = f"fused-build-{uuid.uuid4().hex}"
+    bus.waitUntilEmpty()
+    before = store.executionsCount()
+    sc.setJobGroup(group, "fused pipeline build", False)
+    try:
+        out = dedup_pipeline(imgs)
+    finally:
+        sc._jsc.clearJobGroup()
+    bus.waitUntilEmpty()
+    executions = store.executionsCount() - before
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert out.count() == 60
+    assert executions == 6, executions
+    assert jobs <= 20, jobs

@@ -362,6 +362,53 @@ def test_fuzzy_incremental_dedup_with_cluster_merge(spark, tmp_path):
     assert spark.read.parquet(f"{state}/docs").count() == 6
 
 
+def test_fuzzy_verify_shingles_only_candidate_endpoints(
+    spark, tmp_path, monkeypatch
+):
+    """The streaming verify runs against all history, so the batch
+    prunes its corpus to the candidate endpoints before calling
+    ``jaccard_verify`` (which shingles every row it is given). Batch 2
+    holds one near-dup of a batch-1 doc and one unrelated doc; the
+    verify input must be exactly the candidate endpoints, never the
+    batch-1 history."""
+    from dedup_spark.config import DedupConfig
+    from dedup_spark.streaming import fuzzy
+
+    seen = []
+
+    def spy(df, pairs, *args, **kwargs):
+        seen.append(
+            (
+                {r["doc_id"] for r in df.select("doc_id").collect()},
+                {v for r in pairs.collect() for v in (r["id1"], r["id2"])},
+            )
+        )
+        return real(df, pairs, *args, **kwargs)
+
+    real = fuzzy.jaccard_verify
+    monkeypatch.setattr(fuzzy, "jaccard_verify", spy)
+    toks = [f"w{i}" for i in range(60)]
+    history = [(i, " ".join(f"h{i}_{j}" for j in range(40))) for i in range(1, 9)]
+    batches = [
+        [(0, " ".join(toks))] + history,
+        [(20, " ".join(toks[:-1] + ["x"])),  # near-dup of doc 0
+         (21, "an unrelated document with words of its own")],
+    ]
+    cfg = DedupConfig(jaccard_threshold=0.9)
+    state, out = str(tmp_path / "st"), str(tmp_path / "out")
+    for rows in batches:
+        fuzzy.fuzzy_process_batch(
+            spark,
+            spark.createDataFrame(rows, "doc_id long, text string"),
+            state, out, cfg=cfg,
+        )
+    verified, endpoints = seen[-1]
+    assert endpoints == {0, 20}
+    assert verified == endpoints
+    got = {r["doc_id"]: r["cluster_id"] for r in spark.read.parquet(out).collect()}
+    assert got[20] == 0 and got[21] == 21
+
+
 def test_resolve_assignments_deep_alias_forest(spark, tmp_path):
     """A multi-level alias forest (9 -> 7 -> 4 -> 2 -> 0, 8 -> 3, plus a
     replayed duplicate alias) resolves every assignment to its tree's
