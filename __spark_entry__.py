@@ -2888,7 +2888,7 @@ def q_streaming_watermark_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         _write_replay_files(in_dir, batches)
 
         replay_ordered_files(
-            spark, in_dir, events.schema,
+            spark, [(in_dir, events.schema)],
             lambda s: dedup_within_watermark(
                 s, ["event_id"], "ts", "5 days"
             ).select(*out_cols()),
@@ -2953,7 +2953,7 @@ def q_streaming_enrich_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         _write_replay_files(in_dir, slices)
 
         replay_ordered_files(
-            spark, in_dir, events.schema,
+            spark, [(in_dir, events.schema)],
             lambda s: out_cols(
                 stream_static_enrich(s, dim, "user_id", "c_custkey")
             ),
@@ -3003,7 +3003,7 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     from dedup_spark.streaming.incremental import (
-        replay_two_ordered_streams,
+        replay_ordered_files,
         stream_interval_join,
     )
 
@@ -3028,10 +3028,12 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             ]
             _write_replay_files(f"{base}/{name}", slices)
 
-        replay_two_ordered_streams(
+        replay_ordered_files(
             spark,
-            (f"{base}/clicks", f"{base}/purchases"),
-            (clicks.schema, purchases.schema),
+            [
+                (f"{base}/clicks", clicks.schema),
+                (f"{base}/purchases", purchases.schema),
+            ],
             lambda lc, rp: out_cols(
                 stream_interval_join(
                     lc, rp, "c_user", "p_user", "c_ts", "p_ts",
@@ -3151,7 +3153,7 @@ def q_streaming_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         _write_replay_files(in_dir, batches)
 
         replay_ordered_files(
-            spark, in_dir, "user_id long, ts timestamp",
+            spark, [(in_dir, "user_id long, ts timestamp")],
             lambda s: sessionize(s, gap="12 hours", delay="1 hour"),
             out_dir, ckpt,
         )
@@ -4532,7 +4534,7 @@ def oracle_sql() -> dict[str, str]:
 
     from dedup_spark.fixtures.materialize import fixture_images_parquet
     from dedup_spark.operators.assembly import rate_threshold_hex
-    from dedup_spark.operators.suffix import gram_multipliers
+    from dedup_spark.operators.minhash import shingle_multipliers
 
     # full SQL recompute of the hashed bag-of-bigrams text embedding
     # (embed_text_udf): FNV-1a per bigram (HUGEINT wrapping multiply,
@@ -4687,9 +4689,9 @@ nr AS (SELECT doc_id, sqrt(CAST(sum(cnt*cnt) AS DOUBLE)) AS nrm
     # BLOBs, so the audio oracle reconstructs int16 samples from
     # hex(bytes) via substring + this VALUES join
     hex_byte_values = ", ".join(f"('{i:02X}', {i})" for i in range(256))
-    mults = gram_multipliers(SUBSTR_K)
+    mults = shingle_multipliers(SUBSTR_K)
     mult_values = ", ".join(
-        f"({j}, {mults[j]}::UBIGINT)" for j in range(SUBSTR_K)
+        f"({j}, {int(mults[j])}::UBIGINT)" for j in range(SUBSTR_K)
     )
     # composite quality score — one expression string shared by
     # text_stats and quality_dedup_keep (byte-identical semantics)
@@ -5678,7 +5680,7 @@ FROM s GROUP BY user_id, sid
 """,
         # full rolling-hash recompute: per (doc, position) gram = XOR of
         # multiplier-mixed bytes (HUGEINT emulates the wrapping multiply;
-        # shared constants from gram_multipliers so UDF and oracle
+        # shared constants from shingle_multipliers so UDF and oracle
         # cannot drift); fingerprint = unsigned-min gram, emitted as the
         # wrapped signed 64-bit value the UDF stores. ASCII-corpus
         # assumption (like the simhash oracle): ascii(char) = utf-8 byte

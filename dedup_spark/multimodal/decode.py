@@ -30,7 +30,7 @@ from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from dedup_spark.fixtures.images import decode_ppm, phash64
 from dedup_spark.multimodal.gif import decode_gif
@@ -351,20 +351,16 @@ def signature_clusters(sig_df: DataFrame, key: str) -> DataFrame:
     rows self-cluster.
 
     Scale shape — the exact tier's group-by-content-key plan
-    (reference src/grouping.rs): a lineage cut after the Python stage
-    (it has two consumers, so the decode must not run twice), one
-    map-side-combined groupBy on the key, and a left join back. Only
-    (id, ok, key) reach an Exchange; duplicate floods hit AQE's
-    skew-join handling like every other content-keyed group."""
+    (reference src/grouping.rs) as one window over the slim
+    (id, ok, key) rows: the Python stage has one consumer, so it runs
+    once, and only (id, ok, key) reach the Exchange. Each failed row
+    partitions on its own id, so failures never pile into one
+    null-key group; duplicate floods of a real key land in one task
+    at ~100 B a row."""
     id_col = sig_df.columns[0]
-    sig = sig_df.localCheckpoint(eager=False)
-    roots = (
-        sig.filter(F.col("ok"))
-        .groupBy(key)
-        .agg(F.min(id_col).alias("cluster_id"))
-    )
-    return sig.join(roots, on=key, how="left").select(
-        id_col, "ok", F.coalesce("cluster_id", F.col(id_col)).alias("cluster_id")
+    w = Window.partitionBy(key, F.when(~F.col("ok"), F.col(id_col)))
+    return sig_df.select(
+        id_col, "ok", F.min(id_col).over(w).alias("cluster_id")
     )
 
 

@@ -13,7 +13,9 @@ the single implementation all tiers share.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from functools import reduce
+
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def star_guarded_pairs(
@@ -41,21 +43,29 @@ def star_guarded_pairs(
     scores) must NOT be carried; join them back by id instead.
     """
     carry = carry_cols or []
-    # the bucketed input fans out to FIVE consumers below (stats, the
-    # keyed join, both self-join sides, the star center); without a
-    # checkpoint the plan upstream of it — typically an expensive
-    # signature UDF — re-executes for each one. Under AQE the call runs
-    # every shuffle below it; the fused pipeline's tiers feed it a
-    # signature projection of the input with none, so there the call
-    # starts no job and the first action materializes the (id, bucket)
-    # rows once for every consumer.
-    bucketed = bucketed.localCheckpoint(eager=False)
-    stats = (
-        bucketed.groupBy(*bucket_cols)
-        .agg(F.count(F.lit(1)).alias("_n"), F.min(id_col).alias("_minid"))
+    # every per-bucket aggregate rides on one window over the slim
+    # (bucket, id, carry) rows: the input keeps one consumer, so the
+    # plan upstream of it — typically an expensive signature UDF — runs
+    # once below the window's Exchange, which the self-join sides and
+    # the star branch share. A null bucket key is no bucket; the
+    # explicit not-null filter also keeps the branches' subtrees equal
+    # (the self-join infers the same one), or the exchange is not reused
+    w = Window.partitionBy(*bucket_cols)
+    keyed = (
+        bucketed.filter(
+            reduce(lambda a, b: a & b, [F.col(c).isNotNull() for c in bucket_cols])
+        )
+        .select(
+            *bucket_cols,
+            id_col,
+            *carry,
+            F.count(F.lit(1)).over(w).alias("_n"),
+            F.min(id_col).over(w).alias("_minid"),
+            # the star center's carried values come from its own rows
+            *[F.min_by(c, id_col).over(w).alias(f"_center_{c}") for c in carry],
+        )
         .filter(F.col("_n") >= 2)
     )
-    keyed = bucketed.join(stats, on=bucket_cols, how="inner")
 
     small = keyed.filter(F.col("_n") <= max_bucket)
     a = small.select(
@@ -74,30 +84,14 @@ def star_guarded_pairs(
         .select("id1", "id2", *[f"{c}1" for c in carry], *[f"{c}2" for c in carry])
     )
 
-    big = keyed.filter((F.col("_n") > max_bucket) & (F.col(id_col) != F.col("_minid")))
-    if carry:
-        # the star center's carried values come from its own bucket rows
-        center = (
-            bucketed.select(
-                *bucket_cols,
-                F.col(id_col).alias("_minid"),
-                *[F.col(c).alias(f"{c}1") for c in carry],
-            )
-            .dropDuplicates([*bucket_cols, "_minid"])
-        )
-        pairs_big = (
-            big.join(center, on=[*bucket_cols, "_minid"])
-            .select(
-                F.col("_minid").alias("id1"),
-                F.col(id_col).alias("id2"),
-                *[f"{c}1" for c in carry],
-                *[F.col(c).alias(f"{c}2") for c in carry],
-            )
-        )
-    else:
-        pairs_big = big.select(
-            F.col("_minid").alias("id1"), F.col(id_col).alias("id2")
-        )
+    pairs_big = keyed.filter(
+        (F.col("_n") > max_bucket) & (F.col(id_col) != F.col("_minid"))
+    ).select(
+        F.col("_minid").alias("id1"),
+        F.col(id_col).alias("id2"),
+        *[F.col(f"_center_{c}").alias(f"{c}1") for c in carry],
+        *[F.col(c).alias(f"{c}2") for c in carry],
+    )
     out = pairs_small.unionByName(pairs_big)
     if carry:
         return out.dropDuplicates(["id1", "id2"])

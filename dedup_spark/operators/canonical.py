@@ -12,7 +12,7 @@ anti-join merge so a resumed job never redoes finished rows.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 
 def with_canonical(assignments: DataFrame, id_col: str = "image_id") -> DataFrame:
@@ -22,26 +22,23 @@ def with_canonical(assignments: DataFrame, id_col: str = "image_id") -> DataFram
     shortest-path rule (src/actions.rs:21-26) with the same
     deterministic tie-break (lexicographic on equal lengths).
 
-    Uses min_by aggregation + broadcast join-back, NOT a window: a
-    window over cluster_id would shuffle+sort every row; the aggregate
-    combines map-side and the per-cluster result is one small row.
+    One window over cluster_id gives each row its cluster's canonical
+    id: the assignment table is already slim (ids and a size), and
+    clusters number about as many as rows at scale, so an aggregate
+    joined back would shuffle the same rows twice. ``cluster_id`` stays
+    the first output column.
     """
-    canon = (
-        assignments.groupBy("cluster_id")
-        .agg(
-            F.min_by(
-                F.col(id_col),
-                F.struct(
-                    F.length(F.col(id_col).cast("string")),
-                    F.col(id_col).cast("string"),
-                ),
-            ).alias("_canonical_id")
-        )
-    )
-    return (
-        assignments.join(F.broadcast(canon), on="cluster_id", how="inner")
-        .withColumn("is_canonical", F.col(id_col) == F.col("_canonical_id"))
-        .drop("_canonical_id")
+    canonical_id = F.min_by(
+        F.col(id_col),
+        F.struct(
+            F.length(F.col(id_col).cast("string")),
+            F.col(id_col).cast("string"),
+        ),
+    ).over(Window.partitionBy("cluster_id"))
+    return assignments.select(
+        "cluster_id",
+        *[c for c in assignments.columns if c != "cluster_id"],
+        (F.col(id_col) == canonical_id).alias("is_canonical"),
     )
 
 

@@ -15,23 +15,26 @@ the expensive pass, so we prune on free columns first.
 Scale design notes
 ------------------
 * **Candidate pruning via aggregate + broadcast semi-join**, not a window.
-  ``count(*) over (partition by key)`` would shuffle the full rows —
-  including the binary payload — to rank them. Instead we aggregate the
-  *projected* key columns (map-side partial aggregation handles skew for
-  free), keep keys with n>=2, and broadcast-semi-join the key set back.
-  The payload column never crosses a shuffle boundary.
-* **All aggregations are partial-aggregatable** (count / min / sum), so a
-  pathological million-row duplicate cluster combines map-side; no
-  salting needed on this path. ``collect_list`` of members is only in the
-  small-scale report helper, never the scale path — cluster membership is
-  a (id, cluster_id) assignment table instead.
+  ``count(*) over (partition by key)`` on the input would shuffle the
+  full rows — including the binary payload — to rank them. Instead we
+  aggregate the *projected* key columns (map-side partial aggregation
+  handles skew for free), keep keys with n>=2, and broadcast-semi-join
+  the key set back. The payload column never crosses a shuffle boundary.
+* **The final group is a window over the slim projection.** Once the
+  survivors are hashed, the rows are (id, len, sha) — about 100 B each —
+  and one ``partition by (len, sha)`` window gives every row its
+  group's min id and size. That is one consumer of the hash pass: no
+  lineage cut, no group aggregate joined back. A million-row duplicate
+  cluster sorts its ~100 MB of slim rows in one task; cluster
+  membership stays an (id, cluster_id) assignment table, never a
+  ``collect_list`` of members.
 * Null/unreadable payloads are dropped silently, mirroring the
   reference's filter_map skip (src/hasher.rs:57-60).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from dedup_spark.config import DEFAULT_CONFIG, DedupConfig
 
@@ -101,12 +104,8 @@ def exact_duplicate_clusters(
               nothing else computed), aggregated payload-free into the
               stage-1 surviving-key set (broadcast back).
       pass 2  stage-1 survivors only — the full-content sha in one
-              projection; the result is a slim (id, len, hash) table,
-              localCheckpointed so the group and the join both read
-              ~100 B/row instead of the payload. That cut runs the
-              stage-1 key aggregate and builds its broadcast at the
-              call (AQE executes every shuffle below a
-              ``localCheckpoint``, eager or not). The prefix-hash
+              projection; the slim (id, len, hash) rows feed the group
+              window, so the payload is read once. The prefix-hash
               grouping (H4) is *subsumed*: any full-hash group with
               n>=2 trivially has a prefix-hash group with n>=2, so a
               separate stage only saves full-hash CPU — and once the
@@ -170,36 +169,22 @@ def exact_duplicate_clusters(
     if fuse_full_hash:
         # single payload pass computing the full hash directly; the
         # prefix-hash grouping (H4) is subsumed by the final HAVING on
-        # the full hash, so no stage-2 semi-join. The payload cut: the
-        # group and the join below both read this slim table, so the
-        # payload is read once. Under AQE the call runs the stage-1 key
-        # aggregate and the semi-join's broadcast; the first action
-        # that reads the table runs the hash pass.
-        members = s1.select(
-            id_col, "_len", full.alias("_fsha")
-        ).localCheckpoint(eager=False)
+        # the full hash, so no stage-2 semi-join
+        members = s1.select(id_col, "_len", full.alias("_fsha"))
     else:
         s2 = s1.withColumn("_psha", prefix)
         s2 = semi_join_candidates(s2, size_candidates(s2, keys2), keys2)
         s3 = s2.withColumn("_fsha", full)
         members = s3.select(id_col, "_len", "_fsha")
-    groups = (
-        members.groupBy(*keys3)
-        .agg(
-            F.count(F.lit(1)).alias("n_members"),
-            F.min(id_col).alias("cluster_id"),
-        )
-        .filter(F.col("n_members") >= 2)
-    )
-    return (
-        members.join(F.broadcast(groups), on=keys3, how="inner")
-        .select(
-            F.col(id_col),
-            F.col("cluster_id"),
-            F.col("_len").alias("size"),
-            F.col("n_members"),
-        )
-    )
+    # the slim (id, len, hash) rows are the only input of the group
+    # window, so the payload is read once and never shuffled
+    w = Window.partitionBy(*keys3)
+    return members.select(
+        F.col(id_col),
+        F.min(id_col).over(w).alias("cluster_id"),
+        F.col("_len").alias("size"),
+        F.count(F.lit(1)).over(w).alias("n_members"),
+    ).filter(F.col("n_members") >= 2)
 
 
 def duplicate_stats(assignments: DataFrame) -> DataFrame:

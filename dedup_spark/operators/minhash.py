@@ -269,6 +269,25 @@ def shingle_explode_udf(cfg: DedupConfig = DEFAULT_CONFIG):
     return _sh
 
 
+def signature_bands(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    cfg: DedupConfig = DEFAULT_CONFIG,
+    out_id: str = "_id",
+) -> DataFrame:
+    """(out_id, band_idx, band_hash): one row per LSH band of each
+    non-null text. The signature UDF feeds ``posexplode`` directly,
+    which drops a null signature itself: a ``filter(isNotNull)`` on an
+    aliased UDF column is pushed below the projection and would
+    evaluate the UDF a second time."""
+    sig = minhash_signature_udf(cfg)
+    return df.select(
+        F.col(id_col).alias(out_id),
+        F.posexplode(sig(F.col(text_col))).alias("band_idx", "band_hash"),
+    )
+
+
 def band_candidates(
     df: DataFrame,
     id_col: str,
@@ -283,12 +302,7 @@ def band_candidates(
     """
     from dedup_spark.operators.banding import star_guarded_pairs
 
-    sig = minhash_signature_udf(cfg)
-    banded = (
-        df.select(F.col(id_col).alias("_id"), sig(F.col(text_col)).alias("_bands"))
-        .filter(F.col("_bands").isNotNull())
-        .select("_id", F.posexplode("_bands").alias("band_idx", "band_hash"))
-    )
+    banded = signature_bands(df, id_col, text_col, cfg)
     return star_guarded_pairs(banded, ["band_idx", "band_hash"], max_band_bucket)
 
 
@@ -306,12 +320,10 @@ def jaccard_verify(
     than the candidate endpoints prunes it first (the streaming tier
     left-semi-joins its history to them)."""
     sh = shingle_explode_udf(cfg)
-    shingled = (
-        df.select(F.col(id_col).alias("_id"), sh(F.col(text_col)).alias("_sh"))
-        # both pair sides read this, so the shingle UDF runs once. At
-        # the fused call site no shuffle sits below it, so the call
-        # starts no job; the first action that reads it shingles df.
-        .localCheckpoint(eager=False)
+    # both pair sides read the same exchange of this projection, so the
+    # shingle UDF runs once per row inside the action
+    shingled = df.select(
+        F.col(id_col).alias("_id"), sh(F.col(text_col)).alias("_sh")
     )
     s1 = shingled.select(F.col("_id").alias("id1"), F.col("_sh").alias("_sh1"))
     s2 = shingled.select(F.col("_id").alias("id2"), F.col("_sh").alias("_sh2"))

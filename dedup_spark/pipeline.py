@@ -14,22 +14,19 @@ One function, used by bench.py, jobs/dedup_job.py, the streaming
 incremental path, and the parity tests — so the measured pipeline IS
 the shipped pipeline.
 
-Building the DataFrame is not free. Under AQE a ``localCheckpoint``
-runs every shuffle below it at the call, ``eager=False`` or not, so
-the build runs the jobs of two lineage cuts:
+Building the DataFrame is not free. It holds one lineage cut:
+connected components' edge checkpoint plus its ``_sig`` count — the
+one deliberate barrier, since the local-or-star choice needs the edge
+count. Under AQE a ``localCheckpoint`` runs every shuffle below it at
+the call, ``eager=False`` or not, so that cut runs every tier's
+candidate and verify jobs while the DataFrame is built. No other step
+cuts the lineage: each per-group aggregate (the exact group's min id
+and size, a band bucket's size and star center, a cluster's canonical
+id) is a window over a slim projection, and an input read by several
+branches is shared through exchange reuse inside the action.
 
-  * the exact tier's payload cut runs the stage-1 key aggregate and
-    its broadcast semi-join;
-  * connected components' edge checkpoint plus its ``_sig`` count —
-    the one deliberate barrier, since the local-or-star choice needs
-    the edge count — runs every tier's candidate and verify jobs.
-
-The banding checkpoints of the two LSH tiers have no shuffle below
-them and start no job. So each ``metrics.stage`` wall times plan
-construction plus the jobs of the cuts inside it: ``exact_cascade``
-holds the payload cut's jobs, ``connected_components`` holds every
-tier's work, and ``caption_minhash_lsh`` / ``phash_hamming`` hold
-plan construction only.
+So each ``metrics.stage`` wall times plan construction, except
+``connected_components``, which holds every tier's work.
 """
 
 from __future__ import annotations

@@ -45,7 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from dedup_spark.config import DEFAULT_CONFIG, DedupConfig
 from dedup_spark.operators.banding import star_guarded_pairs
 from dedup_spark.operators.components import connected_components
-from dedup_spark.operators.minhash import jaccard_verify, minhash_signature_udf
+from dedup_spark.operators.minhash import jaccard_verify, signature_bands
 from dedup_spark.sources.catalog import read_or_none
 
 
@@ -91,20 +91,14 @@ def fuzzy_process_batch(
         .localCheckpoint(eager=True)
     )
 
-    sig = minhash_signature_udf(cfg)
-    banded_new = (
-        new_docs.select("doc_id", sig(F.col("text")).alias("_bands"))
-        .filter(F.col("_bands").isNotNull())
-        .select("doc_id", F.posexplode("_bands").alias("band_idx", "band_hash"))
-        .localCheckpoint(eager=True)  # consumed by 3 paths below
-    )
+    banded_new = signature_bands(
+        new_docs, "doc_id", "text", cfg, out_id="doc_id"
+    ).localCheckpoint(eager=True)  # consumed by 3 paths below
 
     # candidates: new↔new within the batch (star-guarded, like batch
     # mode) and new↔old against the band-state table
     nn = star_guarded_pairs(
-        banded_new.withColumnRenamed("doc_id", "_id"),
-        ["band_idx", "band_hash"],
-        max_band_bucket,
+        banded_new, ["band_idx", "band_hash"], max_band_bucket, id_col="doc_id"
     )
     old_bands = read_or_none(
         (lambda: spark.table(bands_table))

@@ -33,7 +33,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from dedup_spark.config import DEFAULT_CONFIG, DedupConfig
 from dedup_spark.sources.catalog import read_or_none
@@ -75,8 +75,6 @@ def process_batch(
     every trigger and never shuffling it at all; the Iceberg analog is
     a bucket(N, fsha) partition transform with storage-partitioned
     joins."""
-    hashes = _batch_hashes(batch, id_col, payload_col).localCheckpoint(eager=True)
-
     # None on the first batch; unreadable state raises
     state = read_or_none(
         (lambda: spark.table(state_table))
@@ -86,18 +84,20 @@ def process_batch(
 
     # within-batch first-seen (min id per content) — handles dups that
     # arrive together in one batch
-    batch_first = hashes.groupBy("len", "fsha").agg(
-        F.min(id_col).alias("_batch_min")
+    hashes = _batch_hashes(batch, id_col, payload_col).withColumn(
+        "_batch_min", F.min(id_col).over(Window.partitionBy("len", "fsha"))
     )
-    joined = hashes.join(batch_first, on=["len", "fsha"], how="inner")
     if state is not None:
-        joined = joined.join(state, on=["len", "fsha"], how="left")
+        joined = hashes.join(state, on=["len", "fsha"], how="left")
         assigned = joined.withColumn(
             "cluster_id", F.coalesce(F.col("cluster_id"), F.col("_batch_min"))
         )
     else:
-        assigned = joined.withColumn("cluster_id", F.col("_batch_min"))
+        assigned = hashes.withColumn("cluster_id", F.col("_batch_min"))
 
+    # both writes below read this, and the state append between them
+    # changes what ``state`` reads: the cut pins the assignment to the
+    # state as it was before the append
     out = assigned.select(id_col, "cluster_id", "len", "fsha").localCheckpoint(
         eager=True
     )
@@ -192,27 +192,29 @@ def dedup_within_watermark(
 
 def replay_ordered_files(
     spark: SparkSession,
-    in_dir: str,
-    schema: str,
+    sources: list[tuple[str, str]],
     transform,
     out_dir: str,
     checkpoint_dir: str,
     timeout_s: int = 300,
 ) -> None:
     """Drive a REAL Structured Streaming query over pre-staged parquet
-    files, one file per micro-batch (`maxFilesPerTrigger=1`, oldest
-    mtime first), drain with availableNow and block until done. This is
-    the deterministic-replay harness the driver oracle uses: batch
-    boundaries (and therefore watermark advancement) are pinned by the
-    files' mtimes, so stateful-operator output is reproducible."""
-    stream = (
+    files, one file per micro-batch and source (`maxFilesPerTrigger=1`,
+    oldest mtime first), drain with availableNow and block until done.
+    ``sources`` is a list of (dir, schema); ``transform(*streams)``
+    gets one stream per source. This is the deterministic-replay
+    harness the streaming oracle queries use: batch boundaries (and
+    therefore watermark advancement, on every side together) are pinned
+    by the files' mtimes, so stateful-operator output is reproducible."""
+    streams = [
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .format("parquet")
         .load(in_dir)
-    )
+        for in_dir, schema in sources
+    ]
     q = (
-        transform(stream)
+        transform(*streams)
         .writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
@@ -221,10 +223,11 @@ def replay_ordered_files(
         .start()
     )
     done = q.awaitTermination(timeout_s)
-    if not done:
-        q.stop()
-        raise TimeoutError(f"replay did not drain within {timeout_s}s")
+    # never return a partially-drained result (and never leak a
+    # running query into the shared session)
     q.stop()
+    if not done:
+        raise TimeoutError(f"replay did not drain within {timeout_s}s")
 
 
 def windowed_dup_rate(
@@ -278,46 +281,6 @@ def stream_interval_join(
         & (F.col(rts) <= F.col(lts) + F.expr(f"INTERVAL {upper_s} SECONDS")),
         "inner",
     )
-
-
-def replay_two_ordered_streams(
-    spark: SparkSession,
-    in_dirs: tuple[str, str],
-    schemas: tuple[str, str],
-    transform2,
-    out_dir: str,
-    checkpoint_dir: str,
-    timeout_s: int = 300,
-) -> None:
-    """Two-source sibling of replay_ordered_files: each input dir is a
-    pre-staged time-ordered file sequence, both read with
-    maxFilesPerTrigger=1 so micro-batches advance the two sides (and
-    their watermarks) together; availableNow drains to completion."""
-    streams = [
-        spark.readStream.schema(s)
-        .option("maxFilesPerTrigger", 1)
-        .format("parquet")
-        .load(d)
-        for d, s in zip(in_dirs, schemas)
-    ]
-    q = (
-        transform2(*streams)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    done = q.awaitTermination(timeout_s)
-    if not done:
-        # never return a partially-drained result (and never leak a
-        # running query into the shared session)
-        q.stop()
-        raise TimeoutError(
-            f"two-stream replay did not drain within {timeout_s}s"
-        )
-    q.stop()
 
 
 def stream_static_enrich(stream, dim, key: str, dim_key: str):

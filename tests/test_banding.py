@@ -51,6 +51,26 @@ def test_singleton_buckets_emit_nothing(spark):
     assert star_guarded_pairs(_bucketed(spark, rows), ["b"], max_bucket=4).count() == 0
 
 
+def test_null_bucket_key_emits_nothing(spark):
+    """A null bucket key is no bucket, whatever its size: 300 rows with
+    a null phash under the default guard (a star-sized null bucket in
+    every band), and a null bucket below and above a small cap, emit
+    no pair; the two real duplicates still pair."""
+    from dedup_spark.operators.simhash import hamming_candidates
+
+    df = spark.createDataFrame(
+        [(f"n{i:03d}", None) for i in range(300)] + [("a", 7), ("b", 7)],
+        "image_id string, phash long",
+    )
+    got = {(r["id1"], r["id2"]) for r in hamming_candidates(df).collect()}
+    assert got == {("a", "b")}
+
+    rows = [(f"x{i}", None, 0) for i in range(3)]
+    for cap in (2, 4):  # star-guarded and all-pairs null bucket
+        out = star_guarded_pairs(_bucketed(spark, rows), ["b"], max_bucket=cap)
+        assert out.count() == 0, cap
+
+
 def test_flood_corpus_default_guard_end_to_end(spark):
     """VERDICT r2 #7: a duplicate flood (120 identical docs, ≫ the
     default band guard of 64) through the DEFAULT-guard production

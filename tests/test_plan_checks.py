@@ -123,6 +123,8 @@ CHECKS = {
         p, "line#"
     ),
     "window_partitioned_by_bucket": _windows_partitioned_by_bucket,
+    "window_partitioned_by_cluster": lambda p: "windowspecdefinition(cluster_id"
+    in p,
 }
 
 CODEGEN_JVM = ["wholestage_codegen", "no_python_udf"]
@@ -141,8 +143,11 @@ QUERY_CHECKS = {
     "cosine_pairs": ["map_in_pandas", "grouped_pandas"],
     # the ANN axis-plane signature must be pure built-in expressions
     "ann_cosine_pairs": CODEGEN_JVM + ["broadcast_join"],
+    # canonical marking is one window over the assignment table (the
+    # exact tier's broadcast semi-join sits behind CC's edge checkpoint)
     "multimodal_dedup_pipeline": [
-        "broadcast_join", "wholestage_codegen", "no_payload_in_exchange",
+        "window_partitioned_by_cluster", "wholestage_codegen",
+        "no_payload_in_exchange",
     ],
     "ivf_topk": ["wholestage_codegen"],
     # prefix doubling stays pure JVM, group stats are two combinable aggs

@@ -57,8 +57,8 @@ STAGES = [
 
 
 def _signature_stage(spark, monkeypatch, name, fn, feed):
-    """(output of ``fn``, executed plan of its one ``image_signatures``
-    stage), after checking that stage is fed exactly ``feed``."""
+    """Output of ``fn``, after checking that its one
+    ``image_signatures`` stage is fed exactly ``feed``."""
     px = np.arange(10 * 9 * 3, dtype=np.uint8).reshape(10, 9, 3)
     # payload-heavy input with columns the stages must prune away
     df = spark.createDataFrame(
@@ -82,12 +82,12 @@ def _signature_stage(spark, monkeypatch, name, fn, feed):
     mips = [n for n in _nodes(sig_plan) if n.nodeName() == "MapInPandas"]
     assert len(mips) == 1, name
     assert _names(mips[0].children().apply(0)) == feed, name
-    return out, sig_plan
+    return out
 
 
 @pytest.mark.parametrize("name,stage", STAGES, ids=[s[0] for s in STAGES])
 def test_single_image_stage_feed(no_aqe, monkeypatch, name, stage):
-    out, _ = _signature_stage(
+    out = _signature_stage(
         no_aqe, monkeypatch, name, stage, ["image_id", "bytes", "fmt"]
     )
     plan = out._jdf.queryExecution().executedPlan()
@@ -97,15 +97,14 @@ def test_single_image_stage_feed(no_aqe, monkeypatch, name, stage):
 
 @pytest.mark.parametrize("name,tier,feed", TIERS, ids=[t[0] for t in TIERS])
 def test_signature_tier_plan_shape(no_aqe, monkeypatch, name, tier, feed):
-    out, sig_plan = _signature_stage(no_aqe, monkeypatch, name, tier, feed)
+    out = _signature_stage(no_aqe, monkeypatch, name, tier, feed)
 
-    # the clustered plan is cut at the lineage checkpoint, so the
-    # signature stage's own plan is checked too
+    # no lineage cut: the clustered plan holds the signature stage
+    # once, below the cluster window's Exchange
     out_plan = out._jdf.queryExecution().executedPlan()
-    exchanges = [
-        n for plan in (sig_plan, out_plan) for n in _nodes(plan)
-        if "Exchange" in n.nodeName()
-    ]
-    assert exchanges, name  # the groupBy must shuffle, or this is vacuous
+    nodes = list(_nodes(out_plan))
+    assert sum(n.nodeName() == "MapInPandas" for n in nodes) == 1, name
+    exchanges = [n for n in nodes if "Exchange" in n.nodeName()]
+    assert exchanges, name  # the window must shuffle, or this is vacuous
     assert not any(_has_binary(n) for n in exchanges), name
     assert _names(out_plan) == ["image_id", "ok", "cluster_id"]

@@ -103,7 +103,9 @@ def test_bucketed_state_join_is_shuffle_free_on_state_side(spark, tmp_path):
     # state: one row per distinct content
     assert spark.table(state_tbl).count() == 4
 
-    # plan proof: probe the exact join shape process_batch builds
+    # plan proof: probe the state join process_batch builds (its batch
+    # side also carries the first-seen window, whose Exchange stays on
+    # the micro-batch side)
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -167,7 +169,7 @@ def test_dedup_within_watermark_bounded_state_semantics(spark, tmp_path):
 
     out, ckpt = str(tmp_path / "wout"), str(tmp_path / "wckpt")
     replay_ordered_files(
-        spark, in_dir, schema,
+        spark, [(in_dir, schema)],
         lambda s: dedup_within_watermark(s, ["k"], "ts", "1 day"),
         out, ckpt,
     )
@@ -227,7 +229,7 @@ def test_sessionize_stateful_gap_sessions(spark, tmp_path):
 
     out, ckpt = str(tmp_path / "sess_out"), str(tmp_path / "sess_ckpt")
     replay_ordered_files(
-        spark, in_dir, schema,
+        spark, [(in_dir, schema)],
         lambda s: sessionize(s, gap="2 hours", delay="1 hour"),
         out, ckpt,
     )
@@ -293,7 +295,7 @@ def test_sessionize_out_of_order_within_watermark(spark, tmp_path):
 
     out, ckpt = str(tmp_path / "ooo_out"), str(tmp_path / "ooo_ckpt")
     replay_ordered_files(
-        spark, in_dir, schema,
+        spark, [(in_dir, schema)],
         lambda s: sessionize(s, gap="2 hours", delay="10 hours"),
         out, ckpt,
     )
@@ -563,10 +565,7 @@ def test_stream_interval_join_cross_batch_and_late_eviction(spark, tmp_path):
         bounded state is the explicit trade on an unbounded stream."""
     import os
 
-    from dedup_spark.streaming.incremental import (
-        replay_two_ordered_streams,
-        stream_interval_join,
-    )
+    from dedup_spark.streaming.incremental import stream_interval_join
 
     cs = "click_id long, c_user long, c_ts timestamp"
     ps = "purchase_id long, p_user long, p_ts timestamp"
@@ -608,8 +607,8 @@ def test_stream_interval_join_cross_batch_and_late_eviction(spark, tmp_path):
     ], ps)
 
     out, ckpt = str(tmp_path / "sjout"), str(tmp_path / "sjckpt")
-    replay_two_ordered_streams(
-        spark, (clicks, purchases), (cs, ps),
+    replay_ordered_files(
+        spark, [(clicks, cs), (purchases, ps)],
         lambda lc, rp: stream_interval_join(
             lc, rp, "c_user", "p_user", "c_ts", "p_ts",
             upper_s=3600, watermark="1 hour",
@@ -661,7 +660,7 @@ def test_stream_static_enrich_equals_batch_left_join(spark, tmp_path):
         os.utime(dst, (1700000000 + 100 * k,) * 2)
 
     replay_ordered_files(
-        spark, in_dir, events.schema,
+        spark, [(in_dir, events.schema)],
         lambda s: stream_static_enrich(s, dim, "user_id", "c_custkey")
         .select("event_id", "user_id", "c_name"),
         str(tmp_path / "out"), str(tmp_path / "ckpt"),
