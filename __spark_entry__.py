@@ -660,7 +660,7 @@ def q_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     exact = exact_jaccard_pairs(
         df, id_col="doc_id", text_col="text", threshold=JACCARD_T,
-        min_tokens=K, max_posting=None, log_drops=False,
+        min_tokens=K, max_posting=None,
     )
     lsh = minhash_near_duplicates(
         df, id_col="doc_id", text_col="text", cfg=DEFAULT_CONFIG,
@@ -2762,7 +2762,7 @@ def q_substring_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pipelines keep the default cap (4096, drops logged)."""
     return char_substring_pairs(
         _docs(spark, sf_dir), id_col="doc_id", text_col="text", k=SUBSTR_K,
-        max_posting=None, log_drops=False, winnow_w=WINNOW_W,
+        max_posting=None, winnow_w=WINNOW_W,
     )
 
 
@@ -2779,7 +2779,7 @@ def q_caption_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return char_substring_pairs(
         imgs, id_col="doc_id", text_col="text", k=SUBSTR_K,
-        max_posting=None, log_drops=False, winnow_w=WINNOW_W,
+        max_posting=None, winnow_w=WINNOW_W,
     )
 
 
@@ -4313,7 +4313,7 @@ def q_deterministic_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     position of every doc in the md5(seed||id)-keyed shuffle, assigned
     by two-pass bucketed ranking — 256 parallel window sorts plus a
     256-row offset broadcast, never a single-partition window. NOTE:
-    like the log_drops/n_blocks builders, construction runs one small
+    like the capped posting-index and n_blocks builders, construction runs one small
     Spark action (the 256-row bucket-count collect)."""
     from dedup_spark.operators.ordering import global_shuffle_index
 

@@ -52,6 +52,10 @@ def nfc_clusters(
     32-char key, never the text itself, in the exchange) + a join
     back."""
     nfc = nfc_normalize_udf()
+    # the cut stays: the UDF column is read by two expressions (the key
+    # and ``changed``) and the key by two consumers (the roots
+    # aggregate and the join back); without the cut the plan holds two
+    # ``_nfc`` evaluations (tests/test_udf_once.py)
     normed = df.select(
         F.col(id_col),
         F.col(text_col),

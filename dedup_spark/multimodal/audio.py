@@ -42,7 +42,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from dedup_spark.fixtures.av import AUDIO_WINDOW
 
@@ -98,18 +98,15 @@ def audio_fingerprint_clusters(
     """Full assignment table: (audio_id, n_windows, fingerprint,
     cluster_id, n_members), cluster = min id per (n_windows,
     fingerprint) group, singletons self-clustered."""
-    fps = audio_fingerprints(df, window=window, id_col=id_col)
-    fps = fps.localCheckpoint(eager=False)  # UDF output feeds two sides
-    groups = fps.groupBy("n_windows", "fingerprint").agg(
-        F.min(id_col).alias("cluster_id"),
-        F.count("*").alias("n_members"),
-    )
-    return fps.join(groups, on=["n_windows", "fingerprint"]).select(
+    # one window attaches both per-group values: the fingerprint pass
+    # (a mapInPandas) has this one consumer, so it runs once
+    w = Window.partitionBy("n_windows", "fingerprint")
+    return audio_fingerprints(df, window=window, id_col=id_col).select(
         id_col,
         "n_windows",
         "fingerprint",
-        "cluster_id",
-        "n_members",
+        F.min(id_col).over(w).alias("cluster_id"),
+        F.count(F.lit(1)).over(w).alias("n_members"),
     )
 
 

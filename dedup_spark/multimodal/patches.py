@@ -21,8 +21,9 @@ the fixture pins the limitation with a deliberately misaligned class
 instead of pretending otherwise.
 
 Scale shape: one Arrow mapInPandas projection (payload consumed
-there), a (sha, id) shuffle, count-capped self-join, count aggregate
-— the exact shape of the caption shingle tier (suffix.py)."""
+there), a (sha, id) shuffle, then `banding.shared_key_pairs` — the
+capped inverted-index self-join and count aggregate that the caption
+shingle tier (suffix.py) and the video tiers share."""
 
 from __future__ import annotations
 
@@ -32,7 +33,7 @@ import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from dedup_spark.multimodal.decode import image_signatures
-from dedup_spark.plans.lineage import count_and_log_drops
+from dedup_spark.operators.banding import shared_key_pairs
 
 
 def patch_signatures(
@@ -76,34 +77,16 @@ def shared_patch_pairs(
     patch: int = 8,
     max_posting: int = 256,
     id_col: str = "image_id",
-    log_drops: bool = True,
 ) -> DataFrame:
     """(id1, id2, n_shared) for image pairs sharing >= 1 non-flat
     aligned patch; n_shared counts DISTINCT shared patch signatures.
     Patch signatures carried by more than ``max_posting`` images are
     dropped (template guard) with the drop count logged."""
-    # lineage cut: the plan references sig 3-4 times (counts, keep,
-    # both self-join sides) — without it the Arrow decode+sha pass
-    # over every image re-executes per reference (the thumbprint/
-    # dhash/rotinv tiers guard the same way)
-    sig = patch_signatures(df, patch=patch, id_col=id_col).select(
-        id_col, "patch_sha"
-    ).distinct().localCheckpoint(eager=False)
-    counts = sig.groupBy("patch_sha").agg(
-        F.count(F.lit(1)).alias("_n")
+    sig = (
+        patch_signatures(df, patch=patch, id_col=id_col)
+        .select(id_col, "patch_sha")
+        .distinct()
     )
-    if log_drops:
-        count_and_log_drops(counts, max_posting, "shared_patch_pairs")
-    keep = counts.filter(
-        (F.col("_n") >= 2) & (F.col("_n") <= max_posting)
-    ).select("patch_sha")
-    s = sig.join(keep, "patch_sha")
-    a = s.select(F.col("patch_sha"), F.col(id_col).alias("id1"))
-    b = s.select(F.col("patch_sha"), F.col(id_col).alias("id2"))
-    return (
-        a.join(b, "patch_sha")
-        .filter(F.col("id1") < F.col("id2"))
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("n_shared"))
-        .select("id1", "id2", F.col("n_shared").cast("long").alias("n_shared"))
-    )
+    return shared_key_pairs(
+        sig, "patch_sha", max_posting, "shared_patch_pairs", id_col=id_col
+    ).select("id1", "id2", "n_shared")

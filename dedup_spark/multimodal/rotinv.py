@@ -30,7 +30,7 @@ from dedup_spark.multimodal.decode import (
     image_signatures,
     signature_clusters,
 )
-from dedup_spark.plans.lineage import count_and_log_drops
+from dedup_spark.operators.banding import shared_key_pairs
 
 
 def multiset_signature(px: np.ndarray) -> str:
@@ -96,7 +96,6 @@ def verified_rotation_pairs(
     id_col: str = "image_id",
     bytes_col: str = "bytes",
     fmt_col: str = "fmt",
-    log_drops: bool = True,
 ) -> DataFrame:
     """The candidate → VERIFY discipline applied to the multiset tier:
     images sharing a multiset signature are only CANDIDATE rotations;
@@ -110,28 +109,17 @@ def verified_rotation_pairs(
     (a vanishing fraction of the corpus; buckets above ``max_bucket``
     are dropped with a logged count, the posting-cap discipline), and
     each pair ships exactly two payloads to one task. Everything
-    before it is the usual sha-keyed aggregate."""
+    before it is `banding.shared_key_pairs` over the signature."""
     sig = (
         image_signatures(
             df, multiset_signature, "string", "ms_sha", id_col, bytes_col, fmt_col
         )
         .filter(F.col("ok"))
         .select(id_col, "ms_sha")
-        .localCheckpoint(eager=False)
     )
-    counts = sig.groupBy("ms_sha").agg(F.count(F.lit(1)).alias("_n"))
-    if log_drops:
-        count_and_log_drops(counts, max_bucket, "verified_rotation_pairs")
-    keep = counts.filter(
-        (F.col("_n") >= 2) & (F.col("_n") <= max_bucket)
-    ).select("ms_sha")
-    s = sig.join(keep, "ms_sha")
-    pairs = (
-        s.select("ms_sha", F.col(id_col).alias("id1"))
-        .join(s.select("ms_sha", F.col(id_col).alias("id2")), "ms_sha")
-        .filter(F.col("id1") < F.col("id2"))
-        .select("id1", "id2")
-    )
+    pairs = shared_key_pairs(
+        sig, "ms_sha", max_bucket, "verified_rotation_pairs", id_col=id_col
+    ).select("id1", "id2")
     payload = df.select(
         F.col(id_col), F.col(bytes_col).alias("_b"), F.col(fmt_col).alias("_f")
     )

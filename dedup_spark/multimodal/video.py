@@ -27,10 +27,10 @@ not a bug.
 
 Scale shape: signatures shuffle as (sig, video_id) — O(n_frames/N)
 rows, never payload bytes (the substring is evaluated in the scan
-stage, column-pruned to one projection); the pair generator is the
-same inverted-index + posting-cap pattern as the shingle tiers, so a
-viral frame (one sig in millions of videos) degrades to a logged cap,
-not an O(n²) bucket explosion.
+stage, column-pruned to one projection); the pair generator is
+`banding.shared_key_pairs`, the capped inverted index the shingle
+tiers share, so a viral frame (one sig in millions of videos) degrades
+to a logged cap, not an O(n²) bucket explosion.
 
 Reference parity note: the reference CLI has no video tier — this is
 part of the [EXT] multimodal surface (SURVEY.md §2.3) generalizing its
@@ -47,6 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from dedup_spark.fixtures.av import RAWV_HEADER, RAWV_MAGIC
+from dedup_spark.operators.banding import shared_key_pairs
 
 FRAMES_SCHEMA = (
     "video_id string, frame_idx int, frame_bytes binary, w int, h int"
@@ -147,39 +148,24 @@ def signature_set_pairs(
     index + set-Jaccard pair stage of every frame-signature tier (rawv
     and MJPEG-AVI alike). Jaccard runs on DISTINCT sigs per id and the
     filter uses the ROUNDED value (6 places) for oracle float parity;
-    ``max_posting`` caps viral sigs (None = exact-gate variant)."""
-    sigs = sigs.select(id_col, "sig").distinct()
-    # one re-use point (sizes + self-join) → cut the lineage once
-    sigs = sigs.localCheckpoint(eager=False)
-    sizes = sigs.groupBy(id_col).agg(F.count("*").alias("n_sigs"))
-    postings = sigs
-    if max_posting is not None:
-        counts = sigs.groupBy("sig").agg(F.count("*").alias("n_post"))
-        postings = sigs.join(
-            F.broadcast(counts.filter(F.col("n_post") > max_posting)),
-            on="sig",
-            how="left_anti",
-        )
-    a = postings.select(F.col(id_col).alias("id1"), "sig")
-    b = postings.select(F.col(id_col).alias("id2"), "sig")
-    inter = (
-        a.join(b, on="sig")
-        .filter(F.col("id1") < F.col("id2"))
-        .groupBy("id1", "id2")
-        .agg(F.count("*").alias("n_inter"))
+    ``max_posting`` caps viral sigs, drops logged (None = exact-gate
+    variant)."""
+    # one shuffle by id yields each id's distinct sig set and its size,
+    # which rides into the pair join as a carry column
+    sets = sigs.groupBy(id_col).agg(F.collect_set("sig").alias("_sigs"))
+    rows = sets.select(
+        id_col, F.size("_sigs").alias("n_sigs"), F.explode("_sigs").alias("sig")
     )
-    s1 = sizes.select(F.col(id_col).alias("id1"), F.col("n_sigs").alias("n1"))
-    s2 = sizes.select(F.col(id_col).alias("id2"), F.col("n_sigs").alias("n2"))
+    pairs = shared_key_pairs(
+        rows, "sig", max_posting, "signature_set_pairs",
+        id_col=id_col, carry_cols=["n_sigs"],
+    )
     jac = F.round(
-        F.col("n_inter")
-        / (F.col("n1") + F.col("n2") - F.col("n_inter")),
+        F.col("n_shared") / (F.col("n_sigs1") + F.col("n_sigs2") - F.col("n_shared")),
         6,
     )
-    return (
-        inter.join(s1, on="id1")
-        .join(s2, on="id2")
-        .select("id1", "id2", jac.alias("jaccard"))
-        .filter(F.col("jaccard") >= threshold)
+    return pairs.select("id1", "id2", jac.alias("jaccard")).filter(
+        F.col("jaccard") >= threshold
     )
 
 

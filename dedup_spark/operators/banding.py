@@ -9,6 +9,11 @@ buckets larger than ``max_bucket`` emit an O(n) STAR to the bucket's
 min id instead (connected components restores the full cluster, and a
 downstream verify join re-checks every edge it keeps). This module is
 the single implementation all tiers share.
+
+The inverted-index tiers (shingle overlap, frame-signature sets, shared
+patches, rotation candidates) need the shared-key COUNT per pair, so a
+star cannot stand in for a flood there: ``shared_key_pairs`` drops the
+flooded key instead, and logs how many it dropped.
 """
 
 from __future__ import annotations
@@ -16,6 +21,8 @@ from __future__ import annotations
 from functools import reduce
 
 from pyspark.sql import DataFrame, Window, functions as F
+
+from dedup_spark.plans.lineage import count_and_log_drops
 
 
 def star_guarded_pairs(
@@ -96,3 +103,55 @@ def star_guarded_pairs(
     if carry:
         return out.dropDuplicates(["id1", "id2"])
     return out.distinct()
+
+
+def shared_key_pairs(
+    rows: DataFrame,
+    key_col: str,
+    max_posting: int | None,
+    what: str,
+    id_col: str = "_id",
+    carry_cols: list[str] | None = None,
+) -> DataFrame:
+    """(id1, id2, n_shared, <carry>1, <carry>2), id1 < id2: every pair
+    of ids sharing a key, and how many keys they share.
+
+    ``rows`` holds one row per distinct (key, id); ``carry_cols`` keep
+    the `star_guarded_pairs` contract. A key held by more than
+    ``max_posting`` ids (None = uncapped) is dropped, the posting-list
+    cutoff of IR systems, and the dropped keys are counted and logged
+    as ``what``. The posting count is a window over the slim rows, so
+    both self-join sides read its Exchange; a capped call cuts the
+    lineage once, on the windowed rows that the drop count (a
+    build-time job) and the pair join both read."""
+    carry = carry_cols or []
+    # a null key is no key: dropped before the count, so it is never
+    # logged as a flood
+    keyed = rows.filter(F.col(key_col).isNotNull()).select(
+        key_col,
+        id_col,
+        *carry,
+        F.count(F.lit(1)).over(Window.partitionBy(key_col)).alias("_n"),
+    ).filter(F.col("_n") >= 2)
+    if max_posting is not None:
+        keyed = keyed.localCheckpoint(eager=False)
+        count_and_log_drops(
+            keyed.filter(F.col("_n") > max_posting).select(key_col, "_n").distinct(),
+            max_posting,
+            what,
+        )
+        keyed = keyed.filter(F.col("_n") <= max_posting)
+    a = keyed.select(
+        key_col, F.col(id_col).alias("id1"), *[F.col(c).alias(f"{c}1") for c in carry]
+    )
+    b = keyed.select(
+        key_col, F.col(id_col).alias("id2"), *[F.col(c).alias(f"{c}2") for c in carry]
+    )
+    ends = ["id1", "id2", *[f"{c}1" for c in carry], *[f"{c}2" for c in carry]]
+    return (
+        a.join(b, on=key_col)
+        .filter(F.col("id1") < F.col("id2"))
+        .groupBy(*ends)
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .select("id1", "id2", "n_shared", *ends[2:])
+    )

@@ -10,12 +10,13 @@ Two cooperating paths:
 1. `containment_pairs` (scale path, exact semantics for k-shingle
    containment): containment score C(A,B) = |S_A ∩ S_B| / |S_A| over
    word-k-gram shingle sets. A true substring has C = 1.0 (every shingle
-   of A appears in B). Implemented as an inverted-index join:
-   explode distinct shingles → for each shingle pair up docs sharing it
-   (rare-shingle pruned) → count shared shingles per pair → divide by
-   the smaller doc's shingle count. All built-in ops after the shingle
-   UDF; the common-shingle cap bounds fan-out exactly like a posting
-   list cutoff in IR systems.
+   of A appears in B). Implemented as an inverted-index join, the
+   capped shared-key join of `banding.shared_key_pairs`: explode
+   distinct shingles → for each shingle pair up docs sharing it →
+   count shared shingles per pair → divide by the smaller doc's
+   shingle count. All built-in ops after the shingle UDF; the
+   common-shingle cap bounds fan-out exactly like a posting list
+   cutoff in IR systems.
 
 2. `char_substring_pairs` (exact character-level substring, GLOBAL
    recall): the min-gram anchor algorithm. Every doc contributes all
@@ -41,34 +42,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from dedup_spark.config import DEFAULT_CONFIG, DedupConfig
+from dedup_spark.operators.banding import shared_key_pairs
 from dedup_spark.operators.minhash import shingle_explode_udf, shingle_multipliers
 from dedup_spark.plans.lineage import count_and_log_drops
-
-
-def _capped_shared_keys(
-    posts: DataFrame, max_posting: int | None, log_drops: bool, what: str
-) -> DataFrame:
-    """Shared-shingle key set, capped at max_posting with LOGGED drops.
-
-    The stats aggregate is localCheckpointed: it is the broadcast-able
-    small side by construction (shared keys only), and the shingle
-    pass behind it runs once for both the drop count and the
-    semi-join. The cut is not lazy: under AQE the call runs the
-    aggregate's shuffle, and with it the shingle pass, at build time.
-    ``log_drops=True`` adds the jobs of the drop count, which
-    materializes the aggregate at build time too (the shipped queries
-    accept this because the checkpoint is then reused)."""
-    counts = (
-        posts.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter(F.col("_n") >= 2)
-        .localCheckpoint(eager=False)
-    )
-    if max_posting is not None:
-        if log_drops:
-            count_and_log_drops(counts, max_posting, what)
-        counts = counts.filter(F.col("_n") <= max_posting)
-    return counts.select("shingle")
 
 
 def _shingle_overlaps(
@@ -77,41 +53,27 @@ def _shingle_overlaps(
     text_col: str,
     cfg: DedupConfig,
     max_posting: int | None,
-    log_drops: bool,
     what: str,
 ) -> DataFrame:
-    """(id1, id2, _shared, _sz1, _sz2), id1 < id2: the shingle-set
-    overlap of every doc pair sharing a shingle, through an inverted
-    index capped at ``max_posting`` (drops logged as ``what``)."""
-    sh = shingle_explode_udf(cfg)
-    # checkpoint: the shingle UDF pass feeds THREE consumers (sizes,
-    # the posting counts, the pair self-join) — without it the UDF
-    # re-executes per consumer, which was the round-2 cpu regression
-    # on this operator (VERDICT r2 'next round' #8). The call starts
-    # no job unless ``df``'s own plan holds a shuffle (AQE runs every
-    # shuffle below a localCheckpoint at the call). The null filter
-    # sits above the cut: below it, it would be pushed under the
-    # projection and evaluate the UDF a second time
-    shingled = (
-        df.select(F.col(id_col).alias("_id"), sh(F.col(text_col)).alias("_sh"))
-        .localCheckpoint(eager=False)
-        .filter(F.col("_sh").isNotNull())
+    """(id1, id2, n_shared, _sz1, _sz2), id1 < id2: the shingle-set
+    overlap of every doc pair sharing a shingle, through the capped
+    inverted index of `banding.shared_key_pairs` (drops logged as
+    ``what``). The set size rides along as a carry column, so no size
+    aggregate is joined back."""
+    sh = shingle_explode_udf(cfg)(F.col(text_col))
+    # both reads of the UDF column sit in the one generator, where it
+    # is evaluated once and a null drops the row. An explode of the
+    # aliased column would get an inferred not-null filter, pushed
+    # below the projection, that evaluates the UDF a second time
+    posts = df.select(
+        F.col(id_col).alias("_id"),
+        F.inline(
+            F.arrays_zip(
+                sh.alias("shingle"), F.array_repeat(F.size(sh), F.size(sh)).alias("_sz")
+            )
+        ),
     )
-    sizes = shingled.select("_id", F.size("_sh").alias("_sz"))
-    posts = shingled.select("_id", F.explode("_sh").alias("shingle"))
-    shared_keys = _capped_shared_keys(posts, max_posting, log_drops, what)
-    posts = posts.join(shared_keys, on="shingle", how="left_semi")
-    p1 = posts.select("shingle", F.col("_id").alias("id1"))
-    p2 = posts.select("shingle", F.col("_id").alias("id2"))
-    shared = (
-        p1.join(p2, on="shingle")
-        .filter(F.col("id1") < F.col("id2"))
-        .groupBy("id1", "id2")
-        .agg(F.count(F.lit(1)).alias("_shared"))
-    )
-    z1 = sizes.select(F.col("_id").alias("id1"), F.col("_sz").alias("_sz1"))
-    z2 = sizes.select(F.col("_id").alias("id2"), F.col("_sz").alias("_sz2"))
-    return shared.join(z1, "id1").join(z2, "id2")
+    return shared_key_pairs(posts, "shingle", max_posting, what, carry_cols=["_sz"])
 
 
 def containment_pairs(
@@ -121,7 +83,6 @@ def containment_pairs(
     cfg: DedupConfig = DEFAULT_CONFIG,
     threshold: float = 1.0,
     max_posting: int | None = 512,
-    log_drops: bool = True,
 ) -> DataFrame:
     """(id1, id2, containment) where containment = |S1∩S2| / min(|S1|,|S2|)
     >= threshold. id1 < id2; the contained (smaller) doc can be either.
@@ -132,12 +93,8 @@ def containment_pairs(
     sparse join and a quadratic blowup. The cap is ON by default.
     """
     return (
-        _shingle_overlaps(
-            df, id_col, text_col, cfg, max_posting, log_drops, "containment_pairs"
-        )
-        .withColumn(
-            "containment", F.col("_shared") / F.least("_sz1", "_sz2")
-        )
+        _shingle_overlaps(df, id_col, text_col, cfg, max_posting, "containment_pairs")
+        .withColumn("containment", F.col("n_shared") / F.least("_sz1", "_sz2"))
         .filter(F.col("containment") >= threshold)
         .select("id1", "id2", "containment")
     )
@@ -151,7 +108,6 @@ def exact_jaccard_pairs(
     threshold: float | None = None,
     max_posting: int | None = 512,
     min_tokens: int | None = None,
-    log_drops: bool = True,
 ) -> DataFrame:
     """Exact shingle-Jaccard pairs via the same inverted-index join as
     `containment_pairs` — the deterministic ground-truth path that the
@@ -176,12 +132,10 @@ def exact_jaccard_pairs(
             F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")) >= min_tokens
         )
     return (
-        _shingle_overlaps(
-            base, id_col, text_col, cfg, max_posting, log_drops, "exact_jaccard_pairs"
-        )
+        _shingle_overlaps(base, id_col, text_col, cfg, max_posting, "exact_jaccard_pairs")
         .withColumn(
             "jaccard",
-            F.col("_shared") / (F.col("_sz1") + F.col("_sz2") - F.col("_shared")),
+            F.col("n_shared") / (F.col("_sz1") + F.col("_sz2") - F.col("n_shared")),
         )
         .filter(F.col("jaccard") >= threshold)
         .select("id1", "id2", "jaccard")
@@ -286,7 +240,6 @@ def char_substring_pairs(
     text_col: str = "caption",
     k: int = 24,
     max_posting: int | None = 4096,
-    log_drops: bool = True,
     winnow_w: int = 1,
 ) -> DataFrame:
     """Exact character-level substring pairs with GLOBAL recall.
@@ -332,8 +285,8 @@ def char_substring_pairs(
         .select("_id", "_blen", grams(F.col("_t")).alias("_g"))
         # one UDF pass feeds both branches. The call starts no job
         # unless ``df``'s own plan holds a shuffle (AQE runs every
-        # shuffle below a localCheckpoint at the call); log_drops
-        # adds the build-time drop count. The null filter sits above
+        # shuffle below a localCheckpoint at the call); a cap adds
+        # the build-time drop count. The null filter sits above
         # the cut: below it, it would be pushed under the projection
         # and evaluate the UDF a second time
         .localCheckpoint(eager=False)
@@ -345,8 +298,7 @@ def char_substring_pairs(
         # the uncapped quadratic substring self-join, so the engine side
         # must not cap either — corpus-independent parity, ADVICE r2)
         counts = posts.groupBy("gram").agg(F.count(F.lit(1)).alias("_n"))
-        if log_drops:
-            count_and_log_drops(counts, max_posting, "char_substring_pairs")
+        count_and_log_drops(counts, max_posting, "char_substring_pairs")
         ok = counts.filter(F.col("_n") <= max_posting).select("gram")
         posts = posts.join(ok, on="gram", how="left_semi")
     anchors = g.filter(F.col("_blen") >= min_len).select(

@@ -82,6 +82,9 @@ def fuzzy_process_batch(
     bands_dir, docs_dir = f"{state_dir}/bands", f"{state_dir}/docs"
     alias_dir = f"{state_dir}/alias"
 
+    # read by every write below: the assignment append (its ids and,
+    # through the verify corpus, CC's edges), the alias append and the
+    # docs-state append; the cut reads the batch's source once
     new_docs = (
         batch.select(
             F.col(id_col).cast("long").alias("doc_id"),
@@ -91,9 +94,12 @@ def fuzzy_process_batch(
         .localCheckpoint(eager=True)
     )
 
+    # the signature UDF's output, read by both candidate joins (so by
+    # the assignment and alias appends, through CC's edges) and by the
+    # bands-state append; the cut runs the UDF once per batch row
     banded_new = signature_bands(
         new_docs, "doc_id", "text", cfg, out_id="doc_id"
-    ).localCheckpoint(eager=True)  # consumed by 3 paths below
+    ).localCheckpoint(eager=True)
 
     # candidates: new↔new within the batch (star-guarded, like batch
     # mode) and new↔old against the band-state table
@@ -159,7 +165,10 @@ def fuzzy_process_batch(
         ).select(
             "id1", F.coalesce("_oc", "id2").alias("id2")
         )
-    cc = connected_components(edges.localCheckpoint(eager=True))
+    # connected_components cuts and counts its canonical edges at the
+    # call, before the appends below change the state the edges read,
+    # so they need no cut of their own
+    cc = connected_components(edges)
 
     # assignments for every new doc (matched → component label,
     # singleton → own id); idempotent append

@@ -82,9 +82,16 @@ def process_batch(
         else (lambda: spark.read.parquet(state_dir))
     )
 
+    hashes = _batch_hashes(batch, id_col, payload_col)
+    if state_table is not None:
+        # hashed into the state's buckets up front, the batch side is
+        # shuffled once for both the window and the bucketed state
+        # join; the window's own Exchange would use the session's
+        # shuffle partitions and the join would shuffle it again
+        hashes = hashes.repartition(n_buckets, "len", "fsha")
     # within-batch first-seen (min id per content) — handles dups that
     # arrive together in one batch
-    hashes = _batch_hashes(batch, id_col, payload_col).withColumn(
+    hashes = hashes.withColumn(
         "_batch_min", F.min(id_col).over(Window.partitionBy("len", "fsha"))
     )
     if state is not None:

@@ -1,12 +1,24 @@
-"""Direct unit tests for the shared star-guarded pair generator —
-the one skew-kill primitive all four LSH-family tiers ride on."""
+"""Direct unit tests for the shared pair generators: the star-guarded
+one all four LSH-family tiers ride on, and the capped shared-key one
+of the four inverted-index tiers."""
 
 from __future__ import annotations
 
+import logging
+
+import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
-from dedup_spark.operators.banding import star_guarded_pairs
+from dedup_spark.config import DEFAULT_CONFIG
+from dedup_spark.fixtures.av import encode_rawv
+from dedup_spark.fixtures.images import encode_ppm
+from dedup_spark.multimodal.patches import shared_patch_pairs
+from dedup_spark.multimodal.rotinv import verified_rotation_pairs
+from dedup_spark.multimodal.video import video_near_duplicates
+from dedup_spark.operators.banding import shared_key_pairs, star_guarded_pairs
+from dedup_spark.operators.suffix import containment_pairs
 
 
 def _bucketed(spark, rows):
@@ -103,3 +115,70 @@ def test_flood_corpus_default_guard_end_to_end(spark):
     assert clusters[200] == 0 and clusters[201] == 0
     for i in range(300, 305):
         assert i not in clusters or clusters[i] != 0
+
+
+def test_shared_key_pairs_counts_keys_and_caps_inclusively(spark):
+    # a and b share keys 1 and 2; key 3 is held by 3 ids (> cap 2)
+    rows = [(1, "a", 10), (1, "b", 20), (2, "a", 10), (2, "b", 20),
+            (3, "a", 10), (3, "c", 30), (3, "d", 40), (4, "e", 50)]
+    df = spark.createDataFrame(rows, "k int, _id string, sz int")
+    capped = shared_key_pairs(df, "k", 2, "test", carry_cols=["sz"]).collect()
+    assert [tuple(r) for r in capped] == [("a", "b", 2, 10, 20)]
+    full = {
+        (r["id1"], r["id2"]): r["n_shared"]
+        for r in shared_key_pairs(df, "k", None, "test").collect()
+    }
+    assert full == {("a", "b"): 2, ("a", "c"): 1, ("a", "d"): 1, ("c", "d"): 1}
+
+
+def _flood_docs(spark):
+    # exactly one shingle, held by all three docs
+    text = " ".join(f"w{i}" for i in range(DEFAULT_CONFIG.shingle_k))
+    return spark.createDataFrame(
+        [(i, text) for i in range(3)], "doc_id long, text string"
+    )
+
+
+def _flood_images(spark):
+    # one non-flat 8x8 patch and one pixel multiset, held by three images
+    px = np.random.default_rng(0).integers(0, 256, (8, 8, 3), dtype=np.uint8)
+    return spark.createDataFrame(
+        [(f"i{k}", encode_ppm(px), "ppm") for k in range(3)],
+        "image_id string, bytes binary, fmt string",
+    )
+
+
+def _flood_videos(spark):
+    # one frame signature, held by three videos
+    frames = np.random.default_rng(1).integers(0, 256, (1, 2, 2, 3), dtype=np.uint8)
+    return spark.createDataFrame(
+        [(f"v{k}", encode_rawv(frames), 2, 2, 1) for k in range(3)],
+        "video_id string, bytes binary, w int, h int, n_frames int",
+    )
+
+
+FLOODED = {
+    "containment_pairs": lambda s: containment_pairs(
+        _flood_docs(s), "doc_id", "text", max_posting=2
+    ),
+    "signature_set_pairs": lambda s: video_near_duplicates(
+        _flood_videos(s), every_n=1, max_posting=2
+    ),
+    "shared_patch_pairs": lambda s: shared_patch_pairs(
+        _flood_images(s), max_posting=2
+    ),
+    "verified_rotation_pairs": lambda s: verified_rotation_pairs(
+        _flood_images(s), max_bucket=2
+    ),
+}
+
+
+@pytest.mark.parametrize("tier", list(FLOODED))
+def test_capped_tier_logs_its_flooded_key(spark, caplog, tier):
+    """No silent cap: a key held by 3 ids over a cap of 2 pairs nothing,
+    and the one dropped key is logged under the tier's name."""
+    with caplog.at_level(logging.WARNING, logger="dedup_spark.plans.lineage"):
+        out = FLOODED[tier](spark)
+    assert out.count() == 0
+    logged = [r.getMessage() for r in caplog.records]
+    assert any(m.startswith(f"{tier}: dropped 1 posting keys") for m in logged), logged

@@ -68,7 +68,7 @@ def test_template_posting_cap(spark):
     import pandas as pd
     pdf = pd.DataFrame(rows, columns=["image_id", "logo", "bytes", "w", "h", "fmt", "klass"])
     df = _df(spark, pdf).drop("logo", "klass")
-    capped = shared_patch_pairs(df, max_posting=4, log_drops=False).collect()
+    capped = shared_patch_pairs(df, max_posting=4).collect()
     assert capped == []  # 5 carriers > cap 4: template, dropped
-    full = shared_patch_pairs(df, max_posting=256, log_drops=False).collect()
+    full = shared_patch_pairs(df, max_posting=256).collect()
     assert len(full) == 10  # C(5,2)

@@ -99,9 +99,9 @@ def test_flood_bucket_guard(spark):
     base = _smooth_image(b"flood", 8, 8)
     rows = [(f"i{k}", encode_ppm(base), "ppm") for k in range(5)]
     df = spark.createDataFrame(rows, "image_id string, bytes binary, fmt string")
-    capped = verified_rotation_pairs(df, max_bucket=4, log_drops=False).collect()
+    capped = verified_rotation_pairs(df, max_bucket=4).collect()
     assert capped == []
-    full = verified_rotation_pairs(df, max_bucket=64, log_drops=False).collect()
+    full = verified_rotation_pairs(df, max_bucket=64).collect()
     assert len(full) == 10 and all(r["verified"] for r in full)
     assert all(r["transform"] == "r000" for r in full)  # byte-identical
 

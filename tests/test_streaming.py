@@ -127,6 +127,47 @@ def test_bucketed_state_join_is_shuffle_free_on_state_side(spark, tmp_path):
         spark.sql(f"DROP TABLE IF EXISTS {state_tbl}")
 
 
+def test_bucketed_state_batch_side_shuffles_once(no_aqe, monkeypatch, tmp_path):
+    """With 16 state buckets and 4 shuffle partitions, the plan
+    process_batch checkpoints (first-seen window + bucketed state join)
+    shuffles the micro-batch once, into the state's 16 buckets. Hashed
+    by the window alone, the batch was shuffled to 4 partitions and
+    then again to 16 for the join."""
+    spark = no_aqe
+    state_tbl = "inc_state_bkt16_t"
+    out = str(tmp_path / "out16")
+    spark.sql(f"DROP TABLE IF EXISTS {state_tbl}")
+    assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    plans = []
+    frame = type(spark.range(1))
+    real = frame.localCheckpoint
+
+    def spy(self, eager=True):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real(self, eager)
+
+    monkeypatch.setattr(frame, "localCheckpoint", spy)
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        for batch_rows in ([_row("a1", _px(1))], [_row("a2", _px(1))]):
+            process_batch(
+                spark, _mkdf(spark, batch_rows), "", out,
+                state_table=state_tbl, n_buckets=16,
+            )
+        # one cut a batch; the second batch's plan holds the state join
+        assert len(plans) == 2
+        plan = plans[1]
+        assert "SortMergeJoin" in plan and "Bucketed: true" in plan
+        assert plan.count("Exchange") == 1, plan
+        assert "hashpartitioning(len#" in plan and ", 16)" in plan, plan
+        got = {r["image_id"]: r["cluster_id"] for r in spark.read.parquet(out).collect()}
+        assert got == {"a1": "a1", "a2": "a1"}
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        spark.sql(f"DROP TABLE IF EXISTS {state_tbl}")
+
+
 def test_dedup_within_watermark_bounded_state_semantics(spark, tmp_path):
     """The native stateful dedup's full contract, batch by batch:
     (1) a duplicate key within the same micro-batch is dropped;

@@ -1,5 +1,6 @@
 """Each pandas UDF runs once per row: no executed plan of a UDF-fed
-operator holds the same Python UDF in two eval nodes.
+operator holds the same Python UDF in two eval nodes, nor the same
+``mapInPandas`` function in two ``MapInPandas`` nodes.
 
 A ``filter(isNotNull)`` on an aliased UDF column is pushed below its
 projection, and a ``posexplode`` of an aliased UDF column gets an
@@ -16,6 +17,12 @@ from collections import Counter
 import pytest
 
 from dedup_spark.fixtures.images import generate_corpus, to_spark
+from dedup_spark.fixtures.materialize import fixture_avi_parquet
+from dedup_spark.functions.unicode import nfc_clusters
+from dedup_spark.multimodal.avi import avi_frame_signatures
+from dedup_spark.multimodal.patches import shared_patch_pairs
+from dedup_spark.multimodal.rotinv import verified_rotation_pairs
+from dedup_spark.multimodal.video import signature_set_pairs
 from dedup_spark.operators.minhash import band_candidates, minhash_near_duplicates
 from dedup_spark.operators.suffix import (
     char_substring_pairs,
@@ -41,26 +48,36 @@ def _docs(spark):
     )
 
 
+def _images(spark):
+    return to_spark(
+        spark, generate_corpus(30, dup_ratio=0.3, near_dup_ratio=0.2, seed=5)
+    )[0]
+
+
 SITES = {
     "band_candidates": lambda s, d: band_candidates(_docs(s), "doc_id", "text"),
     "minhash_near_duplicates": lambda s, d: minhash_near_duplicates(
         _docs(s), "doc_id", "text"
     ),
-    "containment_pairs": lambda s, d: containment_pairs(
-        _docs(s), "doc_id", "text", log_drops=False
-    ),
+    "containment_pairs": lambda s, d: containment_pairs(_docs(s), "doc_id", "text"),
     "exact_jaccard_pairs": lambda s, d: exact_jaccard_pairs(
-        _docs(s), "doc_id", "text", log_drops=False
+        _docs(s), "doc_id", "text"
     ),
     "char_substring_pairs": lambda s, d: char_substring_pairs(
-        _docs(s), "doc_id", "text", k=8, log_drops=False
+        _docs(s), "doc_id", "text", k=8
+    ),
+    "nfc_clusters": lambda s, d: nfc_clusters(_docs(s)),
+    "shared_patch_pairs": lambda s, d: shared_patch_pairs(_images(s)),
+    "verified_rotation_pairs": lambda s, d: verified_rotation_pairs(_images(s)),
+    # the rawv tier's frame signatures are JVM-only; the AVI tier runs
+    # the same capped pair stage over a mapInPandas
+    "signature_set_pairs": lambda s, d: signature_set_pairs(
+        avi_frame_signatures(s.read.parquet(fixture_avi_parquet()), every_n=2)
     ),
     "fuzzy_process_batch": lambda s, d: fuzzy_process_batch(
         s, _docs(s), str(d / "state"), str(d / "out")
     ),
-    "dedup_pipeline": lambda s, d: dedup_pipeline(
-        to_spark(s, generate_corpus(30, dup_ratio=0.3, near_dup_ratio=0.2, seed=5))[0]
-    ),
+    "dedup_pipeline": lambda s, d: dedup_pipeline(_images(s)),
 }
 
 
@@ -77,6 +94,8 @@ def _python_udfs(plan) -> list[str]:
         if node.nodeName() in ("ArrowEvalPython", "BatchEvalPython"):
             udfs = node.udfs()
             names += [udfs.apply(i).name() for i in range(udfs.size())]
+        elif node.nodeName() == "MapInPandas":
+            names.append(node.func().name())
     return names
 
 
