@@ -1241,8 +1241,8 @@ def q_unicode_nfc_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark has no built-in normalizer), the oracle via DuckDB's
     ICU-backed nfc_normalize — two independent UAX #15
     implementations must agree on every cluster and every `changed`
-    flag. Scale shape: one Arrow projection, groupBy on md5(nfc)
-    (32-char key, never text, in the exchange), join back."""
+    flag. Scale shape: one Arrow projection, one window partitioned
+    by md5(nfc) (32-char key, never text, in the exchange)."""
     from dedup_spark.functions.unicode import nfc_clusters
 
     docs = _docs(spark, sf_dir).filter(F.col("text").isNotNull())

@@ -23,7 +23,7 @@ from __future__ import annotations
 import unicodedata
 
 import pandas as pd
-from pyspark.sql import Column, functions as F
+from pyspark.sql import Window, functions as F
 
 
 def nfc_normalize_udf() -> callable:
@@ -48,23 +48,25 @@ def nfc_clusters(
     text is identical — the docs exact byte-hash dedup misses because
     they differ only in normalization form. `changed` marks rows the
     normalizer actually rewrote. Scale shape: one Arrow projection,
-    then the exact-tier pattern — groupBy on md5(normalized) (a
-    32-char key, never the text itself, in the exchange) + a join
-    back."""
-    nfc = nfc_normalize_udf()
-    # the cut stays: the UDF column is read by two expressions (the key
-    # and ``changed``) and the key by two consumers (the roots
-    # aggregate and the join back); without the cut the plan holds two
-    # ``_nfc`` evaluations (tests/test_udf_once.py)
-    normed = df.select(
+    then one window partitioned by md5(normalized) (a 32-char key,
+    never the text itself, in the exchange) gives each row its
+    cluster's min id — no aggregate, no join back. A null text is no
+    text: its row is dropped."""
+    # filtered on the input column, not on ``_nfc``: a filter on the
+    # UDF column is pushed below its projection and evaluates the UDF
+    # twice (tests/test_udf_once.py)
+    normed = df.filter(F.col(text_col).isNotNull()).select(
         F.col(id_col),
         F.col(text_col),
-        nfc(F.col(text_col)).alias("_nfc"),
-    ).localCheckpoint(eager=False)
+        nfc_normalize_udf()(F.col(text_col)).alias("_nfc"),
+    )
     keyed = normed.select(
         id_col,
         F.md5(F.col("_nfc")).alias("_key"),
         (F.col("_nfc") != F.col(text_col)).alias("changed"),
     )
-    roots = keyed.groupBy("_key").agg(F.min(id_col).alias("cluster_id"))
-    return keyed.join(roots, on="_key").select(id_col, "cluster_id", "changed")
+    return keyed.select(
+        id_col,
+        F.min(id_col).over(Window.partitionBy("_key")).alias("cluster_id"),
+        "changed",
+    )

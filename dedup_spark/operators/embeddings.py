@@ -24,6 +24,12 @@ Input: a table with (vec_id, embedding array<float>). Paths:
 Thresholds filter the ROUNDED cosine (round 6) so an engine's 1e-15
 summation-order difference can never flip a row — the float-parity rule
 the whole oracle suite uses.
+
+Zero-norm vectors have no cosine: no tier pairs or ranks one, and none
+divides by its zero norm (an ANSI error). The top-k tiers drop them on
+both sides, the GEMM tier when it packs a block, and the LSH and IVF
+pair tiers before bucketing (so one is never a flood's star center)
+and again in ``cosine_verify``.
 """
 
 from __future__ import annotations
@@ -67,18 +73,19 @@ def cosine_topk_bruteforce(
     Queries are broadcast → the corpus never shuffles; scoring happens
     in one narrow codegen stage, then top-k via per-query window (the
     scored set is |Q|×|C| rows — keep |Q| modest, that's the contract
-    of a brute-force oracle).
+    of a brute-force oracle). Zero-norm vectors are dropped on both
+    sides.
     """
     q = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("_qv"),
         _norm(F.col(vec_col)).alias("_qn"),
-    )
+    ).filter(F.col("_qn") > 0)
     c = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("_cv"),
         _norm(F.col(vec_col)).alias("_cn"),
-    )
+    ).filter(F.col("_cn") > 0)
     scored = (
         c.join(F.broadcast(q), F.col("query_id") != F.col("neighbor_id"))
         .withColumn(
@@ -453,6 +460,58 @@ def kmeans_centroids(
     return cents
 
 
+def probe_cells_udf(sc, centroids: np.ndarray, n_probe: int):
+    """pandas UDF: embedding → array<long> of its ``n_probe`` nearest
+    coarse cells by cosine, nearest first. The centroids ship once as
+    a broadcast; a zero-norm vector stays zero (every cell ties) rather
+    than turning into NaNs — the cosine tiers drop it downstream."""
+    b_c = sc.broadcast(np.asarray(centroids, dtype=np.float64))
+    npb = int(n_probe)
+
+    @F.pandas_udf(T.ArrayType(T.LongType()))
+    def _cells(vecs: pd.Series) -> pd.Series:
+        mat = np.stack(vecs.to_numpy()).astype(np.float64)
+        nrm = np.linalg.norm(mat, axis=1, keepdims=True)
+        nrm[nrm == 0] = 1.0
+        sims = (mat / nrm) @ b_c.value.T
+        top = np.argsort(-sims, axis=1)[:, :npb]
+        return pd.Series([row.tolist() for row in top])
+
+    return _cells
+
+
+def _nonzero(corpus: DataFrame, vec_col: str) -> DataFrame:
+    # a zero vector dropped before bucketing can never be a flood
+    # bucket's star center, whose every edge the verify would drop
+    return corpus.filter(_norm(F.col(vec_col)) > 0)
+
+
+def cosine_verify(
+    corpus: DataFrame,
+    pairs: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    threshold: float = 0.9,
+) -> DataFrame:
+    """(id1, id2, cosine): the candidate ``pairs`` whose exact cosine,
+    ROUNDED to 6 places, reaches ``threshold`` (the suite-wide
+    float-parity rule). A zero-norm vector has no cosine: it is dropped
+    before the join, so it never pairs and never divides by zero."""
+    vecs = corpus.select(
+        F.col(id_col).alias("_id"),
+        F.col(vec_col).alias("_v"),
+        _norm(F.col(vec_col)).alias("_n"),
+    ).filter(F.col("_n") > 0)
+    v1 = vecs.select(F.col("_id").alias("id1"), F.col("_v").alias("_v1"), F.col("_n").alias("_n1"))
+    v2 = vecs.select(F.col("_id").alias("id2"), F.col("_v").alias("_v2"), F.col("_n").alias("_n2"))
+    return (
+        pairs.join(v1, "id1").join(v2, "id2")
+        .withColumn("cosine", _dot("_v1", "_v2") / (F.col("_n1") * F.col("_n2")))
+        .filter(F.round(F.col("cosine"), 6) >= threshold)
+        .select("id1", "id2", "cosine")
+    )
+
+
 def ivf_verified_pairs(
     corpus: DataFrame,
     centroids: np.ndarray,
@@ -472,38 +531,16 @@ def ivf_verified_pairs(
     in this engine. Verification makes the output sound (⊆ exact
     pairs); recall is the probe-depth trade-off, measured in tests.
     """
-    sc = corpus.sparkSession.sparkContext
-    b_c = sc.broadcast(np.asarray(centroids, dtype=np.float64))
-    nprobe = int(n_probe)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _cells(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy()).astype(np.float64)
-        mat /= np.linalg.norm(mat, axis=1, keepdims=True)
-        sims = mat @ b_c.value.T
-        top = np.argsort(-sims, axis=1)[:, :nprobe]
-        return pd.Series([row.tolist() for row in top])
-
     from dedup_spark.operators.banding import star_guarded_pairs
 
+    corpus = _nonzero(corpus, vec_col)
+    cells = probe_cells_udf(corpus.sparkSession.sparkContext, centroids, n_probe)
     bucketed = corpus.select(
         F.col(id_col).alias("_id"),
-        F.explode(_cells(F.col(vec_col))).alias("cell"),
+        F.explode(cells(F.col(vec_col))).alias("cell"),
     )
     pairs = star_guarded_pairs(bucketed, ["cell"], max_cell)
-    vecs = corpus.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        _norm(F.col(vec_col)).alias("_n"),
-    )
-    v1 = vecs.select(F.col("_id").alias("id1"), F.col("_v").alias("_v1"), F.col("_n").alias("_n1"))
-    v2 = vecs.select(F.col("_id").alias("id2"), F.col("_v").alias("_v2"), F.col("_n").alias("_n2"))
-    return (
-        pairs.join(v1, "id1").join(v2, "id2")
-        .withColumn("cosine", _dot("_v1", "_v2") / (F.col("_n1") * F.col("_n2")))
-        .filter(F.round(F.col("cosine"), 6) >= threshold)
-        .select("id1", "id2", "cosine")
-    )
+    return cosine_verify(corpus, pairs, id_col, vec_col, threshold)
 
 
 def ann_verified_pairs(
@@ -521,22 +558,11 @@ def ann_verified_pairs(
     ``max_bucket`` is the star guard (see ann_candidates); pair-set
     oracles pass a larger value, pipelines keep the flood-safe
     default."""
+    corpus = _nonzero(corpus, vec_col)
     pairs = ann_candidates(
         corpus, id_col, vec_col, cfg, max_bucket=max_bucket, dim=dim, planes=planes
     )
-    vecs = corpus.select(
-        F.col(id_col).alias("_id"),
-        F.col(vec_col).alias("_v"),
-        _norm(F.col(vec_col)).alias("_n"),
-    )
-    v1 = vecs.select(F.col("_id").alias("id1"), F.col("_v").alias("_v1"), F.col("_n").alias("_n1"))
-    v2 = vecs.select(F.col("_id").alias("id2"), F.col("_v").alias("_v2"), F.col("_n").alias("_n2"))
-    return (
-        pairs.join(v1, "id1").join(v2, "id2")
-        .withColumn("cosine", _dot("_v1", "_v2") / (F.col("_n1") * F.col("_n2")))
-        .filter(F.round(F.col("cosine"), 6) >= cfg.cosine_threshold)
-        .select("id1", "id2", "cosine")
-    )
+    return cosine_verify(corpus, pairs, id_col, vec_col, cfg.cosine_threshold)
 
 
 def ivf_topk(
@@ -567,20 +593,7 @@ def ivf_topk(
     Zero-norm vectors are dropped on both the query and index side —
     the same contract as the GEMM tier (undefined cosine never pairs).
     """
-    sc = corpus.sparkSession.sparkContext
-    b_c = sc.broadcast(np.asarray(centroids, dtype=np.float64))
-    npb = int(n_probe)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _cells(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy()).astype(np.float64)
-        nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-        nrm[nrm == 0] = 1.0
-        mat = mat / nrm
-        sims = mat @ b_c.value.T
-        top = np.argsort(-sims, axis=1)[:, :npb]
-        return pd.Series([row.tolist() for row in top])
-
+    cells = probe_cells_udf(corpus.sparkSession.sparkContext, centroids, n_probe)
     base = (
         corpus.select(
             F.col(id_col).alias("_id"),
@@ -588,7 +601,7 @@ def ivf_topk(
             _norm(F.col(vec_col)).alias("_n"),
         )
         .filter(F.col("_n") > 0)
-        .withColumn("_cells", _cells(F.col("_v")))
+        .withColumn("_cells", cells(F.col("_v")))
         # consumed by the index AND the query side — without this the
         # cell-assignment UDF re-executes per consumer (round-3 rule)
         .localCheckpoint(eager=False)

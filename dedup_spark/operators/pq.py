@@ -49,7 +49,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
-from dedup_spark.operators.embeddings import _dot, _norm
+from dedup_spark.operators.embeddings import _dot, _norm, probe_cells_udf
 
 
 def pq_train(
@@ -187,21 +187,9 @@ def ivfpq_topk(
     are dropped on both sides (the GEMM-tier contract).
     """
     sc = corpus.sparkSession.sparkContext
-    b_c = sc.broadcast(np.asarray(coarse_centroids, dtype=np.float64))
     b_cb = sc.broadcast(codebooks)
     m, _, d = codebooks.shape
-    npb = int(n_probe)
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def _cells(vecs: pd.Series) -> pd.Series:
-        mat = np.stack(vecs.to_numpy()).astype(np.float64)
-        nrm = np.linalg.norm(mat, axis=1, keepdims=True)
-        nrm[nrm == 0] = 1.0
-        mat = mat / nrm
-        sims = mat @ b_c.value.T
-        top = np.argsort(-sims, axis=1)[:, :npb]
-        return pd.Series([row.tolist() for row in top])
-
+    cells = probe_cells_udf(sc, coarse_centroids, n_probe)
     base = (
         corpus.select(
             F.col(id_col).alias("_id"),
@@ -209,7 +197,7 @@ def ivfpq_topk(
             _norm(F.col(vec_col)).alias("_n"),
         )
         .filter(F.col("_n") > 0)
-        .withColumn("_cells", _cells(F.col("_v")))
+        .withColumn("_cells", cells(F.col("_v")))
         .withColumn("_codes", _codes_udf(codebooks, sc)(F.col("_v")))
         # consumed by the index side, the query side, AND the re-rank
         # join — without this both UDFs re-execute per consumer

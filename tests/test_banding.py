@@ -44,6 +44,15 @@ def test_bucket_over_cap_stars_to_min(spark):
     }
     assert got == {("x0", f"x{i}") for i in range(1, 5)}  # O(n) star
 
+    # every star edge carries the center's own value, not another row's
+    rows = [(f"x{i}", 1, 10 + i) for i in range(5)]
+    out = star_guarded_pairs(
+        _bucketed(spark, rows), ["b"], max_bucket=4, carry_cols=["h"]
+    ).collect()
+    assert {(r["id1"], r["id2"], r["h1"], r["h2"]) for r in out} == {
+        ("x0", f"x{i}", 10, 10 + i) for i in range(1, 5)
+    }
+
 
 def test_multi_bucket_dedup_and_carry(spark):
     # same pair colliding in two buckets → one output row; carried
@@ -56,6 +65,46 @@ def test_multi_bucket_dedup_and_carry(spark):
     assert set(pairs) == {("a", "b"), ("a", "c"), ("b", "c")}
     assert pairs[("a", "b")] == (100, 200)
     assert pairs[("b", "c")] == (200, 300)
+
+
+def _node_names(plan):
+    yield plan.nodeName()
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _node_names(children.apply(i))
+
+
+@pytest.fixture
+def static_sort_merge(no_aqe):
+    prev = no_aqe.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    no_aqe.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    yield no_aqe
+    no_aqe.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
+
+
+@pytest.mark.parametrize("tier", ["band_candidates", "hamming_candidates"])
+def test_star_guard_is_one_self_join(static_sort_merge, tier):
+    """Within-bucket pairs and flood stars come from one self-join: the
+    executed plan windows the bucketed rows once per join side and
+    unions nothing."""
+    from dedup_spark.operators.minhash import band_candidates
+    from dedup_spark.operators.simhash import hamming_candidates
+
+    s = static_sort_merge
+    if tier == "band_candidates":
+        df = s.createDataFrame(
+            [(i, f"doc {i % 3} alpha beta gamma delta epsilon") for i in range(6)],
+            "doc_id long, text string",
+        )
+        out = band_candidates(df, "doc_id", "text")
+    else:
+        df = s.createDataFrame(
+            [(f"i{i}", 1 << (i % 3)) for i in range(6)], "image_id string, phash long"
+        )
+        out = hamming_candidates(df)
+    names = list(_node_names(out._jdf.queryExecution().executedPlan()))
+    assert names.count("Window") == 2, names
+    assert "Union" not in names, names
 
 
 def test_singleton_buckets_emit_nothing(spark):

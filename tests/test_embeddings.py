@@ -218,6 +218,38 @@ def test_ivf_topk_full_probe_equals_brute_and_clustered_recall(spark, vecs):
     assert recall >= 0.9, recall
 
 
+def test_zero_norm_vector_never_pairs_and_never_raises(spark):
+    """A zero vector has no cosine. Sharing an ANN bucket (the all-zero
+    sign pattern of [-1]*8) or an IVF cell with real vectors, it must
+    neither pair nor raise ANSI DIVIDE_BY_ZERO, nor be the star center
+    of an over-cap cell (whose edges would all fail the verify); every
+    top-k tier drops it too."""
+    from dedup_spark.operators.embeddings import (
+        ivf_topk,
+        ivf_verified_pairs,
+    )
+
+    df = spark.createDataFrame(
+        [(1, [0.0] * 8), (2, [1.0] + [0.0] * 7),
+         (3, [1.0, 0.01] + [0.0] * 6), (4, [-1.0] * 8)],
+        "vec_id long, embedding array<double>",
+    )
+    cents = np.eye(2, 8)
+    ann = ann_verified_pairs(df, dim=8, planes="axis").collect()
+    assert ann == []  # the only shared bucket is {1, 4}
+    for max_cell in (4096, 2):  # at 2, every cell stars to its min id
+        ivf = ivf_verified_pairs(df, cents, max_cell=max_cell).collect()
+        assert {(r["id1"], r["id2"]) for r in ivf} == {(2, 3)}, max_cell
+    for topk in (
+        cosine_topk_bruteforce(df, df, k=3),
+        cosine_scores_gemm(df, topk=3),
+        ivf_topk(df, cents, k=3, n_probe=2),
+    ):
+        ids = {r["query_id"] for r in topk.collect()}
+        ids |= {r["neighbor_id"] for r in topk.collect()}
+        assert 1 not in ids and ids == {2, 3, 4}
+
+
 # --- text -> embedding (hashed bag-of-bigrams) -------------------------
 
 

@@ -125,6 +125,7 @@ CHECKS = {
     "window_partitioned_by_bucket": _windows_partitioned_by_bucket,
     "window_partitioned_by_cluster": lambda p: "windowspecdefinition(cluster_id"
     in p,
+    "window_partitioned_by_key": lambda p: "windowspecdefinition(_key" in p,
 }
 
 CODEGEN_JVM = ["wholestage_codegen", "no_python_udf"]
@@ -184,7 +185,7 @@ QUERY_CHECKS = {
     "value_histogram": JVM_AGG + ["broadcast_join"],
     "table_profile": JVM_AGG,
     "bloom_gram_dedup": JVM_AGG + ["broadcast_join"],
-    "unicode_nfc_dedup": ["no_expand", "broadcast_join"],
+    "unicode_nfc_dedup": ["no_expand", "window_partitioned_by_key"],
     # the vocabulary is never globally sorted
     "key_skew_profile": JVM_AGG + ["broadcast_join", "window_group_limit"],
     "line_dedup": JVM_AGG,
