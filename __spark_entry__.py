@@ -4224,7 +4224,7 @@ def q_boilerplate_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return boilerplate_stats(
         _docs(spark, sf_dir), id_col="doc_id", text_col="text",
-        seg_tokens=4, min_docs=2,
+        seg_tokens=4,
     )
 
 
@@ -5195,7 +5195,10 @@ FROM {orient_fixture}
         # CDC: recompute every boundary (byte-pair % divisor over
         # hex(bytes) via the 256-row lookup), every chunk md5 (hex
         # slice: 2*start+1, length 2*clen), the shared set (two-stage
-        # distinct, >= 2 blobs), and the per-blob instance counts
+        # distinct, >= 2 blobs), and the per-blob instance counts. The
+        # byte rows carry (blob, position, 2-char hex) only: one list
+        # lambda per blob slices its hex string, so the string is
+        # never copied onto each of its position rows
         "cdc_chunk_dedup": f"""
 WITH hb(hh, v) AS (VALUES {hex_byte_values}),
 fx AS (SELECT video_id, hex(bytes) AS hx FROM {vid_fixture}),
@@ -5206,16 +5209,17 @@ allb AS (
   WHERE CAST(substr(video_id, 5, 4) AS INT) % 2 = 0
 ),
 b AS (SELECT video_id, hx, strlen(hx) // 2 AS n FROM allb),
-pos AS (
-  SELECT video_id, hx, n, i
-  FROM b, UNNEST(range(2, n + 1)) AS u(i)
+byt AS (
+  SELECT video_id, UNNEST(range(1, n + 1)) AS i,
+         UNNEST(list_transform(range(1, n + 1),
+                               j -> substr(hx, 2*j - 1, 2))) AS hh
+  FROM b
 ),
+bv AS (SELECT y.video_id, y.i, h.v FROM byt y JOIN hb h ON h.hh = y.hh),
 bd AS (
-  SELECT p.video_id, p.i
-  FROM pos p
-  JOIN hb b1 ON b1.hh = substr(p.hx, 2*p.i - 3, 2)
-  JOIN hb b2 ON b2.hh = substr(p.hx, 2*p.i - 1, 2)
-  WHERE (b1.v * 256 + b2.v) % {CDC_DIV} = 0
+  SELECT p2.video_id, p2.i
+  FROM bv p2 JOIN bv p1 ON p1.video_id = p2.video_id AND p1.i = p2.i - 1
+  WHERE (p1.v * 256 + p2.v) % {CDC_DIV} = 0
 ),
 ends AS (
   SELECT DISTINCT video_id, e FROM (

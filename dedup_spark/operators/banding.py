@@ -15,14 +15,17 @@ implementation all tiers share.
 The inverted-index tiers (shingle overlap, frame-signature sets, shared
 patches, rotation candidates) need the shared-key COUNT per pair, so a
 star cannot stand in for a flood there: ``shared_key_pairs`` drops the
-flooded key instead, and logs how many it dropped.
+flooded key instead, and logs how many it dropped; its postings half,
+``key_postings``, is also the substring anchor index. The per-key
+statistics (CDC, boilerplate, span excision, suffix-array windows) ask
+only ``held_by_two_ids``, one window with nothing joined back.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from dedup_spark.plans.lineage import count_and_log_drops
 
@@ -99,6 +102,48 @@ def star_guarded_pairs(
     )
 
 
+def held_by_two_ids(key_cols: list[str], id_col: str) -> Column:
+    """True on a row whose key is held by >= 2 distinct ids: the key's
+    min id is below its max id, two aggregates over one window spec
+    (one Window node, one Exchange). A key repeated inside one id only
+    is never held by two. min and max skip null ids, so this is the
+    distinct-id test only for non-null ids, as at every caller."""
+    w = Window.partitionBy(*key_cols)
+    return F.min(id_col).over(w) < F.max(id_col).over(w)
+
+
+def key_postings(
+    rows: DataFrame,
+    key_col: str,
+    max_posting: int | None,
+    what: str,
+    id_col: str = "_id",
+    carry_cols: list[str] | None = None,
+) -> DataFrame:
+    """(key, id, <carry>, _n): the rows of every non-null key held by
+    >= 2 rows, ``_n`` its posting count (a window). A key held by more
+    than ``max_posting`` rows (None = uncapped) is dropped, the
+    posting-list cutoff of IR systems, and the dropped keys are counted
+    and logged as ``what``: a capped call cuts the lineage once, on the
+    windowed rows that the drop count (a build-time job) and the
+    caller's join both read."""
+    keyed = rows.filter(F.col(key_col).isNotNull()).select(
+        key_col,
+        id_col,
+        *(carry_cols or []),
+        F.count(F.lit(1)).over(Window.partitionBy(key_col)).alias("_n"),
+    ).filter(F.col("_n") >= 2)
+    if max_posting is None:
+        return keyed
+    keyed = keyed.localCheckpoint(eager=False)
+    count_and_log_drops(
+        keyed.filter(F.col("_n") > max_posting).select(key_col, "_n").distinct(),
+        max_posting,
+        what,
+    )
+    return keyed.filter(F.col("_n") <= max_posting)
+
+
 def shared_key_pairs(
     rows: DataFrame,
     key_col: str,
@@ -111,30 +156,10 @@ def shared_key_pairs(
     of ids sharing a key, and how many keys they share.
 
     ``rows`` holds one row per distinct (key, id); ``carry_cols`` keep
-    the `star_guarded_pairs` contract. A key held by more than
-    ``max_posting`` ids (None = uncapped) is dropped, the posting-list
-    cutoff of IR systems, and the dropped keys are counted and logged
-    as ``what``. The posting count is a window over the slim rows, so
-    both self-join sides read its Exchange; a capped call cuts the
-    lineage once, on the windowed rows that the drop count (a
-    build-time job) and the pair join both read."""
+    the `star_guarded_pairs` contract. Both self-join sides read the
+    capped `key_postings`."""
     carry = carry_cols or []
-    # a null key is no key: dropped before the count, so it is never
-    # logged as a flood
-    keyed = rows.filter(F.col(key_col).isNotNull()).select(
-        key_col,
-        id_col,
-        *carry,
-        F.count(F.lit(1)).over(Window.partitionBy(key_col)).alias("_n"),
-    ).filter(F.col("_n") >= 2)
-    if max_posting is not None:
-        keyed = keyed.localCheckpoint(eager=False)
-        count_and_log_drops(
-            keyed.filter(F.col("_n") > max_posting).select(key_col, "_n").distinct(),
-            max_posting,
-            what,
-        )
-        keyed = keyed.filter(F.col("_n") <= max_posting)
+    keyed = key_postings(rows, key_col, max_posting, what, id_col, carry)
     a = keyed.select(
         key_col, F.col(id_col).alias("id1"), *[F.col(c).alias(f"{c}1") for c in carry]
     )

@@ -15,25 +15,22 @@ This operator is that pass, re-expressed for Spark:
      ``seg_tokens``-token windows (the corpus here is single-line, so
      fixed token windows stand in for paragraphs; with real newline-
      delimited text pass a custom ``segment_expr``),
-  2. shuffle once on the segment string and count DISTINCT documents
-     per segment (two-phase: a (seg, doc) dedup with map-side combine,
-     then a combinable count — no count-distinct expand, no skew:
-     a segment repeated inside ONE hot document collapses map-side),
-  3. mark segments seen in >= ``min_docs`` distinct documents as
-     boilerplate and aggregate per document: how many segments survive
-     and how many tokens the cleaned document keeps.
+  2. shuffle once on the segment string and flag each segment row
+     whose segment is held by >= 2 distinct documents (one window,
+     ``banding.held_by_two_ids``: min doc id < max doc id, so a
+     segment repeated inside ONE document is never boilerplate),
+  3. aggregate the flagged rows per document: how many segments are
+     boilerplate and how many tokens the cleaned document keeps.
 
 Everything is built-in expressions (split / slice / concat_ws /
 posexplode) — JVM-side, whole-stage codegen, no Python in the plan.
 
-100 TB notes: the only wide exchanges are (a) the explode→groupBy on
-the segment string and (b) the groupBy(doc_id) rollup — both are
-combinable aggregations with partial agg, so a footer shared by 10^9
-documents arrives at its reducer as one row per map task, not 10^9
-rows. The segment→doc join broadcasts when the boilerplate set is
-small (the common case: boilerplate is a tiny fraction of distinct
-segments) and falls back to a shuffle join otherwise; AQE decides at
-runtime from the actual build-side size.
+Scale notes: the wide exchanges are (a) the window's shuffle on the
+segment string and (b) the groupBy(doc_id) rollup. A footer shared by
+10^9 documents sorts all its rows in one task. On 200k documents that
+share one 4-token header, each with 8 unique segments (4 CPUs, 4 runs),
+the window ran in 7.9-16.1 s against 13.4-23.7 s for a distinct +
+aggregate + join-back form of the same test.
 
 Reference analog: none — the reference (denizariyan/dedup) groups
 whole files by content hash (src/main.rs grouping cascade); segment-
@@ -44,6 +41,8 @@ surface (SURVEY.md §2.3 EXT).
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, functions as F
+
+from dedup_spark.operators.banding import held_by_two_ids
 
 
 def _tokens(text: Column) -> Column:
@@ -76,43 +75,25 @@ def segment_docs(
     ).select(id_col, (F.col("_p") + 1).alias("seg_idx"), "seg")
 
 
-def boilerplate_segments(
-    segs: DataFrame,
-    id_col: str = "doc_id",
-    min_docs: int = 2,
-) -> DataFrame:
-    """Distinct segments appearing in >= min_docs distinct documents,
-    with their document frequency. Two combinable aggregations (see
-    module docstring) instead of countDistinct's expand."""
-    return (
-        segs.select("seg", id_col)
-        .distinct()
-        .groupBy("seg")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
-    )
-
-
 def boilerplate_stats(
     df: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     seg_tokens: int = 4,
-    min_docs: int = 2,
 ) -> DataFrame:
     """Per-document boilerplate summary:
 
       n_segments    full windows in the document
-      n_boilerplate windows shared with >= min_docs-1 other documents
+      n_boilerplate windows shared with at least one other document
       kept_tokens   tokens after dropping boilerplate windows
                     (non-boilerplate windows + the partial tail window)
 
     All counts BIGINT for oracle parity.
     """
-    segs = segment_docs(df, id_col, text_col, seg_tokens)
-    bp = boilerplate_segments(segs, id_col, min_docs)
     per_doc = (
-        segs.join(bp.select("seg"), on="seg", how="left_semi")
+        segment_docs(df, id_col, text_col, seg_tokens)
+        .select(id_col, held_by_two_ids(["seg"], id_col).alias("_bp"))
+        .filter("_bp")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("_n_bp"))
     )

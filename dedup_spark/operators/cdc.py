@@ -27,9 +27,12 @@ BLOBs; hex-then-slice commutes with slice-then-hex).
 
 Scale shape: chunking is blob-local (one Arrow-batched mapInPandas
 projection, embarrassingly parallel; payload bytes never shuffle —
-only (id, idx, len, md5) chunk records do); the shared-chunk set uses
-two combinable aggregations (never countDistinct); the join back is a
-broadcast-able semi-join on the chunk hash.
+only (id, len, md5) chunk records do). A chunk is flagged shared by
+one window over its hash (``banding.held_by_two_ids``: min id < max
+id), then one groupBy(id) rolls the report up: two Exchanges, the
+chunker runs once, and nothing joins back. A chunk hash held by a
+flood of blobs (a shared header) sorts all its rows in one task (the
+walls of the same window on a 200k-doc flood are in boilerplate.py).
 """
 
 from __future__ import annotations
@@ -40,6 +43,8 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
+
+from dedup_spark.operators.banding import held_by_two_ids
 
 
 def cdc_chunks(data: bytes, divisor: int = 64) -> list[tuple[int, int, str]]:
@@ -118,30 +123,14 @@ def cdc_dedup_stats(
     hash occurs in >= 2 DISTINCT blobs; n_shared_chunks counts this
     blob's chunk INSTANCES whose hash is shared; shared_fraction =
     round(n_shared_chunks / n_chunks, 6)."""
-    ch = chunk_records(df, id_col, bytes_col, divisor).localCheckpoint(
-        eager=False
-    )
-    shared = (
-        ch.select("chunk_md5", id_col)
-        .distinct()
-        .groupBy("chunk_md5")
-        .agg(F.count(F.lit(1)).alias("_nb"))
-        .filter(F.col("_nb") >= 2)
-        .select("chunk_md5")
-    )
-    flagged = ch.join(
-        F.broadcast(shared).withColumn("_s", F.lit(1)), on="chunk_md5",
-        how="left",
+    flagged = chunk_records(df, id_col, bytes_col, divisor).select(
+        id_col,
+        "chunk_len",
+        held_by_two_ids(["chunk_md5"], id_col).cast("long").alias("_s"),
     )
     return flagged.groupBy(id_col).agg(
         F.count(F.lit(1)).cast("long").alias("n_chunks"),
         F.sum("chunk_len").cast("long").alias("n_bytes"),
-        F.sum(F.coalesce(F.col("_s"), F.lit(0))).cast("long").alias(
-            "n_shared_chunks"
-        ),
-        F.round(
-            F.sum(F.coalesce(F.col("_s"), F.lit(0)))
-            / F.count(F.lit(1)),
-            6,
-        ).alias("shared_fraction"),
+        F.sum("_s").cast("long").alias("n_shared_chunks"),
+        F.round(F.sum("_s") / F.count(F.lit(1)), 6).alias("shared_fraction"),
     )

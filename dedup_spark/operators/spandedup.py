@@ -21,7 +21,7 @@ FOR the distributed setting and documented here:
 
   * word-k-grams instead of a corpus-global suffix array: the suffix
     array needs a corpus-order global structure; the gram formulation
-    is one groupBy + one semi-join, embarrassingly data-parallel, and
+    is one window over the grams, embarrassingly data-parallel, and
     for spans >= k words the two definitions flag the same text (any
     repeated span of w >= k words contains w-k+1 repeated k-grams
     that reconstruct exactly that span's coverage).
@@ -31,14 +31,17 @@ FOR the distributed setting and documented here:
     order-independent, so the output is deterministic under any
     partitioning and the job is restartable per-partition.
 
-Scale shape: occurrences are linear in corpus tokens; the duplicated-
-gram set is found with two COMBINABLE aggregations (groupBy(gram,doc)
-then groupBy(gram) — never a countDistinct expand, the
-`boilerplate_stats` trick); cover-back is a semi-join on gram (fan-out
-linear in occurrences, never pairwise); per-doc coverage union is a
-collect_set bounded by document length. At 100 TB the gram string
-would be xxhash64-dictionary-coded with identical join semantics —
-a collision only ever ADDS coverage, conservative for cleaning.
+Scale shape: occurrences are linear in corpus tokens; a gram is
+flagged duplicated by one window over its occurrences
+(``banding.held_by_two_ids``: min doc id < max doc id), so no gram
+set is aggregated and joined back; per-doc coverage union is a
+collect_set bounded by document length. A gram held by a flood of
+documents sorts all its occurrences in one task; on 200k documents
+sharing one 4-token header (k=4, 8 unique segments each; 4 CPUs) the
+window ran in 11.2-13.9 s against 17.7-21.4 s for a distinct +
+aggregate + join-back form (4 runs a side). At 100 TB the gram string
+would be xxhash64-dictionary-coded with identical semantics — a
+collision only ever ADDS coverage, conservative for cleaning.
 
 Reference parity: [EXT] LLM-pipeline surface (SURVEY.md §2.4); no
 reference counterpart — the reference (src/main.rs) is whole-file
@@ -48,6 +51,8 @@ exact dedup; this is the sub-document-granularity generalization.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+from dedup_spark.operators.banding import held_by_two_ids
 
 
 def _norm_tokens(text_col: str) -> F.Column:
@@ -86,21 +91,12 @@ def duplicated_span_excision(
         .select(id_col, F.col("g.pos").alias("pos"), F.col("g.gram").alias("gram"))
     )
 
-    # Duplicated grams: present in >= 2 distinct docs. Two combinable
-    # aggregations — no countDistinct expand.
-    dup_grams = (
-        occ.select("gram", id_col)
-        .distinct()
-        .groupBy("gram")
-        .agg(F.count(F.lit(1)).alias("_nd"))
-        .filter(F.col("_nd") >= 2)
-        .select("gram")
-    )
-
-    # Covered word positions per doc: union of [pos, pos+k-1] over
-    # covered occurrences (distinct collapses the overlap).
+    # Covered word positions per doc: union of [pos, pos+k-1] over the
+    # occurrences of grams held by >= 2 distinct docs (one window on
+    # gram; distinct collapses the overlap).
     cov = (
-        occ.join(dup_grams, "gram")
+        occ.select(id_col, "pos", held_by_two_ids(["gram"], id_col).alias("_dup"))
+        .filter("_dup")
         .select(
             id_col,
             F.explode(F.sequence(F.col("pos"), F.col("pos") + F.lit(k - 1))).alias(

@@ -42,9 +42,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from dedup_spark.config import DEFAULT_CONFIG, DedupConfig
-from dedup_spark.operators.banding import shared_key_pairs
+from dedup_spark.operators.banding import key_postings, shared_key_pairs
 from dedup_spark.operators.minhash import shingle_explode_udf, shingle_multipliers
-from dedup_spark.plans.lineage import count_and_log_drops
 
 
 def _shingle_overlaps(
@@ -292,15 +291,12 @@ def char_substring_pairs(
         .localCheckpoint(eager=False)
         .filter(F.col("_g").isNotNull())
     )
+    # a gram held by one doc can only meet its own anchor, so the
+    # ``_n >= 2`` cut of `key_postings` loses no pair. None = uncapped
+    # exhaustive variant (the exact-gate oracle runs the uncapped
+    # quadratic substring self-join, so the engine must not cap either)
     posts = g.select(F.col("_id").alias("outer_id"), F.explode("_g").alias("gram"))
-    if max_posting is not None:
-        # None = uncapped exhaustive variant (the exact-gate oracle runs
-        # the uncapped quadratic substring self-join, so the engine side
-        # must not cap either — corpus-independent parity, ADVICE r2)
-        counts = posts.groupBy("gram").agg(F.count(F.lit(1)).alias("_n"))
-        count_and_log_drops(counts, max_posting, "char_substring_pairs")
-        ok = counts.filter(F.col("_n") <= max_posting).select("gram")
-        posts = posts.join(ok, on="gram", how="left_semi")
+    posts = key_postings(posts, "gram", max_posting, "char_substring_pairs", "outer_id")
     anchors = g.filter(F.col("_blen") >= min_len).select(
         F.col("_id").alias("inner_id"), F.element_at("_g", 1).alias("gram")
     )

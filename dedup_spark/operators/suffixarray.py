@@ -58,6 +58,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from dedup_spark.operators.banding import held_by_two_ids
 from dedup_spark.operators.spandedup import _norm_tokens
 
 
@@ -233,35 +234,29 @@ def repeated_window_stats(
       n_cross_doc_windows  dup windows shared with >= 2 distinct docs
       dup_window_fraction  round(n_dup_windows / n_windows, 6)
 
-    The group stats are two COMBINABLE aggregations (groupBy(rank,id)
-    then groupBy(rank) — never a countDistinct Expand), joined back on
-    the fixed-width rank. Nothing in the job ever materializes an
-    L-word string."""
+    Both group stats are windows over one ``partitionBy(rank)`` spec
+    (one Window node): ``count(*)`` for the occurrences and
+    ``banding.held_by_two_ids`` for the distinct docs, rolled up by
+    one groupBy(id), so nothing joins back on rank. A rank held by a
+    flood of windows sorts all of them in one task. Nothing in the
+    job ever materializes an L-word string."""
     base = df.select(F.col(id_col).alias("id"))
     pos = word_positions(df, id_col, text_col)
-    full = (
+    per_doc = (
         prefix_doubling_ranks(pos, window=window)
         .filter(F.col("pos") + window - 1 <= F.col("n_words"))
-        .localCheckpoint(eager=False)
-    )
-    per_doc_grp = full.groupBy("rank", "id").agg(
-        F.count(F.lit(1)).alias("_n_in_doc")
-    )
-    grp = per_doc_grp.groupBy("rank").agg(
-        F.sum("_n_in_doc").alias("_n_occ"),
-        F.count(F.lit(1)).alias("_n_docs"),
-    )
-    per_doc = (
-        full.join(grp, on="rank")
+        .select(
+            "id",
+            (F.count(F.lit(1)).over(Window.partitionBy("rank")) >= 2)
+            .cast("long")
+            .alias("_dup"),
+            held_by_two_ids(["rank"], "id").cast("long").alias("_cross"),
+        )
         .groupBy("id")
         .agg(
             F.count(F.lit(1)).alias("n_windows"),
-            F.sum((F.col("_n_occ") >= 2).cast("long")).alias(
-                "n_dup_windows"
-            ),
-            F.sum((F.col("_n_docs") >= 2).cast("long")).alias(
-                "n_cross_doc_windows"
-            ),
+            F.sum("_dup").alias("n_dup_windows"),
+            F.sum("_cross").alias("n_cross_doc_windows"),
         )
     )
     return (

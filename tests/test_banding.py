@@ -5,6 +5,7 @@ of the four inverted-index tiers."""
 from __future__ import annotations
 
 import logging
+import re
 
 import numpy as np
 import pandas as pd
@@ -18,7 +19,7 @@ from dedup_spark.multimodal.patches import shared_patch_pairs
 from dedup_spark.multimodal.rotinv import verified_rotation_pairs
 from dedup_spark.multimodal.video import video_near_duplicates
 from dedup_spark.operators.banding import shared_key_pairs, star_guarded_pairs
-from dedup_spark.operators.suffix import containment_pairs
+from dedup_spark.operators.suffix import char_substring_pairs, containment_pairs
 
 
 def _bucketed(spark, rows):
@@ -188,6 +189,14 @@ def _flood_docs(spark):
     )
 
 
+def _flood_texts(spark):
+    # one 24-byte text, so one byte-24-gram, held by all three docs
+    return spark.createDataFrame(
+        [(i, "abcdefghijklmnopqrstuvwx") for i in range(3)],
+        "doc_id long, text string",
+    )
+
+
 def _flood_images(spark):
     # one non-flat 8x8 patch and one pixel multiset, held by three images
     px = np.random.default_rng(0).integers(0, 256, (8, 8, 3), dtype=np.uint8)
@@ -219,6 +228,9 @@ FLOODED = {
     "verified_rotation_pairs": lambda s: verified_rotation_pairs(
         _flood_images(s), max_bucket=2
     ),
+    "char_substring_pairs": lambda s: char_substring_pairs(
+        _flood_texts(s), "doc_id", "text", max_posting=2
+    ),
 }
 
 
@@ -231,3 +243,13 @@ def test_capped_tier_logs_its_flooded_key(spark, caplog, tier):
     assert out.count() == 0
     logged = [r.getMessage() for r in caplog.records]
     assert any(m.startswith(f"{tier}: dropped 1 posting keys") for m in logged), logged
+
+
+def test_capped_substring_index_reads_postings_once(spark):
+    """The capped anchor index is `key_postings`' window: the action
+    counts no posting list again, so its executed plan aggregates
+    nothing keyed on the gram."""
+    out = char_substring_pairs(_flood_texts(spark), "doc_id", "text", max_posting=2)
+    assert out.collect() == []
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert not re.search(r"HashAggregate\(keys=\[gram#", plan), plan

@@ -29,7 +29,7 @@ def test_boilerplate_stats_marks_shared_segments(spark):
     df = spark.createDataFrame(rows, ["doc_id", "text"])
     out = {
         r["doc_id"]: r
-        for r in boilerplate_stats(df, seg_tokens=4, min_docs=2).collect()
+        for r in boilerplate_stats(df, seg_tokens=4).collect()
     }
     assert out[1]["n_segments"] == 2 and out[1]["n_boilerplate"] == 1
     assert out[1]["kept_tokens"] == 8 - 4

@@ -126,6 +126,19 @@ CHECKS = {
     "window_partitioned_by_cluster": lambda p: "windowspecdefinition(cluster_id"
     in p,
     "window_partitioned_by_key": lambda p: "windowspecdefinition(_key" in p,
+    # "key held by >= 2 distinct ids" statistics are one window on the
+    # key, never a distinct + aggregate joined back
+    "window_partitioned_by_chunk": lambda p: "windowspecdefinition(chunk_md5"
+    in p,
+    "window_partitioned_by_seg": lambda p: "windowspecdefinition(seg#" in p,
+    "window_partitioned_by_gram": lambda p: "windowspecdefinition(gram#" in p,
+    "window_partitioned_by_rank": lambda p: "windowspecdefinition(rank#" in p,
+    "two_exchanges": lambda p: _n_exchanges(p) == 2,
+    "three_exchanges": lambda p: _n_exchanges(p) == 3,
+    "no_broadcast": lambda p: "BroadcastHashJoin" not in p
+    and "BroadcastExchange" not in p,
+    # a localCheckpoint plans as a scan of its RDD
+    "no_lineage_cut": lambda p: "ExistingRDD" not in p,
 }
 
 CODEGEN_JVM = ["wholestage_codegen", "no_python_udf"]
@@ -151,9 +164,14 @@ QUERY_CHECKS = {
         "no_payload_in_exchange",
     ],
     "ivf_topk": ["wholestage_codegen"],
-    # prefix doubling stays pure JVM, group stats are two combinable aggs
-    "suffix_array_spans": JVM_AGG,
-    "boilerplate_stats": CODEGEN_JVM,
+    # prefix doubling stays pure JVM; both group stats ride one window
+    # on rank, and one groupBy(id) rolls them up
+    "suffix_array_spans": JVM_AGG + [
+        "window_partitioned_by_rank", "three_exchanges",
+    ],
+    "boilerplate_stats": CODEGEN_JVM + [
+        "window_partitioned_by_seg", "two_exchanges",
+    ],
     "repetition_stats": CODEGEN_JVM,
     "pii_scan": CODEGEN_JVM,
     # the shuffle index ranks inside parallel bucket windows
@@ -166,7 +184,9 @@ QUERY_CHECKS = {
     "embed_text": ["wholestage_codegen"],
     "semantic_dedup_text": ["wholestage_codegen", "no_payload_in_exchange"],
     "avi_video_dedup": ["no_payload_in_exchange", "no_python_udf"],
-    "exact_span_dedup": JVM_AGG,
+    "exact_span_dedup": JVM_AGG + [
+        "window_partitioned_by_gram", "two_exchanges",
+    ],
     # IVFPQ ADC scoring is a distributed Arrow stage, never a driver rank
     "pq_topk": ["map_in_pandas"],
     "tpch_shipping_priority": [
@@ -174,7 +194,12 @@ QUERY_CHECKS = {
         "no_python_udf",
     ],
     "events_asof_join": JVM_AGG,
-    "cdc_chunk_dedup": PAYLOAD_AGG + ["broadcast_join"],
+    # the chunker runs once below one window on the chunk hash: no cut,
+    # no join back
+    "cdc_chunk_dedup": PAYLOAD_AGG + [
+        "window_partitioned_by_chunk", "two_exchanges", "no_broadcast",
+        "no_lineage_cut",
+    ],
     "rescale_dedup": PAYLOAD_AGG,
     "dhash_dedup": PAYLOAD_AGG,
     "incremental_cc": ["no_python_udf", "no_expand"],

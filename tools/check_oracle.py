@@ -14,6 +14,7 @@ correctness record timestamped after the last code change.
 from __future__ import annotations
 
 import sys
+import tempfile
 import time
 
 import duckdb
@@ -54,6 +55,10 @@ def main() -> int:
     only = set(argv[1:])
     spark = get_spark("oracle_check", cores=8, shuffle_partitions=8)
     con = duckdb.connect()
+    # an in-memory DuckDB spills into ./.tmp under the cwd by default;
+    # keep spill files out of the checkout
+    spill = tempfile.TemporaryDirectory(prefix="check_oracle_duckdb_")
+    con.execute(f"SET temp_directory = '{spill.name}'")
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
