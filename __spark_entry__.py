@@ -614,7 +614,7 @@ def q_minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     probability ≈ 4e-8 per pair, so the verified output equals the
     exact j>=0.9 pair set independent of the corpus draw."""
     df = _docs(spark, sf_dir).filter(
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")) >= K
+        F.size(TX.tokens(F.col("text"))) >= K
     )
     cfg = DedupConfig(jaccard_threshold=MINHASH_T)
     # pair-set-exact mode: guard headroom (like simhash 4096 / ANN 1<<20)
@@ -635,7 +635,7 @@ def q_minhash_lsh_pairs_prod(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the banding+verify output itself — not a band-safe proxy
     (VERDICT r2 'next round' #1)."""
     df = _docs(spark, sf_dir).filter(
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")) >= K
+        F.size(TX.tokens(F.col("text"))) >= K
     )
     # guard headroom: pair-set-exact gate (see q_minhash_lsh_pairs)
     pairs = minhash_near_duplicates(
@@ -656,7 +656,7 @@ def q_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     LSH output ⊆ exact pairs by construction (the verify stage filters
     on the same exact Jaccard), so recall = n_lsh / n_exact."""
     df = _docs(spark, sf_dir).filter(
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")) >= K
+        F.size(TX.tokens(F.col("text"))) >= K
     )
     exact = exact_jaccard_pairs(
         df, id_col="doc_id", text_col="text", threshold=JACCARD_T,
@@ -680,7 +680,7 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle-containment pairs (|S1∩S2| / min(|S1|,|S2|)) — catches
     substring-style duplicates Jaccard misses."""
     df = _docs(spark, sf_dir).filter(
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")) >= K
+        F.size(TX.tokens(F.col("text"))) >= K
     )
     # runs with the DEFAULT posting cap (the scale path); the oracle is
     # uncapped — they agree because the corpus's max posting (7) is far
@@ -924,7 +924,7 @@ def q_flood_cc_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(d0))
     )
     aug = docs.unionByName(copies).filter(
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")) >= K
+        F.size(TX.tokens(F.col("text"))) >= K
     )
     # DEFAULT guard (64) — the whole point: the flood MUST star-link
     pairs = minhash_near_duplicates(
@@ -1371,7 +1371,7 @@ def q_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).filter(
         F.col("text").isNotNull() & (F.trim(F.col("text")) != "")
     )
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = TX.tokens(F.col("text"))
     grams = F.transform(
         F.sequence(F.lit(1), F.size(toks) - F.lit(2)),
         lambda i: F.concat_ws(" ", F.slice(toks, i, 3)),
@@ -1410,7 +1410,7 @@ def q_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).filter(
         F.col("text").isNotNull() & (F.trim(F.col("text")) != "")
     )
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = TX.tokens(F.col("text"))
     stream = docs.select(F.explode(toks).alias("key"))
     exact = stream.groupBy("key").agg(
         F.count(F.lit(1)).cast("long").alias("exact")
@@ -1881,7 +1881,7 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact_span_dedup's corpus view. Two combinable aggregations
     (gram → min doc) + a join back; no windows, no pair joins. The
     oracle recomputes grams, first carriers, and the ratio."""
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = TX.tokens(F.col("text"))
     grams = F.transform(
         F.sequence(F.lit(1), F.size(toks) - F.lit(2)),
         lambda i: F.concat_ws(" ", F.slice(toks, i, 3)),
@@ -1966,7 +1966,7 @@ def q_key_skew_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).filter(
         F.col("text").isNotNull() & (F.trim(F.col("text")) != "")
     )
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = TX.tokens(F.col("text"))
     grams = F.transform(
         F.sequence(F.lit(1), F.size(toks) - F.lit(2)),
         lambda i: F.concat_ws(" ", F.slice(toks, i, 3)),
@@ -2179,7 +2179,7 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).filter(
         F.col("text").isNotNull() & (F.trim(F.col("text")) != "")
     )
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = TX.tokens(F.col("text"))
     counts = (
         docs.select("doc_id", F.explode(toks).alias("t"))
         .groupBy("doc_id", "t")
@@ -3068,7 +3068,7 @@ def q_streaming_fuzzy_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir).select(
         F.col("doc_id").cast("long").alias("doc_id"), "text"
     ).filter(
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")) >= K
+        F.size(TX.tokens(F.col("text"))) >= K
     )
     from dedup_spark.streaming.fuzzy import (
         compact_aliases,
@@ -4238,7 +4238,7 @@ def q_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = docs.select(
         "doc_id",
         F.round(TX.dup_word_fraction(t), 6).alias("dup_word_frac"),
-        F.size(F.split(F.lower(F.trim(t)), r"\s+")).alias("_n_tok"),
+        F.size(TX.tokens(t)).alias("_n_tok"),
     )
     top = (
         docs.select("doc_id", F.explode(TX.bigrams(t)).alias("bg"))

@@ -869,11 +869,7 @@ def generate_gps_corpus(n: int = 36, seed: int = 43) -> pd.DataFrame:
     are structurally valid JPEGs — malformed/non-JPEG survival is the
     test suite's job, keeping every gate boolean total. Columns:
     (image_id, bytes, fmt='jpeg', endian, has_gps)."""
-    from dedup_spark.multimodal.exif import (
-        build_exif_app1,
-        build_exif_app1_gps,
-        insert_app1,
-    )
+    from dedup_spark.multimodal.exif import build_exif_app1, insert_app1
     from dedup_spark.multimodal.jpeg import encode_jpeg
 
     rows = []
@@ -883,7 +879,7 @@ def generate_gps_corpus(n: int = 36, seed: int = 43) -> pd.DataFrame:
         jp = encode_jpeg(px, quality=99)
         big = i % 2 == 1
         if i % 3 == 0:
-            app1 = build_exif_app1_gps(
+            app1 = build_exif_app1(
                 make=f"maker-{i:04d}",
                 model=f"model-{i:04d}",
                 orientation=(i % 8) + 1,

@@ -50,19 +50,19 @@ def subword_count(text: Column) -> Column:
     )
 
 
-def _tokens(text: Column) -> Column:
-    """Lowercased whitespace tokens — the shared tokenization for marker
-    counting. One split, reused by every marker expression (Catalyst
-    CSEs the subexpression); exact token equality instead of regex
-    word-boundary matching so the semantics are trivially portable to
-    any ANSI engine (the DuckDB oracle replicates it with
-    regexp_split_to_array + list_filter)."""
+def tokens(text: Column) -> Column:
+    """Lowercased whitespace tokens — the one word tokenizer of the
+    marker counts and of the text operators. One split, reused by every
+    marker expression (Catalyst CSEs the subexpression); exact token
+    equality instead of regex word-boundary matching so the semantics
+    are trivially portable to any ANSI engine (the DuckDB oracle
+    replicates it with regexp_split_to_array + list_filter)."""
     return F.split(F.lower(F.trim(text)), r"\s+")
 
 
 def _count_matches(text: Column, word: str) -> Column:
     """Occurrences of `word` as a whole (lowercased) token."""
-    return F.size(F.filter(_tokens(text), lambda x: x == F.lit(word)))
+    return F.size(F.filter(tokens(text), lambda x: x == F.lit(word)))
 
 
 def marker_score(text: Column, lang: str) -> Column:
@@ -160,7 +160,7 @@ def dup_word_fraction(text: Column) -> Column:
     """Fraction of word tokens that are repeats of an earlier token:
     1 - |distinct tokens| / |tokens| — array-local, zero shuffle, runs
     at scan speed. 0.0 for empty/blank text."""
-    toks = _tokens(text)
+    toks = tokens(text)
     return F.when(F.trim(text) == "", F.lit(0.0)).otherwise(
         F.lit(1.0) - F.size(F.array_distinct(toks)) / F.size(toks)
     )
@@ -172,7 +172,7 @@ def bigrams(text: Column) -> Column:
     bigram count needs a per-(doc, bigram) aggregation, which is a
     combinable two-phase groupBy — an array-local O(L²) nested filter
     would melt on long web documents, the shuffle version is linear."""
-    toks = _tokens(text)
+    toks = tokens(text)
     n = F.size(toks)
     idxs = F.when(n >= 2, F.sequence(F.lit(1), n - 1)).otherwise(
         F.array().cast("array<int>")

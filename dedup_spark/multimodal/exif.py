@@ -1,4 +1,4 @@
-"""EXIF/TIFF metadata: standards-shaped writer + GENERAL parser.
+"""EXIF/TIFF metadata: standards-shaped writer + general readers.
 
 Public spec: EXIF is a TIFF 6.0 container inside a JPEG APP1 segment
 ("Exif\\0\\0" + TIFF header + IFD chain; CIPA DC-008 / TIFF 6.0). The
@@ -11,10 +11,15 @@ Same architecture as the MJPEG-in-AVI tier (multimodal/avi.py): the
 WRITER is fixed-layout (every ASCII field fixed-width, tags sorted, so
 each field's absolute byte offset in the file is a constant the writer
 asserts — the oracle slices hex at those offsets and re-decodes every
-value, both endians); the PARSER is general (walks JPEG segments to
-any APP1, honors the TIFF endian flag, walks IFD entries of any order,
-inline vs offset values, unknown tags skipped) — so the gate proves
-the general walker against independently recomputed bytes.
+value, both endians); the READERS are general and own no container
+syntax: ``jpeg.marker_segments`` (the pixel decoder's own marker walk)
+finds the first Exif APP1, and ``tiff.read_header`` / ``ifd_entries`` /
+``entry_value`` (the TIFF codec's header parse and IFD reader) honor
+the endian flag and walk entries of any order, inline vs offset values,
+unknown tags skipped — so the gate proves the shared walkers against
+independently recomputed bytes. This module holds only EXIF meaning:
+the tag ids, the scalar-unwrapping result contract and the in-place
+GPS scrub. Malformed structures raise ValueError from those walkers.
 
 Both byte orders are exercised: even image indices write
 little-endian ("II") TIFF, odd write big-endian ("MM").
@@ -33,6 +38,14 @@ from dedup_spark.multimodal.decode import (
     shape_sha,
     signature_clusters,
 )
+from dedup_spark.multimodal.jpeg import marker_segments
+from dedup_spark.multimodal.tiff import (
+    entry_value,
+    ifd_entries,
+    read_header,
+    value_field,
+    value_span,
+)
 
 # IFD0 tags (TIFF 6.0 / EXIF): fixed writer layout, sorted by tag id
 TAG_WIDTH = 0x0100  # LONG
@@ -41,18 +54,24 @@ TAG_MAKE = 0x010F  # ASCII, fixed 11 bytes incl NUL ("maker-%04d")
 TAG_MODEL = 0x0110  # ASCII, fixed 11 bytes incl NUL ("model-%04d")
 TAG_ORIENTATION = 0x0112  # SHORT
 TAG_DATETIME = 0x0132  # ASCII, fixed 20 bytes incl NUL
+# EXIF GPS lives in its own IFD pointed to by IFD0 tag 0x8825
+TAG_GPS_IFD = 0x8825  # GPSInfo IFD pointer (LONG)
+GPS_LAT_REF, GPS_LAT = 0x0001, 0x0002
+GPS_LON_REF, GPS_LON = 0x0003, 0x0004
 
 MAKE_LEN = 11
 MODEL_LEN = 11
 DT_LEN = 20
+# TIFF-relative layout (writer-asserted): header 8 B, IFD0 (count 2 B,
+# 12 B per entry, next-IFD 4 B), then make, model and datetime. Without
+# GPS, 6 entries put the values at 86; the GPS layout adds the 0x8825
+# entry (values at 98), then the GPS IFD and its 6 RATIONALs.
 N_ENTRIES = 6
-# TIFF-relative layout (writer-asserted): header 8 B, count 2 B,
-# 6 entries x 12 B, next-IFD 4 B -> value area at offset 86
-_VAL0 = 8 + 2 + N_ENTRIES * 12 + 4
-OFF_MAKE = _VAL0
-OFF_MODEL = _VAL0 + MAKE_LEN
-OFF_DT = _VAL0 + MAKE_LEN + MODEL_LEN
-TIFF_LEN = _VAL0 + MAKE_LEN + MODEL_LEN + DT_LEN
+TIFF_LEN = 8 + 2 + N_ENTRIES * 12 + 4 + MAKE_LEN + MODEL_LEN + DT_LEN  # 128
+GPS_IFD_OFF = TIFF_LEN + 12  # 140
+N_GPS_ENTRIES = 4
+GPS_RAT_OFF = GPS_IFD_OFF + 2 + N_GPS_ENTRIES * 12 + 4  # 194: lat, lon
+TIFF_LEN_G = GPS_RAT_OFF + 48  # 242
 # APP1 = FF E1 <len:2> "Exif\0\0" <tiff>; inserted right after SOI, so
 # the TIFF block starts at absolute file offset 12
 APP1_HDR = 10  # 2 marker + 2 length + 6 signature
@@ -65,37 +84,68 @@ def build_exif_app1(
     width: int,
     height: int,
     datetime: str,
+    lat_dms: tuple[int, int, int] | None = None,
+    lon_dms: tuple[int, int, int] | None = None,
+    north: bool = True,
+    east: bool = True,
     big_endian: bool = False,
 ) -> bytes:
-    """Fixed-layout EXIF APP1 segment. ASCII fields must be exactly
-    their fixed width minus the NUL; offsets are asserted so the
-    oracle's hex-slice positions are guaranteed."""
+    """Fixed-layout EXIF APP1 segment: IFD0 carries the 6 standard
+    tags. Given ``lat_dms`` and ``lon_dms`` it also carries the 0x8825
+    GPSInfo pointer to a GPS IFD holding lat/lon refs (ASCII, inline)
+    and lat/lon as 3 RATIONALs each (deg/1, min/1, sec/1 — type 5, the
+    spec encoding). ASCII fields must be exactly their fixed width
+    minus the NUL; offsets are asserted so the oracle's hex-slice
+    positions are guaranteed, both endians."""
     e = ">" if big_endian else "<"
     assert len(make) == MAKE_LEN - 1 and len(model) == MODEL_LEN - 1
     assert len(datetime) == DT_LEN - 1
+    gps = lat_dms is not None
 
     def entry(tag: int, typ: int, count: int, value: bytes) -> bytes:
         assert len(value) <= 4
         return struct.pack(e + "HHI", tag, typ, count) + value.ljust(4, b"\0")
 
-    hdr = (b"MM" if big_endian else b"II") + struct.pack(e + "HI", 42, 8)
+    def ifd(entries: list[bytes]) -> bytes:
+        return (
+            struct.pack(e + "H", len(entries))
+            + b"".join(entries)
+            + struct.pack(e + "I", 0)
+        )
+
+    val0 = 8 + 2 + (N_ENTRIES + gps) * 12 + 4
     entries = [
         entry(TAG_WIDTH, 4, 1, struct.pack(e + "I", width)),
         entry(TAG_HEIGHT, 4, 1, struct.pack(e + "I", height)),
-        entry(TAG_MAKE, 2, MAKE_LEN, struct.pack(e + "I", OFF_MAKE)),
-        entry(TAG_MODEL, 2, MODEL_LEN, struct.pack(e + "I", OFF_MODEL)),
+        entry(TAG_MAKE, 2, MAKE_LEN, struct.pack(e + "I", val0)),
+        entry(TAG_MODEL, 2, MODEL_LEN, struct.pack(e + "I", val0 + MAKE_LEN)),
         entry(TAG_ORIENTATION, 3, 1, struct.pack(e + "H", orientation) + b"\0\0"),
-        entry(TAG_DATETIME, 2, DT_LEN, struct.pack(e + "I", OFF_DT)),
+        entry(
+            TAG_DATETIME, 2, DT_LEN,
+            struct.pack(e + "I", val0 + MAKE_LEN + MODEL_LEN),
+        ),
     ]
-    ifd = struct.pack(e + "H", N_ENTRIES) + b"".join(entries) + struct.pack(
-        e + "I", 0
-    )
+    gps_block = b""
+    if gps:
+        entries.append(entry(TAG_GPS_IFD, 4, 1, struct.pack(e + "I", GPS_IFD_OFF)))
+        gps_block = ifd([
+            entry(GPS_LAT_REF, 2, 2, (b"N\0" if north else b"S\0")),
+            entry(GPS_LAT, 5, 3, struct.pack(e + "I", GPS_RAT_OFF)),
+            entry(GPS_LON_REF, 2, 2, (b"E\0" if east else b"W\0")),
+            entry(GPS_LON, 5, 3, struct.pack(e + "I", GPS_RAT_OFF + 24)),
+        ]) + b"".join(
+            struct.pack(e + "II", v, 1) for v in (*lat_dms, *lon_dms)
+        )
+    hdr = (b"MM" if big_endian else b"II") + struct.pack(e + "HI", 42, 8)
     vals = (
         make.encode() + b"\0" + model.encode() + b"\0" + datetime.encode() + b"\0"
     )
-    tiff = hdr + ifd + vals
-    assert len(tiff) == TIFF_LEN
-    assert tiff.index(make.encode()) == OFF_MAKE
+    tiff = hdr + ifd(entries) + vals + gps_block
+    assert len(tiff) == (TIFF_LEN_G if gps else TIFF_LEN)
+    assert tiff.index(make.encode()) == val0
+    assert not gps or tiff[GPS_IFD_OFF : GPS_IFD_OFF + 2] == struct.pack(
+        e + "H", N_GPS_ENTRIES
+    )
     payload = b"Exif\0\0" + tiff
     return b"\xff\xe1" + struct.pack(">H", len(payload) + 2) + payload
 
@@ -107,82 +157,116 @@ def insert_app1(jpeg: bytes, app1: bytes) -> bytes:
     return jpeg[:2] + app1 + jpeg[2:]
 
 
-_TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8}  # 5 = RATIONAL (2 LONGs)
+def _exif_tiff(jpeg: bytes) -> tuple[int, bytes, str, int] | None:
+    """(file offset, bytes, byte-order prefix, IFD0 offset) of the TIFF
+    block in the first Exif APP1 the marker walk reaches, or None."""
+    for marker, start, end in marker_segments(jpeg):
+        if marker == 0xE1 and jpeg[start : start + 6] == b"Exif\0\0":
+            tiff = jpeg[start + 6 : end]
+            return start + 6, tiff, *read_header(tiff)
+    return None
+
+
+def _tags(tiff: bytes, e: str, at: int) -> dict:
+    """{tag: value} of the IFD at ``at``: unknown types skipped, and a
+    one-count numeric value unwrapped to its scalar."""
+    out: dict[int, object] = {}
+    for tag, typ, count, off in ifd_entries(tiff, e, at):
+        v = entry_value(tiff, e, typ, count, off)
+        if v is not None:
+            out[tag] = v[0] if count == 1 and typ != 2 else v
+    return out
+
+
+def _gps_pointers(tiff, e: str, ifd0: int) -> list[int]:
+    """The GPS IFD offset of every 0x8825 entry in IFD0 — a malformed
+    IFD0 may carry more than one."""
+    return [
+        value_field(tiff, e, off)
+        for tag, _, _, off in ifd_entries(tiff, e, ifd0)
+        if tag == TAG_GPS_IFD
+    ]
 
 
 def parse_exif(jpeg: bytes) -> dict | None:
-    """GENERAL parser: JPEG segment walk → first Exif APP1 → TIFF IFD0
-    walk (either endian, entries in any order, inline or offset
-    values, unknown tags skipped). Returns {tag_id: value} or None if
-    no Exif APP1 exists. Malformed structures raise ValueError —
-    including truncated buffers, which struct/indexing would otherwise
-    surface as struct.error/IndexError and escape callers' except
-    clauses (the 10^12-row survive-corruption invariant)."""
-    try:
-        return _parse_exif_inner(jpeg)
-    except (struct.error, IndexError) as exc:
-        raise ValueError(f"malformed EXIF structure: {exc}") from exc
+    """GENERAL parser: first Exif APP1 → TIFF IFD0 (either endian,
+    entries in any order, inline or offset values, unknown tags
+    skipped). Returns {tag_id: value} or None if no Exif APP1 exists.
+    Malformed structures raise ValueError — never struct.error or
+    IndexError, which would escape callers' except clauses (the
+    10^12-row survive-corruption invariant)."""
+    found = _exif_tiff(jpeg)
+    return None if found is None else _tags(*found[1:])
 
 
-def _parse_exif_inner(jpeg: bytes) -> dict | None:
-    if jpeg[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (no SOI)")
-    i, n = 2, len(jpeg)
-    tiff = None
-    while i + 4 <= n:
-        if jpeg[i] != 0xFF:
-            raise ValueError("marker expected")
-        while i + 1 < n and jpeg[i + 1] == 0xFF:  # fill bytes (T.81 B.1.1.2)
-            i += 1
-        marker = jpeg[i + 1]
-        if marker == 0xDA or marker == 0xD9:  # scan data / EOI: stop
-            break
-        seg_len = struct.unpack(">H", jpeg[i + 2 : i + 4])[0]
-        seg = jpeg[i + 4 : i + 2 + seg_len]
-        if marker == 0xE1 and seg[:6] == b"Exif\0\0":
-            tiff = seg[6:]
-            break
-        i += 2 + seg_len
-    if tiff is None:
+def parse_gps(jpeg: bytes) -> dict | None:
+    """The GPS sub-IFD (pointer tag 0x8825; the last one wins) read
+    like IFD0. Returns {gps_tag: value} or None when no Exif / no GPS
+    pointer. Test + audit surface — the scale path never needs decoded
+    coordinates, only their removal. Malformed structures raise
+    ValueError, as in parse_exif."""
+    found = _exif_tiff(jpeg)
+    if found is None:
         return None
-    order = tiff[:2]
-    if order == b"II":
-        e = "<"
-    elif order == b"MM":
-        e = ">"
-    else:
-        raise ValueError("bad TIFF byte order")
-    magic, ifd_off = struct.unpack(e + "HI", tiff[2:8])
-    if magic != 42:
-        raise ValueError("bad TIFF magic")
-    count = struct.unpack(e + "H", tiff[ifd_off : ifd_off + 2])[0]
-    out: dict[int, object] = {}
-    for k in range(count):
-        off = ifd_off + 2 + 12 * k
-        tag, typ, cnt = struct.unpack(e + "HHI", tiff[off : off + 8])
-        if typ not in _TYPE_SIZE:
-            continue  # unknown type: skip (general-walker contract)
-        nbytes = _TYPE_SIZE[typ] * cnt
-        if nbytes <= 4:
-            raw = tiff[off + 8 : off + 8 + nbytes]
-        else:
-            voff = struct.unpack(e + "I", tiff[off + 8 : off + 12])[0]
-            raw = tiff[voff : voff + nbytes]
-        if typ == 2:  # ASCII, NUL-terminated
-            out[tag] = raw.split(b"\0")[0].decode("ascii", "replace")
-        elif typ == 3:
-            vals = struct.unpack(e + f"{cnt}H", raw)
-            out[tag] = vals[0] if cnt == 1 else list(vals)
-        elif typ == 4:
-            vals = struct.unpack(e + f"{cnt}I", raw)
-            out[tag] = vals[0] if cnt == 1 else list(vals)
-        elif typ == 5:  # RATIONAL: (numerator, denominator) pairs
-            vals = struct.unpack(e + f"{2 * cnt}I", raw)
-            pairs = [(vals[2 * j], vals[2 * j + 1]) for j in range(cnt)]
-            out[tag] = pairs[0] if cnt == 1 else pairs
-        else:  # BYTE
-            out[tag] = raw[0] if cnt == 1 else list(raw)
-    return out
+    _, tiff, e, ifd0 = found
+    gps = _gps_pointers(tiff, e, ifd0)
+    return _tags(tiff, e, gps[-1]) if gps else None
+
+
+def _zero(buf: bytearray, at: int, n: int) -> None:
+    """Zero ``buf[at:at + n]``, clipped to ``buf``."""
+    buf[at : at + n] = bytes(min(n, max(0, len(buf) - at)))
+
+
+def scrub_gps(jpeg: bytes) -> tuple[bytes, bool]:
+    """Length-preserving in-place GPS removal: drop the 0x8825 entry
+    from IFD0 (remaining entries shift up 12 bytes; the freed 12 bytes
+    are zero-padded so every absolute value offset stays valid) and
+    zero the GPS IFD block plus every external value region its
+    entries reference — without moving any byte that other entries'
+    value offsets depend on (TIFF offsets are absolute within the TIFF
+    block). Returns (cleaned_bytes, had_gps); JPEGs without Exif or
+    without GPS come back unchanged. Malformed structures raise
+    ValueError (caller maps to scrub_ok=false)."""
+    found = _exif_tiff(jpeg)
+    if found is None:
+        return jpeg, False
+    t0, tiff, e, ifd0 = found
+    tiff = bytearray(tiff)
+    # a malformed IFD0 may carry the pointer MORE than once: strip every
+    # occurrence, zero every target
+    gps_offs = _gps_pointers(tiff, e, ifd0)
+    if not gps_offs:
+        return jpeg, False
+    kept = [
+        tiff[off : off + 12]
+        for tag, _, _, off in ifd_entries(tiff, e, ifd0)
+        if tag != TAG_GPS_IFD
+    ]
+    count = len(kept) + len(gps_offs)
+    block_len = 2 + count * 12 + 4
+    new_block = (
+        struct.pack(e + "H", len(kept))
+        + b"".join(kept)
+        + tiff[ifd0 + block_len - 4 : ifd0 + block_len]  # next-IFD offset
+        + bytes(12 * len(gps_offs))
+    )
+    if len(new_block) != block_len:
+        raise ValueError("IFD0 rebuild length drifted")
+    tiff[ifd0 : ifd0 + block_len] = new_block
+    for gps_off in gps_offs:
+        if gps_off >= len(tiff):
+            continue  # pointer past the TIFF block: nothing to zero
+        end = gps_off + 2  # past the entry count, then past each entry
+        for _, typ, cnt, off in ifd_entries(tiff, e, gps_off):
+            at, nbytes = value_span(tiff, e, typ, cnt, off)
+            if nbytes > 4:
+                _zero(tiff, at, nbytes)
+            end = off + 12
+        _zero(tiff, gps_off, end + 4 - gps_off)
+    out = jpeg[:t0] + bytes(tiff) + jpeg[t0 + len(tiff) :]
+    assert len(out) == len(jpeg)
+    return out, True
 
 
 def normalize_orientation(px, orientation: int):
@@ -306,196 +390,6 @@ def orientation_normalized_clusters(
     return signature_clusters(sig, "norm_sha")
 
 
-# --- GPS IFD: writer variant + privacy scrub -------------------------
-#
-# EXIF GPS lives in its own IFD pointed to by IFD0 tag 0x8825
-# (GPSInfo, LONG). The privacy obligation on a web corpus is to STRIP
-# it before training while leaving every other field intact — and to
-# do so WITHOUT moving any byte that other entries' value offsets
-# depend on (TIFF offsets are absolute within the TIFF block, so the
-# scrub must be length-preserving in place, not a rewrite).
-
-TAG_GPS_IFD = 0x8825  # GPSInfo IFD pointer (LONG)
-GPS_LAT_REF, GPS_LAT = 0x0001, 0x0002
-GPS_LON_REF, GPS_LON = 0x0003, 0x0004
-
-N_ENTRIES_G = 7  # the 6 IFD0 tags + the GPSInfo pointer
-_VAL0G = 8 + 2 + N_ENTRIES_G * 12 + 4  # 98
-OFF_MAKE_G = _VAL0G
-OFF_MODEL_G = _VAL0G + MAKE_LEN
-OFF_DT_G = _VAL0G + MAKE_LEN + MODEL_LEN
-GPS_IFD_OFF = _VAL0G + MAKE_LEN + MODEL_LEN + DT_LEN  # 140
-N_GPS_ENTRIES = 4
-GPS_IFD_LEN = 2 + N_GPS_ENTRIES * 12 + 4  # 54
-GPS_RAT_OFF = GPS_IFD_OFF + GPS_IFD_LEN  # 194: lat 3 rationals, lon 3
-TIFF_LEN_G = GPS_RAT_OFF + 48  # 242
-
-
-def build_exif_app1_gps(
-    make: str,
-    model: str,
-    orientation: int,
-    width: int,
-    height: int,
-    datetime: str,
-    lat_dms: tuple[int, int, int],
-    lon_dms: tuple[int, int, int],
-    north: bool = True,
-    east: bool = True,
-    big_endian: bool = False,
-) -> bytes:
-    """Fixed-layout EXIF APP1 WITH a GPS IFD: IFD0 carries the 6
-    standard tags + the 0x8825 GPSInfo pointer; the GPS IFD carries
-    lat/lon refs (ASCII, inline) and lat/lon as 3 RATIONALs each
-    (deg/1, min/1, sec/1 — type 5, the spec encoding). All offsets
-    writer-asserted, both endians."""
-    e = ">" if big_endian else "<"
-    assert len(make) == MAKE_LEN - 1 and len(model) == MODEL_LEN - 1
-    assert len(datetime) == DT_LEN - 1
-
-    def entry(tag: int, typ: int, count: int, value: bytes) -> bytes:
-        assert len(value) <= 4
-        return struct.pack(e + "HHI", tag, typ, count) + value.ljust(4, b"\0")
-
-    hdr = (b"MM" if big_endian else b"II") + struct.pack(e + "HI", 42, 8)
-    entries = [
-        entry(TAG_WIDTH, 4, 1, struct.pack(e + "I", width)),
-        entry(TAG_HEIGHT, 4, 1, struct.pack(e + "I", height)),
-        entry(TAG_MAKE, 2, MAKE_LEN, struct.pack(e + "I", OFF_MAKE_G)),
-        entry(TAG_MODEL, 2, MODEL_LEN, struct.pack(e + "I", OFF_MODEL_G)),
-        entry(TAG_ORIENTATION, 3, 1, struct.pack(e + "H", orientation) + b"\0\0"),
-        entry(TAG_DATETIME, 2, DT_LEN, struct.pack(e + "I", OFF_DT_G)),
-        entry(TAG_GPS_IFD, 4, 1, struct.pack(e + "I", GPS_IFD_OFF)),
-    ]
-    ifd = (
-        struct.pack(e + "H", N_ENTRIES_G)
-        + b"".join(entries)
-        + struct.pack(e + "I", 0)
-    )
-    vals = (
-        make.encode() + b"\0" + model.encode() + b"\0" + datetime.encode() + b"\0"
-    )
-    gps_entries = [
-        entry(GPS_LAT_REF, 2, 2, (b"N\0" if north else b"S\0")),
-        entry(GPS_LAT, 5, 3, struct.pack(e + "I", GPS_RAT_OFF)),
-        entry(GPS_LON_REF, 2, 2, (b"E\0" if east else b"W\0")),
-        entry(GPS_LON, 5, 3, struct.pack(e + "I", GPS_RAT_OFF + 24)),
-    ]
-    gps_ifd = (
-        struct.pack(e + "H", N_GPS_ENTRIES)
-        + b"".join(gps_entries)
-        + struct.pack(e + "I", 0)
-    )
-    rats = b"".join(
-        struct.pack(e + "II", v, 1) for v in (*lat_dms, *lon_dms)
-    )
-    tiff = hdr + ifd + vals + gps_ifd + rats
-    assert len(tiff) == TIFF_LEN_G
-    assert tiff.index(make.encode()) == OFF_MAKE_G
-    assert tiff[GPS_IFD_OFF : GPS_IFD_OFF + 2] == struct.pack(
-        e + "H", N_GPS_ENTRIES
-    )
-    payload = b"Exif\0\0" + tiff
-    return b"\xff\xe1" + struct.pack(">H", len(payload) + 2) + payload
-
-
-def _find_exif_app1(jpeg: bytes) -> tuple[int, int] | None:
-    """(tiff_abs_start, tiff_len) of the first Exif APP1, or None.
-    Same segment walk as the parser; malformed markers raise."""
-    if jpeg[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (no SOI)")
-    i, n = 2, len(jpeg)
-    while i + 4 <= n:
-        if jpeg[i] != 0xFF:
-            raise ValueError("marker expected")
-        while i + 1 < n and jpeg[i + 1] == 0xFF:
-            i += 1
-        marker = jpeg[i + 1]
-        if marker == 0xDA or marker == 0xD9:
-            return None
-        seg_len = struct.unpack(">H", jpeg[i + 2 : i + 4])[0]
-        if marker == 0xE1 and jpeg[i + 4 : i + 10] == b"Exif\0\0":
-            return i + 10, seg_len - 2 - 6
-        i += 2 + seg_len
-    return None
-
-
-def scrub_gps(jpeg: bytes) -> tuple[bytes, bool]:
-    """Length-preserving in-place GPS removal: drop the 0x8825 entry
-    from IFD0 (remaining entries shift up 12 bytes; the freed 12 bytes
-    are zero-padded so every absolute value offset stays valid) and
-    zero the GPS IFD block plus every external value region its
-    entries reference. Returns (cleaned_bytes, had_gps); JPEGs without
-    Exif or without GPS come back unchanged. Malformed structures
-    raise ValueError (caller maps to scrub_ok=false)."""
-    try:
-        loc = _find_exif_app1(jpeg)
-    except (struct.error, IndexError) as exc:
-        raise ValueError(f"malformed JPEG structure: {exc}") from exc
-    if loc is None:
-        return jpeg, False
-    t0, tlen = loc
-    tiff = bytearray(jpeg[t0 : t0 + tlen])
-    try:
-        order = bytes(tiff[:2])
-        e = {b"II": "<", b"MM": ">"}.get(order)
-        if e is None:
-            raise ValueError("bad TIFF byte order")
-        magic, ifd_off = struct.unpack(e + "HI", tiff[2:8])
-        if magic != 42:
-            raise ValueError("bad TIFF magic")
-        count = struct.unpack(e + "H", tiff[ifd_off : ifd_off + 2])[0]
-        kept, gps_offs = [], []
-        for k in range(count):
-            off = ifd_off + 2 + 12 * k
-            ent = bytes(tiff[off : off + 12])
-            tag = struct.unpack(e + "H", ent[:2])[0]
-            if tag == TAG_GPS_IFD:
-                # a malformed IFD0 may carry the pointer MORE than
-                # once: strip every occurrence, zero every target
-                gps_offs.append(struct.unpack(e + "I", ent[8:12])[0])
-            else:
-                kept.append(ent)
-        if not gps_offs:
-            return jpeg, False
-        block_len = 2 + count * 12 + 4
-        nxt = bytes(
-            tiff[ifd_off + 2 + count * 12 : ifd_off + 2 + count * 12 + 4]
-        )
-        new_block = (
-            struct.pack(e + "H", len(kept))
-            + b"".join(kept)
-            + nxt
-            + b"\0" * (12 * (count - len(kept)))
-        )
-        if len(new_block) != block_len:
-            raise ValueError("IFD0 rebuild length drifted")
-        tiff[ifd_off : ifd_off + block_len] = new_block
-        # zero every GPS IFD and its external values
-        for gps_off in gps_offs:
-            if gps_off >= len(tiff):
-                continue  # pointer past the TIFF block: nothing to zero
-            n_gps = struct.unpack(e + "H", tiff[gps_off : gps_off + 2])[0]
-            for k in range(n_gps):
-                off = gps_off + 2 + 12 * k
-                typ, cnt = struct.unpack(e + "HI", tiff[off + 2 : off + 8])
-                nbytes = _TYPE_SIZE.get(typ, 0) * cnt
-                if nbytes > 4:
-                    voff = struct.unpack(e + "I", tiff[off + 8 : off + 12])[0]
-                    tiff[voff : voff + nbytes] = b"\0" * min(
-                        nbytes, max(0, len(tiff) - voff)
-                    )
-            gps_block = 2 + n_gps * 12 + 4
-            tiff[gps_off : gps_off + gps_block] = b"\0" * min(
-                gps_block, max(0, len(tiff) - gps_off)
-            )
-    except (struct.error, IndexError) as exc:
-        raise ValueError(f"malformed EXIF structure: {exc}") from exc
-    out = jpeg[:t0] + bytes(tiff) + jpeg[t0 + tlen :]
-    assert len(out) == len(jpeg)
-    return out, True
-
-
 def gps_scrub_report(
     df: DataFrame,
     id_col: str = "image_id",
@@ -557,57 +451,3 @@ def gps_scrub_report(
             "orientation int, len_preserved boolean"
         ),
     )
-
-
-def parse_gps(jpeg: bytes) -> dict | None:
-    """Walk the GPS sub-IFD (pointer tag 0x8825) with the same general
-    entry reader as IFD0. Returns {gps_tag: value} or None when no
-    Exif / no GPS pointer. Test + audit surface — the scale path never
-    needs decoded coordinates, only their removal. Malformed structures
-    raise ValueError, as in parse_exif."""
-    try:
-        return _parse_gps_inner(jpeg)
-    except (struct.error, IndexError) as exc:
-        raise ValueError(f"malformed GPS IFD: {exc}") from exc
-
-
-def _parse_gps_inner(jpeg: bytes) -> dict | None:
-    loc = _find_exif_app1(jpeg)
-    if loc is None:
-        return None
-    t0, tlen = loc
-    tiff = jpeg[t0 : t0 + tlen]
-    order = tiff[:2]
-    e = {b"II": "<", b"MM": ">"}.get(order)
-    if e is None:
-        raise ValueError("bad TIFF byte order")
-    _, ifd_off = struct.unpack(e + "HI", tiff[2:8])
-    count = struct.unpack(e + "H", tiff[ifd_off : ifd_off + 2])[0]
-    gps_off = None
-    for k in range(count):
-        off = ifd_off + 2 + 12 * k
-        tag = struct.unpack(e + "H", tiff[off : off + 2])[0]
-        if tag == TAG_GPS_IFD:
-            gps_off = struct.unpack(e + "I", tiff[off + 8 : off + 12])[0]
-    if gps_off is None:
-        return None
-    n = struct.unpack(e + "H", tiff[gps_off : gps_off + 2])[0]
-    out: dict[int, object] = {}
-    for k in range(n):
-        off = gps_off + 2 + 12 * k
-        tag, typ, cnt = struct.unpack(e + "HHI", tiff[off : off + 8])
-        if typ not in _TYPE_SIZE:
-            continue
-        nbytes = _TYPE_SIZE[typ] * cnt
-        if nbytes <= 4:
-            raw = tiff[off + 8 : off + 8 + nbytes]
-        else:
-            voff = struct.unpack(e + "I", tiff[off + 8 : off + 12])[0]
-            raw = tiff[voff : voff + nbytes]
-        if typ == 2:
-            out[tag] = raw.split(b"\0")[0].decode("ascii", "replace")
-        elif typ == 5:
-            vals = struct.unpack(e + f"{2 * cnt}I", raw)
-            pairs = [(vals[2 * j], vals[2 * j + 1]) for j in range(cnt)]
-            out[tag] = pairs[0] if cnt == 1 else pairs
-    return out

@@ -27,6 +27,11 @@ ISO 10918-1) from the spec:
     65,536-entry lookahead table on those 16 bits (built vectorized,
     cached by its BITS/HUFFVAL bytes); where a code and its value bits
     fit in 16, one index yields the whole coefficient.
+  * **marker walk**: `marker_segments` is the one walk over the
+    marker-segment syntax (fill bytes, length-less TEM/RSTn, ValueError
+    on a truncated header). The decoder, the DQT read behind
+    `estimate_quality` and the EXIF/GPS readers in exif.py all iterate
+    it, so every reader of a JPEG sees the same segments.
 
 Grayscale (h, w) arrays encode as single-component JPEGs; decode always
 returns (h, w, 3) RGB like the other codecs here.
@@ -40,6 +45,7 @@ import itertools
 import re
 import struct
 from array import array
+from collections.abc import Iterator
 
 import numpy as np
 
@@ -319,6 +325,44 @@ def _lookahead(ac: bool, spec: bytes) -> tuple[tuple[int, int, int], ...]:
     ))
 
 
+def marker_segments(data: bytes) -> Iterator[tuple[int, int, int]]:
+    """The one JPEG marker-segment walk: yields ``(marker, start, end)``
+    per segment up to and including SOS, where ``data[start:end]`` is
+    the segment's payload (past its two length bytes; ``end`` may run
+    past a truncated stream) and the scan data begins at ``end``.
+
+    0xFF fill bytes before a marker are skipped (T.81 B.1.1.2), as are
+    TEM (01) and RSTn (D0-D7), which carry no length (B.1.1.3). The walk
+    ends at SOS, at EOI or at the end of the data. No SOI, a byte where
+    a marker belongs, a truncated marker header or a length below 2
+    raise ValueError."""
+    if data[:2] != b"\xff\xd8":
+        raise ValueError("not a JPEG (no SOI)")
+    i, n = 2, len(data)
+    while i < n:
+        if data[i] != 0xFF:
+            raise ValueError("marker expected")
+        while i + 1 < n and data[i + 1] == 0xFF:
+            i += 1
+        if i + 2 > n:
+            raise ValueError("truncated marker header")
+        marker = data[i + 1]
+        i += 2
+        if marker == 0xD9:
+            return
+        if marker == 0x01 or 0xD0 <= marker <= 0xD7:
+            continue
+        if i + 2 > n:
+            raise ValueError("truncated marker header")
+        seg_len = (data[i] << 8) | data[i + 1]
+        if seg_len < 2:
+            raise ValueError("bad segment length")
+        yield marker, i + 2, i + seg_len
+        if marker == 0xDA:
+            return
+        i += seg_len
+
+
 def decode_jpeg(data: bytes) -> np.ndarray:
     """Baseline JPEG bytes → (h, w, 3) uint8 RGB. Raises ValueError on
     anything outside baseline / 8-bit / 1:1-sampling scope, and on
@@ -330,28 +374,12 @@ def decode_jpeg(data: bytes) -> np.ndarray:
 
 
 def _decode_jpeg(data: bytes) -> np.ndarray:
-    if len(data) < 4 or data[:2] != b"\xff\xd8":
-        raise ValueError("not a JPEG (no SOI)")
     qts: dict[int, np.ndarray] = {}
     huff: dict[tuple[int, int], tuple] = {}  # (class, id) -> _lookahead table
     frame = None
     restart_interval = 0
-    i = 2
-    n = len(data)
-    while i < n:
-        if data[i] != 0xFF:
-            raise ValueError("marker expected")
-        while i + 1 < n and data[i + 1] == 0xFF:  # fill bytes (T.81 B.1.1.2)
-            i += 1
-        marker = data[i + 1]
-        i += 2
-        if marker == 0xD9:  # EOI without scan
-            raise ValueError("no scan data")
-        if marker in (0x01,) or 0xD0 <= marker <= 0xD7:
-            continue
-        seg_len = struct.unpack(">H", data[i : i + 2])[0]
-        seg = data[i + 2 : i + seg_len]
-        i += seg_len
+    for marker, start, end in marker_segments(data):
+        seg = data[start:end]
         if marker == 0xDB:  # DQT
             j = 0
             while j < len(seg):
@@ -409,7 +437,7 @@ def _decode_jpeg(data: bytes) -> np.ndarray:
                     raise ValueError("scan names an undefined component or table")
                 scan.append((comp, td, ta))
             return _decode_scan(
-                data[i:], frame, scan, qts, huff, restart_interval
+                data[end:], frame, scan, qts, huff, restart_interval
             )
     raise ValueError("no SOS marker")
 
@@ -553,39 +581,26 @@ def _decode_scan(entropy, frame, scan, qts, huff, restart_interval):
 
 
 def find_luma_qt(data: bytes) -> np.ndarray | None:
-    """General segment walk to the first DQT with table id 0; returns
-    the 64 zigzag-order step sizes, or None if absent / not a JPEG.
-    8-bit tables only (pq=0) — what baseline JFIF uses. Spec-legal
-    0xFF fill bytes before a marker are skipped. ValueError when the
-    stream ends inside a marker's header."""
+    """The 64 zigzag-order step sizes of the first DQT table with id 0,
+    found by `marker_segments`; None if absent or not a JPEG (no SOI).
+    8-bit tables only (pq=0) — what baseline JFIF uses. A malformed
+    marker stream before the table raises ValueError."""
     if data[:2] != b"\xff\xd8":
         return None
-    i, n = 2, len(data)
-    while i + 4 <= n:
-        if data[i] != 0xFF:
-            return None
-        while i + 1 < n and data[i + 1] == 0xFF:  # fill bytes (T.81 B.1.1.2)
-            i += 1
-        if i + 4 > n:
-            raise ValueError("JPEG: truncated marker segment header")
-        marker = data[i + 1]
-        if marker in (0xDA, 0xD9):
-            return None
-        seg_len = struct.unpack(">H", data[i + 2 : i + 4])[0]
-        seg = data[i + 4 : i + 2 + seg_len]
-        if marker == 0xDB:
-            j = 0
-            while j < len(seg):
-                pq, tq = seg[j] >> 4, seg[j] & 0x0F
-                width = 128 if pq else 64
-                if tq == 0 and pq == 0:
-                    if len(seg) < j + 1 + 64:
-                        return None
-                    return np.frombuffer(
-                        seg[j + 1 : j + 65], dtype=np.uint8
-                    ).astype(np.int64)
-                j += 1 + width
-        i += 2 + seg_len
+    for marker, start, end in marker_segments(data):
+        if marker != 0xDB:
+            continue
+        seg = data[start:end]
+        j = 0
+        while j < len(seg):
+            pq, tq = seg[j] >> 4, seg[j] & 0x0F
+            if tq == 0 and pq == 0:
+                if len(seg) < j + 1 + 64:
+                    return None
+                return np.frombuffer(
+                    seg[j + 1 : j + 65], dtype=np.uint8
+                ).astype(np.int64)
+            j += 1 + (128 if pq else 64)
     return None
 
 

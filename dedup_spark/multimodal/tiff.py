@@ -2,8 +2,8 @@
 
 Second compressed image codec alongside webp.py's VP8L, implemented from
 the public Adobe "TIFF Revision 6.0" specification: the II/MM header,
-general IFD walk (inline vs out-of-line values, SHORT/LONG types, tag
-defaults), multi-strip RGB layout, LZW compression (spec section 13:
+general IFD walk (inline vs out-of-line values, tag defaults),
+multi-strip RGB layout, LZW compression (spec section 13:
 ClearCode 256 / EOI 257, MSB-first code packing, the 9→12-bit "early
 change" width schedule at 511/1023/2047, table reset at 4094) and the
 horizontal-differencing predictor (tag 317 = 2).
@@ -17,6 +17,12 @@ Scope, documented:
     Compression 1 (none) or 5 (LZW), Predictor 1 or 2 — anything else
     raises ValueError (unreadable-row skip semantics, reference
     denizariyan/dedup src/hasher.rs:57-60, via decode._decode_any);
+  * the container reader is shared: `read_header` (byte order, magic
+    42, IFD0 offset), `ifd_entries` (one walk over an IFD's entries)
+    and `entry_value` (BYTE, ASCII, SHORT, LONG and RATIONAL through
+    one type table) serve `decode_tiff` and the EXIF/GPS readers in
+    exif.py alike, whose TIFF block sits inside a JPEG APP1; truncated
+    structures raise ValueError there, never struct.error;
   * self-referential caveat (same as webp.py): the container ships no
     independent TIFF reader, so the roundtrip alone can't prove spec
     conformance. The cross-format gate compensates: the SAME pixels
@@ -37,6 +43,7 @@ reached" rule), which the fill test exercises.
 from __future__ import annotations
 
 import struct
+from collections.abc import Iterator
 
 import numpy as np
 
@@ -58,7 +65,9 @@ T_ROWS_PER_STRIP = 278
 T_STRIP_COUNTS = 279
 T_PREDICTOR = 317
 
-_TYPE_SIZE = {1: 1, 3: 2, 4: 4}  # BYTE, SHORT, LONG
+# bytes per value: BYTE, ASCII, SHORT, LONG, RATIONAL (two LONGs)
+_TYPE_SIZE = {1: 1, 2: 1, 3: 2, 4: 4, 5: 8}
+_TYPE_FMT = {1: "B", 3: "H", 4: "I"}
 ROWS_PER_STRIP = 16
 
 
@@ -225,18 +234,16 @@ def encode_tiff(px: np.ndarray, endian: str = "II") -> bytes:
     def oversize(vals: list[int], typ: int) -> int:
         """Append vals to the extra area, return their absolute offset."""
         at = off + len(extra)
-        fmt = {3: "H", 4: "I"}[typ]
-        extra.extend(struct.pack(f"{e}{len(vals)}{fmt}", *vals))
+        extra.extend(struct.pack(f"{e}{len(vals)}{_TYPE_FMT[typ]}", *vals))
         return at
 
-    n = len(strips)
     entries: list[tuple[int, int, int, bytes]] = []
 
     def add(tag: int, typ: int, vals: list[int]) -> None:
         size = _TYPE_SIZE[typ] * len(vals)
         if size <= 4:
-            fmt = {3: "H", 4: "I"}[typ]
-            raw = struct.pack(f"{e}{len(vals)}{fmt}", *vals).ljust(4, b"\0")
+            raw = struct.pack(f"{e}{len(vals)}{_TYPE_FMT[typ]}", *vals)
+            raw = raw.ljust(4, b"\0")
         else:
             raw = struct.pack(f"{e}I", oversize(vals, typ))
         entries.append((tag, typ, len(vals), raw))
@@ -265,48 +272,81 @@ def encode_tiff(px: np.ndarray, endian: str = "II") -> bytes:
 # ------------------------------------------------------------- decode ---
 
 
-def _read_ifd(buf: bytes, e: str, at: int) -> dict[int, list[int]]:
-    """General IFD walk: {tag: [values...]} for BYTE/SHORT/LONG entries
-    (other types and empty entries are skipped — this family doesn't
-    use them)."""
-    (n,) = struct.unpack_from(f"{e}H", buf, at)
-    tags: dict[int, list[int]] = {}
-    for i in range(n):
-        tag, typ, count = struct.unpack_from(f"{e}HHI", buf, at + 2 + 12 * i)
-        if typ not in _TYPE_SIZE or count == 0:
-            continue
-        size = _TYPE_SIZE[typ] * count
-        vat = at + 2 + 12 * i + 8
-        if size > 4:
-            (vat,) = struct.unpack_from(f"{e}I", buf, vat)
-        fmt = {1: "B", 3: "H", 4: "I"}[typ]
-        tags[tag] = list(struct.unpack_from(f"{e}{count}{fmt}", buf, vat))
-    return tags
+def _unpack(fmt: str, buf, at: int) -> tuple:
+    try:
+        return struct.unpack_from(fmt, buf, at)
+    except struct.error as exc:
+        raise ValueError(f"tiff: truncated structure: {exc}") from exc
+
+
+def read_header(buf) -> tuple[str, int]:
+    """The 8-byte TIFF header → (struct byte-order prefix, IFD0 offset).
+    ValueError on a short header, a bad byte-order mark or magic."""
+    if len(buf) < 8:
+        raise ValueError("tiff: short header")
+    e = {b"II": "<", b"MM": ">"}.get(bytes(buf[:2]))
+    if e is None:
+        raise ValueError("tiff: bad byte-order mark")
+    magic, ifd_off = _unpack(f"{e}HI", buf, 2)
+    if magic != 42:
+        raise ValueError("tiff: bad magic")
+    return e, ifd_off
+
+
+def ifd_entries(buf, e: str, at: int) -> Iterator[tuple[int, int, int, int]]:
+    """The one IFD walk: ``(tag, type, count, entry offset)`` for every
+    entry of the IFD at ``at``, in stored order, unknown types included.
+    Reads lazily, so a caller that rewrites ``buf`` mid-walk reads its
+    own writes. ValueError when the IFD runs past ``buf``."""
+    (n,) = _unpack(f"{e}H", buf, at)
+    for k in range(n):
+        off = at + 2 + 12 * k
+        yield *_unpack(f"{e}HHI", buf, off), off
+
+
+def value_field(buf, e: str, off: int) -> int:
+    """The 4-byte value-or-offset field of the entry at ``off``, as a
+    LONG."""
+    return _unpack(f"{e}I", buf, off + 8)[0]
+
+
+def value_span(buf, e: str, typ: int, count: int, off: int) -> tuple[int, int]:
+    """(offset, byte length) of an entry's value: inline in the entry
+    when it fits in 4 bytes, else at the offset its field holds. An
+    unknown type has length 0."""
+    nbytes = _TYPE_SIZE.get(typ, 0) * count
+    return (off + 8 if nbytes <= 4 else value_field(buf, e, off)), nbytes
+
+
+def entry_value(buf, e: str, typ: int, count: int, off: int) -> str | list | None:
+    """An entry's value: ASCII → the text before its first NUL (a value
+    cut short by the end of ``buf`` reads what is there); BYTE/SHORT/
+    LONG → a list of ints; RATIONAL → a list of (numerator,
+    denominator); any other type → None. ValueError when a numeric
+    value runs past ``buf``."""
+    if typ not in _TYPE_SIZE:
+        return None
+    at, nbytes = value_span(buf, e, typ, count, off)
+    if typ == 2:
+        text = bytes(buf[at : at + nbytes]).split(b"\0")[0]
+        return text.decode("ascii", "replace")
+    if typ == 5:
+        vals = _unpack(f"{e}{2 * count}I", buf, at)
+        return list(zip(vals[::2], vals[1::2]))
+    return list(_unpack(f"{e}{count}{_TYPE_FMT[typ]}", buf, at))
 
 
 def decode_tiff(data: bytes) -> np.ndarray:
     """Decode baseline-RGB TIFF (either endian, strips, LZW or
     uncompressed, predictor 1 or 2) to a uint8 HxWx3 array; ValueError
     on malformed input, a truncated IFD included."""
-    try:
-        return _decode_tiff(data)
-    except struct.error as exc:
-        raise ValueError(f"tiff: malformed IFD: {exc}") from exc
-
-
-def _decode_tiff(data: bytes) -> np.ndarray:
-    if len(data) < 8:
-        raise ValueError("tiff: short header")
-    if data[:2] == b"II":
-        e = "<"
-    elif data[:2] == b"MM":
-        e = ">"
-    else:
-        raise ValueError("tiff: bad byte-order mark")
-    magic, ifd_off = struct.unpack_from(f"{e}HI", data, 2)
-    if magic != 42:
-        raise ValueError("tiff: bad magic")
-    t = _read_ifd(data, e, ifd_off)
+    e, ifd_off = read_header(data)
+    # ASCII/RATIONAL, unknown-type and empty entries: this family uses none
+    t = {
+        tag: entry_value(data, e, typ, count, off)
+        for tag, typ, count, off in ifd_entries(data, e, ifd_off)
+        if typ in (1, 3, 4) and count
+    }
 
     try:
         w = t[T_WIDTH][0]

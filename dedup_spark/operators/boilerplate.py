@@ -40,13 +40,10 @@ surface (SURVEY.md §2.3 EXT).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
+from dedup_spark.functions.text import tokens
 from dedup_spark.operators.banding import held_by_two_ids
-
-
-def _tokens(text: Column) -> Column:
-    return F.split(F.lower(F.trim(text)), r"\s+")
 
 
 def segment_docs(
@@ -61,7 +58,7 @@ def segment_docs(
     shorter than one window emit no rows — ``boilerplate_stats`` left-
     joins them back. ``F.sequence(1, n)`` would generate a DESCENDING
     [1, 0] for n=0, so the empty case is guarded explicitly."""
-    toks = _tokens(F.col(text_col))
+    toks = tokens(F.col(text_col))
     n_seg = F.floor(F.size(toks) / seg_tokens).cast("int")
     idxs = F.when(n_seg >= 1, F.sequence(F.lit(1), n_seg)).otherwise(
         F.array().cast("array<int>")
@@ -97,7 +94,7 @@ def boilerplate_stats(
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("_n_bp"))
     )
-    n_tok = F.size(_tokens(F.col(text_col)))
+    n_tok = F.size(tokens(F.col(text_col)))
     base = df.select(
         id_col,
         F.floor(n_tok / seg_tokens).cast("long").alias("n_segments"),

@@ -46,6 +46,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from dedup_spark.functions.text import tokens
+
 SOH = "\x01"  # symbol-start marker; never appears in corpus text
 
 
@@ -53,7 +55,7 @@ def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, cnt) over the normalized token stream — the one
     corpus-scale pass; everything after runs on the distinct-word
     table."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = tokens(F.col(text_col))
     return (
         docs.filter(
             F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
@@ -156,7 +158,7 @@ def doc_token_counts(
     rounded 6dp — characters-per-token style tokenizer health, the
     number a tokenizer change is judged by). The expensive side is one
     exploded-word shuffle; the vocab side is the distinct-word table."""
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = tokens(F.col(text_col))
     d = docs.filter(
         F.col(text_col).isNotNull() & (F.trim(F.col(text_col)) != "")
     ).select(id_col, F.explode(toks).alias("word"))

@@ -24,18 +24,16 @@ reference counterpart — the reference is a file-level dedup CLI.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-
-def _tokens(text: Column) -> Column:
-    return F.split(F.lower(F.trim(text)), r"\s+")
+from dedup_spark.functions.text import tokens
 
 
 def _doc_ngrams(
     df: DataFrame, id_col: str, text_col: str, n: int
 ) -> DataFrame:
     """(id, gram) — DISTINCT word-n-grams per doc, built-ins only."""
-    toks = _tokens(F.col(text_col))
+    toks = tokens(F.col(text_col))
     grams = F.transform(
         F.sequence(F.lit(1), F.size(toks) - F.lit(n - 1)),
         lambda i: F.concat_ws(" ", F.slice(toks, i, n)),

@@ -44,6 +44,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from dedup_spark.functions.text import tokens
+
 
 def split_token_lines(
     docs: DataFrame,
@@ -59,7 +61,7 @@ def split_token_lines(
     line keeps the ragged tail). Null / whitespace-only documents
     produce no rows.
     """
-    toks = F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
+    toks = tokens(F.col(text_col))
     n_lines = F.ceil(F.size(toks) / F.lit(float(width))).cast("int")
     lines = F.transform(
         F.sequence(F.lit(0), n_lines - F.lit(1)),

@@ -40,17 +40,15 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from dedup_spark.functions.text import tokens
+
 NLL_SCALE = 1_000_000  # 6-dp fixed-point for order-free exact sums
-
-
-def _tokens(text_col: str = "text") -> F.Column:
-    return F.split(F.lower(F.trim(F.col(text_col))), r"\s+")
 
 
 def _bigrams(df: DataFrame, id_col: str | None) -> DataFrame:
     """Explode (w1, w2) consecutive-token pairs; docs with < 2 tokens
     contribute nothing."""
-    toks = _tokens()
+    toks = tokens(F.col("text"))
     n = F.size(toks)
     pairs = F.arrays_zip(
         F.slice(toks, 1, n - 1).alias("w1"),
@@ -81,7 +79,7 @@ def train_bigram_lm(train: DataFrame) -> tuple[DataFrame, DataFrame, DataFrame]:
     c1 = c12.groupBy("w1").agg(F.sum("c12").cast("long").alias("c1"))
     toks = train.filter(
         F.col("text").isNotNull() & (F.trim(F.col("text")) != "")
-    ).select(F.explode(_tokens()).alias("t"))
+    ).select(F.explode(tokens(F.col("text"))).alias("t"))
     # two-stage exact distinct (groupBy then count) — no Expand
     v = toks.groupBy("t").agg(F.lit(1)).agg(
         F.count(F.lit(1)).cast("long").alias("v")

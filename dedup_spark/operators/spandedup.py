@@ -14,7 +14,8 @@ is the word-k-gram formulation of that stage:
     covered occurrences (overlapping shared spans merge naturally);
   * the cleaned document is the uncovered tokens rejoined with single
     spaces (output is over the normalized lowercase token stream —
-    the same `_tokens` normalization as the decontamination tier).
+    the normalization of `functions.text.tokens`, the decontamination
+    tier's tokenizer).
 
 Two deliberate deviations from the suffix-array original, both chosen
 FOR the distributed setting and documented here:

@@ -42,6 +42,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from dedup_spark.config import DEFAULT_CONFIG, DedupConfig
+from dedup_spark.functions.text import tokens
 from dedup_spark.operators.banding import key_postings, shared_key_pairs
 from dedup_spark.operators.minhash import shingle_explode_udf, shingle_multipliers
 
@@ -128,7 +129,7 @@ def exact_jaccard_pairs(
     base = df
     if min_tokens is not None:
         base = base.filter(
-            F.size(F.split(F.lower(F.trim(F.col(text_col))), r"\s+")) >= min_tokens
+            F.size(tokens(F.col(text_col))) >= min_tokens
         )
     return (
         _shingle_overlaps(base, id_col, text_col, cfg, max_posting, "exact_jaccard_pairs")

@@ -31,11 +31,8 @@ batch tier.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from dedup_spark.config import DEFAULT_CONFIG, DedupConfig
 from dedup_spark.sources.catalog import read_or_none
 
 

@@ -74,7 +74,6 @@ def main(argv=None) -> int:
     from dedup_spark.pipeline import dedup_pipeline
     from dedup_spark.plans.lineage import StageMetrics
     from dedup_spark.sources.catalog import (
-        load_table,
         read_or_none,
         read_table,
         write_table,

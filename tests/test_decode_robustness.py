@@ -12,6 +12,13 @@ import pytest
 from dedup_spark.fixtures.images import encode_ppm
 from dedup_spark.multimodal.crop import border_trim_clusters
 from dedup_spark.multimodal.decode import _decode_any
+from dedup_spark.multimodal.exif import (
+    build_exif_app1,
+    insert_app1,
+    parse_exif,
+    parse_gps,
+    scrub_gps,
+)
 from dedup_spark.multimodal.jpeg import decode_jpeg, encode_jpeg, find_luma_qt
 from dedup_spark.multimodal.png import decode_png, encode_png
 from dedup_spark.multimodal.tiff import decode_tiff, encode_tiff
@@ -102,8 +109,27 @@ def _mutants(data: bytes, rng: np.random.Generator, n: int):
         yield bytes(m)
 
 
+def _exif_gps_jpeg(px: np.ndarray) -> bytes:
+    return insert_app1(
+        encode_jpeg(px),
+        build_exif_app1(
+            "maker-0009", "model-0009", 8, px.shape[1], px.shape[0],
+            "2024:01:09 09:00:00", (48, 51, 24), (2, 21, 3),
+        ),
+    )
+
+
+# the metadata walks, each on payloads it reads
+_READERS = {
+    "find_luma_qt": (encode_jpeg, find_luma_qt),
+    "parse_exif": (_exif_gps_jpeg, parse_exif),
+    "parse_gps": (_exif_gps_jpeg, parse_gps),
+    "scrub_gps": (_exif_gps_jpeg, scrub_gps),
+}
+
+
 @pytest.mark.parametrize(
-    "fmt", ["ppm", "png", "jpeg", "webp", "tiff", "gif", "find_luma_qt"]
+    "fmt", ["ppm", "png", "jpeg", "webp", "tiff", "gif", *_READERS]
 )
 def test_mutated_payloads_never_raise(fmt):
     from dedup_spark.multimodal.gif import encode_gif
@@ -112,17 +138,23 @@ def test_mutated_payloads_never_raise(fmt):
     enc = {
         "ppm": encode_ppm, "png": encode_png, "jpeg": encode_jpeg,
         "webp": encode_webp_lossless, "tiff": encode_tiff, "gif": encode_gif,
-        "find_luma_qt": encode_jpeg,
-    }[fmt]
+    }
     rng = np.random.default_rng(7)
-    for m in _mutants(enc(_px(4, 14, 11)), rng, 300):
-        if fmt == "find_luma_qt":  # the DQT walk: ValueError is its typed failure
+    if fmt in _READERS:  # ValueError is a metadata walk's typed failure
+        build, read = _READERS[fmt]
+        for m in _mutants(build(_px(4, 14, 11)), rng, 300):
             try:
-                qt = find_luma_qt(m)
+                got = read(m)
             except ValueError:
                 continue
-            assert qt is None or qt.shape == (64,)
-            continue
+            if fmt == "find_luma_qt":
+                assert got is None or got.shape == (64,)
+            elif fmt == "scrub_gps":  # in place: the length never changes
+                assert len(got[0]) == len(m)
+            else:
+                assert got is None or isinstance(got, dict)
+        return
+    for m in _mutants(enc[fmt](_px(4, 14, 11)), rng, 300):
         px = _decode_any(m, fmt)
         assert px is None or (px.dtype == np.uint8 and px.ndim == 3)
 

@@ -4,12 +4,13 @@ compatibility of APP1-bearing JPEGs."""
 
 from __future__ import annotations
 
+import hashlib
 import struct
 
 import numpy as np
 import pytest
 
-from dedup_spark.fixtures.images import generate_exif_corpus
+from dedup_spark.fixtures.images import generate_exif_corpus, generate_gps_corpus
 from dedup_spark.multimodal.exif import (
     TAG_DATETIME,
     TAG_HEIGHT,
@@ -20,8 +21,20 @@ from dedup_spark.multimodal.exif import (
     build_exif_app1,
     insert_app1,
     parse_exif,
+    parse_gps,
+    scrub_gps,
 )
-from dedup_spark.multimodal.jpeg import decode_jpeg, encode_jpeg
+from dedup_spark.multimodal.jpeg import decode_jpeg, encode_jpeg, estimate_quality
+
+# sha256 over the fixture corpora's bytes, recorded while the GPS and
+# non-GPS APP1 layouts still had a builder each: the oracles slice hex
+# at fixed offsets, so the merged builder must write the same bytes
+_EXIF_CORPUS_SHA256 = (
+    "486279f98bb4cae5a5ee21c7c5795207cd8830c5b84be698704dff35da4a22d0"
+)
+_GPS_CORPUS_SHA256 = (
+    "2d46f402914f538997b682fb48072e32ba2a6b3596643a803077341bb52eb4e7"
+)
 
 
 def _jpeg():
@@ -228,7 +241,8 @@ def test_quality_estimation_foreign_table_returns_none():
 
 def test_fill_bytes_before_markers_are_skipped():
     """T.81 B.1.1.2: any number of 0xFF fill bytes may precede a
-    marker; all three segment walkers must skip them."""
+    marker; the one marker walk skips them for the pixel decoder, the
+    DQT reader and the EXIF readers alike."""
     from dedup_spark.multimodal.jpeg import (
         decode_jpeg,
         encode_jpeg,
@@ -247,6 +261,42 @@ def test_fill_bytes_before_markers_are_skipped():
     )
     padded_exif = jp[:2] + b"\xff\xff" + app1 + jp[2:]
     assert parse_exif(padded_exif)[TAG_ORIENTATION] == 2
+
+
+def test_tem_marker_before_app1_and_dqt_is_skipped_by_every_reader():
+    """TEM (FF 01) carries no length field (T.81 B.1.1.3). A JPEG with
+    one before its EXIF+GPS APP1 and its DQT decodes, and every
+    metadata reader finds its segment behind it: the scrub must remove
+    the GPS IFD, not report the image as GPS-free."""
+    rng = np.random.default_rng(6)
+    jp = encode_jpeg(rng.integers(0, 256, (16, 16, 3), dtype=np.uint8), 90)
+    app1 = build_exif_app1(
+        "maker-0004", "model-0004", 6, 16, 16, "2024:01:04 04:00:00",
+        (48, 51, 24), (2, 21, 3),
+    )
+    tem = jp[:2] + b"\xff\x01" + app1 + jp[2:]
+    assert np.array_equal(decode_jpeg(tem), decode_jpeg(jp))
+    assert parse_exif(tem)[TAG_ORIENTATION] == 6
+    assert parse_gps(tem)[0x0002] == [(48, 1), (51, 1), (24, 1)]
+    assert estimate_quality(tem) == 90
+    cleaned, had = scrub_gps(tem)
+    assert had and len(cleaned) == len(tem)
+    assert parse_gps(cleaned) is None
+    assert parse_exif(cleaned)[TAG_MAKE] == "maker-0004"
+
+
+@pytest.mark.parametrize(
+    "generate, digest",
+    [
+        (generate_exif_corpus, _EXIF_CORPUS_SHA256),
+        (generate_gps_corpus, _GPS_CORPUS_SHA256),
+    ],
+)
+def test_fixture_corpus_bytes_are_pinned(generate, digest):
+    h = hashlib.sha256()
+    for data in generate()["bytes"]:
+        h.update(bytes(data))
+    assert h.hexdigest() == digest
 
 
 def test_quality_estimates_contract_foreign_and_null(spark):

@@ -8,7 +8,7 @@ import struct
 from dedup_spark.fixtures.images import _smooth_image, generate_gps_corpus
 from dedup_spark.multimodal.exif import (
     TAG_GPS_IFD,
-    build_exif_app1_gps,
+    build_exif_app1,
     gps_scrub_report,
     insert_app1,
     parse_exif,
@@ -22,7 +22,7 @@ def _jpeg_with_gps(big: bool, lat=(48, 51, 24), lon=(2, 21, 3)) -> bytes:
     px = _smooth_image(b"gpstest", 16, 16)
     return insert_app1(
         encode_jpeg(px, quality=99),
-        build_exif_app1_gps(
+        build_exif_app1(
             "maker-0001", "model-0001", 3, 16, 16,
             "2024:01:01 10:00:00", lat, lon, big_endian=big,
         ),

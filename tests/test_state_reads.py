@@ -4,8 +4,9 @@ A streaming batch reads its state (content hashes, band index, doc
 texts, prior assignments) and treats a missing store as the first
 batch. A store that exists but cannot be read must raise instead:
 read as "no state", it silently re-clusters every later document as
-new. Plus a lint guard: no broad ``except Exception`` in the streaming
-tier or the jobs, where one would hide exactly that.
+new. Plus two lint guards: no broad ``except Exception`` in the
+streaming tier or the jobs, where one would hide exactly that, and no
+import that its module never reads.
 """
 
 from __future__ import annotations
@@ -132,4 +133,35 @@ def test_no_broad_except_in_streaming_or_jobs():
                 for n in names
             ):
                 offenders.append(f"{path.relative_to(ROOT)}:{node.lineno}")
+    assert offenders == [], offenders
+
+
+def test_no_unused_imports_in_package_or_jobs():
+    """Every name an import binds in ``dedup_spark/`` or ``jobs/`` is
+    read somewhere in its module (``__init__.py`` re-exports and
+    ``__future__`` imports are exempt): a dead import is a dependency
+    the code no longer has."""
+    offenders = []
+    files = [
+        path
+        for top in ("dedup_spark", "jobs")
+        for path in (ROOT / top).rglob("*.py")
+        if path.name != "__init__.py"
+    ]
+    assert files
+    for path in files:
+        tree = ast.parse(path.read_text(), str(path))
+        read = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                names = [a.asname or a.name.split(".")[0] for a in node.names]
+            elif isinstance(node, ast.ImportFrom) and node.module != "__future__":
+                names = [a.asname or a.name for a in node.names if a.name != "*"]
+            else:
+                continue
+            offenders += [
+                f"{path.relative_to(ROOT)}:{node.lineno} {name}"
+                for name in names
+                if name not in read
+            ]
     assert offenders == [], offenders
