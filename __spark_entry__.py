@@ -43,6 +43,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from dedup_spark.config import DEFAULT_CONFIG, DedupConfig
+from dedup_spark.fixtures.materialize import fixture_parquet
 from dedup_spark.functions import text as TX
 from dedup_spark.functions.pii import (
     EMAIL_PATTERN as PII_EMAIL,
@@ -508,7 +509,7 @@ def q_fingerprint_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture corpus captions, which carry injected case/punctuation
     variants (norm_dup_ratio) so the groups are NON-vacuous: raw
     equality misses them, the fingerprint tier must find them."""
-    df = _fixture_images(spark).withColumn(
+    df = spark.read.parquet(fixture_parquet("images")).withColumn(
         "fp", TX.fingerprint(F.col("caption"))
     )
     groups = (
@@ -1666,10 +1667,9 @@ def q_html_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     stdlib html.parser on every row, so the regex shortcut is
     verified against a real parser for this corpus class. Full-string
     value gate (the hardest compare) + char counts."""
-    from dedup_spark.fixtures.materialize import fixture_html_parquet
     from dedup_spark.functions.html import html_to_text
 
-    df = spark.read.parquet(fixture_html_parquet())
+    df = spark.read.parquet(fixture_parquet("html"))
     txt = html_to_text(F.col("html"))
     return df.select(
         "doc_id",
@@ -1691,7 +1691,7 @@ def _html_oracle_sql() -> str:
     return f"""
 SELECT doc_id, trim({expr}) AS text,
        CAST(length(trim({expr})) AS BIGINT) AS n_chars
-FROM HTML_FIXTURE
+FROM read_parquet('{fixture_parquet("html")}')
 """
 
 
@@ -2379,10 +2379,9 @@ def q_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     decimal-exact per-pair sum, and the (rounded score, id) ranking.
     The planted mutated neighbors rank at the top — retrieval is the
     review tier between decontamination flags and deletion."""
-    from dedup_spark.fixtures.materialize import fixture_zipf_docs_parquet
     from dedup_spark.operators.retrieval import bm25_topk
 
-    docs = spark.read.parquet(fixture_zipf_docs_parquet())
+    docs = spark.read.parquet(fixture_parquet("zipf_docs"))
     queries = docs.filter(F.col("doc_id") % 100 == 18)
     return bm25_topk(docs, queries, k=TOPK)
 
@@ -2774,7 +2773,7 @@ def q_caption_substring_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     id1 = contained caption (>= SUBSTR_K + WINNOW_W - 1 bytes), id2 =
     container. Exact-gate variant: uncapped, mirrored by the uncapped
     quadratic position() oracle."""
-    imgs = _fixture_images(spark).select(
+    imgs = spark.read.parquet(fixture_parquet("images")).select(
         F.col("image_id").alias("doc_id"), F.col("caption").alias("text")
     )
     return char_substring_pairs(
@@ -3162,20 +3161,12 @@ def q_streaming_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(out_dir).filter(F.col("user_id") >= 0)
 
 
-def _fixture_images(spark: SparkSession):
-    """The pinned synthesized image+caption corpus (input_hint schema),
-    read from the SAME parquet file the DuckDB oracles read — golden
-    contract parity (reference tests/output_format.rs:58-99)."""
-    from dedup_spark.fixtures.materialize import fixture_images_parquet
-
-    return spark.read.parquet(fixture_images_parquet())
-
-
 def q_image_exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flagship image-payload path: full 3-stage cascade on the
     deterministic synthesized image+caption corpus (input_hint schema),
     plus the shortest-id canonical mark."""
-    asg = exact_duplicate_clusters(_fixture_images(spark))
+    imgs = spark.read.parquet(fixture_parquet("images"))
+    asg = exact_duplicate_clusters(imgs)
     return with_canonical(asg).select(
         "image_id",
         "cluster_id",
@@ -3193,7 +3184,8 @@ def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic and correct end-to-end."""
     from dedup_spark.multimodal.decode import extract_image_features
 
-    feats = extract_image_features(_fixture_images(spark))
+    imgs = spark.read.parquet(fixture_parquet("images"))
+    feats = extract_image_features(imgs)
     return feats.select(
         "image_id", "ok", F.col("recomputed_phash").alias("phash")
     )
@@ -3206,7 +3198,8 @@ def q_phash_hamming_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     radius shares a band), so the verified output equals the exact
     Hamming self-join the oracle computes."""
     # pair-set-exact mode (guard headroom) — see q_simhash_text_pairs
-    pairs = phash_near_duplicates(_fixture_images(spark), max_band_bucket=4096)
+    imgs = spark.read.parquet(fixture_parquet("images"))
+    pairs = phash_near_duplicates(imgs, max_band_bucket=4096)
     return pairs.select(
         "id1", "id2", F.col("hamming").cast("long").alias("hamming")
     )
@@ -3226,7 +3219,8 @@ def q_image_decode_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     50.7 dB, so the gate has ~10 dB of real margin."""
     from dedup_spark.multimodal.decode import decode_fidelity_pairs
 
-    return decode_fidelity_pairs(_fixture_images(spark)).select(
+    imgs = spark.read.parquet(fixture_parquet("images"))
+    return decode_fidelity_pairs(imgs).select(
         "id1", "id2", "exact", "captions_equal", "psnr_ok"
     )
 
@@ -3244,7 +3238,8 @@ def q_jpeg_roundtrip_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the smooth/textured fixture payloads sit well above."""
     from dedup_spark.multimodal.decode import lossy_roundtrip_fidelity
 
-    return lossy_roundtrip_fidelity(_fixture_images(spark))
+    imgs = spark.read.parquet(fixture_parquet("images"))
+    return lossy_roundtrip_fidelity(imgs)
 
 
 def q_crossformat_pixel_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3263,7 +3258,7 @@ def q_crossformat_pixel_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         signature_clusters,
     )
 
-    variants = reencode_variants(_fixture_images(spark))
+    variants = reencode_variants(spark.read.parquet(fixture_parquet("images")))
     return signature_clusters(pixel_sha(variants), "pixel_sha")
 
 
@@ -3278,10 +3273,9 @@ def q_exif_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     big-endian corpora, plus exif-less JPEGs and a non-JPEG row that
     must survive as has_exif=false (the avi_video_dedup gate
     pattern)."""
-    from dedup_spark.fixtures.materialize import fixture_exif_parquet
     from dedup_spark.multimodal.exif import exif_metadata
 
-    df = spark.read.parquet(fixture_exif_parquet())
+    df = spark.read.parquet(fixture_parquet("exif"))
     # the engine sees bytes only — `endian` is the oracle's ground truth
     return exif_metadata(df.drop("endian"))
 
@@ -3298,10 +3292,9 @@ def q_jpeg_quality_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     in SQL: 100 candidate qualities x 64 Annex-K base values, integer
     scale/floor/clip arithmetic, exact 64/64 match, max-q tie rule.
     The PPM row survives as has_dqt=false."""
-    from dedup_spark.fixtures.materialize import fixture_quality_parquet
     from dedup_spark.multimodal.decode import jpeg_quality_estimates
 
-    df = spark.read.parquet(fixture_quality_parquet())
+    df = spark.read.parquet(fixture_parquet("quality"))
     # the engine sees bytes only — `quality` is the tests' ground truth
     return jpeg_quality_estimates(df.drop("quality"))
 
@@ -3313,10 +3306,9 @@ def q_orientation_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     stores the EXACT lossless inverse transform per orientation, so the
     oracle pins the full value-checked assignment by source while the
     engine derives it from pixels + orientation alone."""
-    from dedup_spark.fixtures.materialize import fixture_orientation_parquet
     from dedup_spark.multimodal.exif import orientation_normalized_clusters
 
-    df = spark.read.parquet(fixture_orientation_parquet())
+    df = spark.read.parquet(fixture_parquet("orientation"))
     return orientation_normalized_clusters(df.drop("src_id"))
 
 
@@ -3332,10 +3324,9 @@ def q_cdc_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes every boundary (byte-pair arithmetic over
     hex(bytes) via the 256-row lookup), every chunk md5 (hex-slice
     trick), the cross-blob shared set, and the per-blob report."""
-    from dedup_spark.fixtures.materialize import fixture_videos_parquet
     from dedup_spark.operators.cdc import cdc_dedup_stats
 
-    vids = spark.read.parquet(fixture_videos_parquet()).select(
+    vids = spark.read.parquet(fixture_parquet("videos")).select(
         "video_id", "bytes"
     )
     # prepend only the even-indexed videos: the odd family-less bases
@@ -3360,10 +3351,9 @@ def q_rescale_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     digest-seeded sources — holds by construction; the oracle pins the
     full assignment as min(image_id) per SOURCE, which the engine must
     reproduce from pixels alone (it never sees src_id)."""
-    from dedup_spark.fixtures.materialize import fixture_rescale_parquet
     from dedup_spark.multimodal.decode import thumbprint_clusters
 
-    df = spark.read.parquet(fixture_rescale_parquet())
+    df = spark.read.parquet(fixture_parquet("rescale"))
     return thumbprint_clusters(df.drop("src_id"))
 
 
@@ -3374,10 +3364,9 @@ def q_border_crop_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant and asserts base recovery + cross-source distinctness,
     making the oracle's min(image_id)-per-source the full value-checked
     cluster assignment (the engine never sees src_id)."""
-    from dedup_spark.fixtures.materialize import fixture_border_parquet
     from dedup_spark.multimodal.crop import border_trim_clusters
 
-    df = spark.read.parquet(fixture_border_parquet())
+    df = spark.read.parquet(fixture_parquet("border"))
     return border_trim_clusters(df.drop("src_id"))
 
 
@@ -3393,10 +3382,9 @@ def q_shared_patch_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pinned, not hidden). Plan: Arrow projection → (sha,id) shuffle →
     posting-capped self-join → count agg (the caption shingle tier's
     shape)."""
-    from dedup_spark.fixtures.materialize import fixture_patch_parquet
     from dedup_spark.multimodal.patches import shared_patch_pairs
 
-    df = spark.read.parquet(fixture_patch_parquet())
+    df = spark.read.parquet(fixture_parquet("patch"))
     return shared_patch_pairs(df.drop("logo", "klass"))
 
 
@@ -3411,10 +3399,9 @@ def q_best_copy_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     per cluster → min id among the maxima) + joins — never a window
     over members, so a duplicate flood cannot pin a task. The oracle
     recomputes the full policy from the stored w/h per source."""
-    from dedup_spark.fixtures.materialize import fixture_rescale_parquet
     from dedup_spark.multimodal.decode import thumbprint_clusters
 
-    df = spark.read.parquet(fixture_rescale_parquet())
+    df = spark.read.parquet(fixture_parquet("rescale"))
     asg = thumbprint_clusters(df.drop("src_id"))
     dims = df.select(
         "image_id", (F.col("w").cast("long") * F.col("h")).alias("pixels")
@@ -3488,7 +3475,9 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dedup_spark.operators.diff import snapshot_diff
     from dedup_spark.operators.ordering import shuffle_key
 
-    v1 = _fixture_images(spark).select("image_id", "bytes", "caption")
+    v1 = spark.read.parquet(fixture_parquet("images")).select(
+        "image_id", "bytes", "caption"
+    )
     r = (
         F.conv(
             F.substring(shuffle_key(F.col("image_id"), "snap"), 1, 15),
@@ -3555,7 +3544,7 @@ def q_image_geometry_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     0.95, square ≤ 1.05, landscape above); size from pixel count
     (<1k, <4k, <16k, big). One combinable aggregation + a broadcast
     total."""
-    imgs = _fixture_images(spark).select(
+    imgs = spark.read.parquet(fixture_parquet("images")).select(
         (F.col("w").cast("double") / F.col("h")).alias("ar"),
         (F.col("w").cast("long") * F.col("h")).alias("px"),
     )
@@ -3587,10 +3576,9 @@ def q_rotation_invariant_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-posts WITHOUT EXIF. On the pinned corpus the generator asserts
     cross-source multiset distinctness, so the oracle's
     min(image_id)-per-source is the exact full assignment."""
-    from dedup_spark.fixtures.materialize import fixture_rotation_parquet
     from dedup_spark.multimodal.rotinv import rotation_invariant_clusters
 
-    df = spark.read.parquet(fixture_rotation_parquet())
+    df = spark.read.parquet(fixture_parquet("rotation"))
     return rotation_invariant_clusters(df.drop("src_id"))
 
 
@@ -3606,10 +3594,9 @@ def q_verified_rotation_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate surviving or a true rotation failing verification both
     break the hash. The engine-internal transform label is pinned in
     pytest (the oracle cannot express D4 composition)."""
-    from dedup_spark.fixtures.materialize import fixture_rotation_parquet
     from dedup_spark.multimodal.rotinv import verified_rotation_pairs
 
-    df = spark.read.parquet(fixture_rotation_parquet())
+    df = spark.read.parquet(fixture_parquet("rotation"))
     return verified_rotation_pairs(df.drop("src_id")).select(
         "id1", "id2", "verified"
     )
@@ -3627,12 +3614,11 @@ def q_recompression_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the documented reason this tier runs one bit wider than the
     default 3), then connected components. The oracle's
     min(image_id)-per-source is the full value-checked assignment."""
-    from dedup_spark.fixtures.materialize import fixture_recompress_parquet
     from dedup_spark.multimodal.decode import extract_image_features
     from dedup_spark.operators.components import connected_components
     from dedup_spark.operators.simhash import phash_near_duplicates
 
-    df = spark.read.parquet(fixture_recompress_parquet()).drop("src_id")
+    df = spark.read.parquet(fixture_parquet("recompress")).drop("src_id")
     feats = (
         extract_image_features(df)
         .filter(F.col("ok"))
@@ -3666,10 +3652,9 @@ def q_gps_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     GPS-bearing layout) and recomputes the preserved fields at the
     layout-dependent writer-asserted offsets — both endians, both
     layouts."""
-    from dedup_spark.fixtures.materialize import fixture_gps_parquet
     from dedup_spark.multimodal.exif import gps_scrub_report
 
-    df = spark.read.parquet(fixture_gps_parquet())
+    df = spark.read.parquet(fixture_parquet("gps"))
     return gps_scrub_report(df.drop("endian", "has_gps", "fmt"))
 
 
@@ -3681,10 +3666,9 @@ def q_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-source hash distinctness, so the oracle's min(image_id) per
     SOURCE is the full assignment, which the engine must reproduce
     from pixels alone (it never sees src_id)."""
-    from dedup_spark.fixtures.materialize import fixture_dhash_parquet
     from dedup_spark.multimodal.dhash import dhash_clusters
 
-    df = spark.read.parquet(fixture_dhash_parquet())
+    df = spark.read.parquet(fixture_parquet("dhash"))
     return dhash_clusters(df.drop("src_id"))
 
 
@@ -3705,7 +3689,7 @@ def q_dedup_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dedup_spark.operators.simhash import phash_near_duplicates
     from dedup_spark.pipeline import dedup_pipeline
 
-    imgs = _fixture_images(spark)
+    imgs = spark.read.parquet(fixture_parquet("images"))
     keyed = imgs.filter(F.length("bytes") >= 1).select(
         "image_id", F.sha2(F.col("bytes"), 256).alias("k")
     )
@@ -3800,7 +3784,7 @@ def q_multimodal_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dedup_spark.pipeline import dedup_pipeline
 
     out = dedup_pipeline(
-        _fixture_images(spark),
+        spark.read.parquet(fixture_parquet("images")),
         cfg=DedupConfig(jaccard_threshold=MINHASH_T),
         caption_band_bucket=1 << 20,
         phash_band_bucket=4096,
@@ -3824,16 +3808,15 @@ def q_pipeline_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes (the multimodal_dedup_pipeline recursive closure) AND the
     same contingency sums against the truth parquet, so the recall
     NUMBER itself is value-gated, not self-reported."""
-    from dedup_spark.fixtures.materialize import fixture_truth_parquet
     from dedup_spark.pipeline import dedup_pipeline
 
     asg = dedup_pipeline(
-        _fixture_images(spark),
+        spark.read.parquet(fixture_parquet("images")),
         cfg=DedupConfig(jaccard_threshold=MINHASH_T),
         caption_band_bucket=1 << 20,
         phash_band_bucket=4096,
     ).select("image_id", "cluster_id")
-    truth = spark.read.parquet(fixture_truth_parquet()).select(
+    truth = spark.read.parquet(fixture_parquet("truth")).select(
         "image_id", F.col("cluster_id").alias("t")
     )
     return pair_confusion_report(asg, truth)
@@ -3958,8 +3941,9 @@ def q_video_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     production keeps the posting cap."""
     from dedup_spark.multimodal.video import video_near_duplicates
 
+    vids = spark.read.parquet(fixture_parquet("videos"))
     return video_near_duplicates(
-        _fixture_videos(spark), every_n=4, threshold=0.5, max_posting=None
+        vids, every_n=4, threshold=0.5, max_posting=None
     )
 
 
@@ -3976,13 +3960,7 @@ def q_video_scene_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     lag/sum/group cascade."""
     from dedup_spark.multimodal.video import scene_segments
 
-    return scene_segments(_fixture_scene_videos(spark))
-
-
-def _fixture_scene_videos(spark: SparkSession):
-    from dedup_spark.fixtures.materialize import fixture_scene_videos_parquet
-
-    return spark.read.parquet(fixture_scene_videos_parquet())
+    return scene_segments(spark.read.parquet(fixture_parquet("scene_videos")))
 
 
 def q_audio_fingerprint_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3999,7 +3977,8 @@ def q_audio_fingerprint_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     single flipped sample anywhere in the corpus fails the gate."""
     from dedup_spark.multimodal.audio import audio_fingerprint_clusters
 
-    return audio_fingerprint_clusters(_fixture_audio(spark))
+    audio = spark.read.parquet(fixture_parquet("audio"))
+    return audio_fingerprint_clusters(audio)
 
 
 def q_audio_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4015,15 +3994,8 @@ def q_audio_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     and recomputes energies, counts, ratios and peak."""
     from dedup_spark.multimodal.audio import audio_quality_report
 
-    return audio_quality_report(_fixture_audio_quality(spark))
-
-
-def _fixture_audio_quality(spark: SparkSession):
-    from dedup_spark.fixtures.materialize import (
-        fixture_audio_quality_parquet,
-    )
-
-    return spark.read.parquet(fixture_audio_quality_parquet())
+    audio = spark.read.parquet(fixture_parquet("audio_quality"))
+    return audio_quality_report(audio)
 
 
 def q_image_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4040,10 +4012,9 @@ def q_image_quality_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hex(bytes) via the 256-row lookup join — PPM header length derived
     from the w/h columns — and recomputes every statistic with the
     identical exact-integer-then-one-division arithmetic."""
-    from dedup_spark.fixtures.materialize import fixture_imgq_parquet
     from dedup_spark.multimodal.decode import image_quality_report
 
-    df = spark.read.parquet(fixture_imgq_parquet())
+    df = spark.read.parquet(fixture_parquet("imgq"))
     # the engine sees bytes only — `klass` is the generator's ground
     # truth, kept out of the projection
     return image_quality_report(df.drop("klass", "w", "h"))
@@ -4062,12 +4033,9 @@ def q_caption_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     statuses differ by side). The oracle groups by the BLOB itself
     (DuckDB cannot hash blobs) — equal answers prove sha-keying is a
     faithful stand-in for byte identity."""
-    from dedup_spark.fixtures.materialize import (
-        fixture_caption_audit_parquet,
-    )
     from dedup_spark.multimodal.consistency import caption_image_consistency
 
-    df = spark.read.parquet(fixture_caption_audit_parquet())
+    df = spark.read.parquet(fixture_parquet("caption_audit"))
     return caption_image_consistency(df.drop("klass"))
 
 
@@ -4094,16 +4062,15 @@ def q_phash_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     hamming_radius=3."""
     from pyspark.sql.window import Window
 
-    from dedup_spark.fixtures.materialize import fixture_truth_parquet
     from dedup_spark.operators.simhash import phash_near_duplicates
 
-    imgs = _fixture_images(spark)
+    imgs = spark.read.parquet(fixture_parquet("images"))
     pairs = phash_near_duplicates(
         imgs,
         cfg=DedupConfig(hamming_radius=SWEEP_R),
         max_band_bucket=1 << 20,
     )
-    truth = spark.read.parquet(fixture_truth_parquet()).select(
+    truth = spark.read.parquet(fixture_parquet("truth")).select(
         "image_id", F.col("cluster_id").alias("t")
     )
     lab = (
@@ -4166,25 +4133,12 @@ def q_format_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
     generation). The oracle recomputes the identical CASE over
     substr(hex(bytes)); NULL payloads sniff as 'missing', so every
     output column is total — no NULLs."""
-    from dedup_spark.fixtures.materialize import fixture_sniff_parquet
     from dedup_spark.multimodal.sniff import format_sniff_report
 
-    df = spark.read.parquet(fixture_sniff_parquet())
+    df = spark.read.parquet(fixture_parquet("sniff"))
     # the engine sees bytes+declared fmt only — klass/expected are
     # generator ground truth for tests
     return format_sniff_report(df.drop("klass", "expected"))
-
-
-def _fixture_videos(spark: SparkSession):
-    from dedup_spark.fixtures.materialize import fixture_videos_parquet
-
-    return spark.read.parquet(fixture_videos_parquet())
-
-
-def _fixture_audio(spark: SparkSession):
-    from dedup_spark.fixtures.materialize import fixture_audio_parquet
-
-    return spark.read.parquet(fixture_audio_parquet())
 
 
 def q_avi_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4206,9 +4160,7 @@ def q_avi_video_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dedup_spark.multimodal.avi import avi_frame_signatures
     from dedup_spark.multimodal.video import signature_set_pairs
 
-    from dedup_spark.fixtures.materialize import fixture_avi_parquet
-
-    df = spark.read.parquet(fixture_avi_parquet())
+    df = spark.read.parquet(fixture_parquet("avi"))
     sigs = avi_frame_signatures(df, every_n=2)
     return signature_set_pairs(sigs, threshold=0.5, max_posting=None)
 
@@ -4532,7 +4484,6 @@ def oracle_sql() -> dict[str, str]:
             "'[!-/:-@\\[-`{-~]', ' ', 'g'), '\\s+', ' ', 'g'))"
         )
 
-    from dedup_spark.fixtures.materialize import fixture_images_parquet
     from dedup_spark.operators.assembly import rate_threshold_hex
     from dedup_spark.operators.minhash import shingle_multipliers
 
@@ -4588,18 +4539,9 @@ nr AS (SELECT doc_id, sqrt(CAST(sum(cnt*cnt) AS DOUBLE)) AS nrm
         f"            ELSE '{rate_threshold_hex(0.1)}' END"
     )
 
-    # materializing here guarantees the file exists before DuckDB runs,
-    # regardless of whether the driver executes SQL before Spark
-    fixture = f"read_parquet('{fixture_images_parquet()}')"
-    from dedup_spark.fixtures.materialize import (
-        fixture_audio_parquet,
-        fixture_videos_parquet,
-    )
-
-    vid_fixture = f"read_parquet('{fixture_videos_parquet()}')"
-    from dedup_spark.fixtures.materialize import fixture_scene_videos_parquet
-
-    scene_fixture = f"read_parquet('{fixture_scene_videos_parquet()}')"
+    # every fixture below is read_parquet('{fixture_parquet(name)}'):
+    # building these strings writes the file before DuckDB runs,
+    # whether or not the driver executes Spark first
     from dedup_spark.operators.sketches import (
         CMS_D as _CMS_D,
         CMS_W as _CMS_W,
@@ -4610,81 +4552,19 @@ nr AS (SELECT doc_id, sqrt(CAST(sum(cnt*cnt) AS DOUBLE)) AS nrm
     )
 
     _HLL_AMM = _HLL_ALPHA * _HLL_M * _HLL_M
-    aud_fixture = f"read_parquet('{fixture_audio_parquet()}')"
     from dedup_spark.fixtures.av import SILENCE_ENERGY
-    from dedup_spark.fixtures.materialize import (
-        fixture_audio_quality_parquet,
-    )
-
-    audq_fixture = f"read_parquet('{fixture_audio_quality_parquet()}')"
-    from dedup_spark.fixtures.materialize import fixture_imgq_parquet
-
-    imgq_fixture = f"read_parquet('{fixture_imgq_parquet()}')"
-    from dedup_spark.fixtures.materialize import fixture_sniff_parquet
-
-    sniff_fixture = f"read_parquet('{fixture_sniff_parquet()}')"
-    from dedup_spark.fixtures.materialize import (
-        fixture_caption_audit_parquet,
-    )
-
-    capaudit_fixture = f"read_parquet('{fixture_caption_audit_parquet()}')"
-    from dedup_spark.fixtures.materialize import fixture_avi_parquet
     from dedup_spark.multimodal.avi import (
         AVI_CHUNK,
         AVI_HEADER_BYTES,
         AVI_TOTALFRAMES_OFF,
         MAX_AVI_FRAMES,
     )
-
-    avi_fixture = f"read_parquet('{fixture_avi_parquet()}')"
-    from dedup_spark.fixtures.materialize import (
-        fixture_exif_parquet,
-        fixture_rescale_parquet,
-    )
-
-    rescale_fixture = f"read_parquet('{fixture_rescale_parquet()}')"
-    from dedup_spark.fixtures.materialize import fixture_border_parquet
-
-    border_fixture = f"read_parquet('{fixture_border_parquet()}')"
-    from dedup_spark.fixtures.materialize import fixture_patch_parquet
-
-    patch_fixture = f"read_parquet('{fixture_patch_parquet()}')"
-    from dedup_spark.fixtures.materialize import fixture_gps_parquet
-
-    gps_fixture = f"read_parquet('{fixture_gps_parquet()}')"
-    from dedup_spark.fixtures.materialize import fixture_rotation_parquet
-
-    rot_fixture = f"read_parquet('{fixture_rotation_parquet()}')"
-    from dedup_spark.fixtures.materialize import (
-        fixture_recompress_parquet,
-    )
-
-    recomp_fixture = f"read_parquet('{fixture_recompress_parquet()}')"
-    from dedup_spark.fixtures.materialize import fixture_html_parquet
-
-    html_fixture = f"read_parquet('{fixture_html_parquet()}')"
-    exif_fixture = f"read_parquet('{fixture_exif_parquet()}')"
-    from dedup_spark.fixtures.materialize import (
-        fixture_dhash_parquet,
-        fixture_truth_parquet,
-    )
-
-    dhash_fixture = f"read_parquet('{fixture_dhash_parquet()}')"
-    truth_fixture = f"read_parquet('{fixture_truth_parquet()}')"
-    from dedup_spark.fixtures.materialize import (
-        fixture_orientation_parquet,
-        fixture_quality_parquet,
-        fixture_zipf_docs_parquet,
-    )
     from dedup_spark.multimodal.jpeg import _QT_LUMA, ZIGZAG
 
-    quality_fixture = f"read_parquet('{fixture_quality_parquet()}')"
     qt_base_values = ", ".join(
         f"({i}, {int(v)})"
         for i, v in enumerate(_QT_LUMA.reshape(64)[ZIGZAG])
     )
-    zipf_fixture = f"read_parquet('{fixture_zipf_docs_parquet()}')"
-    orient_fixture = f"read_parquet('{fixture_orientation_parquet()}')"
     # 256-row hex-pair lookup: this DuckDB build cannot slice or hash
     # BLOBs, so the audio oracle reconstructs int16 samples from
     # hex(bytes) via substring + this VALUES join
@@ -4839,7 +4719,7 @@ SELECT doc_id,
 FROM s
 """,
         "fingerprint_dups": f"""
-WITH n AS (SELECT image_id, {norm_sql("caption")} AS nt FROM {fixture}),
+WITH n AS (SELECT image_id, {norm_sql("caption")} AS nt FROM read_parquet('{fixture_parquet("images")}')),
 g AS (
   SELECT nt, min(image_id) AS cluster_id, CAST(count(*) AS BIGINT) AS n_members
   FROM n GROUP BY nt HAVING count(*) >= 2
@@ -4852,13 +4732,13 @@ WITH g AS (
   SELECT bytes AS gb, min(image_id) AS cluster_id,
          CAST(count(*) AS BIGINT) AS n_members,
          CAST(max(octet_length(bytes)) AS BIGINT) AS gsize
-  FROM {fixture}
+  FROM read_parquet('{fixture_parquet("images")}')
   WHERE bytes IS NOT NULL AND octet_length(bytes) >= 1
   GROUP BY bytes HAVING count(*) >= 2
 ),
 m AS (
   SELECT i.image_id, g.cluster_id, g.gsize AS size, g.n_members
-  FROM {fixture} i JOIN g ON i.bytes = g.gb
+  FROM read_parquet('{fixture_parquet("images")}') i JOIN g ON i.bytes = g.gb
 )
 SELECT image_id, cluster_id, size, n_members,
        row_number() OVER (PARTITION BY cluster_id
@@ -4866,13 +4746,13 @@ SELECT image_id, cluster_id, size, n_members,
 FROM m
 """,
         "image_features": f"""
-SELECT image_id, TRUE AS ok, phash FROM {fixture}
+SELECT image_id, TRUE AS ok, phash FROM read_parquet('{fixture_parquet("images")}')
 """,
         # the lossy round trip must succeed at >= 40 dB for EVERY
         # payload: both booleans pinned TRUE — codec regression, decode
         # failure, or fidelity loss all break the hash compare
         "jpeg_roundtrip_fidelity": f"""
-SELECT image_id, TRUE AS ok, TRUE AS psnr_ok FROM {fixture}
+SELECT image_id, TRUE AS ok, TRUE AS psnr_ok FROM read_parquet('{fixture_parquet("images")}')
 """,
         # cross-format pixel clusters from the stored bytes: lossless
         # variants (ppm/png/webp) cluster with their byte-group across
@@ -4883,7 +4763,7 @@ WITH v AS (
   SELECT image_id || '#' || s AS vid,
          CASE WHEN s = 'jpeg' THEN 'J' ELSE 'L' END AS tier,
          bytes
-  FROM {fixture},
+  FROM read_parquet('{fixture_parquet("images")}'),
        (VALUES ('ppm'), ('png'), ('jpeg'), ('webp'), ('tiff'), ('gif')) t(s)
 )
 SELECT vid AS image_id, TRUE AS ok,
@@ -4896,7 +4776,7 @@ FROM v
         # ints are byte-reversed hex, ASCII via decode(unhex());
         # the engine's GENERAL walker must reproduce all of it
         "exif_metadata": f"""
-WITH fx AS (SELECT image_id, hex(bytes) AS hx, endian FROM {exif_fixture})
+WITH fx AS (SELECT image_id, hex(bytes) AS hx, endian FROM read_parquet('{fixture_parquet("exif")}'))
 SELECT image_id,
   endian <> 'none' AS has_exif,
   CASE WHEN endian = 'none' THEN NULL
@@ -4965,7 +4845,7 @@ FROM k JOIN g ON k.bow = g.bow
         # snapshot diff: same seeded md5 v2 derivation; the oracle
         # compares the BLOBs where the engine compares their shas
         "snapshot_diff": f"""
-WITH v1 AS (SELECT image_id, bytes, caption FROM {fixture}),
+WITH v1 AS (SELECT image_id, bytes, caption FROM read_parquet('{fixture_parquet("images")}')),
 r AS (
   SELECT image_id, bytes, caption,
          ('0x' || substring(md5('snap:' || image_id), 1, 15))::BIGINT % 10
@@ -5011,7 +4891,7 @@ WITH g AS (
               WHEN CAST(w AS BIGINT) * h < 4096 THEN 'small'
               WHEN CAST(w AS BIGINT) * h < 16384 THEN 'medium'
               ELSE 'large' END AS size_class
-  FROM {fixture}
+  FROM read_parquet('{fixture_parquet("images")}')
 ),
 per AS (
   SELECT aspect_class, size_class, CAST(count(*) AS BIGINT) AS n
@@ -5023,9 +4903,7 @@ FROM per
 """,
         # html extraction: the cascade regenerated from the same step
         # table, RE2-side, with the required 'g' flag
-        "html_extract": _html_oracle_sql().replace(
-            "HTML_FIXTURE", html_fixture
-        ),
+        "html_extract": _html_oracle_sql(),
         "conversion_funnel": """
 SELECT strftime(ts, '%Y-%m-%d') AS day,
        CAST(count(*) AS BIGINT) AS n_events,
@@ -5096,13 +4974,14 @@ FROM asg JOIN r ON r.root = asg.root
         "recompression_dedup": f"""
 SELECT image_id,
        min(image_id) OVER (PARTITION BY src_id) AS cluster_id
-FROM {recomp_fixture}
+FROM read_parquet('{fixture_parquet("recompress")}')
 """,
         # verified rotation pairs: exactly the within-source pairs,
         # all verified (generator asserted cross-source distinctness)
         "verified_rotation_pairs": f"""
 SELECT a.image_id AS id1, b.image_id AS id2, TRUE AS verified
-FROM {rot_fixture} a JOIN {rot_fixture} b
+FROM read_parquet('{fixture_parquet("rotation")}') a
+JOIN read_parquet('{fixture_parquet("rotation")}') b
   ON a.src_id = b.src_id AND a.image_id < b.image_id
 """,
         # rotation dedup: group-by-source is the exact assignment —
@@ -5111,7 +4990,7 @@ FROM {rot_fixture} a JOIN {rot_fixture} b
         "rotation_invariant_dedup": f"""
 SELECT image_id, TRUE AS ok,
        min(image_id) OVER (PARTITION BY src_id) AS cluster_id
-FROM {rot_fixture}
+FROM read_parquet('{fixture_parquet("rotation")}')
 """,
         # GPS scrub: had_gps derived from the raw-hex IFD0 entry count
         # (7 = GPS layout); preserved fields recomputed at the layout-
@@ -5120,7 +4999,7 @@ FROM {rot_fixture}
         # boolean and fails the hash)
         "gps_scrub": f"""
 WITH fx AS (
-  SELECT image_id, hex(bytes) AS hx, endian FROM {gps_fixture}
+  SELECT image_id, hex(bytes) AS hx, endian FROM read_parquet('{fixture_parquet("gps")}')
 ),
 d AS (
   SELECT image_id, hx, endian,
@@ -5153,7 +5032,7 @@ FROM d
         # max-q tie rule
         "jpeg_quality_estimate": f"""
 WITH hb(hh, v) AS (VALUES {hex_byte_values}),
-fx AS (SELECT image_id, hex(bytes) AS hx, fmt FROM {quality_fixture}),
+fx AS (SELECT image_id, hex(bytes) AS hx, fmt FROM read_parquet('{fixture_parquet("quality")}')),
 posq AS (
   SELECT image_id, hx, u.i AS idx
   FROM fx, UNNEST(range(0, 64)) AS u(i)
@@ -5190,7 +5069,7 @@ FROM fx f LEFT JOIN est ON est.image_id = f.image_id
         "orientation_dedup": f"""
 SELECT image_id, TRUE AS ok,
        min(image_id) OVER (PARTITION BY src_id) AS cluster_id
-FROM {orient_fixture}
+FROM read_parquet('{fixture_parquet("orientation")}')
 """,
         # CDC: recompute every boundary (byte-pair % divisor over
         # hex(bytes) via the 256-row lookup), every chunk md5 (hex
@@ -5201,7 +5080,7 @@ FROM {orient_fixture}
         # never copied onto each of its position rows
         "cdc_chunk_dedup": f"""
 WITH hb(hh, v) AS (VALUES {hex_byte_values}),
-fx AS (SELECT video_id, hex(bytes) AS hx FROM {vid_fixture}),
+fx AS (SELECT video_id, hex(bytes) AS hx FROM read_parquet('{fixture_parquet("videos")}')),
 allb AS (
   SELECT video_id, hx FROM fx
   UNION ALL
@@ -5259,21 +5138,22 @@ GROUP BY cm.video_id
         "rescale_dedup": f"""
 SELECT image_id, TRUE AS ok,
        min(image_id) OVER (PARTITION BY src_id) AS cluster_id
-FROM {rescale_fixture}
+FROM read_parquet('{fixture_parquet("rescale")}')
 """,
         # shared patches: the generator asserted all non-logo aligned
         # patches are globally unique, so same-logo pairs (each sharing
         # exactly the one planted block) are the complete answer
         "shared_patch_pairs": f"""
 SELECT a.image_id AS id1, b.image_id AS id2, CAST(1 AS BIGINT) AS n_shared
-FROM {patch_fixture} a JOIN {patch_fixture} b
+FROM read_parquet('{fixture_parquet("patch")}') a
+JOIN read_parquet('{fixture_parquet("patch")}') b
   ON a.logo = b.logo AND a.image_id < b.image_id
 """,
         # best-copy canonical: full policy recomputed from stored w/h
         "best_copy_canonical": f"""
 WITH r AS (
   SELECT image_id, src_id, CAST(w AS BIGINT) * h AS pixels
-  FROM {rescale_fixture}
+  FROM read_parquet('{fixture_parquet("rescale")}')
 ),
 roots AS (SELECT src_id, min(image_id) AS cluster_id FROM r GROUP BY src_id),
 b AS (SELECT src_id, max(pixels) AS bp FROM r GROUP BY src_id),
@@ -5306,7 +5186,7 @@ GROUP BY source
         "border_crop_dedup": f"""
 SELECT image_id, TRUE AS ok,
        min(image_id) OVER (PARTITION BY src_id) AS cluster_id
-FROM {border_fixture}
+FROM read_parquet('{fixture_parquet("border")}')
 """,
         # brightness/rescale-invariant dHash dedup: exact-integer
         # cross-product comparisons cancel uniform shifts and composing
@@ -5317,12 +5197,13 @@ FROM {border_fixture}
         "dhash_dedup": f"""
 SELECT image_id, TRUE AS ok,
        min(image_id) OVER (PARTITION BY src_id) AS cluster_id
-FROM {dhash_fixture}
+FROM read_parquet('{fixture_parquet("dhash")}')
 """,
         "phash_hamming_pairs": f"""
 SELECT a.image_id AS id1, b.image_id AS id2,
        CAST(bit_count(xor(a.phash, b.phash)) AS BIGINT) AS hamming
-FROM {fixture} a JOIN {fixture} b ON a.image_id < b.image_id
+FROM read_parquet('{fixture_parquet("images")}') a
+JOIN read_parquet('{fixture_parquet("images")}') b ON a.image_id < b.image_id
 WHERE bit_count(xor(a.phash, b.phash)) <= 3
 """,
         # the full 3-stage north-star pipeline recomputed from scratch:
@@ -5332,7 +5213,8 @@ WHERE bit_count(xor(a.phash, b.phash)) <= 3
         # the funnel: all seven numbers recomputed from the same bytes
         "dedup_funnel": _oracle_shingle_pairs(
             None,
-            f"(SELECT image_id AS doc_id, caption AS text FROM {fixture}) src",
+            "(SELECT image_id AS doc_id, caption AS text FROM "
+            f"read_parquet('{fixture_parquet('images')}')) src",
         ).replace("WITH t AS", "WITH RECURSIVE t AS", 1)
         + f""",
 ce AS (
@@ -5341,12 +5223,14 @@ ce AS (
 ),
 he AS (
   SELECT a.image_id AS a, b.image_id AS b
-  FROM {fixture} a JOIN {fixture} b ON a.image_id < b.image_id
+  FROM read_parquet('{fixture_parquet("images")}') a
+  JOIN read_parquet('{fixture_parquet("images")}') b ON a.image_id < b.image_id
   WHERE bit_count(xor(a.phash, b.phash)) <= 3
 ),
 be AS (
   SELECT a.image_id AS a, b.image_id AS b
-  FROM {fixture} a JOIN {fixture} b
+  FROM read_parquet('{fixture_parquet("images")}') a
+  JOIN read_parquet('{fixture_parquet("images")}') b
     ON a.bytes = b.bytes AND a.image_id < b.image_id
   WHERE octet_length(a.bytes) >= 1
 ),
@@ -5367,7 +5251,7 @@ cl AS (
 ),
 asg AS (
   SELECT i.image_id, coalesce(cl.cluster_id, i.image_id) AS cluster_id
-  FROM {fixture} i LEFT JOIN cl ON i.image_id = cl.image_id
+  FROM read_parquet('{fixture_parquet("images")}') i LEFT JOIN cl ON i.image_id = cl.image_id
 ),
 szs AS (SELECT cluster_id, count(*) AS sz FROM asg GROUP BY cluster_id)
 SELECT
@@ -5386,7 +5270,8 @@ SELECT
 """,
         "multimodal_dedup_pipeline": _oracle_shingle_pairs(
             None,
-            f"(SELECT image_id AS doc_id, caption AS text FROM {fixture}) src",
+            "(SELECT image_id AS doc_id, caption AS text FROM "
+            f"read_parquet('{fixture_parquet('images')}')) src",
         ).replace("WITH t AS", "WITH RECURSIVE t AS", 1)
         + f""",
 ce AS (
@@ -5395,12 +5280,14 @@ ce AS (
 ),
 he AS (
   SELECT a.image_id AS a, b.image_id AS b
-  FROM {fixture} a JOIN {fixture} b ON a.image_id < b.image_id
+  FROM read_parquet('{fixture_parquet("images")}') a
+  JOIN read_parquet('{fixture_parquet("images")}') b ON a.image_id < b.image_id
   WHERE bit_count(xor(a.phash, b.phash)) <= 3
 ),
 be AS (
   SELECT a.image_id AS a, b.image_id AS b
-  FROM {fixture} a JOIN {fixture} b
+  FROM read_parquet('{fixture_parquet("images")}') a
+  JOIN read_parquet('{fixture_parquet("images")}') b
     ON a.bytes = b.bytes AND a.image_id < b.image_id
   WHERE octet_length(a.bytes) >= 1
 ),
@@ -5421,7 +5308,7 @@ cl AS (
 ),
 asg AS (
   SELECT i.image_id, coalesce(cl.cluster_id, i.image_id) AS cluster_id
-  FROM {fixture} i LEFT JOIN cl ON i.image_id = cl.image_id
+  FROM read_parquet('{fixture_parquet("images")}') i LEFT JOIN cl ON i.image_id = cl.image_id
 )
 SELECT image_id, cluster_id,
        row_number() OVER (PARTITION BY cluster_id
@@ -5434,7 +5321,8 @@ FROM asg
         # the held-out truth parquet reproduce recall/precision
         "pipeline_recall_report": _oracle_shingle_pairs(
             None,
-            f"(SELECT image_id AS doc_id, caption AS text FROM {fixture}) src",
+            "(SELECT image_id AS doc_id, caption AS text FROM "
+            f"read_parquet('{fixture_parquet('images')}')) src",
         ).replace("WITH t AS", "WITH RECURSIVE t AS", 1)
         + f""",
 ce AS (
@@ -5443,12 +5331,14 @@ ce AS (
 ),
 he AS (
   SELECT a.image_id AS a, b.image_id AS b
-  FROM {fixture} a JOIN {fixture} b ON a.image_id < b.image_id
+  FROM read_parquet('{fixture_parquet("images")}') a
+  JOIN read_parquet('{fixture_parquet("images")}') b ON a.image_id < b.image_id
   WHERE bit_count(xor(a.phash, b.phash)) <= 3
 ),
 be AS (
   SELECT a.image_id AS a, b.image_id AS b
-  FROM {fixture} a JOIN {fixture} b
+  FROM read_parquet('{fixture_parquet("images")}') a
+  JOIN read_parquet('{fixture_parquet("images")}') b
     ON a.bytes = b.bytes AND a.image_id < b.image_id
   WHERE octet_length(a.bytes) >= 1
 ),
@@ -5469,10 +5359,10 @@ cl AS (
 ),
 asg AS (
   SELECT i.image_id, coalesce(cl.cluster_id, i.image_id) AS cluster_id
-  FROM {fixture} i LEFT JOIN cl ON i.image_id = cl.image_id
+  FROM read_parquet('{fixture_parquet("images")}') i LEFT JOIN cl ON i.image_id = cl.image_id
 ),
 tr AS (
-  SELECT image_id, cluster_id AS t FROM {truth_fixture}
+  SELECT image_id, cluster_id AS t FROM read_parquet('{fixture_parquet("truth")}')
 ),
 hitc AS (
   SELECT CAST(sum(n * (n - 1)) / 2 AS BIGINT) AS n_hit_pairs
@@ -5502,7 +5392,8 @@ SELECT a.image_id AS id1, b.image_id AS id2,
        a.bytes = b.bytes AS exact,
        a.caption = b.caption AS captions_equal,
        TRUE AS psnr_ok
-FROM {fixture} a JOIN {fixture} b
+FROM read_parquet('{fixture_parquet("images")}') a
+JOIN read_parquet('{fixture_parquet("images")}') b
   ON a.w = b.w AND a.h = b.h AND a.phash = b.phash
  AND a.image_id < b.image_id
 """,
@@ -5725,7 +5616,8 @@ WHERE a.text IS NOT NULL AND b.text IS NOT NULL
 """,
         "caption_substring_pairs": f"""
 SELECT a.image_id AS id1, b.image_id AS id2
-FROM {fixture} a JOIN {fixture} b ON a.image_id <> b.image_id
+FROM read_parquet('{fixture_parquet("images")}') a
+JOIN read_parquet('{fixture_parquet("images")}') b ON a.image_id <> b.image_id
 WHERE a.caption IS NOT NULL AND b.caption IS NOT NULL
   AND strlen(a.caption) >= {SUBSTR_K + WINNOW_W - 1}
   AND (strlen(a.caption) < strlen(b.caption)
@@ -6716,7 +6608,7 @@ GROUP BY 1, 2
         # expression, decimal-exact per-pair sum, rounded-score rank
         "bm25_topk": f"""
 WITH t AS (
-  SELECT doc_id, {_TOKS} AS arr FROM {zipf_fixture}
+  SELECT doc_id, {_TOKS} AS arr FROM read_parquet('{fixture_parquet("zipf_docs")}')
   WHERE text IS NOT NULL AND trim(text) <> ''
 ),
 tf AS (
@@ -6983,7 +6875,7 @@ QUALIFY rnk <= {TOPK}
         # identical lag -> running-sum -> run-length cascade in SQL
         "video_scene_segments": f"""
 WITH fx AS (SELECT video_id, hex(bytes) AS hx, w*h*3 AS fsz, n_frames
-            FROM {scene_fixture}),
+            FROM read_parquet('{fixture_parquet("scene_videos")}')),
 f AS (
   SELECT video_id, t.k AS frame_idx,
          md5(substring(hx, 24 + t.k*fsz*2 + 1, fsz*2)) AS sig
@@ -7012,7 +6904,7 @@ FROM rl GROUP BY video_id
 """,
         "video_frame_dedup": f"""
 WITH fx AS (SELECT video_id, hex(bytes) AS hx, w*h*3 AS fsz, n_frames
-            FROM {vid_fixture}),
+            FROM read_parquet('{fixture_parquet("videos")}')),
 f AS (
   SELECT DISTINCT video_id,
          md5(substring(hx, 24 + t.k*fsz*2 + 1, fsz*2)) AS sig
@@ -7035,7 +6927,7 @@ WHERE round(ni / (s1.n + s2.n - ni), 6) >= 0.5
         # fixture-metadata trust anywhere
         "avi_video_dedup": f"""
 WITH fx AS (
-  SELECT video_id, hex(bytes) AS hx FROM {avi_fixture}
+  SELECT video_id, hex(bytes) AS hx FROM read_parquet('{fixture_parquet("avi")}')
   WHERE substring(hex(bytes), 1, 8) = '52494646'
     AND substring(hex(bytes), 17, 8) = '41564920'
 ),
@@ -7072,7 +6964,7 @@ WHERE round(ni / (s1.n + s2.n - ni), 6) >= 0.5
 WITH hx AS (
   SELECT audio_id, hex(bytes) AS h, n_samples AS n,
          n_samples // 256 AS n_win
-  FROM {audq_fixture} WHERE n_samples >= 256
+  FROM read_parquet('{fixture_parquet("audio_quality")}') WHERE n_samples >= 256
 ),
 hb(hh, v) AS (VALUES {hex_byte_values}),
 s AS (
@@ -7116,7 +7008,7 @@ WITH hb(hh, v) AS (VALUES {hex_byte_values}),
 fx AS (
   SELECT image_id, hex(bytes) AS hx, CAST(w AS BIGINT) * h AS n,
          9 + length(CAST(w AS VARCHAR)) + length(CAST(h AS VARCHAR)) AS hdr
-  FROM {imgq_fixture}
+  FROM read_parquet('{fixture_parquet("imgq")}')
 ),
 t AS (SELECT image_id, n, hx, hdr, unnest(range(n)) AS k FROM fx),
 px AS (
@@ -7155,7 +7047,7 @@ WITH s AS (
          CASE WHEN bytes IS NULL THEN NULL
               ELSE substr(hex(bytes), 1, 24) END AS hx,
          bytes IS NULL AS is_null
-  FROM {sniff_fixture}
+  FROM read_parquet('{fixture_parquet("sniff")}')
 ),
 d AS (
   SELECT image_id, fmt,
@@ -7180,7 +7072,7 @@ SELECT image_id, fmt, sniffed_fmt, fmt = sniffed_fmt AS matches FROM d
         # equal answers prove sha-keying stands in for byte identity
         "caption_consistency": f"""
 WITH k AS (
-  SELECT image_id, bytes, caption FROM {capaudit_fixture}
+  SELECT image_id, bytes, caption FROM read_parquet('{fixture_parquet("caption_audit")}')
   WHERE bytes IS NOT NULL AND caption IS NOT NULL
 ),
 pi AS (
@@ -7203,17 +7095,18 @@ SELECT k.image_id,
 FROM k JOIN pi ON pi.b = k.bytes JOIN pc ON pc.c = k.caption
 UNION ALL
 SELECT image_id, CAST(0 AS BIGINT), CAST(0 AS BIGINT), 'incomplete'
-FROM {capaudit_fixture} WHERE bytes IS NULL OR caption IS NULL
+FROM read_parquet('{fixture_parquet("caption_audit")}') WHERE bytes IS NULL OR caption IS NULL
 """,
         # threshold sweep: the oracle does the quadratic self join the
         # engine's banded tier avoids — bit_count(xor) on the same
         # phash column, identical contingency recall denominator
         "phash_threshold_sweep": f"""
-WITH t AS (SELECT image_id, cluster_id AS t FROM {truth_fixture}),
+WITH t AS (SELECT image_id, cluster_id AS t FROM read_parquet('{fixture_parquet("truth")}')),
 p AS (
   SELECT a.image_id AS id1, b.image_id AS id2,
          bit_count(xor(a.phash, b.phash)) AS d
-  FROM {fixture} a JOIN {fixture} b ON a.image_id < b.image_id
+  FROM read_parquet('{fixture_parquet("images")}') a
+  JOIN read_parquet('{fixture_parquet("images")}') b ON a.image_id < b.image_id
   WHERE bit_count(xor(a.phash, b.phash)) <= {SWEEP_R}
 ),
 lab AS (
@@ -7252,7 +7145,7 @@ FROM cum, tot
         "audio_fingerprint_dups": f"""
 WITH hx AS (
   SELECT audio_id, hex(bytes) AS h, n_samples // 256 AS n_win
-  FROM {aud_fixture} WHERE n_samples >= 512
+  FROM read_parquet('{fixture_parquet("audio")}') WHERE n_samples >= 512
 ),
 hb(hh, v) AS (VALUES {hex_byte_values}),
 s AS (

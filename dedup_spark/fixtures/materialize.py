@@ -1,19 +1,25 @@
-"""Materialize the deterministic fixture image corpus to parquet.
+"""Materialize the pinned fixture corpora to parquet, one table of them.
 
 The driver's correctness gate runs our Spark queries AND our DuckDB
-oracle SQL side-by-side; for the image-payload queries both sides must
-see the SAME table, so the synthesized corpus (fixtures/images.py) is
-written ONCE to a fixed parquet path and both engines read that file —
-Spark via ``spark.read.parquet``, DuckDB via ``read_parquet('<path>')``.
-This mirrors the reference's golden-contract testing (the benchmark
-generator writes ground truth to disk and every tool is checked against
-the same files, benchmark/generator.py:106-120).
+oracle SQL side-by-side; for the payload queries both sides must see
+the SAME table, so each synthesized corpus is written ONCE to a fixed
+parquet path and both engines read that file — Spark via
+``spark.read.parquet(fixture_parquet(name))``, DuckDB via
+``read_parquet('<path>')``. This mirrors the reference's golden-contract
+testing (the benchmark generator writes ground truth to disk and every
+tool is checked against the same files, benchmark/generator.py:106-120).
 
-The path is versioned by the generation parameters: changing the corpus
-params yields a new directory, so a stale cache can never be silently
+``FIXTURES`` is the whole contract: each name maps to a directory
+prefix, a file stem, a generator returning a pandas frame, the pinned
+generator params and the DDL schema of the written table. The schema is
+declared once — the same DDL string the Spark side uses — and the Arrow
+column types are derived from it. The directory is
+``<prefix><params tag>`` under ``FIXTURE_ROOT``, so changing a corpus'
+params yields a new directory and a stale cache can never be silently
 reused. Writes are atomic (temp file + rename) so concurrent callers
-(pytest workers, the driver, check_oracle) cannot observe a partial
-file.
+(pytest workers, the driver, check_oracle) never observe a partial
+file. Pure pandas/pyarrow — no SparkSession needed, so the oracle side
+can trigger materialization too.
 """
 
 from __future__ import annotations
@@ -21,279 +27,47 @@ from __future__ import annotations
 import os
 import tempfile
 
+import numpy as np
+import pandas as pd
+
+from dedup_spark.fixtures import av, images
+from dedup_spark.fixtures.av import AUDIO_SCHEMA, VIDEOS_SCHEMA
+from dedup_spark.fixtures.htmlgen import generate_html_corpus
+from dedup_spark.fixtures.images import IMAGES_SCHEMA, TRUTH_SCHEMA
+
 FIXTURE_ROOT = "/tmp/dedup_spark_fixture"
 
-# the pinned corpus every image-payload driver query runs on
-FIXTURE_PARAMS = dict(
-    n_rows=400, dup_ratio=0.3, near_dup_ratio=0.1, norm_dup_ratio=0.08, seed=42
-)
+# DDL type -> pyarrow type factory name
+_ARROW_TYPES = {
+    "string": "string",
+    "binary": "binary",
+    "int": "int32",
+    "long": "int64",
+    "boolean": "bool_",
+}
 
 
-def _params_tag(params: dict) -> str:
-    return "_".join(f"{k}{params[k]}" for k in sorted(params))
+def _field(generate, attr: str):
+    """The ``attr`` frame (.images/.truth/.videos/.audio) of a
+    generator that returns a corpus object."""
+    return lambda **params: getattr(generate(**params), attr)
 
 
-def fixture_images_parquet(params: dict | None = None) -> str:
-    """Return the parquet path of the fixture corpus, generating it on
-    first use. Pure pandas/pyarrow — no SparkSession needed, so the
-    oracle side can trigger materialization too."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from dedup_spark.fixtures.images import generate_corpus
-
-    params = dict(FIXTURE_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, _params_tag(params))
-    path = os.path.join(out_dir, "images.parquet")
-    if os.path.exists(path):
-        return path
-    os.makedirs(out_dir, exist_ok=True)
-    corpus = generate_corpus(**params)
-    pdf = corpus.images
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["image_id"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["w"], type=pa.int32()),
-            pa.array(pdf["h"], type=pa.int32()),
-            pa.array(pdf["fmt"], type=pa.string()),
-            pa.array(pdf["caption"], type=pa.string()),
-            pa.array(pdf["phash"], type=pa.int64()),
-        ],
-        names=["image_id", "bytes", "w", "h", "fmt", "caption", "phash"],
-    )
-    fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".parquet.tmp")
-    os.close(fd)
-    try:
-        pq.write_table(table, tmp)
-        os.rename(tmp, path)  # atomic on the same filesystem
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    return path
-
-
-def _write_atomic(table, out_dir: str, path: str) -> str:
-    import pyarrow.parquet as pq
-
-    os.makedirs(out_dir, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".parquet.tmp")
-    os.close(fd)
-    try:
-        pq.write_table(table, tmp)
-        os.rename(tmp, path)
-    finally:
-        if os.path.exists(tmp):
-            os.unlink(tmp)
-    return path
-
-
-VIDEO_PARAMS = dict(n_base=60, every_n=4, seed=42)
-AUDIO_PARAMS = dict(n_base=50, seed=42)
-
-
-def fixture_videos_parquet(params: dict | None = None) -> str:
-    """Pinned rawv video corpus (fixtures/av.py), written once; read by
-    Spark and DuckDB alike — same golden-file contract as the images."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.av import generate_video_corpus
-
-    params = dict(VIDEO_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "videos_" + _params_tag(params))
-    path = os.path.join(out_dir, "videos.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_video_corpus(**params).videos
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["video_id"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["w"], type=pa.int32()),
-            pa.array(pdf["h"], type=pa.int32()),
-            pa.array(pdf["n_frames"], type=pa.int32()),
-            pa.array(pdf["fmt"], type=pa.string()),
-        ],
-        names=["video_id", "bytes", "w", "h", "n_frames", "fmt"],
-    )
-    return _write_atomic(table, out_dir, path)
-
-
-SCENE_VIDEO_PARAMS = dict(n_base=40, seed=43)
-
-
-def fixture_scene_videos_parquet(params: dict | None = None) -> str:
-    """Pinned SCENE-STRUCTURED rawv corpus (fixtures/av.py
-    generate_scene_video_corpus) for the segmentation tier — separate
-    from the near-dup video corpus so its gates stay untouched."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.av import generate_scene_video_corpus
-
-    params = dict(SCENE_VIDEO_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "scenevideos_" + _params_tag(params))
-    path = os.path.join(out_dir, "videos.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_scene_video_corpus(**params).videos
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["video_id"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["w"], type=pa.int32()),
-            pa.array(pdf["h"], type=pa.int32()),
-            pa.array(pdf["n_frames"], type=pa.int32()),
-            pa.array(pdf["fmt"], type=pa.string()),
-        ],
-        names=["video_id", "bytes", "w", "h", "n_frames", "fmt"],
-    )
-    return _write_atomic(table, out_dir, path)
-
-
-AUDIOQ_PARAMS = dict(n_base=30, seed=44)
-
-
-def fixture_audio_quality_parquet(params: dict | None = None) -> str:
-    """Pinned defect-structured pcm16 corpus (fixtures/av.py
-    generate_audio_quality_corpus) for the silence/clipping tier —
-    separate from the fingerprint corpus so its gates stay
-    untouched."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.av import generate_audio_quality_corpus
-
-    params = dict(AUDIOQ_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "audioq_" + _params_tag(params))
-    path = os.path.join(out_dir, "audio.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_audio_quality_corpus(**params).audio
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["audio_id"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["sample_rate"], type=pa.int32()),
-            pa.array(pdf["n_samples"], type=pa.int32()),
-            pa.array(pdf["fmt"], type=pa.string()),
-        ],
-        names=["audio_id", "bytes", "sample_rate", "n_samples", "fmt"],
-    )
-    return _write_atomic(table, out_dir, path)
-
-
-def fixture_audio_parquet(params: dict | None = None) -> str:
-    """Pinned pcm16 audio corpus (fixtures/av.py)."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.av import generate_audio_corpus
-
-    params = dict(AUDIO_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "audio_" + _params_tag(params))
-    path = os.path.join(out_dir, "audio.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_audio_corpus(**params).audio
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["audio_id"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["sample_rate"], type=pa.int32()),
-            pa.array(pdf["n_samples"], type=pa.int32()),
-            pa.array(pdf["fmt"], type=pa.string()),
-        ],
-        names=["audio_id", "bytes", "sample_rate", "n_samples", "fmt"],
-    )
-    return _write_atomic(table, out_dir, path)
-
-
-QUALITY_PARAMS = dict(n=30, seed=19)
-
-
-def fixture_quality_parquet(params: dict | None = None) -> str:
-    """Pinned varied-quality JPEG corpus (fixtures/images.py
-    generate_quality_corpus)."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.images import generate_quality_corpus
-
-    params = dict(QUALITY_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "quality_" + _params_tag(params))
-    path = os.path.join(out_dir, "quality.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_quality_corpus(**params)
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["image_id"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["w"], type=pa.int32()),
-            pa.array(pdf["h"], type=pa.int32()),
-            pa.array(pdf["fmt"], type=pa.string()),
-            pa.array(pdf["quality"], type=pa.int32()),
-        ],
-        names=["image_id", "bytes", "w", "h", "fmt", "quality"],
-    )
-    return _write_atomic(table, out_dir, path)
-
-
-ORIENT_PARAMS = dict(n_src=20, seed=17)
-
-
-def fixture_orientation_parquet(params: dict | None = None) -> str:
-    """Pinned 8-orientation image corpus (fixtures/images.py
-    generate_orientation_corpus)."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.images import generate_orientation_corpus
-
-    params = dict(ORIENT_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "orient_" + _params_tag(params))
-    path = os.path.join(out_dir, "orient.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_orientation_corpus(**params)
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["image_id"], type=pa.string()),
-            pa.array(pdf["src_id"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["w"], type=pa.int32()),
-            pa.array(pdf["h"], type=pa.int32()),
-            pa.array(pdf["fmt"], type=pa.string()),
-            pa.array(pdf["orientation"], type=pa.int32()),
-        ],
-        names=["image_id", "src_id", "bytes", "w", "h", "fmt", "orientation"],
-    )
-    return _write_atomic(table, out_dir, path)
-
-
-ZIPF_PARAMS = dict(n_docs=2000, seed=29)
-
-
-def fixture_zipf_docs_parquet(params: dict | None = None) -> str:
-    """Pinned Zipf-vocabulary document corpus — a realistic term
-    distribution for the retrieval tier (the driver's synthetic
-    documents table has a 31-term vocabulary with median df 0.78N,
-    which degenerates BM25's df prune). ~5k-word vocab, Zipf-ranked
-    frequencies, every 20th doc a 10%-mutated copy of its predecessor
-    so retrieval has planted true positives. Deterministic from seed;
-    read by Spark and DuckDB alike."""
-    import numpy as np
-    import pyarrow as pa
-
-    params = dict(ZIPF_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "zipf_" + _params_tag(params))
-    path = os.path.join(out_dir, "zipf_docs.parquet")
-    if os.path.exists(path):
-        return path
-    rng = np.random.default_rng(params["seed"])
+def generate_zipf_docs(n_docs: int, seed: int) -> pd.DataFrame:
+    """Zipf-vocabulary document corpus — a realistic term distribution
+    for the retrieval tier (the driver's synthetic documents table has a
+    31-term vocabulary with median df 0.78N, which degenerates BM25's df
+    prune). ~5k-word vocab, Zipf-ranked frequencies, every 20th doc a
+    10%-mutated copy of its predecessor so retrieval has planted true
+    positives. Deterministic from seed."""
+    rng = np.random.default_rng(seed)
     vocab_n = 5000
     ranks = np.arange(1, vocab_n + 1, dtype=np.float64)
     p = 1.0 / ranks
     p /= p.sum()
     ids, texts = [], []
     prev_words = None
-    for i in range(params["n_docs"]):
+    for i in range(n_docs):
         if prev_words is not None and i % 20 == 19:
             words = list(prev_words)  # near-dup: mutate 10% of tokens
             for j in rng.choice(len(words), max(1, len(words) // 10),
@@ -305,435 +79,111 @@ def fixture_zipf_docs_parquet(params: dict | None = None) -> str:
         ids.append(i)
         texts.append(" ".join(words))
         prev_words = words
-    table = pa.Table.from_arrays(
-        [pa.array(ids, type=pa.int64()), pa.array(texts, type=pa.string())],
-        names=["doc_id", "text"],
-    )
-    return _write_atomic(table, out_dir, path)
+    return pd.DataFrame({"doc_id": ids, "text": texts})
 
 
-EXIF_PARAMS = dict(n=40, seed=13)
+# the column sets most image corpora share
+_IMAGE = "image_id string, bytes binary, w int, h int, fmt string"
+_SOURCED = (
+    "image_id string, src_id string, bytes binary, w int, h int, fmt string"
+)
+_PIXEL_CORPUS = dict(n_rows=400, dup_ratio=0.3, near_dup_ratio=0.1,
+                     norm_dup_ratio=0.08, seed=42)
+
+# name -> (directory prefix, file stem, generator, params, DDL schema)
+FIXTURES = {
+    # the main pixel corpus every image-payload query runs on, and its
+    # ground-truth clusters (same params, so the same generated pair)
+    "images": ("", "images", _field(images.generate_corpus, "images"),
+               _PIXEL_CORPUS, IMAGES_SCHEMA),
+    "truth": ("", "truth", _field(images.generate_corpus, "truth"),
+              _PIXEL_CORPUS, TRUTH_SCHEMA),
+    "videos": ("videos_", "videos", _field(av.generate_video_corpus, "videos"),
+               dict(n_base=60, every_n=4, seed=42), VIDEOS_SCHEMA),
+    # scene-structured rawv corpus for the segmentation tier
+    "scene_videos": ("scenevideos_", "videos",
+                     _field(av.generate_scene_video_corpus, "videos"),
+                     dict(n_base=40, seed=43), VIDEOS_SCHEMA),
+    "audio": ("audio_", "audio", _field(av.generate_audio_corpus, "audio"),
+              dict(n_base=50, seed=42), AUDIO_SCHEMA),
+    # silence/clipping-structured pcm16 corpus for the audio quality tier
+    "audio_quality": ("audioq_", "audio",
+                      _field(av.generate_audio_quality_corpus, "audio"),
+                      dict(n_base=30, seed=44), AUDIO_SCHEMA),
+    "avi": ("avi_", "avi", _field(av.generate_avi_corpus, "videos"),
+            dict(n_base=30, every_n=2, seed=42), VIDEOS_SCHEMA),
+    "quality": ("quality_", "quality", images.generate_quality_corpus,
+                dict(n=30, seed=19), _IMAGE + ", quality int"),
+    "orientation": ("orient_", "orient", images.generate_orientation_corpus,
+                    dict(n_src=20, seed=17),
+                    "image_id string, src_id string, bytes binary, w int, "
+                    "h int, fmt string, orientation int"),
+    "zipf_docs": ("zipf_", "zipf_docs", generate_zipf_docs,
+                  dict(n_docs=2000, seed=29), "doc_id long, text string"),
+    "exif": ("exif_", "exif", images.generate_exif_corpus,
+             dict(n=40, seed=13), _IMAGE + ", endian string"),
+    "rescale": ("rescale_", "rescale", images.generate_rescale_corpus,
+                dict(n_src=40, seed=7), _SOURCED),
+    "dhash": ("dhash_", "dhash", images.generate_dhash_corpus,
+              dict(n_src=40, seed=11), _SOURCED),
+    # brightness/contrast defect classes for the curation tier
+    "imgq": ("imgq_", "images", images.generate_image_quality_corpus,
+             dict(n=40, seed=23), _IMAGE + ", klass string"),
+    # `expected`, `klass`, `logo`, `src_id`, `has_gps` and `endian` below
+    # are generator ground truth: tests and oracle keys, never engine input
+    "sniff": ("sniff_", "images", images.generate_sniff_corpus,
+              dict(n=60, seed=29),
+              "image_id string, bytes binary, fmt string, klass string, "
+              "expected string"),
+    "caption_audit": ("capaudit_", "images",
+                      images.generate_caption_audit_corpus, dict(seed=31),
+                      "image_id string, bytes binary, caption string, "
+                      "klass string"),
+    "border": ("border_", "images", images.generate_border_corpus,
+               dict(n_src=30, seed=37), _SOURCED),
+    "patch": ("patch_", "images", images.generate_patch_corpus, dict(seed=41),
+              "image_id string, logo string, bytes binary, w int, h int, "
+              "fmt string, klass string"),
+    "gps": ("gps_", "images", images.generate_gps_corpus, dict(n=36, seed=43),
+            "image_id string, bytes binary, fmt string, endian string, "
+            "has_gps boolean"),
+    "rotation": ("rot_", "images", images.generate_rotation_corpus,
+                 dict(n_src=25, seed=47), _SOURCED),
+    "html": ("html_", "docs", generate_html_corpus, dict(n=50, seed=53),
+             "doc_id long, html string, expected string"),
+    "recompress": ("recomp_", "images", images.generate_recompress_corpus,
+                   dict(n_src=24, seed=59), _SOURCED),
+}
 
 
-def fixture_exif_parquet(params: dict | None = None) -> str:
-    """Pinned EXIF-bearing JPEG corpus (fixtures/images.py
-    generate_exif_corpus) — the metadata-at-scan-speed golden file."""
+def _params_tag(params: dict) -> str:
+    return "_".join(f"{k}{params[k]}" for k in sorted(params))
+
+
+def fixture_parquet(name: str) -> str:
+    """Return the parquet path of fixture ``name`` (a ``FIXTURES`` key),
+    generating and writing it on first use."""
     import pyarrow as pa
+    import pyarrow.parquet as pq
 
-    from dedup_spark.fixtures.images import generate_exif_corpus
-
-    params = dict(EXIF_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "exif_" + _params_tag(params))
-    path = os.path.join(out_dir, "exif.parquet")
+    prefix, stem, generate, params, schema = FIXTURES[name]
+    out_dir = os.path.join(FIXTURE_ROOT, prefix + _params_tag(params))
+    path = os.path.join(out_dir, f"{stem}.parquet")
     if os.path.exists(path):
         return path
-    pdf = generate_exif_corpus(**params)
+    pdf = generate(**params)
+    cols = [c.split() for c in schema.split(",")]
     table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["image_id"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["w"], type=pa.int32()),
-            pa.array(pdf["h"], type=pa.int32()),
-            pa.array(pdf["fmt"], type=pa.string()),
-            pa.array(pdf["endian"], type=pa.string()),
-        ],
-        names=["image_id", "bytes", "w", "h", "fmt", "endian"],
+        [pa.array(pdf[c], getattr(pa, _ARROW_TYPES[t])()) for c, t in cols],
+        names=[c for c, _ in cols],
     )
-    return _write_atomic(table, out_dir, path)
-
-
-RESCALE_PARAMS = dict(n_src=40, seed=7)
-
-
-def fixture_rescale_parquet(params: dict | None = None) -> str:
-    """Pinned multi-resolution image corpus (fixtures/images.py
-    generate_rescale_corpus) — the scale-invariant-dedup golden file."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.images import generate_rescale_corpus
-
-    params = dict(RESCALE_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "rescale_" + _params_tag(params))
-    path = os.path.join(out_dir, "rescale.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_rescale_corpus(**params)
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["image_id"], type=pa.string()),
-            pa.array(pdf["src_id"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["w"], type=pa.int32()),
-            pa.array(pdf["h"], type=pa.int32()),
-            pa.array(pdf["fmt"], type=pa.string()),
-        ],
-        names=["image_id", "src_id", "bytes", "w", "h", "fmt"],
-    )
-    return _write_atomic(table, out_dir, path)
-
-
-def fixture_truth_parquet(params: dict | None = None) -> str:
-    """Ground-truth cluster assignments for the SAME deterministic
-    corpus as fixture_images_parquet (identical params/seed → the
-    generator reproduces the exact images+truth pair) — the held-out
-    side of the north-rule recall gate. Columns:
-    (image_id, cluster_id, is_canonical)."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.images import generate_corpus
-
-    params = dict(FIXTURE_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, _params_tag(params))
-    path = os.path.join(out_dir, "truth.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_corpus(**params).truth
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["image_id"], type=pa.string()),
-            pa.array(pdf["cluster_id"], type=pa.string()),
-            pa.array(pdf["is_canonical"], type=pa.bool_()),
-        ],
-        names=["image_id", "cluster_id", "is_canonical"],
-    )
-    return _write_atomic(table, out_dir, path)
-
-
-DHASH_PARAMS = dict(n_src=40, seed=11)
-
-
-def fixture_dhash_parquet(params: dict | None = None) -> str:
-    """Pinned brightness/rescale-variant image corpus
-    (fixtures/images.py generate_dhash_corpus) — the dHash-dedup
-    golden file."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.images import generate_dhash_corpus
-
-    params = dict(DHASH_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "dhash_" + _params_tag(params))
-    path = os.path.join(out_dir, "dhash.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_dhash_corpus(**params)
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["image_id"], type=pa.string()),
-            pa.array(pdf["src_id"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["w"], type=pa.int32()),
-            pa.array(pdf["h"], type=pa.int32()),
-            pa.array(pdf["fmt"], type=pa.string()),
-        ],
-        names=["image_id", "src_id", "bytes", "w", "h", "fmt"],
-    )
-    return _write_atomic(table, out_dir, path)
-
-
-AVI_PARAMS = dict(n_base=30, every_n=2, seed=42)
-
-
-def fixture_avi_parquet(params: dict | None = None) -> str:
-    """Pinned MJPEG-in-AVI corpus (fixtures/av.py generate_avi_corpus)
-    — the real-container video tier's golden file."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.av import generate_avi_corpus
-
-    params = dict(AVI_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "avi_" + _params_tag(params))
-    path = os.path.join(out_dir, "avi.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_avi_corpus(**params).videos
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["video_id"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["w"], type=pa.int32()),
-            pa.array(pdf["h"], type=pa.int32()),
-            pa.array(pdf["n_frames"], type=pa.int32()),
-            pa.array(pdf["fmt"], type=pa.string()),
-        ],
-        names=["video_id", "bytes", "w", "h", "n_frames", "fmt"],
-    )
-    return _write_atomic(table, out_dir, path)
-
-
-IMGQ_PARAMS = dict(n=40, seed=23)
-
-
-def fixture_imgq_parquet(params: dict | None = None) -> str:
-    """Pinned defect-structured image corpus (fixtures/images.py
-    generate_image_quality_corpus) for the brightness/contrast
-    curation tier — separate from the main fixture so its gates stay
-    untouched."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.images import generate_image_quality_corpus
-
-    params = dict(IMGQ_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "imgq_" + _params_tag(params))
-    path = os.path.join(out_dir, "images.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_image_quality_corpus(**params)
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["image_id"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["w"], type=pa.int32()),
-            pa.array(pdf["h"], type=pa.int32()),
-            pa.array(pdf["fmt"], type=pa.string()),
-            pa.array(pdf["klass"], type=pa.string()),
-        ],
-        names=["image_id", "bytes", "w", "h", "fmt", "klass"],
-    )
-    return _write_atomic(table, out_dir, path)
-
-
-SNIFF_PARAMS = dict(n=60, seed=29)
-
-
-def fixture_sniff_parquet(params: dict | None = None) -> str:
-    """Pinned mislabel-structured corpus (fixtures/images.py
-    generate_sniff_corpus) for the magic-byte format-sniffing ingest
-    audit. `expected` is generator ground truth for tests only — the
-    driver oracle recomputes the sniff from raw hex, never reads it."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.images import generate_sniff_corpus
-
-    params = dict(SNIFF_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "sniff_" + _params_tag(params))
-    path = os.path.join(out_dir, "images.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_sniff_corpus(**params)
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["image_id"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["fmt"], type=pa.string()),
-            pa.array(pdf["klass"], type=pa.string()),
-            pa.array(pdf["expected"], type=pa.string()),
-        ],
-        names=["image_id", "bytes", "fmt", "klass", "expected"],
-    )
-    return _write_atomic(table, out_dir, path)
-
-
-CAPAUDIT_PARAMS = dict(seed=31)
-
-
-def fixture_caption_audit_parquet(params: dict | None = None) -> str:
-    """Pinned structured corpus (fixtures/images.py
-    generate_caption_audit_corpus) for the caption↔image consistency
-    audit. `klass` is generator ground truth for tests only."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.images import generate_caption_audit_corpus
-
-    params = dict(CAPAUDIT_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "capaudit_" + _params_tag(params))
-    path = os.path.join(out_dir, "images.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_caption_audit_corpus(**params)
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["image_id"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["caption"], type=pa.string()),
-            pa.array(pdf["klass"], type=pa.string()),
-        ],
-        names=["image_id", "bytes", "caption", "klass"],
-    )
-    return _write_atomic(table, out_dir, path)
-
-
-BORDER_PARAMS = dict(n_src=30, seed=37)
-
-
-def fixture_border_parquet(params: dict | None = None) -> str:
-    """Pinned uniform-border corpus (fixtures/images.py
-    generate_border_corpus) for the border/pad-invariant dedup tier.
-    `src_id` is generator ground truth — the oracle's partition key,
-    never shown to the engine."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.images import generate_border_corpus
-
-    params = dict(BORDER_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "border_" + _params_tag(params))
-    path = os.path.join(out_dir, "images.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_border_corpus(**params)
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["image_id"], type=pa.string()),
-            pa.array(pdf["src_id"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["w"], type=pa.int32()),
-            pa.array(pdf["h"], type=pa.int32()),
-            pa.array(pdf["fmt"], type=pa.string()),
-        ],
-        names=["image_id", "src_id", "bytes", "w", "h", "fmt"],
-    )
-    return _write_atomic(table, out_dir, path)
-
-
-PATCH_PARAMS = dict(seed=41)
-
-
-def fixture_patch_parquet(params: dict | None = None) -> str:
-    """Pinned planted-logo corpus (fixtures/images.py
-    generate_patch_corpus) for shared-patch mining. `logo` is the
-    oracle's pair key; `klass` is test ground truth — the engine sees
-    neither."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.images import generate_patch_corpus
-
-    params = dict(PATCH_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "patch_" + _params_tag(params))
-    path = os.path.join(out_dir, "images.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_patch_corpus(**params)
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["image_id"], type=pa.string()),
-            pa.array(pdf["logo"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["w"], type=pa.int32()),
-            pa.array(pdf["h"], type=pa.int32()),
-            pa.array(pdf["fmt"], type=pa.string()),
-            pa.array(pdf["klass"], type=pa.string()),
-        ],
-        names=["image_id", "logo", "bytes", "w", "h", "fmt", "klass"],
-    )
-    return _write_atomic(table, out_dir, path)
-
-
-GPS_PARAMS = dict(n=36, seed=43)
-
-
-def fixture_gps_parquet(params: dict | None = None) -> str:
-    """Pinned GPS-privacy corpus (fixtures/images.py
-    generate_gps_corpus). `endian`/`has_gps` are the oracle's layout
-    keys (also re-derivable from raw hex — the oracle derives has_gps
-    from the IFD0 entry count); the engine sees bytes only."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.images import generate_gps_corpus
-
-    params = dict(GPS_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "gps_" + _params_tag(params))
-    path = os.path.join(out_dir, "images.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_gps_corpus(**params)
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["image_id"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["fmt"], type=pa.string()),
-            pa.array(pdf["endian"], type=pa.string()),
-            pa.array(pdf["has_gps"], type=pa.bool_()),
-        ],
-        names=["image_id", "bytes", "fmt", "endian", "has_gps"],
-    )
-    return _write_atomic(table, out_dir, path)
-
-
-ROT_PARAMS = dict(n_src=25, seed=47)
-
-
-def fixture_rotation_parquet(params: dict | None = None) -> str:
-    """Pinned dihedral-variant corpus (fixtures/images.py
-    generate_rotation_corpus) for rotation/flip-invariant dedup.
-    `src_id` is the oracle's partition key; the engine sees pixels."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.images import generate_rotation_corpus
-
-    params = dict(ROT_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "rot_" + _params_tag(params))
-    path = os.path.join(out_dir, "images.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_rotation_corpus(**params)
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["image_id"], type=pa.string()),
-            pa.array(pdf["src_id"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["w"], type=pa.int32()),
-            pa.array(pdf["h"], type=pa.int32()),
-            pa.array(pdf["fmt"], type=pa.string()),
-        ],
-        names=["image_id", "src_id", "bytes", "w", "h", "fmt"],
-    )
-    return _write_atomic(table, out_dir, path)
-
-
-HTML_PARAMS = dict(n=50, seed=53)
-
-
-def fixture_html_parquet(params: dict | None = None) -> str:
-    """Pinned crawled-HTML corpus (fixtures/htmlgen.py). `expected` is
-    the generator's parser-cross-checked ground truth for tests; the
-    oracle recomputes extraction from `html` with its own regex
-    cascade."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.htmlgen import generate_html_corpus
-
-    params = dict(HTML_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "html_" + _params_tag(params))
-    path = os.path.join(out_dir, "docs.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_html_corpus(**params)
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["doc_id"], type=pa.int64()),
-            pa.array(pdf["html"], type=pa.string()),
-            pa.array(pdf["expected"], type=pa.string()),
-        ],
-        names=["doc_id", "html", "expected"],
-    )
-    return _write_atomic(table, out_dir, path)
-
-
-RECOMP_PARAMS = dict(n_src=24, seed=59)
-
-
-def fixture_recompress_parquet(params: dict | None = None) -> str:
-    """Pinned recompression corpus (fixtures/images.py
-    generate_recompress_corpus). `src_id` is the oracle's partition
-    key; margins (within ≤ 4, cross ≥ 12) asserted at generation."""
-    import pyarrow as pa
-
-    from dedup_spark.fixtures.images import generate_recompress_corpus
-
-    params = dict(RECOMP_PARAMS if params is None else params)
-    out_dir = os.path.join(FIXTURE_ROOT, "recomp_" + _params_tag(params))
-    path = os.path.join(out_dir, "images.parquet")
-    if os.path.exists(path):
-        return path
-    pdf = generate_recompress_corpus(**params)
-    table = pa.Table.from_arrays(
-        [
-            pa.array(pdf["image_id"], type=pa.string()),
-            pa.array(pdf["src_id"], type=pa.string()),
-            pa.array(pdf["bytes"], type=pa.binary()),
-            pa.array(pdf["w"], type=pa.int32()),
-            pa.array(pdf["h"], type=pa.int32()),
-            pa.array(pdf["fmt"], type=pa.string()),
-        ],
-        names=["image_id", "src_id", "bytes", "w", "h", "fmt"],
-    )
-    return _write_atomic(table, out_dir, path)
+    os.makedirs(out_dir, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=out_dir, suffix=".parquet.tmp")
+    os.close(fd)
+    try:
+        pq.write_table(table, tmp)
+        os.rename(tmp, path)  # atomic on the same filesystem
+    finally:
+        if os.path.exists(tmp):
+            os.unlink(tmp)
+    return path

@@ -13,7 +13,7 @@ each field's absolute byte offset in the file is a constant the writer
 asserts — the oracle slices hex at those offsets and re-decodes every
 value, both endians); the READERS are general and own no container
 syntax: ``jpeg.marker_segments`` (the pixel decoder's own marker walk)
-finds the first Exif APP1, and ``tiff.read_header`` / ``ifd_entries`` /
+finds the Exif APP1 segments, and ``tiff.read_header`` / ``ifd_entries`` /
 ``entry_value`` (the TIFF codec's header parse and IFD reader) honor
 the endian flag and walk entries of any order, inline vs offset values,
 unknown tags skipped — so the gate proves the shared walkers against
@@ -157,14 +157,13 @@ def insert_app1(jpeg: bytes, app1: bytes) -> bytes:
     return jpeg[:2] + app1 + jpeg[2:]
 
 
-def _exif_tiff(jpeg: bytes) -> tuple[int, bytes, str, int] | None:
+def _exif_tiffs(jpeg: bytes) -> Iterator[tuple[int, bytes, str, int]]:
     """(file offset, bytes, byte-order prefix, IFD0 offset) of the TIFF
-    block in the first Exif APP1 the marker walk reaches, or None."""
+    block of every Exif APP1 the marker walk reaches, in file order."""
     for marker, start, end in marker_segments(jpeg):
         if marker == 0xE1 and jpeg[start : start + 6] == b"Exif\0\0":
             tiff = jpeg[start + 6 : end]
-            return start + 6, tiff, *read_header(tiff)
-    return None
+            yield start + 6, tiff, *read_header(tiff)
 
 
 def _tags(tiff: bytes, e: str, at: int) -> dict:
@@ -195,22 +194,22 @@ def parse_exif(jpeg: bytes) -> dict | None:
     Malformed structures raise ValueError — never struct.error or
     IndexError, which would escape callers' except clauses (the
     10^12-row survive-corruption invariant)."""
-    found = _exif_tiff(jpeg)
+    found = next(_exif_tiffs(jpeg), None)
     return None if found is None else _tags(*found[1:])
 
 
 def parse_gps(jpeg: bytes) -> dict | None:
-    """The GPS sub-IFD (pointer tag 0x8825; the last one wins) read
-    like IFD0. Returns {gps_tag: value} or None when no Exif / no GPS
-    pointer. Test + audit surface — the scale path never needs decoded
+    """The GPS sub-IFD (pointer tag 0x8825; the last one wins) of the
+    first Exif APP1 that has one, read like IFD0. Returns
+    {gps_tag: value} or None when no Exif APP1 carries a GPS pointer.
+    Test + audit surface — the scale path never needs decoded
     coordinates, only their removal. Malformed structures raise
     ValueError, as in parse_exif."""
-    found = _exif_tiff(jpeg)
-    if found is None:
-        return None
-    _, tiff, e, ifd0 = found
-    gps = _gps_pointers(tiff, e, ifd0)
-    return _tags(tiff, e, gps[-1]) if gps else None
+    for _, tiff, e, ifd0 in _exif_tiffs(jpeg):
+        gps = _gps_pointers(tiff, e, ifd0)
+        if gps:
+            return _tags(tiff, e, gps[-1])
+    return None
 
 
 def _zero(buf: bytearray, at: int, n: int) -> None:
@@ -219,25 +218,38 @@ def _zero(buf: bytearray, at: int, n: int) -> None:
 
 
 def scrub_gps(jpeg: bytes) -> tuple[bytes, bool]:
-    """Length-preserving in-place GPS removal: drop the 0x8825 entry
-    from IFD0 (remaining entries shift up 12 bytes; the freed 12 bytes
-    are zero-padded so every absolute value offset stays valid) and
-    zero the GPS IFD block plus every external value region its
-    entries reference — without moving any byte that other entries'
-    value offsets depend on (TIFF offsets are absolute within the TIFF
-    block). Returns (cleaned_bytes, had_gps); JPEGs without Exif or
-    without GPS come back unchanged. Malformed structures raise
-    ValueError (caller maps to scrub_ok=false)."""
-    found = _exif_tiff(jpeg)
-    if found is None:
+    """Length-preserving in-place GPS removal from EVERY Exif APP1 (a
+    GPS IFD hidden in a second APP1 is still location data): in each,
+    drop the 0x8825 entry from IFD0 (remaining entries shift up 12
+    bytes; the freed 12 bytes are zero-padded so every absolute value
+    offset stays valid) and zero the GPS IFD block plus every external
+    value region its entries reference — without moving any byte that
+    other entries' value offsets depend on (TIFF offsets are absolute
+    within the TIFF block). Returns (cleaned_bytes, had_gps), had_gps
+    true when any APP1 carried GPS; JPEGs without Exif or without GPS
+    come back unchanged. Malformed structures anywhere in the marker
+    stream up to SOS raise ValueError (caller maps to scrub_ok=false):
+    a scrub that cannot read every segment cannot vouch for it."""
+    out, had = bytearray(jpeg), False
+    for t0, tiff, e, ifd0 in _exif_tiffs(jpeg):
+        cleaned = _scrub_tiff(bytearray(tiff), e, ifd0)
+        if cleaned is not None:
+            out[t0 : t0 + len(tiff)] = cleaned
+            had = True
+    if not had:
         return jpeg, False
-    t0, tiff, e, ifd0 = found
-    tiff = bytearray(tiff)
+    assert len(out) == len(jpeg)
+    return bytes(out), True
+
+
+def _scrub_tiff(tiff: bytearray, e: str, ifd0: int) -> bytearray | None:
+    """``tiff`` with its GPS IFD removed in place, or None when IFD0
+    carries no GPS pointer."""
     # a malformed IFD0 may carry the pointer MORE than once: strip every
     # occurrence, zero every target
     gps_offs = _gps_pointers(tiff, e, ifd0)
     if not gps_offs:
-        return jpeg, False
+        return None
     kept = [
         tiff[off : off + 12]
         for tag, _, _, off in ifd_entries(tiff, e, ifd0)
@@ -264,9 +276,7 @@ def scrub_gps(jpeg: bytes) -> tuple[bytes, bool]:
                 _zero(tiff, at, nbytes)
             end = off + 12
         _zero(tiff, gps_off, end + 4 - gps_off)
-    out = jpeg[:t0] + bytes(tiff) + jpeg[t0 + len(tiff) :]
-    assert len(out) == len(jpeg)
-    return out, True
+    return tiff
 
 
 def normalize_orientation(px, orientation: int):

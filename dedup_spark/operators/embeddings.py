@@ -43,6 +43,10 @@ from pyspark.sql import DataFrame, Window, functions as F, types as T
 
 from dedup_spark.config import DEFAULT_CONFIG, DedupConfig
 
+# every exposed cosine is rounded to this many decimals, engine and
+# DuckDB oracle alike (the float-parity rule of the driver contract)
+COSINE_DECIMALS = 6
+
 
 def _dot(a, b):
     return F.aggregate(
@@ -58,6 +62,20 @@ def _norm(a):
             F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x
         )
     )
+
+
+def _rounded_cosine():
+    """Cosine of query vector ``_qv`` (norm ``_qn``) and candidate
+    vector ``_cv`` (norm ``_cn``), rounded to COSINE_DECIMALS.
+
+    np.round parity, bit for bit: the GEMM tier (and the DuckDB oracle)
+    round via scale→rint→unscale on the double, which differs from
+    exact-decimal F.round on ~0.4% of boundary-adjacent values.
+    Math.rint == np.rint (half-even), so this is the same three float
+    ops."""
+    scale = F.lit(float(10.0**COSINE_DECIMALS))
+    cos = _dot(F.col("_qv"), F.col("_cv")) / (F.col("_qn") * F.col("_cn"))
+    return F.rint(cos * scale) / scale
 
 
 def cosine_topk_bruteforce(
@@ -109,7 +127,6 @@ def cosine_scores_gemm(
     vec_col: str = "embedding",
     threshold: float | None = None,
     topk: int | None = None,
-    round_to: int = 6,
     block_target: int = 4096,
     n_blocks: int | None = None,
 ) -> DataFrame:
@@ -205,7 +222,7 @@ def cosine_scores_gemm(
                 cids = pickle.loads(row["ids2"])
                 cmat = pickle.loads(row["mat2"])
                 same = row["b1"] == row["b2"]
-                sims = np.round(qmat @ cmat.T, round_to)
+                sims = np.round(qmat @ cmat.T, COSINE_DECIMALS)
                 if topk is None:
                     qi, ci = np.nonzero(sims >= thr)
                     if same:
@@ -572,7 +589,6 @@ def ivf_topk(
     n_probe: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """IVF top-k neighbor search — the sub-quadratic alternative to
     ``cosine_scores_gemm(topk=...)``.
@@ -624,20 +640,7 @@ def ivf_topk(
     scored = (
         qry.join(index, on="cell")
         .filter(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            # np.round parity, bit for bit: the GEMM tier (and the
-            # DuckDB oracle) round via scale→rint→unscale on the
-            # double, which differs from exact-decimal F.round on
-            # ~0.4% of boundary-adjacent values. Math.rint == np.rint
-            # (half-even), so this is the same three float ops.
-            F.rint(
-                _dot(F.col("_qv"), F.col("_cv"))
-                / (F.col("_qn") * F.col("_cn"))
-                * F.lit(float(10.0**round_to))
-            )
-            / F.lit(float(10.0**round_to)),
-        )
+        .withColumn("cosine", _rounded_cosine())
         .select("query_id", "neighbor_id", "cosine")
     )
     w = Window.partitionBy("query_id").orderBy(

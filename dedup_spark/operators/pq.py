@@ -49,7 +49,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F, types as T
 
-from dedup_spark.operators.embeddings import _dot, _norm, probe_cells_udf
+from dedup_spark.operators.embeddings import (
+    _norm,
+    _rounded_cosine,
+    probe_cells_udf,
+)
 
 
 def pq_train(
@@ -172,7 +176,6 @@ def ivfpq_topk(
     shortlist: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    round_to: int = 6,
 ) -> DataFrame:
     """IVFPQ top-k self-search: coarse cells route probes, PQ-ADC ranks
     candidates from codes alone, the top ``shortlist`` per query are
@@ -270,17 +273,7 @@ def ivfpq_topk(
     reranked = (
         short.join(qvec, on="query_id")
         .join(nvec, on="neighbor_id")
-        .withColumn(
-            "cosine",
-            # np.round parity bit for bit (see ivf_topk): scale → rint
-            # → unscale on the double
-            F.rint(
-                _dot(F.col("_qv"), F.col("_cv"))
-                / (F.col("_qn") * F.col("_cn"))
-                * F.lit(float(10.0**round_to))
-            )
-            / F.lit(float(10.0**round_to)),
-        )
+        .withColumn("cosine", _rounded_cosine())
         .select("query_id", "neighbor_id", "cosine")
     )
     w = Window.partitionBy("query_id").orderBy(

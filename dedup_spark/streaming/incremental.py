@@ -142,12 +142,12 @@ def start_incremental_dedup(
     checkpoint_dir: str,
     id_col: str = "image_id",
     payload_col: str = "bytes",
-    available_now: bool = True,
 ):
     """readStream(parquet dir) → foreachBatch incremental dedup.
 
-    `available_now=True` drains what exists then stops (test/backfill
-    mode); False runs continuously with the default trigger."""
+    Always ``trigger(availableNow=True)``: the query drains the files
+    present at start in one or more batches, then stops — a backfill
+    or scheduled run, never a continuously running query."""
     stream = (
         spark.readStream.schema(schema).format("parquet").load(input_dir)
     )
@@ -158,13 +158,12 @@ def start_incremental_dedup(
             id_col=id_col, payload_col=payload_col,
         )
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(_sink)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def dedup_within_watermark(

@@ -20,10 +20,7 @@ from dedup_spark.fixtures.av import (
     generate_audio_corpus,
     generate_video_corpus,
 )
-from dedup_spark.fixtures.materialize import (
-    fixture_audio_parquet,
-    fixture_videos_parquet,
-)
+from dedup_spark.fixtures.materialize import fixture_parquet
 from dedup_spark.multimodal.audio import (
     audio_fingerprint_clusters,
     audio_fingerprints,
@@ -57,7 +54,7 @@ def test_sample_frames_matches_jvm_slicing(spark):
     """The mapInPandas sampler and the codegen substring path must see
     byte-identical frames: md5(hex(frame)) of the sampled payloads ==
     frame_signatures output, row for row."""
-    df = spark.read.parquet(fixture_videos_parquet())
+    df = spark.read.parquet(fixture_parquet("videos"))
     sampled = {
         (r["video_id"], r["frame_idx"]): bytes(r["frame_bytes"])
         for r in sample_frames(df, every_n=4).collect()
@@ -93,7 +90,7 @@ def test_video_near_duplicates_story(spark):
     """Exact copies hit jaccard 1.0; end-trims and appends clear 0.5;
     unrelated base videos never pair."""
     corpus = generate_video_corpus()
-    df = spark.read.parquet(fixture_videos_parquet())
+    df = spark.read.parquet(fixture_parquet("videos"))
     pairs = {
         (r["id1"], r["id2"]): r["jaccard"]
         for r in video_near_duplicates(df, max_posting=None).collect()
@@ -129,12 +126,12 @@ def test_video_posting_cap_drops_viral_frame(spark):
 
 
 def test_audio_fingerprint_matches_reference_impl(spark):
-    df = spark.read.parquet(fixture_audio_parquet())
+    df = spark.read.parquet(fixture_parquet("audio"))
     got = {
         r["audio_id"]: (r["n_windows"], r["fingerprint"])
         for r in audio_fingerprints(df).collect()
     }
-    pdf = pd.read_parquet(fixture_audio_parquet())
+    pdf = pd.read_parquet(fixture_parquet("audio"))
     for _, row in pdf.iterrows():
         samples = np.frombuffer(bytes(row["bytes"]), dtype="<i2")
         assert got[row["audio_id"]] == (
@@ -148,7 +145,7 @@ def test_audio_clusters_amplitude_invariance(spark):
     base signals stay apart (pinned corpus has no cross-base fp
     collisions)."""
     corpus = generate_audio_corpus()
-    df = spark.read.parquet(fixture_audio_parquet())
+    df = spark.read.parquet(fixture_parquet("audio"))
     out = {
         r["audio_id"]: r["cluster_id"]
         for r in audio_fingerprint_clusters(df).collect()
@@ -312,12 +309,11 @@ def test_avi_fixture_groups_pair_up(spark):
     """Every generator near-group must surface as pairs >= 0.5 in the
     driver query's exact-gate configuration."""
     from dedup_spark.fixtures.av import generate_avi_corpus
-    from dedup_spark.fixtures.materialize import fixture_avi_parquet
     from dedup_spark.multimodal.avi import avi_frame_signatures
     from dedup_spark.multimodal.video import signature_set_pairs
 
     corpus = generate_avi_corpus()
-    df = spark.read.parquet(fixture_avi_parquet())
+    df = spark.read.parquet(fixture_parquet("avi"))
     pairs = {
         frozenset((r["id1"], r["id2"]))
         for r in signature_set_pairs(

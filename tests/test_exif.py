@@ -285,6 +285,29 @@ def test_tem_marker_before_app1_and_dqt_is_skipped_by_every_reader():
     assert parse_exif(cleaned)[TAG_MAKE] == "maker-0004"
 
 
+def test_gps_in_a_second_exif_app1_is_scrubbed():
+    """A GPS IFD behind a GPS-free first Exif APP1 is still location
+    data: the scrub must find and remove it, and parse_gps must see it."""
+    plain = build_exif_app1(
+        "maker-0001", "model-0001", 1, 16, 16, "2024:01:01 01:00:00"
+    )
+    gps = build_exif_app1(
+        "maker-0002", "model-0002", 1, 16, 16, "2024:01:02 02:00:00",
+        (48, 51, 24), (2, 21, 3), big_endian=True,
+    )
+    data = insert_app1(insert_app1(_jpeg(), gps), plain)
+    lat = b"".join(struct.pack(">II", v, 1) for v in (48, 51, 24))
+    cleaned, had = scrub_gps(data)
+    assert had and len(cleaned) == len(data)
+    assert parse_gps(cleaned) is None
+    assert (parse_gps(data) or {}).get(0x0002) == [(48, 1), (51, 1), (24, 1)]
+    assert lat in data and lat not in cleaned
+    # the first APP1 keeps its fields; the second keeps its make
+    assert parse_exif(cleaned)[TAG_MAKE] == "maker-0001"
+    assert b"maker-0002" in cleaned
+    assert scrub_gps(cleaned) == (cleaned, False)
+
+
 @pytest.mark.parametrize(
     "generate, digest",
     [

@@ -23,7 +23,7 @@ from dedup_spark.fixtures.images import (
     generate_image_quality_corpus,
     luma1000,
 )
-from dedup_spark.fixtures.materialize import fixture_imgq_parquet
+from dedup_spark.fixtures.materialize import fixture_parquet
 from dedup_spark.multimodal.decode import image_quality_report
 
 sys.path.insert(0, ".")
@@ -140,7 +140,7 @@ def test_oracle_matches_engine_past_1024_pixels(spark):
          "w": [40], "h": [30]}
     )
     sql = entrymod.oracle_sql()["image_quality_stats"].replace(
-        f"read_parquet('{fixture_imgq_parquet()}')", "big"
+        f"read_parquet('{fixture_parquet('imgq')}')", "big"
     )
     con = duckdb.connect()
     con.register("big", pdf)

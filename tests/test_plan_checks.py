@@ -24,12 +24,7 @@ sys.path.insert(0, ".")
 
 import __spark_entry__ as entrymod
 from dedup_spark.config import DedupConfig
-from dedup_spark.fixtures.materialize import (
-    fixture_audio_parquet,
-    fixture_avi_parquet,
-    fixture_images_parquet,
-    fixture_videos_parquet,
-)
+from dedup_spark.fixtures.materialize import fixture_parquet
 from dedup_spark.functions.unicode import nfc_normalize_udf
 from dedup_spark.multimodal.audio import (
     audio_fingerprint_clusters,
@@ -270,10 +265,10 @@ def _reader(path):
     return lambda spark: spark.read.parquet(path())
 
 
-_images = _reader(fixture_images_parquet)
-_videos = _reader(fixture_videos_parquet)
-_audio = _reader(fixture_audio_parquet)
-_avi = _reader(fixture_avi_parquet)
+_images = _reader(lambda: fixture_parquet("images"))
+_videos = _reader(lambda: fixture_parquet("videos"))
+_audio = _reader(lambda: fixture_parquet("audio"))
+_avi = _reader(lambda: fixture_parquet("avi"))
 _docs = _reader(lambda: f"{SF}/documents.parquet")
 _KEYS = ["phash", "w", "h", "fmt"]
 

@@ -83,10 +83,10 @@ def test_zipf_corpus_planted_neighbors_rank_first(spark):
     """The driver-gate corpus: every query (doc 18 mod 100) must
     retrieve its planted 10%-mutated copy (doc+1) at rank 1 under the
     PRODUCTION prune — 20/20 on the pinned fixture."""
-    from dedup_spark.fixtures.materialize import fixture_zipf_docs_parquet
+    from dedup_spark.fixtures.materialize import fixture_parquet
     from pyspark.sql import functions as F
 
-    docs = spark.read.parquet(fixture_zipf_docs_parquet())
+    docs = spark.read.parquet(fixture_parquet("zipf_docs"))
     out = bm25_topk(
         docs, docs.filter(F.col("doc_id") % 100 == 18), k=1
     ).collect()

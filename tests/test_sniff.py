@@ -10,7 +10,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from dedup_spark.fixtures.images import _py_sniff, generate_sniff_corpus
-from dedup_spark.fixtures.materialize import fixture_sniff_parquet
+from dedup_spark.fixtures.materialize import fixture_parquet
 from dedup_spark.multimodal.sniff import format_sniff_report, sniffed_format
 
 sys.path.insert(0, ".")
@@ -95,7 +95,7 @@ def test_oracle_case_matches_hand_pinned_magics():
         columns=["image_id", "bytes", "fmt"],
     )
     sql = entrymod.oracle_sql()["format_sniff"].replace(
-        f"read_parquet('{fixture_sniff_parquet()}')", "hand"
+        f"read_parquet('{fixture_parquet('sniff')}')", "hand"
     )
     con = duckdb.connect()
     con.register("hand", hand)

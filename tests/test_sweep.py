@@ -7,10 +7,7 @@ from itertools import combinations
 
 def test_sweep_matches_bruteforce_python(spark):
     import __spark_entry__ as e
-    from dedup_spark.fixtures.materialize import (
-        fixture_images_parquet,
-        fixture_truth_parquet,
-    )
+    from dedup_spark.fixtures.materialize import fixture_parquet
     import pyarrow.parquet as pq
 
     got = {
@@ -20,11 +17,11 @@ def test_sweep_matches_bruteforce_python(spark):
     assert sorted(got) == list(range(9))
 
     imgs = pq.read_table(
-        fixture_images_parquet(), columns=["image_id", "phash"]
+        fixture_parquet("images"), columns=["image_id", "phash"]
     ).to_pylist()
     truth = {
         r["image_id"]: r["cluster_id"]
-        for r in pq.read_table(fixture_truth_parquet()).to_pylist()
+        for r in pq.read_table(fixture_parquet("truth")).to_pylist()
     }
     hist = {d: [0, 0] for d in range(9)}
     for a, b in combinations(imgs, 2):

@@ -17,7 +17,7 @@ from collections import Counter
 import pytest
 
 from dedup_spark.fixtures.images import generate_corpus, to_spark
-from dedup_spark.fixtures.materialize import fixture_avi_parquet
+from dedup_spark.fixtures.materialize import fixture_parquet
 from dedup_spark.functions.unicode import nfc_clusters
 from dedup_spark.multimodal.avi import avi_frame_signatures
 from dedup_spark.multimodal.patches import shared_patch_pairs
@@ -72,7 +72,7 @@ SITES = {
     # the rawv tier's frame signatures are JVM-only; the AVI tier runs
     # the same capped pair stage over a mapInPandas
     "signature_set_pairs": lambda s, d: signature_set_pairs(
-        avi_frame_signatures(s.read.parquet(fixture_avi_parquet()), every_n=2)
+        avi_frame_signatures(s.read.parquet(fixture_parquet("avi")), every_n=2)
     ),
     "fuzzy_process_batch": lambda s, d: fuzzy_process_batch(
         s, _docs(s), str(d / "state"), str(d / "out")

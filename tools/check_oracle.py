@@ -7,7 +7,8 @@ Usage: python tools/check_oracle.py [sf_dir] [query ...]
        python tools/check_oracle.py --json OUT.json [sf_dir] [query ...]
 
 --json additionally writes a per-query snapshot artifact
-({name: {match, rows, secs}}) so a round can end with a committed
+({name: {match, rows, secs, oracle_secs}}; ``secs`` is the Spark side's
+wall time, ``oracle_secs`` DuckDB's) so a round can end with a committed
 correctness record timestamped after the last code change.
 """
 
@@ -82,7 +83,9 @@ def main() -> int:
             print(f"ok    {name}: rows-only ({len(sdf)} rows, {el:.1f}s)")
             record[name] = {"match": None, "rows": len(sdf), "secs": round(el, 1)}
             continue
+        t0 = time.time()
         odf = con.execute(oracles[name]).df()
+        oracle_el = time.time() - t0
         s, o = norm(sdf), norm(odf)
         if list(s.columns) != list(o.columns):
             print(f"FAIL  {name}: columns {list(s.columns)} vs {list(o.columns)}")
@@ -101,6 +104,7 @@ def main() -> int:
             "match": name not in failed,
             "rows": len(s),
             "secs": round(el, 1),
+            "oracle_secs": round(oracle_el, 2),
         }
     print("failed:", failed or "none")
     if json_out:
